@@ -81,7 +81,15 @@ from pyspark.sql.types import (
 # glob-based listings here, and ChunkStore's compaction all skip it
 # until a commit renames it to a visible name
 TMP_PREFIX = ".part-tmp-"
-from deker_server_adapters_spark.core.storage import _SEQ_COUNTER_BITS  # noqa: E402
+from deker_server_adapters_spark.core.storage import (  # noqa: E402
+    _SEQ_COUNTER_BITS,
+    chunk_dir,
+    chunk_runs,
+    ordered_runs,
+    read_chunk_files,
+    unescape_path_name,
+    visible_chunk_files,
+)
 
 
 def register(spark) -> None:
@@ -177,13 +185,12 @@ def _chunk_cell_batches(
     materialized RUN cell, so a cell re-written by a later append
     appears once per write (and the stream reader's CDC feed needs
     exactly this). ``dedup=True`` (batch ``.option("dedup_cells",
-    "true")``): LAST-WRITE-WINS per cell — the chunk's runs replay in
-    ``seq`` order into a chunk-local buffer (Deker read semantics,
-    same resolution as the engine's ``read_slice``) and each written
-    cell emits once with its latest value. Memory for the dedup path
-    is one chunk's dense extent (the storage design unit) plus the
-    run list; seq-less legacy runs order by sorted-file rank, the
-    compaction convention."""
+    "true")``): LAST-WRITE-WINS per cell — the chunk's runs replay
+    into a chunk-local buffer in ``core.storage.ordered_runs`` order
+    (the engine's ``read_slice`` replays with the same function) and
+    each written cell emits once with its latest value. Memory for the
+    dedup path is one chunk's dense extent (the storage design unit)
+    plus the run list."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -224,54 +231,15 @@ def _chunk_cell_batches(
             names.append(name)
         return pa.RecordBatch.from_arrays(cols, names=names)
 
-    def file_tables():
-        if on_vanish == "relist":
-            # BATCH semantics: a vanished file means compact() (merged
-            # and removed it) or delete_array raced the planning
-            # snapshot. A batch query has no "next batch" to heal it,
-            # so skipping would silently DROP the chunk's cells —
-            # instead re-list the dir and read the CURRENT visible set
-            # (the merged file carries every removed run).
-            # NOTE on isolation: the relist picks up whatever is
-            # visible NOW, including files committed after planning —
-            # a batch read under concurrent writes is read-committed
-            # per chunk, not a planning-time snapshot. Backoff between
-            # attempts lets a steady compact/delete cadence drain
-            # instead of turning a survivable race into a query error.
-            import time as _time
-
-            files = list(partition.files)
-            attempts = 8
-            for attempt in range(attempts):
-                tables, ok = [], True
-                for rank, path in enumerate(files):
-                    try:
-                        tables.append((rank, pq.read_table(path)))
-                    except FileNotFoundError:
-                        ok = False
-                        break
-                if ok:
-                    yield from tables
-                    return
-                d = os.path.dirname(files[0])
-                if not os.path.isdir(d):
-                    return  # delete_array: the chunk is legitimately gone
-                if attempt == attempts - 1:
-                    break  # no further read — don't sleep/relist for nothing
-                _time.sleep(min(0.05 * (2**attempt), 1.0))
-                files = sorted(
-                    os.path.join(d, f)
-                    for f in os.listdir(d)
-                    if f.endswith(".parquet") and not f.startswith(".")
-                )
-                if not files:
-                    return
-            raise RuntimeError(
-                f"deker chunk dir kept changing during batch read: {d}"
-            )
-        for rank, path in enumerate(partition.files):
+    if on_vanish == "relist":
+        # BATCH semantics: a batch query has no "next batch" to heal a
+        # vanished file, so re-list and read the current visible set
+        tables = read_chunk_files(partition.files)
+    else:
+        tables = []
+        for path in partition.files:
             try:
-                yield rank, pq.read_table(path)
+                tables.append(pq.read_table(path))
             except FileNotFoundError:
                 # STREAM semantics (COW race): a concurrent chunk rewrite
                 # can delete a file between offset planning and read. The
@@ -289,30 +257,12 @@ def _chunk_cell_batches(
         lo0 = np.asarray([a for a, _ in box], dtype=np.int64)
         buf = np.empty(ext, dtype=np.float64)
         written = np.zeros(ext, dtype=bool)
-        runs = []
-        for rank, table in file_tables():
-            names = table.schema.names
-            seqs = (
-                table["seq"].to_pylist()
-                if "seq" in names
-                else [None] * len(table)
-            )
-            for ri, (o, sh, da, sq) in enumerate(
-                zip(
-                    table["origin"].to_pylist(),
-                    table["shape"].to_pylist(),
-                    table["data"].to_pylist(),
-                    seqs,
-                )
-            ):
-                runs.append((sq if sq is not None else -1, rank, ri, o, sh, da))
-        runs.sort(key=lambda r: (r[0], r[1], r[2]))
-        for _, _, _, o, sh, da in runs:
+        for _, origin, run_shape, values in ordered_runs(tables):
             sel = tuple(
-                slice(int(oo - a), int(oo - a + ss))
-                for oo, (a, _), ss in zip(o, box, sh)
+                slice(o - a, o - a + n)
+                for o, (a, _), n in zip(origin.tolist(), box, run_shape)
             )
-            buf[sel] = np.asarray(da, dtype=np.float64).reshape(sh)
+            buf[sel] = values.reshape(run_shape)
             written[sel] = True
         rel = np.argwhere(written)
         if not len(rel):
@@ -322,17 +272,10 @@ def _chunk_cell_batches(
             yield batch
         return
 
-    for _, table in file_tables():
-        for origin_v, shape_v, data_v in zip(
-            table["origin"].to_pylist(),
-            table["shape"].to_pylist(),
-            table["data"].to_pylist(),
-        ):
-            cshape = tuple(int(s) for s in shape_v)
-            origin = np.asarray(origin_v, dtype=np.int64)
-            values = np.asarray(data_v, dtype=np.float64)
+    for table in tables:
+        for _, origin, run_shape, values in chunk_runs(table):
             # absolute index per dim for every cell, vectorized
-            idx = np.indices(cshape).reshape(ndim, -1) + origin[:, None]
+            idx = np.indices(run_shape).reshape(ndim, -1) + origin[:, None]
             batch = emit(idx, values)
             if batch is not None:
                 yield batch
@@ -494,7 +437,7 @@ class DekerReader(DataSourceReader):
         for adir in sorted(os.listdir(self.chunks_dir)):
             if not adir.startswith("array_id="):
                 continue
-            array_id = adir.split("=", 1)[1]
+            array_id = unescape_path_name(adir.split("=", 1)[1])
             if self.array_ids is not None and array_id not in self.array_ids:
                 continue  # directory-level prune
             for cdir in sorted(os.listdir(os.path.join(self.chunks_dir, adir))):
@@ -504,11 +447,7 @@ class DekerReader(DataSourceReader):
                 if not self._chunk_overlaps(chunk_idx):
                     continue  # grid-level prune
                 files = tuple(
-                    sorted(
-                        glob.glob(
-                            os.path.join(self.chunks_dir, adir, cdir, "*.parquet")
-                        )
-                    )
+                    visible_chunk_files(os.path.join(self.chunks_dir, adir, cdir))
                 )
                 if files:
                     parts.append(DekerChunkPartition(array_id, chunk_idx, files))
@@ -576,7 +515,10 @@ class DekerStreamReader(DataSourceStreamReader):
         by_chunk: dict[tuple[str, int], list[str]] = {}
         for path in fresh:
             adir, cdir = path.split(os.sep)[-3:-1]
-            key = (adir.split("=", 1)[1], int(cdir.split("=", 1)[1]))
+            key = (
+                unescape_path_name(adir.split("=", 1)[1]),
+                int(cdir.split("=", 1)[1]),
+            )
             by_chunk.setdefault(key, []).append(path)
         parts = [
             DekerChunkPartition(aid, cidx, tuple(sorted(files)))
@@ -749,9 +691,7 @@ class DekerWriter(DataSourceArrowWriter):
         run_counter = 0
         files, array_ids = [], set()
         for (array_id, cidx), runs in sorted(buf.items()):
-            d = os.path.join(
-                self.chunks_dir, f"array_id={array_id}", f"chunk_idx={cidx}"
-            )
+            d = chunk_dir(self.chunks_dir, array_id, cidx)
             os.makedirs(d, exist_ok=True)
             # dot-prefixed TEMP file: invisible to every reader (Spark
             # skips hidden files; our own listings glob non-dot) until

@@ -142,6 +142,36 @@ class TestArrays:
             )
         assert e.value.limit == 10 and e.value.requested == 240
 
+    def test_read_runs_no_spark_job(self, warehouse, spark):
+        """read_data is served on the driver: a cell, a box and a whole
+        array (one chunk, and a varray spanning six) start no Spark job."""
+        coll = warehouse.collections.create("c", SCHEMA)
+        ref = np.random.RandomState(5).rand(20, 12)
+        arr = coll.arrays.create({"station": "s"}, data=ref)
+        vcoll = warehouse.collections.create("v", VSCHEMA)
+        vref = np.random.RandomState(6).rand(12, 8)
+        va = vcoll.varrays.create(data=vref)
+        sc = spark.sparkContext
+        reads = {
+            "cell": (lambda: arr.read_data((3, 4)), ref[3, 4]),
+            "box": (lambda: arr[2:9, 1:5], ref[2:9, 1:5]),
+            "whole": (lambda: arr.read_data(), ref),
+            "varray": (lambda: va.read_data(), vref),
+        }
+        try:
+            for kind, (read, want) in reads.items():
+                group = f"read-no-job-{kind}"
+                sc.setJobGroup(group, kind)
+                np.testing.assert_allclose(read(), want)
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
+        finally:
+            for key in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            ):
+                sc.setLocalProperty(key, None)
+
     def test_meta_df_empty_collection_yields_empty_df(self, warehouse):
         """A created-but-empty collection is a legitimate catalog state:
         meta_df() returns an empty DataFrame, not an exception (the

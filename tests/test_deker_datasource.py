@@ -1474,3 +1474,94 @@ def test_changefeed_compact_read_maintenance_cycle(spark, tmp_path):
     n_raw_post = len(spark.read.parquet(sink).collect())
     assert n_raw_post > n_raw_pre  # CDC re-emission actually happened
     pd.testing.assert_frame_equal(accumulated(), batch_dedup(), check_dtype=False)
+
+
+def test_read_data_relists_a_file_compacted_mid_read(spark, tmp_path, monkeypatch):
+    """read_data lists a chunk dir, then compaction merges and removes
+    the listed files before they are opened. The read must re-list and
+    return the exact array from the merged file — no fill-value holes
+    where the vanished files' runs were."""
+    import os
+
+    from deker_server_adapters_spark.core import storage
+
+    root = str(tmp_path / "whvanish")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    base = np.random.RandomState(8).rand(20, 12) + 1.0  # fill is 0.0
+    a = coll.arrays.create(data=base)
+    register(spark)
+    patch = [(a.id, i, j, float(-i - j)) for i in (3, 11) for j in range(12)]
+    (
+        spark.createDataFrame(patch, "array_id string, x long, y long, value double")
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .option("create_arrays", "false")
+        .mode("append").save()
+    )
+    want = base.copy()
+    for _, i, j, v in patch:
+        want[i, j] = v
+    np.testing.assert_allclose(a.read_data(), want)
+
+    real_read = storage._read_parquet
+    vanished = []
+
+    def read_after_compact(path):
+        if not vanished:  # compaction races the first open
+            vanished.append(path)
+            assert storage._merge_chunk_dir(os.path.dirname(path)) == 1
+        return real_read(path)
+
+    monkeypatch.setattr(storage, "_read_parquet", read_after_compact)
+    np.testing.assert_allclose(a.read_data(), want)
+    assert vanished and not os.path.exists(vanished[0])
+
+
+def test_spark_escaped_array_id_roundtrip_and_delete(spark, tmp_path):
+    """Spark escapes partition values in directory names (``#`` ->
+    ``%23``, ``%`` -> ``%25``). The engine read, the deker writer and
+    the source's planning must all agree on that one directory, and
+    delete must remove it rather than a raw-named path that does not
+    exist."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "whesc")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    aid = "st#1%a"
+    data = np.random.RandomState(9).rand(20, 12)
+    a = coll.arrays.create(id_=aid, data=data)
+    np.testing.assert_allclose(a.read_data(), data)
+    register(spark)
+    (
+        spark.createDataFrame(
+            [(aid, 0, 0, -5.0)], "array_id string, x long, y long, value double"
+        )
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .option("create_arrays", "false")
+        .mode("append").save()
+    )
+    data[0, 0] = -5.0
+    np.testing.assert_allclose(a.read_data(), data)
+    chunks = os.path.join(root, "collections", "w", "chunks")
+    assert [d for d in os.listdir(chunks) if d.startswith("array_id=")] == [
+        "array_id=st%231%25a"
+    ]
+    pdf = (
+        spark.read.format("deker").option("path", root)
+        .option("collection", "w").option("dedup_cells", "true").load()
+        .filter(F.col("array_id") == aid).toPandas()
+    )
+    assert set(pdf.array_id) == {aid} and len(pdf) == 240
+    got = np.full((20, 12), np.nan)
+    got[pdf.x, pdf.y] = pdf.value
+    np.testing.assert_allclose(got, data)
+
+    coll.arrays.delete(a)
+    assert not [d for d in os.listdir(chunks) if d.startswith("array_id=")]
+    np.testing.assert_array_equal(a.read_data(), np.zeros((20, 12)))
