@@ -19,12 +19,13 @@ Spark-first consequences:
   replays each chunk's runs last-write-wins into the output box. Work
   is proportional to the touched chunks, not the array, and a
   one-cell read pays no scheduling round trip. Bulk and analytic
-  paths (``cell_df``, the ``deker`` source, ingest, COW updates,
-  compaction) stay on Spark.
-- A subset write is copy-on-write at chunk granularity: only the
-  overlapped ``chunk_idx`` partitions are rewritten (dynamic
-  partition overwrite), mirroring Deker's subset PUT
-  (reference base.py:272-303).
+  paths (``cell_df``, the ``deker`` source, ingest) stay on Spark.
+- A subset write is copy-on-write at chunk granularity, also on the
+  driver with no Spark job: each overlapped chunk dir is rewritten as
+  one new file holding its patched runs, published by rename before
+  the files it replaces are removed, mirroring Deker's subset PUT
+  (reference base.py:272-303). ``compact`` runs the same rewrite,
+  without a patch, on executors.
 - ``cell_df`` exposes any array as a long-format DataFrame
   (dim indices + value) with pure-JVM index arithmetic, so arrays
   join/aggregate with relational tables in one Catalyst plan.
@@ -37,13 +38,14 @@ import os
 import re
 import threading
 import time
+import uuid
 from typing import Iterable, Iterator, Sequence, Union
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -285,33 +287,34 @@ def _read_parquet(path: str) -> pa.Table:
         return f.read()
 
 
-def read_chunk_files(paths: Sequence[str]) -> list[pa.Table]:
-    """Read one chunk dir's planned files, in the given order.
+def read_chunk_files(paths: Sequence[str]) -> tuple[list[str], list[pa.Table]]:
+    """Read one chunk dir's planned files, in the given order; returns
+    the paths actually read and their tables.
 
     A planned file that vanishes before it is opened means ``compact``
-    merged it or ``delete_array`` dropped the chunk. Skipping it would
-    silently drop its cells, so the dir is re-listed (with backoff, so
-    a steady compact cadence can drain) and the CURRENT visible set is
-    read — the merged file carries every removed run. A read racing
-    writers is therefore read-committed per chunk, not a snapshot; a
-    dir that is gone reads as empty."""
+    or an update rewrote the dir, or ``delete_array`` dropped the
+    chunk. Skipping it would silently drop its cells, so the dir is
+    re-listed (with backoff, so a steady rewrite cadence can drain) and
+    the CURRENT visible set is read — the rewritten file carries every
+    removed run. A read racing writers is therefore read-committed per
+    chunk, not a snapshot; a dir that is gone reads as empty."""
     if not paths:
-        return []
+        return [], []
     d = os.path.dirname(paths[0])
     attempts = 8
     for attempt in range(attempts):
         try:
-            return [_read_parquet(p) for p in paths]
+            return list(paths), [_read_parquet(p) for p in paths]
         except FileNotFoundError:
             pass
         if attempt == attempts - 1:
             break  # no further read — don't sleep/relist for nothing
         if not os.path.isdir(d):
-            return []  # delete_array: the chunk is legitimately gone
+            return [], []  # delete_array: the chunk is legitimately gone
         time.sleep(min(0.05 * (2**attempt), 1.0))
         paths = visible_chunk_files(d)
         if not paths:
-            return []
+            return [], []
     raise RuntimeError(f"chunk dir kept changing during read: {d}")
 
 
@@ -351,7 +354,7 @@ def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tupl
     ``(coalesce(seq, -1), file name, row index)``. Stamped runs order by
     ``seq`` alone (the within-task counter makes them strictly
     increasing); legacy -1 runs fall back to sorted-file-name rank,
-    the same rank ``_merge_chunk_dir`` synthesizes, so compaction never
+    the same rank ``_merge_chunk_dir`` synthesizes, so a rewrite never
     changes which legacy run wins. Runs in different chunk dirs never
     overlap, so per-dir replay equals one global sort."""
     runs = [run for t in tables for run in chunk_runs(t)]
@@ -359,87 +362,130 @@ def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tupl
     return runs
 
 
-def _merge_chunk_dir(d: str) -> int:
-    """Merge every parquet file in one chunk-partition dir into a
-    single file. Runs on executors; returns 1 if the dir was compacted.
+def _overlap(origin, shape, lo, hi) -> tuple[tuple, tuple] | None:
+    """The cells a run at ``origin``/``shape`` shares with the box
+    ``[lo, hi)``, as (slices into the run, slices into the box), or
+    None if they share none."""
+    in_run, in_box = [], []
+    for o, s, a, b in zip(origin, shape, lo, hi):
+        start, stop = max(a, o), min(b, o + s)
+        if start >= stop:
+            return None
+        in_run.append(slice(start - o, stop - o))
+        in_box.append(slice(start - a, stop - a))
+    return tuple(in_run), tuple(in_box)
 
-    - Placement order survives the merge because it lives in the
-      explicit ``seq`` column, not file names; rows from a legacy file
-      that predates ``seq`` get a synthesized small seq (its rank in
-      sorted-file-name order — the legacy visit-order convention), so
-      they stay older than every stamped run.
-    - Files are CAST to one canonical Arrow schema before concat:
-      Spark-written files name list items ``element`` while
-      pyarrow-written ones use ``item``, and ``concat_tables`` treats
-      those as unequal schemas — a chunk dir mixing engine COW rewrites
-      with deker bulk appends would otherwise fail to compact.
-    - In-flight writer temp files (dot-prefixed) are never touched —
-      they belong to an uncommitted task attempt.
-    - Races: a file that vanishes between the listing snapshot and its
-      read (concurrent ``delete_array``) is skipped; only files that
-      were actually merged are removed, and removal tolerates a
-      concurrent delete. The merged output publishes atomically (dot-
-      prefixed temp + ``os.replace``), so a concurrent reader can never
-      open a partially-written merge file; a crashed compact's temp is
-      GC'd by the next compact of the dir. Two concurrent compacts of
-      the SAME dir remain unsupported (each would merge-and-remove the
-      other's output).
+
+def _patched(runs: list, origin: Sequence[int], values: np.ndarray) -> list:
+    """``runs`` with the box ``values`` at ``origin`` written into each
+    run's overlap, every ``seq`` kept. Cells of the box that no run
+    holds (a sparse ``deker`` append) make the whole box one more run,
+    stamped newest, so an update never drops a write."""
+    hi = [a + n for a, n in zip(origin, values.shape)]
+    covered = np.zeros(values.shape, dtype=bool)
+    out = []
+    for seq, run_origin, shape, data in runs:
+        hit = _overlap(run_origin.tolist(), shape, origin, hi)
+        if hit is not None:
+            data = data.copy()  # chunk_runs hands out read-only views
+            data.reshape(shape)[hit[0]] = values[hit[1]]
+            covered[hit[1]] = True
+        out.append((seq, run_origin, shape, data))
+    if not covered.all():
+        out.append((next_write_seq(), np.asarray(origin), values.shape, values.ravel()))
+    return out
+
+
+def _list_array(parts: list, type_: pa.DataType) -> pa.ListArray:
+    offsets = np.cumsum([0] + [len(p) for p in parts], dtype=np.int32)
+    flat = np.concatenate(parts) if parts else []
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat, type_))
+
+
+# File order: a rewrite names its output so it sorts after every file
+# it replaces. Writers' names sort before ``part-compact-`` (Spark's
+# ``part-0…``, the deker stream writer's ``part-b…``, the deker batch
+# writer's APPEND_PREFIX); a rewrite's generation counts up per dir,
+# and ``g`` sorts after older ``part-compact-<hex>`` outputs.
+APPEND_PREFIX = "part-append-"
+_REWRITE_GEN = re.compile(r"part-compact-g(\d+)-")
+
+
+def _rewrite_name(paths: Sequence[str]) -> str:
+    gens = [
+        int(m.group(1))
+        for p in paths
+        if (m := _REWRITE_GEN.match(os.path.basename(p)))
+    ]
+    return f"part-compact-g{max(gens, default=0) + 1:09d}-{uuid.uuid4().hex[:16]}.parquet"
+
+
+def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = None) -> int:
+    """Rewrite one chunk-partition dir as a single file — the one
+    copy-on-write primitive. ``compact`` calls it on executors with no
+    ``patch`` (a dir with fewer than two files is left alone);
+    ``update_slice`` calls it on the driver with ``patch``, a box's
+    origin and its values, inside this chunk. Returns 1 if the dir was
+    rewritten.
+
+    - Placement order survives because it lives in the explicit ``seq``
+      column, kept for every run; a legacy run without ``seq`` gets its
+      rank in sorted-file-name order (the legacy visit-order
+      convention), so it stays older than every stamped run and keeps
+      its precedence among legacy runs.
+    - Runs are read through ``read_chunk_files``, so a file that
+      vanishes mid-read re-lists the dir; only the files actually read
+      are replaced.
+    - Publish order: the output is written under a dot-prefixed temp
+      name (invisible to every listing) and ``os.replace``d into view
+      whole, then the replaced files go, each after its Hadoop ``.crc``
+      companion. The output name sorts after every replaced file, so a
+      reader that sees both (mid-rewrite, or after a crash before the
+      removal) resolves equal-``seq`` runs to the rewritten values, and
+      so does the next rewrite, which heals the dir. A crashed
+      rewrite's temp is GC'd by the next rewrite of the dir.
+    - In-flight writer temps are never touched, and a file committed
+      after the listing is kept. Two concurrent rewrites of the SAME
+      dir (an update racing ``compact``) are unsupported.
     """
-    import os as _os
-    import uuid as _uuid
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
-    canonical = _pa.schema(
-        [
-            ("origin", _pa.list_(_pa.int64())),
-            ("shape", _pa.list_(_pa.int64())),
-            ("data", _pa.list_(_pa.float64())),
-            ("seq", _pa.int64()),
-        ]
-    )
-    listing = _os.listdir(d)
-    # GC temp output of a crashed prior compact of THIS dir (concurrent
-    # compacts of one dir are unsupported, so any such file is stale)
-    for f in listing:
+    if patch is not None:
+        os.makedirs(d, exist_ok=True)  # a sparse array's unwritten chunk
+    for f in os.listdir(d):
         if f.startswith(".part-compact-") and f.endswith(".tmp"):
             try:
-                _os.remove(_os.path.join(d, f))
+                os.remove(os.path.join(d, f))
             except FileNotFoundError:
                 pass
-    files = sorted(f for f in listing if is_visible_chunk_file(f))
-    if len(files) < 2:
+    paths, tables = read_chunk_files(visible_chunk_files(d))
+    if patch is None and len(paths) < 2:
         return 0
-    tables, merged_files = [], []
-    for rank, f in enumerate(files):
-        try:
-            t = _pq.read_table(_os.path.join(d, f))
-        except (FileNotFoundError, OSError):
-            continue  # vanished since the listing snapshot: skip, keep
-        if "seq" not in t.schema.names:
-            t = t.append_column(
-                "seq", _pa.array([rank] * len(t), _pa.int64())
-            )
-        tables.append(t.select(canonical.names).cast(canonical))
-        merged_files.append(f)
-    if len(tables) < 2:
-        return 0
-    merged = _pa.concat_tables(tables)
-    # Publish atomically, matching the writer's temp/rename protocol: a
-    # dot-prefixed temp name is invisible to every listing (batch relist,
-    # stream reader, dedup replay), so no concurrent reader can open a
-    # partially-written merge output; os.replace makes it appear whole.
-    token = _uuid.uuid4().hex
-    out = _os.path.join(d, f"part-compact-{token}.parquet")
-    tmp = _os.path.join(d, f".part-compact-{token}.parquet.tmp")
-    _pq.write_table(merged, tmp)
-    _os.replace(tmp, out)
-    for f in merged_files:
-        try:
-            _os.remove(_os.path.join(d, f))
-        except FileNotFoundError:
-            pass
+    runs = [
+        (rank if seq < 0 else seq, origin, shape, data)
+        for rank, t in enumerate(tables)
+        for seq, origin, shape, data in chunk_runs(t)
+    ]
+    if patch is not None:
+        runs = _patched(runs, *patch)
+    merged = pa.table(
+        {
+            "origin": _list_array([r[1] for r in runs], pa.int64()),
+            "shape": _list_array([r[2] for r in runs], pa.int64()),
+            "data": _list_array([r[3] for r in runs], pa.float64()),
+            "seq": pa.array([r[0] for r in runs], pa.int64()),
+        }
+    )
+    name = _rewrite_name(paths)
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(merged, tmp)
+    os.replace(tmp, os.path.join(d, name))
+    for p in paths:
+        # the companion first: a crash in between leaves a file without
+        # its checksum (read unverified), never a checksum without a file
+        for q in (os.path.join(d, f".{os.path.basename(p)}.crc"), p):
+            try:
+                os.remove(q)
+            except FileNotFoundError:
+                pass
     return 1
 
 
@@ -470,7 +516,7 @@ class ChunkStore:
 
     def write_array(self, array_id: str, grid: ChunkGrid, data: np.ndarray) -> None:
         df = self.spark.createDataFrame(list(self._rows_from_ndarray(array_id, grid, data)), CHUNK_SCHEMA)
-        self._write(df, mode="append")
+        self._write(df)
 
     def write_fill(self, array_id: str, grid: ChunkGrid, fill_value: float) -> None:
         """Materialize a fill-value array without driver-side data:
@@ -490,7 +536,7 @@ class ChunkStore:
                 f"i -> CAST({fill_value} AS DOUBLE))"
             ),
         ).withColumn("seq", F.lit(next_write_seq()))
-        self._write(df.select(*[f.name for f in CHUNK_SCHEMA.fields]), mode="append")
+        self._write(df.select(*[f.name for f in CHUNK_SCHEMA.fields]))
 
     def write_from_cells(
         self,
@@ -594,25 +640,20 @@ class ChunkStore:
                     .select(*[f.name for f in CHUNK_SCHEMA.fields])
                 )
                 present = present.unionByName(fill_df)
-            self._write(present, mode="append")
+            self._write(present)
         finally:
             # the cache exists only for this build's two reads — holding
             # it past the write pins executor memory for the session
             with_idx.unpersist()
 
-    def _write(self, df: DataFrame, mode: str) -> None:
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    def _write(self, df: DataFrame) -> None:
+        """Append ``df``'s runs as new files in their chunk dirs."""
         (
             df.repartition("array_id", "chunk_idx")
-            .write.mode(mode)
+            .write.mode("append")
             .partitionBy("array_id", "chunk_idx")
             .parquet(self.path)
         )
-
-    def overwrite_chunks(self, df: DataFrame) -> None:
-        """Copy-on-write: replaces only the (array_id, chunk_idx)
-        partitions present in df (dynamic partition overwrite)."""
-        self._write(df, mode="overwrite")
 
     # -- read -------------------------------------------------------------
 
@@ -635,22 +676,24 @@ class ChunkStore:
         each).
 
         Distributed: the chunk-dir list parallelizes over executors and
-        each dir merges independently (bounded by one chunk's bytes).
-        Placement semantics survive the merge because run precedence is
-        the explicit ``seq`` column, not file order (legacy seq-less
-        rows get a synthesized rank — see ``_merge_chunk_dir``).
-        Crash window: a failure between writing the merged file and
-        removing the inputs leaves duplicate RUNS, which re-place the
-        same values — reads stay correct, and the next compact pass
-        heals the dir.
+        each dir is rewritten independently (bounded by one chunk's
+        bytes) by ``_merge_chunk_dir``, the same rewrite a subset update
+        runs on the driver, here without a patch. Placement semantics
+        survive the merge because run precedence is the explicit ``seq``
+        column, not file order (legacy seq-less rows get a synthesized
+        rank). Crash window: a failure between publishing the merged
+        file and removing the inputs leaves duplicate RUNS; the merged
+        file sorts last, so reads resolve to its values, and the next
+        rewrite of the dir heals it.
 
         Concurrency: safe alongside an active ``writeStream`` — a
         writer task's in-flight dot-prefixed temp files are invisible
         here (and to every reader) until its commit renames them, and a
         committed file that appears after this pass's listing snapshot
-        is simply not merged this time. Vanished files (concurrent
-        ``delete_array``) are skipped. Two concurrent compact() calls
-        on the SAME store are not supported.
+        is simply not merged this time. A file that vanishes mid-read
+        re-lists the dir. Two concurrent compact() calls on the SAME
+        store, or a compact racing an update of the same chunk, are not
+        supported.
 
         Returns the number of chunk dirs compacted. NOTE for changefeed
         consumers: the merged file is a NEW file, so a running
@@ -855,17 +898,13 @@ class ChunkStore:
         # one chunk dir at a time: driver memory is the output plus one
         # chunk's runs, and runs in different dirs never overlap
         for idx in grid.overlapping_chunks(norm):
-            files = visible_chunk_files(chunk_dir(self.path, array_id, idx))
-            for _, origin, shape, values in ordered_runs(read_chunk_files(files)):
-                src, dst = [], []
-                for o, s, a, b in zip(origin.tolist(), shape, lo, hi):
-                    start, stop = max(a, o), min(b, o + s)
-                    if start >= stop:
-                        break  # run misses the box (or is empty)
-                    src.append(slice(start - o, stop - o))
-                    dst.append(slice(start - a, stop - a))
-                else:
-                    out[tuple(dst)] = values.reshape(shape)[tuple(src)]
+            _, tables = read_chunk_files(
+                visible_chunk_files(chunk_dir(self.path, array_id, idx))
+            )
+            for _, origin, shape, values in ordered_runs(tables):
+                hit = _overlap(origin.tolist(), shape, lo, hi)
+                if hit is not None:
+                    out[hit[1]] = values.reshape(shape)[hit[0]]
         squeeze_axes = tuple(d for d, (_, _, sq) in enumerate(norm) if sq)
         if squeeze_axes:
             out = out.squeeze(axis=squeeze_axes)
@@ -878,8 +917,10 @@ class ChunkStore:
         norm: list[tuple[int, int, bool]],
         data: np.ndarray | float,
     ) -> None:
-        """Copy-on-write subset update: read-modify-write only the
-        overlapped chunks, then dynamic-partition-overwrite them."""
+        """Copy-on-write subset update on the driver, with no Spark job:
+        each overlapped chunk dir is rewritten by ``_merge_chunk_dir``
+        with its part of the patch. A concurrent reader sees each chunk
+        whole, before or after (read-committed per chunk)."""
         out_shape = [stop - start for start, stop, _ in norm]
         if isinstance(data, (int, float)):
             patch = np.full(out_shape, float(data), dtype=np.float64)
@@ -892,91 +933,16 @@ class ChunkStore:
             ]
             patch = np.broadcast_to(np.asarray(data, dtype=np.float64), squeezed)
             patch = patch.reshape(out_shape)
-        idxs = grid.overlapping_chunks(norm)
         lo = [start for start, _, _ in norm]
-        hi = [stop for _, stop, _ in norm]
-        patch_bc = self.spark.sparkContext.broadcast(np.ascontiguousarray(patch))
-
-        def patch_chunks(batches: Iterable[pd.DataFrame]):
-            p = patch_bc.value
-            # walk plain column values via zip — no per-row pandas
-            # Series (iterrows) in the update hot path
-            for pdf in batches:
-                origins, shapes, datas = [], [], []
-                for origin_v, shape_v, data_v in zip(pdf["origin"], pdf["shape"], pdf["data"]):
-                    origin = np.asarray(origin_v, dtype=np.int64)
-                    shape = np.asarray(shape_v, dtype=np.int64)
-                    # np.array (copy): Arrow hands over read-only buffers
-                    arr = np.array(data_v, dtype=np.float64).reshape(shape)
-                    sel, src = [], []
-                    for d in range(len(shape)):
-                        a = max(lo[d] - origin[d], 0)
-                        b = min(hi[d] - origin[d], shape[d])
-                        sel.append(slice(a, b))
-                        src.append(slice(int(origin[d] + a - lo[d]), int(origin[d] + b - lo[d])))
-                    arr[tuple(sel)] = p[tuple(src)]
-                    origins.append(list(origin))
-                    shapes.append(list(shape))
-                    datas.append(arr.ravel(order="C"))
-                yield pd.DataFrame(
-                    {
-                        "array_id": pdf["array_id"].to_numpy(),
-                        "chunk_idx": pdf["chunk_idx"].to_numpy(),
-                        "origin": origins,
-                        "shape": shapes,
-                        "data": datas,
-                        # preserve each run's placement rank: the patch
-                        # writes the same values into every overlapping
-                        # run, so relative order among them is unchanged
-                        "seq": pdf["seq"].to_numpy(),
-                    },
-                    columns=["array_id", "chunk_idx", "origin", "shape", "data", "seq"],
-                )
-
-        # seq coalesced JVM-side: nulls would reach pandas as float64
-        # and round 60-bit stamps. Legacy seq-less
-        # rows get a SYNTHESIZED per-file rank in sorted-file-name
-        # order (the _merge_chunk_dir convention) rather than a flat
-        # -1: the rewrite moves rows into NEW files, so the read path's
-        # file-name tiebreak would otherwise re-order overlapping
-        # legacy runs after a COW of a disjoint region of the chunk.
-        # The rank computes on the DISTINCT (chunk, file) list — a
-        # files-count-sized frame — and broadcast-joins back, so the
-        # chunk payload rows never shuffle for it (a window directly
-        # over the scan would Exchange+Sort every data array).
-        w = Window.partitionBy("chunk_idx").orderBy("fp")
-        file_ranks = (
-            self.scan(array_id, idxs)
-            .select("chunk_idx", F.col("_metadata.file_path").alias("fp"))
-            .distinct()
-            .withColumn(
-                "legacy_rank", (F.dense_rank().over(w) - 1).cast("long")
+        for idx in grid.overlapping_chunks(norm):
+            box = [
+                (max(a, start), min(b, stop))
+                for (a, b), (start, stop, _) in zip(grid.chunk_box(idx), norm)
+            ]
+            piece = patch[tuple(slice(a - l, b - l) for (a, b), l in zip(box, lo))]
+            _merge_chunk_dir(
+                chunk_dir(self.path, array_id, idx), ([a for a, _ in box], piece)
             )
-        )
-        # LEFT join + 3-way coalesce, not INNER: the two scans list
-        # files independently, so a file appearing between them (a
-        # concurrent compact/append racing this COW, or listing skew
-        # between the broadcast job and the main job) has no rank row.
-        # Under an inner join its rows would silently vanish from
-        # `source` and overwrite_chunks would persist the loss; with
-        # the left join an unmatched file degrades to the old flat -1
-        # (a possible reorder among legacy seq-less runs, never loss).
-        source = (
-            self.scan(array_id, idxs)
-            .withColumn("fp", F.col("_metadata.file_path"))
-            .join(F.broadcast(file_ranks), ["chunk_idx", "fp"], "left")
-            .withColumn(
-                "seq",
-                F.coalesce(F.col("seq"), F.col("legacy_rank"), F.lit(-1)),
-            )
-            .drop("fp", "legacy_rank")
-        )
-        updated = source.mapInPandas(patch_chunks, CHUNK_SCHEMA)
-        # materialize BEFORE overwriting: the plan reads the very
-        # partitions the write replaces; an eager checkpoint cuts the
-        # lineage so a task retry can never re-read replaced files
-        updated = updated.localCheckpoint(eager=True)
-        self.overwrite_chunks(updated)
 
     def cell_df(
         self, array_id: str, dim_names: Sequence[str], dedup: bool = False

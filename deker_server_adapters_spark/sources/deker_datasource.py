@@ -83,6 +83,7 @@ from pyspark.sql.types import (
 TMP_PREFIX = ".part-tmp-"
 from deker_server_adapters_spark.core.storage import (  # noqa: E402
     _SEQ_COUNTER_BITS,
+    APPEND_PREFIX,
     chunk_dir,
     chunk_runs,
     ordered_runs,
@@ -234,7 +235,7 @@ def _chunk_cell_batches(
     if on_vanish == "relist":
         # BATCH semantics: a batch query has no "next batch" to heal a
         # vanished file, so re-list and read the current visible set
-        tables = read_chunk_files(partition.files)
+        _, tables = read_chunk_files(partition.files)
     else:
         tables = []
         for path in partition.files:
@@ -787,7 +788,7 @@ class DekerWriter(DataSourceArrowWriter):
             messages,
             lambda path, pid, i: os.path.join(
                 os.path.dirname(path),
-                "part-" + os.path.basename(path)[len(TMP_PREFIX):],
+                APPEND_PREFIX + os.path.basename(path)[len(TMP_PREFIX):],
             ),
         )
         self._register_meta(messages)

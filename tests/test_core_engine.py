@@ -143,14 +143,17 @@ class TestArrays:
         assert e.value.limit == 10 and e.value.requested == 240
 
     def test_read_runs_no_spark_job(self, warehouse, spark):
-        """read_data is served on the driver: a cell, a box and a whole
-        array (one chunk, and a varray spanning six) start no Spark job."""
+        """read_data and update are served on the driver: a cell, a box
+        and a whole array (one chunk, and a varray spanning six), an
+        update of a one-chunk box, a clear of a varray box spanning
+        chunks and a chunk-view update start no Spark job."""
         coll = warehouse.collections.create("c", SCHEMA)
         ref = np.random.RandomState(5).rand(20, 12)
         arr = coll.arrays.create({"station": "s"}, data=ref)
         vcoll = warehouse.collections.create("v", VSCHEMA)
         vref = np.random.RandomState(6).rand(12, 8)
         va = vcoll.varrays.create(data=vref)
+        view = vcoll.arrays.get_by_primary_attributes({"vid": va.id, "v_position": [1, 0]})
         sc = spark.sparkContext
         reads = {
             "cell": (lambda: arr.read_data((3, 4)), ref[3, 4]),
@@ -158,11 +161,35 @@ class TestArrays:
             "whole": (lambda: arr.read_data(), ref),
             "varray": (lambda: va.read_data(), vref),
         }
+
+        def update_box():
+            arr.update((slice(2, 9), slice(1, 5)), -ref[2:9, 1:5])
+            ref[2:9, 1:5] *= -1
+
+        def clear_varray_box():  # rows 3:9 x cols 2:7 reach 4 of 6 chunks
+            va.clear((slice(3, 9), slice(2, 7)))
+            vref[3:9, 2:7] = va.schema.fill_value
+
+        def update_view():  # chunk (1, 0) covers rows 4:8, cols 0:4
+            view.update((slice(0, 2), 1), [-5.0, -6.0])
+            vref[4:6, 1] = [-5.0, -6.0]
+
+        writes = {
+            "update": (update_box, arr, ref),
+            "clear": (clear_varray_box, va, vref),
+            "view": (update_view, va, vref),
+        }
         try:
             for kind, (read, want) in reads.items():
                 group = f"read-no-job-{kind}"
                 sc.setJobGroup(group, kind)
                 np.testing.assert_allclose(read(), want)
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
+            for kind, (write, target, want) in writes.items():
+                group = f"write-no-job-{kind}"
+                sc.setJobGroup(group, kind)
+                write()
+                np.testing.assert_array_equal(target.read_data(), want)
                 assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
         finally:
             for key in (
@@ -414,3 +441,23 @@ def test_corrupt_meta_file_is_skipped(warehouse):
     metas = list(coll.arrays)
     assert [m["id"] for m in metas] == [a.id]
     assert coll.arrays.get_by_primary_attributes({"station": "s1"}).id == a.id
+
+
+def test_array_writes_leave_partition_overwrite_mode_alone(warehouse, spark, tmp_path):
+    """An overwrite of a partitioned output through ``sources.io``
+    replaces every partition, before and after the engine writes an
+    array: engine writes must not switch the session's
+    ``partitionOverwriteMode`` to dynamic."""
+    import os
+
+    from deker_server_adapters_spark.sources.io import write_parquet
+
+    def partitions_after_overwrite(path: str) -> list[str]:
+        write_parquet(spark.createDataFrame([("a", 1), ("b", 2)], "p string, v long"), path, ["p"])
+        write_parquet(spark.createDataFrame([("c", 3)], "p string, v long"), path, ["p"])
+        return sorted(n[len("p="):] for n in os.listdir(path) if n.startswith("p="))
+
+    assert partitions_after_overwrite(str(tmp_path / "before")) == ["c"]
+    coll = warehouse.collections.create("weather", SCHEMA)
+    coll.arrays.create({"station": "s1"}, data=np.ones((20, 12)))
+    assert partitions_after_overwrite(str(tmp_path / "after")) == ["c"]

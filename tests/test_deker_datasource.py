@@ -1266,6 +1266,99 @@ def test_cow_rewrite_preserves_legacy_run_precedence(spark, tmp_path):
     np.testing.assert_allclose(a.read_data((1, slice(0, 12))), [7.0] * 12)
 
 
+def test_update_writes_cells_no_run_covers(spark, tmp_path):
+    """A sparse deker append covers part of an update's box. The update
+    must write every cell of the box, not only the appended ones, and
+    leave the cells outside it at the fill value."""
+    root = str(tmp_path / "whsparse")
+    wh = Warehouse(spark, root)
+    wh.collections.create("w", SCHEMA)
+    register(spark)
+    (
+        spark.createDataFrame(
+            [("s1", 1, j, float(j)) for j in range(6)],
+            "array_id string, x long, y long, value double",
+        )
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root)
+        .option("collection", "w")
+        .mode("append")
+        .save()
+    )
+    arr = wh.collections.read("w").arrays.get_by_id("s1")
+    arr.update((slice(0, 3), slice(0, 12)), 9.0)
+    want = np.full((20, 12), SCHEMA.fill_value)
+    want[0:3, :] = 9.0
+    np.testing.assert_array_equal(arr.read_data(), want)
+
+
+def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monkeypatch):
+    """An update publishes its rewritten chunk file before it removes
+    the files it replaces. If it dies in between, reads must already
+    return the updated values (the new file sorts after every file it
+    replaces), a following compact() must keep them, and no Hadoop
+    .crc file may outlive its parquet file."""
+    import glob as _glob
+    import os
+
+    from deker_server_adapters_spark.core.storage import (
+        ChunkStore,
+        is_visible_chunk_file,
+        visible_chunk_files,
+    )
+
+    root = str(tmp_path / "whcrash")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    base = np.random.RandomState(4).rand(20, 12)
+    a = coll.arrays.create(data=base)
+    register(spark)
+    (
+        spark.createDataFrame(
+            [(a.id, 2, j, -1.0) for j in range(12)],
+            "array_id string, x long, y long, value double",
+        )
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root)
+        .option("collection", "w")
+        .option("create_arrays", "false")
+        .mode("append")
+        .save()
+    )
+    want = base.copy()
+    want[2, :] = -1.0
+    (d,) = _glob.glob(os.path.join(root, "collections", "w", "chunks", "array_id=*", "chunk_idx=*"))
+    replaced = visible_chunk_files(d)
+    assert len(replaced) == 2
+    assert any(n.endswith(".crc") for n in os.listdir(d))  # Spark's checksums
+
+    real_remove = os.remove
+
+    def crash(path):
+        name = os.path.basename(path)
+        if is_visible_chunk_file(name) or name.endswith(".crc"):
+            raise OSError("crash before removal")
+        real_remove(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "remove", crash)
+        with pytest.raises(OSError, match="crash before removal"):
+            a.update((slice(0, 4), slice(3, 9)), np.full((4, 6), 5.0))
+    want[0:4, 3:9] = 5.0
+    after = visible_chunk_files(d)
+    assert after[:-1] == replaced and after[-1] not in replaced  # sorts last
+    np.testing.assert_array_equal(a.read_data(), want)
+
+    assert ChunkStore(spark, os.path.join(root, "collections", "w")).compact() == 1
+    assert len(visible_chunk_files(d)) == 1
+    np.testing.assert_array_equal(a.read_data(), want)
+    names = set(os.listdir(d))
+    orphans = [n for n in names if n.endswith(".crc") and n[1 : -len(".crc")] not in names]
+    assert orphans == []
+
+
 def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):
     """ADVICE r8: when a task's within-task run counter overflows its
     seq range, the writer must reserve the next range through the

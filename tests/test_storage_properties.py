@@ -94,8 +94,8 @@ def test_chunk_boxes_tile_the_shape(case):
 )
 @pytest.mark.slow
 def test_read_slice_matches_numpy(spark, tmp_path_factory, case, rnd):
-    """End-to-end: write through the chunk store, read any slice, get
-    numpy's answer."""
+    """End-to-end: write through the chunk store, update a second
+    random box, read any slice, get numpy's answer."""
     shape, splits, bounds = case
     if math.prod(shape) > 2000:
         return
@@ -106,6 +106,11 @@ def test_read_slice_matches_numpy(spark, tmp_path_factory, case, rnd):
     ref = rng.rand(*shape)
     store = ChunkStore(spark, str(tmp_path_factory.mktemp("props")))
     store.write_array("a1", grid, ref)
+    starts = [rnd.randint(0, s - 1) for s in shape]
+    box = tuple(slice(a, rnd.randint(a, s)) for a, s in zip(starts, shape))
+    values = -rng.rand(*ref[box].shape)
+    store.update_slice("a1", grid, normalize_bounds(box, shape), values)
+    ref[box] = values
     norm = normalize_bounds(bounds, shape)
     got = store.read_slice("a1", grid, norm, np.dtype("float64"))
     want = ref[bounds]
