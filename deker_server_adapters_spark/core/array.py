@@ -5,10 +5,25 @@ create, read_meta, update_meta_custom_attributes, delete,
 read_data(bounds), update(bounds, data), clear(bounds),
 get_by_id, get_by_primary_attributes, iterate, delete_all_by_vid
 (array_adapter.py:41-77).
+
+Catalog layout under ``<collection>/meta``: one ``<id>.json`` per
+array or varray (``:`` in chunk-view ids becomes ``__``), which Spark
+scans as ``meta/*.json`` for ``meta_df``, ``lookup_df`` and iteration;
+and a primary-key index, ``_primary/<md5 of the canonical key>/<meta
+file name>``, of empty markers, which serves
+``get_by_primary_attributes`` on the driver. The canonical key is
+``json.dumps(primary_attributes, sort_keys=True)``; arrays with no
+primary attributes are not indexed. ``_primary/.complete`` marks an
+index that covers the catalog. Every meta write goes through
+``write_meta`` (marker first, then the meta through a temp file and
+``os.replace``), every removal through ``remove_meta`` (meta first,
+then the marker), so a marker without its meta is the only stale state
+a lookup can meet, and it skips it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import uuid
@@ -33,6 +48,99 @@ from deker_server_adapters_spark.core.storage import (
     normalize_bounds,
     resolve_bounds,
 )
+
+
+PRIMARY_INDEX = "_primary"
+INDEX_COMPLETE = ".complete"
+
+
+def meta_file_name(id_: str) -> str:
+    # chunk-array view ids are "vid:idx"; keep filenames filesystem-safe
+    return f"{id_.replace(':', '__')}.json"
+
+
+def _key_dir(meta_dir: str, key: str) -> str:
+    digest = hashlib.md5(key.encode()).hexdigest()
+    return os.path.join(meta_dir, PRIMARY_INDEX, digest)
+
+
+def _canonical_key(primary_attributes: dict) -> str:
+    return json.dumps(primary_attributes, sort_keys=True)
+
+
+def _mark(meta_dir: str, meta: dict) -> None:
+    if meta.get("primary_attributes"):
+        d = _key_dir(meta_dir, _canonical_key(meta["primary_attributes"]))
+        os.makedirs(d, exist_ok=True)
+        open(os.path.join(d, meta_file_name(meta["id"])), "a").close()
+
+
+def init_index(meta_dir: str) -> None:
+    """Lay down an empty, complete index in a new or cleared catalog."""
+    os.makedirs(os.path.join(meta_dir, PRIMARY_INDEX), exist_ok=True)
+    open(os.path.join(meta_dir, PRIMARY_INDEX, INDEX_COMPLETE), "a").close()
+
+
+def write_meta(meta_dir: str, meta: dict) -> None:
+    """Publish an array's meta: its index marker first, then the JSON
+    through a dot-prefixed temp file and ``os.replace``, so a write
+    that fails (an unserializable attribute, a full disk) leaves the
+    previous meta whole. Pure file I/O: the ``deker`` writer's commit
+    hook calls it without a SparkSession."""
+    text = json.dumps(meta)
+    _mark(meta_dir, meta)
+    name = meta_file_name(meta["id"])
+    tmp = os.path.join(meta_dir, f".{name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, os.path.join(meta_dir, name))
+
+
+def remove_meta(meta_dir: str, id_: str) -> bool:
+    """Unpublish an array's meta, then its index marker. False when
+    the array has no meta."""
+    path = os.path.join(meta_dir, meta_file_name(id_))
+    try:
+        with open(path) as f:
+            primary = json.load(f).get("primary_attributes")
+    except FileNotFoundError:
+        return False
+    except ValueError:  # unparsable meta: no key to unmark
+        primary = None
+    os.remove(path)
+    if primary:
+        marker = os.path.join(_key_dir(meta_dir, _canonical_key(primary)), meta_file_name(id_))
+        try:
+            os.remove(marker)
+        except FileNotFoundError:
+            pass
+    return True
+
+
+def find_meta(meta_dir: str, primary_attributes: dict) -> dict | None:
+    """The meta of the array whose full primary key equals
+    ``primary_attributes``, from the index alone: one key directory
+    listed, its metas opened in sorted file-name order, the first whose
+    key matches returned. A marker whose meta is gone or now differs is
+    skipped; a partial or unknown key is a miss."""
+    try:
+        key = _canonical_key(primary_attributes)
+    except TypeError:  # a value no stored (JSON) meta can hold
+        return None
+    try:
+        with os.scandir(_key_dir(meta_dir, key)) as it:
+            names = sorted(e.name for e in it)
+    except FileNotFoundError:
+        return None
+    for name in names:
+        try:
+            with open(os.path.join(meta_dir, name)) as f:
+                meta = json.load(f)
+        except (FileNotFoundError, ValueError):
+            continue
+        if _canonical_key(meta.get("primary_attributes") or {}) == key:
+            return meta
+    return None
 
 
 class Array:
@@ -127,12 +235,7 @@ class ArrayAdapter:
         return os.path.join(self.collection.path, "meta")
 
     def _meta_path(self, id_: str) -> str:
-        # chunk-array view ids are "vid:idx"; keep filenames filesystem-safe
-        return os.path.join(self._meta_dir(), f"{id_.replace(':', '__')}.json")
-
-    def _write_meta(self, array: Array) -> None:
-        with open(self._meta_path(array.id), "w") as f:
-            json.dump(array.meta(), f)
+        return os.path.join(self._meta_dir(), meta_file_name(id_))
 
     def _grid(self) -> ChunkGrid:
         schema = self.collection.array_schema
@@ -154,7 +257,7 @@ class ArrayAdapter:
         custom = custom_attributes or {}
         validate_attributes(schema, primary, custom)
         array = Array(self.collection, id_ or str(uuid.uuid4()), primary, custom)
-        self._write_meta(array)
+        write_meta(self._meta_dir(), array.meta())
         grid = self._grid()
         if data is not None:
             data = np.asarray(data, dtype=schema.np_dtype)
@@ -181,7 +284,7 @@ class ArrayAdapter:
         custom = custom_attributes or {}
         validate_attributes(schema, primary, custom)
         array = Array(self.collection, id_ or str(uuid.uuid4()), primary, custom)
-        self._write_meta(array)
+        write_meta(self._meta_dir(), array.meta())
         self.store.write_from_cells(
             array.id,
             self._grid(),
@@ -202,15 +305,12 @@ class ArrayAdapter:
     def update_meta_custom_attributes(self, array: Array, attributes: dict) -> None:
         meta = self.read_meta(array)
         meta["custom_attributes"].update(attributes)
+        write_meta(self._meta_dir(), meta)
         array.custom_attributes = meta["custom_attributes"]
-        with open(self._meta_path(array.id), "w") as f:
-            json.dump(meta, f)
 
     def delete(self, array: Array) -> None:
-        mp = self._meta_path(array.id)
-        if not os.path.exists(mp):
+        if not remove_meta(self._meta_dir(), array.id):
             raise DekerArrayNotExistsError(array.id)
-        os.remove(mp)
         self.store.delete_array(array.id)
 
     def delete_all_by_vid(self, vid: str, collection: Collection | None = None) -> None:
@@ -257,10 +357,12 @@ class ArrayAdapter:
         """The catalog filtered to arrays whose primary attributes
         include the given key-values — a Catalyst plan over ``meta_df``
         (filter evaluated executor-side over the distributed scan), not
-        a driver loop. Returns None when the catalog is empty or a
-        wanted key exists on no array (reference base.py:333-434
-        get_by_primary_attributes, minus the per-array HTTP round
-        trips)."""
+        a driver loop. This is the filter over a subset of the
+        attributes (``delete_all_by_vid`` selects by ``vid`` alone);
+        a point lookup by the full key is ``get_by_primary_attributes``.
+        Returns None when the catalog is empty or a wanted key exists
+        on no array (reference base.py:333-434, minus the per-array
+        HTTP round trips)."""
         df = self._catalog_df()
         if df is None:
             return None
@@ -278,17 +380,35 @@ class ArrayAdapter:
         return df
 
     def get_by_primary_attributes(self, primary_attributes: dict) -> Array | None:
-        df = self.lookup_df(primary_attributes)
-        if df is None:
-            return None
-        hit = df.select("id").limit(1).collect()
-        if not hit:
-            return None
-        # Spark found the id; the authoritative meta comes from its own
-        # O(1) catalog entry (exact on-disk fidelity, no struct-union
-        # null artifacts from schema inference).
-        with open(self._meta_path(hit[0]["id"])) as f:
-            return self._from_meta(json.load(f))
+        """The array whose full primary key equals ``primary_attributes``
+        (reference base.py:333-382), served on the driver from the
+        primary-key index with no Spark job; among arrays sharing the
+        key, the one whose meta file name sorts first. A partial key is
+        a miss (filter by a subset through ``lookup_df``). A catalog
+        written before the index existed is indexed once, from the
+        catalog scan, on its first lookup."""
+        meta_dir = self._meta_dir()
+        if not os.path.exists(os.path.join(meta_dir, PRIMARY_INDEX, INDEX_COMPLETE)):
+            if not os.path.isdir(meta_dir):
+                return None
+            self._build_index()
+        meta = find_meta(meta_dir, primary_attributes)
+        return None if meta is None else self._from_meta(meta)
+
+    def _build_index(self) -> None:
+        """Mark every cataloged array, then flag the index complete.
+        Markers come from the meta files themselves, not from the
+        scanned rows, whose attribute types schema inference unifies."""
+        meta_dir = self._meta_dir()
+        df = self._catalog_df()
+        if df is not None:
+            for row in df.select("id").toLocalIterator():
+                try:
+                    with open(self._meta_path(row["id"])) as f:
+                        _mark(meta_dir, json.load(f))
+                except (FileNotFoundError, ValueError):
+                    continue
+        init_index(meta_dir)
 
     @staticmethod
     def _row_meta(row) -> dict:

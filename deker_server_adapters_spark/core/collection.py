@@ -93,10 +93,12 @@ class CollectionAdapter:
         return os.path.join(self.warehouse.path_for(name), "collection.json")
 
     def create(self, name: str, schema: ArraySchema) -> Collection:
+        from deker_server_adapters_spark.core.array import init_index
+
         path = self.warehouse.path_for(name)
         if os.path.exists(self._meta_path(name)):
             raise DekerCollectionAlreadyExistsError(name)
-        os.makedirs(os.path.join(path, "meta"), exist_ok=True)
+        init_index(os.path.join(path, "meta"))
         coll = Collection(self.warehouse, name, schema)
         with open(self._meta_path(name), "w") as f:
             json.dump(coll.as_dict(), f)
@@ -119,11 +121,13 @@ class CollectionAdapter:
     def clear(self, collection: Collection) -> None:
         """Drop all (v)arrays but keep the collection (reference
         collection_adapter.py:83-104)."""
+        from deker_server_adapters_spark.core.array import init_index
+
         if not os.path.exists(self._meta_path(collection.name)):
             raise DekerCollectionNotExistsError(collection.name)
         for sub in ("chunks", "meta"):
             shutil.rmtree(os.path.join(collection.path, sub), ignore_errors=True)
-        os.makedirs(os.path.join(collection.path, "meta"), exist_ok=True)
+        init_index(os.path.join(collection.path, "meta"))
 
     def __iter__(self) -> Iterator[dict]:
         base = os.path.join(self.warehouse.root, "collections")

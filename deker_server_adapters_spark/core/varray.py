@@ -14,13 +14,14 @@ store, so every array-adapter lookup works on them.
 
 from __future__ import annotations
 
+import json
 import uuid
 from typing import Any, Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
 
-from deker_server_adapters_spark.core.array import Array, ArrayAdapter
+from deker_server_adapters_spark.core.array import Array, ArrayAdapter, remove_meta, write_meta
 from deker_server_adapters_spark.core.collection import Collection
 from deker_server_adapters_spark.core.errors import DekerArrayNotExistsError
 from deker_server_adapters_spark.core.schema import VArraySchema
@@ -121,12 +122,8 @@ class VArrayAdapter:
         assert schema is not None
         vid = id_ or str(uuid.uuid4())
         varray = VArray(self.collection, vid, primary_attributes or {}, custom_attributes or {})
-        # register the varray itself
-        import json
-        import os
-
-        with open(os.path.join(self.collection.path, "meta", f"{vid}.json"), "w") as f:
-            json.dump({**varray.meta(), "is_varray": True}, f)
+        meta_dir = self._arrays._meta_dir()
+        write_meta(meta_dir, {**varray.meta(), "is_varray": True})
         grid = self._grid()
         if data is not None:
             data = np.asarray(data, dtype=schema.np_dtype)
@@ -138,13 +135,14 @@ class VArrayAdapter:
         # register chunk arrays as vid/v_position views (reference model)
         for idx in range(grid.n_chunks):
             pos = grid.chunk_position(idx)
-            meta = {
-                "id": f"{vid}:{idx}",
-                "primary_attributes": {"vid": vid, "v_position": list(pos)},
-                "custom_attributes": {},
-            }
-            with open(self._arrays._meta_path(meta["id"]), "w") as f:
-                json.dump(meta, f)
+            write_meta(
+                meta_dir,
+                {
+                    "id": f"{vid}:{idx}",
+                    "primary_attributes": {"vid": vid, "v_position": list(pos)},
+                    "custom_attributes": {},
+                },
+            )
         return varray
 
     def create_from_cells(
@@ -172,43 +170,38 @@ class VArrayAdapter:
         )
         return va
 
+    def _varray_meta(self, id_: str) -> dict | None:
+        """The varray's own meta file, or None when it is missing or
+        belongs to an array."""
+        try:
+            with open(self._arrays._meta_path(id_)) as f:
+                m = json.load(f)
+        except FileNotFoundError:
+            return None
+        return m if m.get("is_varray") else None
+
     def read_meta(self, varray: VArray) -> dict:
-        metas = {m["id"]: m for m in self._arrays}
-        if varray.id not in metas:
+        m = self._varray_meta(varray.id)
+        if m is None:
             raise DekerArrayNotExistsError(varray.id)
-        return metas[varray.id]
+        return m
 
     def update_meta_custom_attributes(self, varray: VArray, attributes: dict) -> None:
-        import json
-        import os
-
         meta = self.read_meta(varray)
         meta["custom_attributes"].update(attributes)
+        write_meta(self._arrays._meta_dir(), meta)
         varray.custom_attributes = meta["custom_attributes"]
-        with open(os.path.join(self.collection.path, "meta", f"{varray.id}.json"), "w") as f:
-            json.dump(meta, f)
 
     def delete(self, varray: VArray) -> None:
         """Delete the varray: its chunk dataset and every chunk-array
         view (reference deletes all arrays with this vid)."""
-        import os
-
         self._arrays.delete_all_by_vid(varray.id)
-        mp = os.path.join(self.collection.path, "meta", f"{varray.id}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
+        remove_meta(self._arrays._meta_dir(), varray.id)
         self.store.delete_array(varray.id)
 
     def get_by_id(self, id_: str) -> VArray | None:
-        import json
-        import os
-
-        mp = os.path.join(self.collection.path, "meta", f"{id_}.json")
-        if not os.path.exists(mp):
-            return None
-        with open(mp) as f:
-            m = json.load(f)
-        if not m.get("is_varray"):
+        m = self._varray_meta(id_)
+        if m is None:
             return None
         return VArray(self.collection, m["id"], m["primary_attributes"], m["custom_attributes"])
 

@@ -81,6 +81,7 @@ from pyspark.sql.types import (
 # glob-based listings here, and ChunkStore's compaction all skip it
 # until a commit renames it to a visible name
 TMP_PREFIX = ".part-tmp-"
+from deker_server_adapters_spark.core.array import meta_file_name, write_meta  # noqa: E402
 from deker_server_adapters_spark.core.storage import (  # noqa: E402
     _SEQ_COUNTER_BITS,
     APPEND_PREFIX,
@@ -771,17 +772,11 @@ class DekerWriter(DataSourceArrowWriter):
         os.makedirs(meta_dir, exist_ok=True)
         for m in messages:
             for array_id in getattr(m, "array_ids", ()):
-                mp = os.path.join(meta_dir, f"{array_id.replace(':', '__')}.json")
-                if not os.path.exists(mp):
-                    with open(mp, "w") as f:
-                        json.dump(
-                            {
-                                "id": array_id,
-                                "primary_attributes": {},
-                                "custom_attributes": {},
-                            },
-                            f,
-                        )
+                if not os.path.exists(os.path.join(meta_dir, meta_file_name(array_id))):
+                    write_meta(
+                        meta_dir,
+                        {"id": array_id, "primary_attributes": {}, "custom_attributes": {}},
+                    )
 
     def commit(self, messages) -> None:
         self._finalize_files(

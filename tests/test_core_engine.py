@@ -116,6 +116,62 @@ class TestArrays:
         assert coll.arrays.get_by_id(arr.id) is None
         assert coll.arrays.is_deleted(arr)
 
+    def test_failed_meta_update_keeps_old_meta(self, warehouse):
+        """A custom-attribute update that cannot be serialized raises and
+        leaves the array's meta, and the lookup, as they were."""
+        coll = warehouse.collections.create("c", SCHEMA)
+        arr = coll.arrays.create({"station": "s1"}, {"comment": "hi"}, id_="a1")
+        before = coll.arrays.read_meta(arr)
+        with pytest.raises(TypeError):
+            coll.arrays.update_meta_custom_attributes(arr, {"comment": {1, 2}})
+        assert coll.arrays.read_meta(arr) == before
+        assert coll.arrays.get_by_primary_attributes({"station": "s1"}).meta() == before
+
+    def test_shared_primary_key_resolves_to_sorted_first(self, warehouse):
+        """Arrays sharing a primary key resolve to the one whose meta
+        file name sorts first, every time; once it is deleted, the
+        other."""
+        coll = warehouse.collections.create("c", SCHEMA)
+        # b's meta file is the larger: a scan that packs files largest
+        # first would meet it first
+        coll.arrays.create({"station": "s"}, {"comment": "longer meta"}, id_="b")
+        first = coll.arrays.create({"station": "s"}, id_="a")
+        ids = {coll.arrays.get_by_primary_attributes({"station": "s"}).id for _ in range(5)}
+        assert ids == {"a"}
+        coll.arrays.delete(first)
+        assert coll.arrays.get_by_primary_attributes({"station": "s"}).id == "b"
+
+    def test_lookup_builds_missing_index_once(self, warehouse, spark):
+        """A catalog with no primary-key index (written before it
+        existed) is indexed by its first lookup; the next lookup runs
+        no Spark job."""
+        import os
+        import shutil
+
+        coll = warehouse.collections.create("c", SCHEMA)
+        arr = coll.arrays.create({"station": "s1"}, id_="a1")
+        coll.arrays.create({"station": "s2"}, id_="a2")
+        shutil.rmtree(os.path.join(coll.path, "meta", "_primary"))
+        assert coll.arrays.get_by_primary_attributes({"station": "s1"}).id == arr.id
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup("lookup-after-build", "lookup")
+            assert coll.arrays.get_by_primary_attributes({"station": "s2"}).id == "a2"
+            assert list(sc.statusTracker().getJobIdsForGroup("lookup-after-build")) == []
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    def test_lookup_skips_stale_marker(self, warehouse):
+        """A meta file removed behind the index's back leaves a marker
+        with no meta: the lookup misses instead of raising."""
+        import os
+
+        coll = warehouse.collections.create("c", SCHEMA)
+        arr = coll.arrays.create({"station": "s1"})
+        os.remove(coll.arrays._meta_path(arr.id))
+        assert coll.arrays.get_by_primary_attributes({"station": "s1"}) is None
+
     def test_validation(self, warehouse):
         coll = warehouse.collections.create("c", SCHEMA)
         with pytest.raises(DekerValidationError):
@@ -143,10 +199,12 @@ class TestArrays:
         assert e.value.limit == 10 and e.value.requested == 240
 
     def test_read_runs_no_spark_job(self, warehouse, spark):
-        """read_data and update are served on the driver: a cell, a box
-        and a whole array (one chunk, and a varray spanning six), an
-        update of a one-chunk box, a clear of a varray box spanning
-        chunks and a chunk-view update start no Spark job."""
+        """read_data, update and the metadata requests are served on the
+        driver: a cell, a box and a whole array (one chunk, and a varray
+        spanning six), an update of a one-chunk box, a clear of a varray
+        box spanning chunks, a chunk-view update, primary-key lookups
+        (a hit, a miss, an unknown key, a chunk-view hit) and a varray's
+        meta read and custom-attribute update start no Spark job."""
         coll = warehouse.collections.create("c", SCHEMA)
         ref = np.random.RandomState(5).rand(20, 12)
         arr = coll.arrays.create({"station": "s"}, data=ref)
@@ -179,6 +237,24 @@ class TestArrays:
             "clear": (clear_varray_box, va, vref),
             "view": (update_view, va, vref),
         }
+
+        def update_varray_meta():
+            vcoll.varrays.update_meta_custom_attributes(va, {})
+            return vcoll.varrays.read_meta(va)
+
+        metas = {
+            "hit": (lambda: coll.arrays.get_by_primary_attributes({"station": "s"}).id, arr.id),
+            "miss": (lambda: coll.arrays.get_by_primary_attributes({"station": "t"}), None),
+            "unknown": (lambda: coll.arrays.get_by_primary_attributes({"bogus": 1}), None),
+            "view": (
+                lambda: vcoll.arrays.get_by_primary_attributes(
+                    {"v_position": [1, 0], "vid": va.id}
+                ).id,
+                view.id,
+            ),
+            "varray_meta": (lambda: vcoll.varrays.read_meta(va)["id"], va.id),
+            "varray_meta_update": (lambda: update_varray_meta()["id"], va.id),
+        }
         try:
             for kind, (read, want) in reads.items():
                 group = f"read-no-job-{kind}"
@@ -190,6 +266,11 @@ class TestArrays:
                 sc.setJobGroup(group, kind)
                 write()
                 np.testing.assert_array_equal(target.read_data(), want)
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
+            for kind, (call, want) in metas.items():
+                group = f"meta-no-job-{kind}"
+                sc.setJobGroup(group, kind)
+                assert call() == want, kind
                 assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
         finally:
             for key in (
@@ -377,8 +458,9 @@ class TestVArrays:
 
 class TestDistributedLookup:
     def test_lookup_many_arrays_no_driver_listdir(self, warehouse, monkeypatch):
-        """get_by_primary_attributes / __iter__ run as Spark plans over
-        the catalog — os.listdir must never appear in the lookup path
+        """__iter__ runs as a Spark plan over the catalog scan and
+        get_by_primary_attributes reads only its key's index entry —
+        os.listdir of the meta dir must never appear in the lookup path
         (the reference-brief scale trap at millions of arrays)."""
         import os as _os
 
