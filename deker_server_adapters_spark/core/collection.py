@@ -21,6 +21,7 @@ from deker_server_adapters_spark.core.errors import (
     DekerCollectionNotExistsError,
 )
 from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema
+from deker_server_adapters_spark.core.storage import drop_cached
 
 if TYPE_CHECKING:
     from deker_server_adapters_spark.core.array import ArrayAdapter
@@ -117,6 +118,7 @@ class CollectionAdapter:
         if not os.path.exists(self._meta_path(collection.name)):
             raise DekerCollectionNotExistsError(collection.name)
         shutil.rmtree(collection.path, ignore_errors=True)
+        drop_cached(collection.path)
 
     def clear(self, collection: Collection) -> None:
         """Drop all (v)arrays but keep the collection (reference
@@ -127,6 +129,7 @@ class CollectionAdapter:
             raise DekerCollectionNotExistsError(collection.name)
         for sub in ("chunks", "meta"):
             shutil.rmtree(os.path.join(collection.path, sub), ignore_errors=True)
+        drop_cached(collection.path)
         init_index(os.path.join(collection.path, "meta"))
 
     def __iter__(self) -> Iterator[dict]:

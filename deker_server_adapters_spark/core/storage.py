@@ -26,6 +26,16 @@ Spark-first consequences:
   the files it replaces are removed, mirroring Deker's subset PUT
   (reference base.py:272-303). ``compact`` runs the same rewrite,
   without a patch, on executors.
+- Decoded chunk dirs stay in one process-wide LRU cache on the driver
+  (the role of HDF5's raw-data chunk cache), bounded at
+  ``CHUNK_CACHE_BYTES`` of ``pa.Table.nbytes``; a dir larger than the
+  budget is not cached. Every request lists and stats the dir's
+  visible files and hits only on an identical ``(name, size,
+  mtime_ns, inode)`` signature, so any writer, in this process or
+  another, makes the next request miss; array and collection deletes
+  drop their entries only to free memory. Only the driver's
+  ``read_slice`` and ``update_slice`` use it; ``compact`` and the
+  ``deker`` source read uncached on executors.
 - ``cell_df`` exposes any array as a long-format DataFrame
   (dim indices + value) with pure-JVM index arithmetic, so arrays
   join/aggregate with relational tables in one Catalyst plan.
@@ -39,6 +49,7 @@ import re
 import threading
 import time
 import uuid
+from collections import OrderedDict
 from typing import Iterable, Iterator, Sequence, Union
 
 import numpy as np
@@ -318,6 +329,84 @@ def read_chunk_files(paths: Sequence[str]) -> tuple[list[str], list[pa.Table]]:
     raise RuntimeError(f"chunk dir kept changing during read: {d}")
 
 
+# The driver-side chunk cache (see the module docstring). Entries are
+# keyed by absolute dir path at module level, so every ChunkStore in
+# the process shares them: ``Array`` builds a new adapter per call.
+# Cached tables are only ever read: ``chunk_runs`` hands out read-only
+# views and ``_patched`` copies before it writes.
+CHUNK_CACHE_BYTES = 256 << 20  # budget in pa.Table.nbytes
+_CACHE_LOCK = threading.Lock()
+_CACHE: OrderedDict[str, tuple[tuple, list[pa.Table], int]] = OrderedDict()
+_cache_nbytes = 0
+
+
+def _signature(paths: Sequence[str]) -> tuple | None:
+    """The cache signature of a listing, or None if a listed file has
+    already vanished. An in-place rewrite that keeps a file's size
+    within one tick of the file system's timestamp clock goes unseen;
+    the engine's writers never rewrite in place, they publish new names
+    by rename (a new inode)."""
+    sig = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except FileNotFoundError:
+            return None
+        sig.append((os.path.basename(p), st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sig)
+
+
+def _cache_put(d: str, sig: tuple, tables: list[pa.Table]) -> None:
+    """Cache ``tables`` as dir ``d`` under ``sig``, evicting least
+    recently used dirs past the budget; a dir larger than the whole
+    budget is not cached (and its stale entry goes)."""
+    global _cache_nbytes
+    nbytes = sum(t.nbytes for t in tables)
+    key = os.path.abspath(d)
+    with _CACHE_LOCK:
+        old = _CACHE.pop(key, None)
+        if old is not None:
+            _cache_nbytes -= old[2]
+        if nbytes > CHUNK_CACHE_BYTES:
+            return
+        _CACHE[key] = (sig, tables, nbytes)
+        _cache_nbytes += nbytes
+        while _cache_nbytes > CHUNK_CACHE_BYTES:
+            _cache_nbytes -= _CACHE.popitem(last=False)[1][2]
+
+
+def drop_cached(d: str) -> None:
+    """Drop the cache entries of dir ``d`` and of every dir under it —
+    the memory of a deleted array or collection."""
+    global _cache_nbytes
+    key = os.path.abspath(d)
+    with _CACHE_LOCK:
+        for k in [k for k in _CACHE if k == key or k.startswith(key + os.sep)]:
+            _cache_nbytes -= _CACHE.pop(k)[2]
+
+
+def read_chunk_dir(d: str) -> tuple[list[str], list[pa.Table]]:
+    """:func:`read_chunk_files` of dir ``d``'s current listing, through
+    the driver-side cache. The signature is taken before the files are
+    read, so an entry never holds tables older than its signature. A
+    miss is cached only when the files read are exactly the listing; a
+    file gone by the stat falls back to the relisting read, uncached."""
+    paths = visible_chunk_files(d)
+    sig = _signature(paths)
+    if sig is None:
+        return read_chunk_files(paths)
+    key = os.path.abspath(d)
+    with _CACHE_LOCK:
+        hit = _CACHE.get(key)
+        if hit is not None and hit[0] == sig:
+            _CACHE.move_to_end(key)
+            return paths, hit[1]
+    read, tables = read_chunk_files(paths)
+    if paths and read == paths:
+        _cache_put(d, sig, tables)
+    return read, tables
+
+
 def _list_parts(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
     """(offsets, flat values) of a list column as NumPy views; null
     elements (none of the engine's writers produce them) read as NaN."""
@@ -456,9 +545,12 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
                 os.remove(os.path.join(d, f))
             except FileNotFoundError:
                 pass
-    paths, tables = read_chunk_files(visible_chunk_files(d))
-    if patch is None and len(paths) < 2:
-        return 0
+    if patch is None:
+        paths, tables = read_chunk_files(visible_chunk_files(d))
+        if len(paths) < 2:
+            return 0
+    else:
+        paths, tables = read_chunk_dir(d)
     runs = [
         (rank if seq < 0 else seq, origin, shape, data)
         for rank, t in enumerate(tables)
@@ -474,10 +566,10 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
             "seq": pa.array([r[0] for r in runs], pa.int64()),
         }
     )
-    name = _rewrite_name(paths)
-    tmp = os.path.join(d, f".{name}.tmp")
+    out = os.path.join(d, _rewrite_name(paths))
+    tmp = os.path.join(d, f".{os.path.basename(out)}.tmp")
     pq.write_table(merged, tmp)
-    os.replace(tmp, os.path.join(d, name))
+    os.replace(tmp, out)
     for p in paths:
         # the companion first: a crash in between leaves a file without
         # its checksum (read unverified), never a checksum without a file
@@ -486,6 +578,12 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
                 os.remove(q)
             except FileNotFoundError:
                 pass
+    if patch is not None:
+        # write-through: the next request for this chunk is a hit while
+        # the rewrite's file is all the dir holds
+        sig = _signature([out])
+        if sig is not None:
+            _cache_put(d, sig, [merged])
     return 1
 
 
@@ -863,10 +961,13 @@ class ChunkStore:
 
     def delete_array(self, array_id: str) -> None:
         """Drop all chunk partitions of one array (metadata-cheap: a
-        directory delete, no data rewrite)."""
+        directory delete, no data rewrite) and their driver-side cache
+        entries."""
         import shutil
 
-        shutil.rmtree(chunk_dir(self.path, array_id), ignore_errors=True)
+        d = chunk_dir(self.path, array_id)
+        shutil.rmtree(d, ignore_errors=True)
+        drop_cached(d)
 
     def read_slice(
         self,
@@ -879,7 +980,15 @@ class ChunkStore:
     ) -> np.ndarray:
         """The box ``norm`` of one array as an ndarray, read on the
         driver with no Spark job. Isolation matches the ``deker``
-        source: read-committed per chunk (see :func:`read_chunk_files`)."""
+        source: read-committed per chunk (see :func:`read_chunk_files`).
+
+        Chunk dirs come through the driver-side cache
+        (:func:`read_chunk_dir`): every request lists and stats each
+        overlapped dir's files, and reuses the decoded tables only if
+        that ``(name, size, mtime_ns, inode)`` signature is exactly the
+        cached one. While the hot chunks fit ``CHUNK_CACHE_BYTES`` a
+        repeated read decodes no parquet; past it a read pays the
+        decode plus one ``stat`` per file."""
         out_shape_full = [stop - start for start, stop, _ in norm]
         n_points = math.prod(out_shape_full)
         if n_points > max_points:
@@ -895,12 +1004,11 @@ class ChunkStore:
         # surfaces there, but the deker writer's bulk appends are
         # sparse — Deker semantics say unwritten cells ARE fill_value
         out = np.full(out_shape_full, fill_value, dtype=np.float64)
-        # one chunk dir at a time: driver memory is the output plus one
-        # chunk's runs, and runs in different dirs never overlap
+        # one chunk dir at a time: driver memory is the output, one
+        # chunk's runs and the bounded chunk cache; runs in different
+        # dirs never overlap
         for idx in grid.overlapping_chunks(norm):
-            _, tables = read_chunk_files(
-                visible_chunk_files(chunk_dir(self.path, array_id, idx))
-            )
+            _, tables = read_chunk_dir(chunk_dir(self.path, array_id, idx))
             for _, origin, shape, values in ordered_runs(tables):
                 hit = _overlap(origin.tolist(), shape, lo, hi)
                 if hit is not None:
@@ -920,7 +1028,12 @@ class ChunkStore:
         """Copy-on-write subset update on the driver, with no Spark job:
         each overlapped chunk dir is rewritten by ``_merge_chunk_dir``
         with its part of the patch. A concurrent reader sees each chunk
-        whole, before or after (read-committed per chunk)."""
+        whole, before or after (read-committed per chunk).
+
+        The rewrite reads each dir through the same signature-checked
+        driver-side cache as :meth:`read_slice` and writes its output
+        through to it, so a read (or another update) right after an
+        update of the chunk decodes no parquet."""
         out_shape = [stop - start for start, stop, _ in norm]
         if isinstance(data, (int, float)):
             patch = np.full(out_shape, float(data), dtype=np.float64)

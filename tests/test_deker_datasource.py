@@ -1597,6 +1597,8 @@ def test_read_data_relists_a_file_compacted_mid_read(spark, tmp_path, monkeypatc
     for _, i, j, v in patch:
         want[i, j] = v
     np.testing.assert_allclose(a.read_data(), want)
+    # that read cached the chunk; start cold so the next read opens files
+    storage.drop_cached(storage.chunk_dir(os.path.join(coll.path, "chunks"), a.id))
 
     real_read = storage._read_parquet
     vanished = []
@@ -1610,6 +1612,264 @@ def test_read_data_relists_a_file_compacted_mid_read(spark, tmp_path, monkeypatc
     monkeypatch.setattr(storage, "_read_parquet", read_after_compact)
     np.testing.assert_allclose(a.read_data(), want)
     assert vanished and not os.path.exists(vanished[0])
+    # the tables came from a relisting, not the listing the stat signed
+    assert os.path.abspath(os.path.dirname(vanished[0])) not in storage._CACHE
+
+
+def _append_cells(spark, root, cells):
+    """A sparse ``deker`` append of ``(array_id, x, y, value)`` cells
+    into collection ``w`` as one file per touched chunk."""
+    (
+        spark.createDataFrame(cells, "array_id string, x long, y long, value double")
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .option("create_arrays", "false")
+        .mode("append").save()
+    )
+
+
+def test_read_data_relists_a_file_removed_before_its_stat(spark, tmp_path, monkeypatch):
+    """read_data lists a chunk dir, then compaction removes the listed
+    files before the cache signature stats them. The read must re-list
+    and return the merged file's values, and cache nothing from the
+    stale listing."""
+    import os
+
+    from deker_server_adapters_spark.core import storage
+
+    root = str(tmp_path / "whstat")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    base = np.random.RandomState(10).rand(20, 12) + 1.0
+    a = coll.arrays.create(data=base)
+    register(spark)
+    patch = [(a.id, i, j, float(-i - j)) for i in (2, 9) for j in range(12)]
+    _append_cells(spark, root, patch)
+    want = base.copy()
+    for _, i, j, v in patch:
+        want[i, j] = v
+    d = storage.chunk_dir(os.path.join(coll.path, "chunks"), a.id, 0)
+    storage.drop_cached(d)
+
+    real_list = storage.visible_chunk_files
+    compacted = []
+
+    def list_then_compact(path):
+        listed = real_list(path)
+        if not compacted:  # compaction lands between listing and stat
+            compacted.append(listed)
+            assert storage._merge_chunk_dir(path) == 1
+        return listed
+
+    monkeypatch.setattr(storage, "visible_chunk_files", list_then_compact)
+    np.testing.assert_allclose(a.read_data(), want)
+    assert len(compacted[0]) == 2 and not any(map(os.path.exists, compacted[0]))
+    assert os.path.abspath(d) not in storage._CACHE
+
+
+def test_chunk_cache_stays_coherent_with_every_writer(spark, tmp_path):
+    """A chunk cached by a read is then changed behind the cache by a
+    sparse deker append, compact(), delete + re-create under the same
+    id and an in-place rewrite of an existing file. Each following read
+    must equal NumPy. An update of a warm chunk that an append changed
+    after it was cached must keep the appended cells."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from deker_server_adapters_spark.core import storage
+
+    root = str(tmp_path / "whcoherent")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    rng = np.random.RandomState(11)
+    want = rng.rand(20, 12) + 1.0
+    a = coll.arrays.create(data=want)
+    register(spark)
+    d = storage.chunk_dir(os.path.join(coll.path, "chunks"), a.id, 0)
+    np.testing.assert_allclose(a.read_data(), want)
+
+    # a sparse deker append
+    cells = [(a.id, 4, j, float(100 + j)) for j in range(0, 12, 2)]
+    _append_cells(spark, root, cells)
+    for _, i, j, v in cells:
+        want[i, j] = v
+    np.testing.assert_allclose(a.read_data(), want)
+
+    # compact() on executors: same values, and the cache now holds the
+    # compacted file's signature, not the two files it replaced
+    assert storage.ChunkStore(spark, coll.path).compact() == 1
+    np.testing.assert_allclose(a.read_data(), want)
+    (only,) = storage.visible_chunk_files(d)
+    assert [e[0] for e in storage._CACHE[os.path.abspath(d)][0]] == [os.path.basename(only)]
+
+    # delete + re-create under the same id
+    coll.arrays.delete(a)
+    want = rng.rand(20, 12) + 2.0
+    a = coll.arrays.create(id_=a.id, data=want)
+    np.testing.assert_allclose(a.read_data(), want)
+
+    # an in-place rewrite of an existing file name, one run longer
+    (path,) = storage.visible_chunk_files(d)
+    table = pq.read_table(path)
+    extra = pa.table(
+        {
+            "origin": [[7, 0]],
+            "shape": [[1, 12]],
+            "data": [[-7.0] * 12],
+            "seq": [storage.next_write_seq()],
+        },
+        schema=table.schema,
+    )
+    pq.write_table(pa.concat_tables([table, extra]), path)
+    want[7, :] = -7.0
+    np.testing.assert_allclose(a.read_data(), want)
+
+    # an update of a warm chunk that an append changed after it was cached
+    cells = [(a.id, 15, j, float(-j)) for j in range(12)]
+    _append_cells(spark, root, cells)
+    for _, i, j, v in cells:
+        want[i, j] = v
+    a.update((slice(0, 3), slice(0, 12)), 9.0)
+    want[0:3, :] = 9.0
+    np.testing.assert_allclose(a.read_data(), want)
+
+
+VSCHEMA_KW = dict(
+    dtype="float64",
+    dimensions=(DimensionSchema("x", 12), DimensionSchema("y", 8)),
+    vgrid=(3, 2),
+)
+
+
+@pytest.fixture()
+def empty_chunk_cache(monkeypatch):
+    """A private, empty chunk cache for one test."""
+    from collections import OrderedDict
+
+    from deker_server_adapters_spark.core import storage
+
+    monkeypatch.setattr(storage, "_CACHE", OrderedDict())
+    monkeypatch.setattr(storage, "_cache_nbytes", 0)
+    return storage
+
+
+def test_chunk_cache_hits_write_through_and_budget(spark, tmp_path, monkeypatch, empty_chunk_cache):
+    """Repeated reads and reads after an update decode no parquet; with
+    a small budget a hot set past it still reads right, the cached
+    bytes stay within the budget and a chunk larger than it is not
+    cached; reads and updates from threads on disjoint chunks agree
+    with the shadow and leave the byte count consistent."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from deker_server_adapters_spark.core import VArraySchema
+
+    storage = empty_chunk_cache
+    wh = Warehouse(spark, str(tmp_path / "whcache"))
+    coll = wh.collections.create("v", VArraySchema(**VSCHEMA_KW))
+    shadow = np.arange(96, dtype=np.float64).reshape(12, 8)
+    va = coll.varrays.create(data=shadow)
+
+    decoded = []
+    real_read = storage._read_parquet
+    monkeypatch.setattr(storage, "_read_parquet", lambda p: decoded.append(p) or real_read(p))
+
+    np.testing.assert_array_equal(va.read_data(), shadow)
+    assert len(decoded) == 6  # cold: one file per chunk
+    decoded.clear()
+    np.testing.assert_array_equal(va.read_data((slice(1, 3), 5)), shadow[1:3, 5])
+    np.testing.assert_array_equal(va.read_data(), shadow)
+    assert decoded == []
+    # the update's own read is a hit, and its output is written through
+    va.update((slice(0, 2), slice(0, 2)), -1.0)
+    shadow[0:2, 0:2] = -1.0
+    np.testing.assert_array_equal(va.read_data((slice(0, 4), slice(0, 4))), shadow[0:4, 0:4])
+    assert decoded == []
+
+    # a hot set of 6 chunks through a budget of 2.5 of them
+    entry = max(e[2] for e in storage._CACHE.values())
+    monkeypatch.setattr(storage, "CHUNK_CACHE_BYTES", int(2.5 * entry))
+    storage.drop_cached(coll.path)
+    for _ in range(2):
+        np.testing.assert_array_equal(va.read_data(), shadow)
+        assert 0 < storage._cache_nbytes <= storage.CHUNK_CACHE_BYTES
+        assert 0 < len(storage._CACHE) < 6
+
+    # a chunk larger than the whole budget is not cached, and evicts
+    # none of the chunks that fit
+    monkeypatch.setattr(storage, "CHUNK_CACHE_BYTES", 3 * entry)
+    storage.drop_cached(coll.path)
+    np.testing.assert_array_equal(va.read_data((slice(0, 4), slice(0, 4))), shadow[0:4, 0:4])
+    small = list(storage._CACHE)
+    big = wh.collections.create("w", SCHEMA).arrays.create(data=np.ones((20, 12)))
+    decoded.clear()
+    for _ in range(2):
+        np.testing.assert_array_equal(big.read_data(), np.ones((20, 12)))
+    assert len(decoded) == 2 and list(storage._CACHE) == small
+
+    # threads on disjoint chunks, through the same budget of 3 chunks
+
+    def work(box):
+        out = []
+        for k in range(4):
+            value = float(100 * box[0].start + 10 * box[1].start + k)
+            va.update(box, value)
+            shadow[box] = value
+            out.append(np.array_equal(va.read_data(box), shadow[box]))
+        return all(out)
+
+    boxes = [(slice(i, i + 4), slice(j, j + 4)) for i in (0, 4, 8) for j in (0, 4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(boxes)) as pool:
+            assert all(pool.map(work, boxes, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    np.testing.assert_array_equal(va.read_data(), shadow)
+    assert storage._cache_nbytes == sum(e[2] for e in storage._CACHE.values())
+    assert storage._cache_nbytes <= storage.CHUNK_CACHE_BYTES
+
+
+def test_deletes_drop_chunk_cache_entries(spark, tmp_path, empty_chunk_cache):
+    """Cache memory does not outlive its data: array delete, varray
+    delete, collection clear and collection delete each drop the cache
+    entries of the dirs they remove, and only those."""
+    import os
+
+    from deker_server_adapters_spark.core import VArraySchema
+
+    storage = empty_chunk_cache
+    wh = Warehouse(spark, str(tmp_path / "whdrop"))
+
+    def cached_under(path):
+        root = os.path.abspath(path) + os.sep
+        return [k for k in storage._CACHE if k.startswith(root)]
+
+    coll = wh.collections.create("w", SCHEMA)
+    a, b = (coll.arrays.create(data=np.full((20, 12), float(i))) for i in (1, 2))
+    vcoll = wh.collections.create("v", VArraySchema(**VSCHEMA_KW))
+    va = vcoll.varrays.create(data=np.ones((12, 8)))
+    for arr in (a, b, va):
+        arr.read_data()
+    assert len(cached_under(coll.path)) == 2 and len(cached_under(vcoll.path)) == 6
+
+    coll.arrays.delete(a)
+    assert cached_under(coll.path) == [
+        os.path.abspath(storage.chunk_dir(os.path.join(coll.path, "chunks"), b.id, 0))
+    ]
+    vcoll.varrays.delete(va)
+    assert cached_under(vcoll.path) == []
+
+    va = vcoll.varrays.create(data=np.ones((12, 8)))
+    va.read_data()
+    wh.collections.clear(vcoll)
+    assert cached_under(vcoll.path) == [] and len(cached_under(coll.path)) == 1
+    wh.collections.delete(coll)
+    assert storage._CACHE == {} and storage._cache_nbytes == 0
 
 
 def test_spark_escaped_array_id_roundtrip_and_delete(spark, tmp_path):
