@@ -257,15 +257,12 @@ class ArrayAdapter:
         custom = custom_attributes or {}
         validate_attributes(schema, primary, custom)
         array = Array(self.collection, id_ or str(uuid.uuid4()), primary, custom)
-        write_meta(self._meta_dir(), array.meta())
-        grid = self._grid()
         if data is not None:
             data = np.asarray(data, dtype=schema.np_dtype)
             if data.shape != schema.shape:
                 raise ValueError(f"data shape {data.shape} != schema shape {schema.shape}")
-            self.store.write_array(array.id, grid, data)
-        else:
-            self.store.write_fill(array.id, grid, schema.fill_value)
+        write_meta(self._meta_dir(), array.meta())
+        self.store.write_array(array.id, self._grid(), schema.fill_value if data is None else data)
         return array
 
     def create_from_cells(

@@ -18,8 +18,16 @@ Spark-first consequences:
   ``pyarrow`` (zero-copy NumPy views of the ``data`` lists) and
   replays each chunk's runs last-write-wins into the output box. Work
   is proportional to the touched chunks, not the array, and a
-  one-cell read pays no scheduling round trip. Bulk and analytic
-  paths (``cell_df``, the ``deker`` source, ingest) stay on Spark.
+  one-cell read pays no scheduling round trip. Analytic paths
+  (``cell_df``, the ``deker`` source) stay on Spark.
+- Every chunk file is written one way: its runs encoded by
+  ``encode_runs``, written under a dot-prefixed temp name that every
+  listing skips (``stage_chunk_file``) and made visible whole by
+  ``os.replace`` (``publish_staged``). ``create`` writes one dense run
+  per chunk on the driver with no Spark job; ``write_from_cells`` is
+  one Spark job whose tasks build and stage whole chunks, which the
+  driver publishes once the job has succeeded; the ``deker`` writers
+  stage per task and publish at commit.
 - A subset write is copy-on-write at chunk granularity, also on the
   driver with no Spark job: each overlapped chunk dir is rewritten as
   one new file holding its patched runs, published by rename before
@@ -53,7 +61,6 @@ from collections import OrderedDict
 from typing import Iterable, Iterator, Sequence, Union
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -491,13 +498,113 @@ def _list_array(parts: list, type_: pa.DataType) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat, type_))
 
 
-# File order: a rewrite names its output so it sorts after every file
-# it replaces. Writers' names sort before ``part-compact-`` (Spark's
-# ``part-0…``, the deker stream writer's ``part-b…``, the deker batch
-# writer's APPEND_PREFIX); a rewrite's generation counts up per dir,
-# and ``g`` sorts after older ``part-compact-<hex>`` outputs.
+def encode_runs(runs: Iterable[tuple[int, Sequence[int], Sequence[int], np.ndarray]]) -> pa.Table:
+    """The one chunk-file encoding: a row per ``(seq, origin, shape,
+    values)`` run, ``values`` flat in C order — what :func:`chunk_runs`
+    reads back. Every writer of chunk files encodes through here."""
+    runs = list(runs)
+    return pa.table(
+        {
+            "origin": _list_array([r[1] for r in runs], pa.int64()),
+            "shape": _list_array([r[2] for r in runs], pa.int64()),
+            "data": _list_array([r[3] for r in runs], pa.float64()),
+            "seq": pa.array([r[0] for r in runs], pa.int64()),
+        }
+    )
+
+
+# File naming. A chunk file is staged under a dot-prefixed temp name,
+# which every listing skips, then published by rename:
+# - writers stage as ``TMP_PREFIX<write id>-…`` and publish as
+#   APPEND_PREFIX (engine writes, the deker batch writer) or the deker
+#   stream writer's ``part-b<batch>-…``; both sort before
+#   ``part-compact-``;
+# - a rewrite stages as ``.part-compact-….tmp`` and publishes
+#   ``part-compact-g<generation>-<token>.parquet``; the generation counts
+#   up per dir and ``g`` sorts after older ``part-compact-<hex>``
+#   outputs, so a rewrite's output sorts after every file it replaces.
+TMP_PREFIX = ".part-tmp-"
 APPEND_PREFIX = "part-append-"
+_REWRITE_TMP = ".part-compact-"
 _REWRITE_GEN = re.compile(r"part-compact-g(\d+)-")
+
+
+def is_staged_chunk_file(name: str) -> bool:
+    """An unpublished writer or rewrite temp — in flight, or orphaned by
+    a crash. Hadoop ``.crc`` companions and other dotfiles are not."""
+    return name.startswith(TMP_PREFIX) or (
+        name.startswith(_REWRITE_TMP) and name.endswith(".tmp")
+    )
+
+
+def staged_prefix(write_id: str) -> str:
+    """The temp-name prefix of one write's staged files."""
+    return f"{TMP_PREFIX}{write_id}-"
+
+
+def appended_name(tmp: str) -> str:
+    """The published path of a writer temp: APPEND_PREFIX in place of
+    TMP_PREFIX, same dir."""
+    d, name = os.path.split(tmp)
+    return os.path.join(d, APPEND_PREFIX + name[len(TMP_PREFIX):])
+
+
+def stage_chunk_file(d: str, table: pa.Table, tmp_name: str) -> str:
+    """Write ``table`` into chunk dir ``d`` under the dot-prefixed
+    ``tmp_name``, invisible to every reader, compaction and stat until
+    :func:`publish_staged` renames it; returns its path."""
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, tmp_name)
+    pq.write_table(table, tmp)
+    return tmp
+
+
+def publish_staged(renames: Iterable[tuple[str, str]], own_prefix: str) -> None:
+    """Make each staged ``(temp, final)`` file visible, whole, by
+    ``os.replace``; then remove every other temp named ``own_prefix…``
+    in the dirs touched: attempts of the same write that failed or were
+    superseded, whose data the published files carry. Temps of other
+    writes carry another prefix and are left alone."""
+    touched = set()
+    for tmp, final in renames:
+        os.replace(tmp, final)
+        touched.add(os.path.dirname(final))
+    discard_staged(touched, own_prefix)
+
+
+def discard_staged(dirs: Iterable[str], own_prefix: str) -> None:
+    """Remove the temps named ``own_prefix…`` from ``dirs``: how a write
+    that fails before its publish leaves nothing behind. Temps of a
+    write that crashes outright are reclaimed by the age-gated
+    :meth:`ChunkStore.gc_temps`."""
+    for d in dirs:
+        try:
+            names = os.listdir(d)
+        except FileNotFoundError:
+            continue
+        for f in names:
+            if f.startswith(own_prefix):
+                try:
+                    os.remove(os.path.join(d, f))
+                except FileNotFoundError:
+                    pass
+
+
+def _stage_dense(
+    root: str, array_id: str, grid: ChunkGrid, idx: int, values: np.ndarray | float, seq: int, prefix: str
+) -> str:
+    """Stage chunk ``idx`` as one dense run over its whole box: the
+    array ``values``, or a scalar filling the box. The random token
+    keeps concurrent attempts of one task apart."""
+    box = grid.chunk_box(idx)
+    if np.ndim(values) == 0:
+        values = np.full([b - a for a, b in box], float(values))
+    values = np.ascontiguousarray(values, dtype=np.float64)
+    return stage_chunk_file(
+        chunk_dir(root, array_id, idx),
+        encode_runs([(seq, [a for a, _ in box], values.shape, values.ravel())]),
+        f"{prefix}{idx}-{uuid.uuid4().hex[:8]}.parquet",
+    )
 
 
 def _rewrite_name(paths: Sequence[str]) -> str:
@@ -525,26 +632,18 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
     - Runs are read through ``read_chunk_files``, so a file that
       vanishes mid-read re-lists the dir; only the files actually read
       are replaced.
-    - Publish order: the output is written under a dot-prefixed temp
-      name (invisible to every listing) and ``os.replace``d into view
-      whole, then the replaced files go, each after its Hadoop ``.crc``
-      companion. The output name sorts after every replaced file, so a
-      reader that sees both (mid-rewrite, or after a crash before the
-      removal) resolves equal-``seq`` runs to the rewritten values, and
-      so does the next rewrite, which heals the dir. A crashed
-      rewrite's temp is GC'd by the next rewrite of the dir.
+    - Publish order: the output is staged and published whole like
+      every chunk file, then the replaced files go, each after its
+      Hadoop ``.crc`` companion (stores written by Spark's parquet
+      writer have them). The output name sorts after every replaced
+      file, so a reader that sees both (mid-rewrite, or after a crash
+      before the removal) resolves equal-``seq`` runs to the rewritten
+      values, and so does the next rewrite, which heals the dir. A
+      crashed rewrite's temp is GC'd by the next rewrite of the dir.
     - In-flight writer temps are never touched, and a file committed
       after the listing is kept. Two concurrent rewrites of the SAME
       dir (an update racing ``compact``) are unsupported.
     """
-    if patch is not None:
-        os.makedirs(d, exist_ok=True)  # a sparse array's unwritten chunk
-    for f in os.listdir(d):
-        if f.startswith(".part-compact-") and f.endswith(".tmp"):
-            try:
-                os.remove(os.path.join(d, f))
-            except FileNotFoundError:
-                pass
     if patch is None:
         paths, tables = read_chunk_files(visible_chunk_files(d))
         if len(paths) < 2:
@@ -558,18 +657,10 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
     ]
     if patch is not None:
         runs = _patched(runs, *patch)
-    merged = pa.table(
-        {
-            "origin": _list_array([r[1] for r in runs], pa.int64()),
-            "shape": _list_array([r[2] for r in runs], pa.int64()),
-            "data": _list_array([r[3] for r in runs], pa.float64()),
-            "seq": pa.array([r[0] for r in runs], pa.int64()),
-        }
-    )
+    merged = encode_runs(runs)
     out = os.path.join(d, _rewrite_name(paths))
-    tmp = os.path.join(d, f".{os.path.basename(out)}.tmp")
-    pq.write_table(merged, tmp)
-    os.replace(tmp, out)
+    tmp = stage_chunk_file(d, merged, f".{os.path.basename(out)}.tmp")
+    publish_staged([(tmp, out)], _REWRITE_TMP)
     for p in paths:
         # the companion first: a crash in between leaves a file without
         # its checksum (read unverified), never a checksum without a file
@@ -596,45 +687,22 @@ class ChunkStore:
 
     # -- write ------------------------------------------------------------
 
-    def _rows_from_ndarray(
-        self, array_id: str, grid: ChunkGrid, data: np.ndarray
-    ) -> Iterable[dict]:
+    def write_array(self, array_id: str, grid: ChunkGrid, data: np.ndarray | float) -> None:
+        """Write a whole array on the driver, with no Spark job: one
+        dense run per chunk, cut from ``data`` or, for a scalar, filled
+        with it. Every chunk is staged before any is published."""
         seq = next_write_seq()  # one stamp per write event; chunks are disjoint
-        for idx in range(grid.n_chunks):
-            box = grid.chunk_box(idx)
-            piece = data[tuple(slice(a, b) for a, b in box)]
-            yield {
-                "array_id": array_id,
-                "chunk_idx": idx,
-                "origin": [a for a, _ in box],
-                "shape": list(piece.shape),
-                "data": piece.astype(np.float64).ravel(order="C").tolist(),
-                "seq": seq,
-            }
-
-    def write_array(self, array_id: str, grid: ChunkGrid, data: np.ndarray) -> None:
-        df = self.spark.createDataFrame(list(self._rows_from_ndarray(array_id, grid, data)), CHUNK_SCHEMA)
-        self._write(df)
-
-    def write_fill(self, array_id: str, grid: ChunkGrid, fill_value: float) -> None:
-        """Materialize a fill-value array without driver-side data:
-        chunk geometry is generated distributively from spark.range."""
-        boxes = [
-            (idx, [a for a, _ in grid.chunk_box(idx)], [b - a for a, b in grid.chunk_box(idx)])
-            for idx in range(grid.n_chunks)
-        ]
-        meta = self.spark.createDataFrame(
-            [(array_id, i, o, s) for i, o, s in boxes],
-            "array_id string, chunk_idx long, origin array<long>, shape array<long>",
-        )
-        df = meta.withColumn(
-            "data",
-            F.expr(
-                f"transform(sequence(1, CAST(aggregate(shape, 1L, (a, x) -> a * x) AS INT)), "
-                f"i -> CAST({fill_value} AS DOUBLE))"
-            ),
-        ).withColumn("seq", F.lit(next_write_seq()))
-        self._write(df.select(*[f.name for f in CHUNK_SCHEMA.fields]))
+        prefix = staged_prefix(uuid.uuid4().hex[:16])
+        try:
+            staged = []
+            for idx in range(grid.n_chunks):
+                box = tuple(slice(a, b) for a, b in grid.chunk_box(idx))
+                values = data if np.ndim(data) == 0 else data[box]
+                staged.append(_stage_dense(self.path, array_id, grid, idx, values, seq, prefix))
+            publish_staged([(p, appended_name(p)) for p in staged], prefix)
+        except BaseException:
+            discard_staged(self._chunk_dirs(array_id, grid), prefix)
+            raise
 
     def write_from_cells(
         self,
@@ -646,112 +714,78 @@ class ChunkStore:
         fill_value: float = 0.0,
     ) -> None:
         """Distributed build: materialize an N-d array from a long-format
-        DataFrame of (dim indices..., value) WITHOUT collecting to the
-        driver — the 100 TB ingest path.
+        DataFrame of (dim indices..., value) WITHOUT collecting cells to
+        the driver — the 100 TB ingest path. Cells absent from the input
+        get ``fill_value``.
 
-        chunk_idx is pure-JVM arithmetic on the dim columns, the
-        shuffle is one groupBy(chunk_idx), and each chunk ndarray is
-        assembled by an Arrow-batched applyInPandas. Cells absent from
-        the input get ``fill_value``.
+        One Spark job: ``chunk_idx`` is pure-JVM arithmetic on the dim
+        columns, the one shuffle is ``repartition(chunk_idx)``, and each
+        ``mapInArrow`` task builds every chunk it receives dense (the
+        fill, then its cells) and stages it. Only ``(chunk_idx, temp
+        path)`` pairs return to the driver, which stages fill chunks for
+        the indices no cell reaches and then publishes every chunk. A
+        job that fails leaves no visible file and no temp of this write;
+        only a task attempt still running after the driver's publish or
+        clean-up (a speculative copy, or a task of a failed job not yet
+        stopped) can leave its temp, which, like a crashed write's, no
+        reader sees and ``gc_temps`` reclaims.
         """
-        n = len(dim_cols)
         idx_expr = "0L"
-        for d in range(n):
-            idx_expr = f"(({idx_expr}) * {grid.splits[d]}) + (CAST({dim_cols[d]} AS BIGINT) DIV {grid.chunk_shape[d]})"
-        with_idx = cells.select(
-            F.expr(idx_expr).alias("chunk_idx"),
-            *[F.col(c).cast("long").alias(c) for c in dim_cols],
-            F.col(value_col).cast("double").alias("__value"),
-        ).persist()  # read twice: chunk build + present-idx probe
-        write_seq = next_write_seq()  # one stamp: output chunks are disjoint
-        grid_bc = self.spark.sparkContext.broadcast(
-            {
-                "splits": grid.splits,
-                "chunk_shape": grid.chunk_shape,
-                "shape": grid.shape,
-                "fill": float(fill_value),
-                "array_id": array_id,
-                "dims": list(dim_cols),
-                "seq": write_seq,
-            }
-        )
+        for d, c in enumerate(dim_cols):
+            idx_expr = f"(({idx_expr}) * {grid.splits[d]}) + (CAST({c} AS BIGINT) DIV {grid.chunk_shape[d]})"
+        seq = next_write_seq()  # one stamp: output chunks are disjoint
+        prefix = staged_prefix(uuid.uuid4().hex[:16])
+        root, fill, n = self.path, float(fill_value), len(dim_cols)
+        shape = np.asarray(grid.shape)[:, None]
 
-        def build_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            g = grid_bc.value
-            idx = int(key[0])
-            # recompute the chunk box (mirrors ChunkGrid.chunk_box)
-            pos = []
-            rest = idx
-            for s in reversed(g["splits"]):
-                pos.append(rest % s)
-                rest //= s
-            pos = list(reversed(pos))
-            box = [
-                (p * c, min((p + 1) * c, s))
-                for p, c, s in zip(pos, g["chunk_shape"], g["shape"])
+        def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            chunks: dict[int, np.ndarray] = {}
+            for batch in batches:
+                idxs = batch.column(0).to_numpy()
+                coords = np.stack([batch.column(1 + d).to_numpy() for d in range(n)])
+                values = batch.column(1 + n).to_numpy(zero_copy_only=False)
+                bad = (coords < 0) | (coords >= shape)
+                if bad.any():
+                    d, j = np.argwhere(bad)[0]
+                    raise ValueError(
+                        f"cell {dim_cols[d]}={int(coords[d, j])} outside dimension size {grid.shape[d]}"
+                    )
+                for idx in np.unique(idxs).tolist():
+                    box = grid.chunk_box(idx)
+                    if idx not in chunks:
+                        chunks[idx] = np.full([b - a for a, b in box], fill)
+                    sel = idxs == idx
+                    chunks[idx][tuple(c[sel] - a for c, (a, _) in zip(coords, box))] = values[sel]
+            paths = [
+                _stage_dense(root, array_id, grid, idx, chunk, seq, prefix)
+                for idx, chunk in chunks.items()
             ]
-            shape = [b - a for a, b in box]
-            arr = np.full(shape, g["fill"], dtype=np.float64)
-            coords = tuple(
-                pdf[d].to_numpy() - a for d, (a, _) in zip(g["dims"], box)
-            )
-            arr[coords] = pdf["__value"].to_numpy()
-            return pd.DataFrame(
-                [
-                    {
-                        "array_id": g["array_id"],
-                        "chunk_idx": idx,
-                        "origin": [a for a, _ in box],
-                        "shape": shape,
-                        "data": arr.ravel(order="C"),
-                        "seq": g["seq"],
-                    }
-                ]
+            yield pa.RecordBatch.from_pydict(
+                {"chunk_idx": pa.array(list(chunks), pa.int64()), "path": pa.array(paths, pa.string())}
             )
 
         try:
-            present = with_idx.groupBy("chunk_idx").applyInPandas(build_chunk, CHUNK_SCHEMA)
-            # chunks that receive no cells still need fill rows; derive them
-            # from the input (cheap distinct on ints) and write everything in
-            # ONE job — no read-back of the freshly written store.
-            present_idxs = {
-                int(r["chunk_idx"]) for r in with_idx.select("chunk_idx").distinct().collect()
+            staged = {
+                r["chunk_idx"]: r["path"]
+                for r in cells.select(
+                    F.expr(idx_expr).alias("chunk_idx"),
+                    *[F.col(c).cast("long").alias(c) for c in dim_cols],
+                    F.col(value_col).cast("double").alias("__value"),
+                )
+                .repartition("chunk_idx")
+                .mapInArrow(build, "chunk_idx long, path string")
+                .collect()
             }
-            missing = [i for i in range(grid.n_chunks) if i not in present_idxs]
-            if missing:
-                boxes = [
-                    (array_id, i, [a for a, _ in grid.chunk_box(i)], [b - a for a, b in grid.chunk_box(i)])
-                    for i in missing
-                ]
-                meta = self.spark.createDataFrame(
-                    boxes, "array_id string, chunk_idx long, origin array<long>, shape array<long>"
-                )
-                fill_df = (
-                    meta.withColumn(
-                        "data",
-                        F.expr(
-                            f"transform(sequence(1, CAST(aggregate(shape, 1L, (a, x) -> a * x) AS INT)), "
-                            f"i -> CAST({float(fill_value)} AS DOUBLE))"
-                        ),
-                    )
-                    .withColumn("seq", F.lit(write_seq))
-                    .select(*[f.name for f in CHUNK_SCHEMA.fields])
-                )
-                present = present.unionByName(fill_df)
-            self._write(present)
-        finally:
-            # the cache exists only for this build's two reads — holding
-            # it past the write pins executor memory for the session
-            with_idx.unpersist()
+            for idx in range(grid.n_chunks):
+                if idx not in staged:
+                    staged[idx] = _stage_dense(self.path, array_id, grid, idx, fill, seq, prefix)
+            publish_staged([(p, appended_name(p)) for p in staged.values()], prefix)
+        except BaseException:
+            discard_staged(self._chunk_dirs(array_id, grid), prefix)
+            raise
 
-    def _write(self, df: DataFrame) -> None:
-        """Append ``df``'s runs as new files in their chunk dirs."""
-        (
-            df.repartition("array_id", "chunk_idx")
-            .write.mode("append")
-            .partitionBy("array_id", "chunk_idx")
-            .parquet(self.path)
-        )
+    def _chunk_dirs(self, array_id: str, grid: ChunkGrid) -> list[str]:
+        return [chunk_dir(self.path, array_id, idx) for idx in range(grid.n_chunks)]
 
     # -- read -------------------------------------------------------------
 
@@ -860,19 +894,7 @@ class ChunkStore:
             except FileNotFoundError:
                 return None
             vis = [f for f in names if is_visible_chunk_file(f)]
-            # in-flight/orphaned temps only — count just the engine's
-            # own temp name shapes (writer temps + compact temps), not
-            # any dotfile: Hadoop .crc companions or unrelated hidden
-            # files must not read as uncommitted writes
-            from deker_server_adapters_spark.sources.deker_datasource import (
-                TMP_PREFIX as _TMP,
-            )
-
-            n_temp = sum(
-                1
-                for f in names
-                if f.startswith(_TMP) or f.startswith(".part-compact-")
-            )
+            n_temp = sum(1 for f in names if is_staged_chunk_file(f))
             total = 0
             for f in vis:
                 try:
@@ -904,23 +926,18 @@ class ChunkStore:
     def gc_temps(self, max_age_sec: float = 86400.0) -> int:
         """Reclaim dot-prefixed temp files orphaned by CRASHED writes.
 
-        Commit-time GC is scoped to each write's own write_id-stamped
-        temp names (sources/deker_datasource._finalize_files), so a
-        write that dies before commit leaves temps nobody else may
-        touch — invisible to every reader, but disk they hold is real.
-        This explicit maintenance pass removes writer temps
-        (``TMP_PREFIX``) and stale compact temps (``.part-compact-*
-        .tmp``) older than ``max_age_sec``. The age gate is the safety
+        Publish-time GC is scoped to each write's own write_id-stamped
+        temp names (:func:`publish_staged`), so a write that dies before
+        its publish leaves temps nobody else may touch — invisible to
+        every reader, but disk they hold is real. This explicit
+        maintenance pass removes every :func:`is_staged_chunk_file`
+        temp older than ``max_age_sec``. The age gate is the safety
         contract: run it only with ``max_age_sec`` comfortably above
         the longest write a live job could still be executing (default
         one day). Distributed the same way as ``maintenance_stats`` —
         driver lists dirs (metadata), executors stat and delete."""
         import glob as _glob
         import time as _time
-
-        from deker_server_adapters_spark.sources.deker_datasource import (
-            TMP_PREFIX as _TMP,
-        )
 
         dirs = _glob.glob(os.path.join(self.path, "array_id=*", "chunk_idx=*"))
         if not dirs:
@@ -936,11 +953,7 @@ class ChunkStore:
             except FileNotFoundError:
                 return 0
             for f in names:
-                is_writer_tmp = f.startswith(_TMP)
-                is_compact_tmp = f.startswith(".part-compact-") and f.endswith(
-                    ".tmp"
-                )
-                if not (is_writer_tmp or is_compact_tmp):
+                if not is_staged_chunk_file(f):
                     continue
                 p = _os.path.join(d, f)
                 try:

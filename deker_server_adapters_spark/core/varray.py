@@ -120,29 +120,12 @@ class VArrayAdapter:
     ) -> VArray:
         schema = self.collection.varray_schema
         assert schema is not None
-        vid = id_ or str(uuid.uuid4())
-        varray = VArray(self.collection, vid, primary_attributes or {}, custom_attributes or {})
-        meta_dir = self._arrays._meta_dir()
-        write_meta(meta_dir, {**varray.meta(), "is_varray": True})
-        grid = self._grid()
         if data is not None:
             data = np.asarray(data, dtype=schema.np_dtype)
             if data.shape != schema.shape:
                 raise ValueError(f"data shape {data.shape} != schema shape {schema.shape}")
-            self.store.write_array(vid, grid, data)
-        else:
-            self.store.write_fill(vid, grid, schema.fill_value)
-        # register chunk arrays as vid/v_position views (reference model)
-        for idx in range(grid.n_chunks):
-            pos = grid.chunk_position(idx)
-            write_meta(
-                meta_dir,
-                {
-                    "id": f"{vid}:{idx}",
-                    "primary_attributes": {"vid": vid, "v_position": list(pos)},
-                    "custom_attributes": {},
-                },
-            )
+        varray = self._register(primary_attributes, custom_attributes, id_)
+        self.store.write_array(varray.id, self._grid(), schema.fill_value if data is None else data)
         return varray
 
     def create_from_cells(
@@ -154,21 +137,40 @@ class VArrayAdapter:
         id_: str | None = None,
     ) -> VArray:
         """Distributed varray build from a long-format DataFrame; the
-        vgrid IS the chunk grid, then chunk-array views are registered."""
+        vgrid IS the chunk grid. Every cell is written once."""
         schema = self.collection.varray_schema
         assert schema is not None
-        va = self.create(primary_attributes, custom_attributes, id_=id_, data=None)
-        # replace the fill chunks with the real cells (dynamic overwrite)
-        self.store.delete_array(va.id)
+        varray = self._register(primary_attributes, custom_attributes, id_)
         self.store.write_from_cells(
-            va.id,
+            varray.id,
             self._grid(),
             cells,
             [d.name for d in schema.dimensions],
             value_col,
             schema.fill_value,
         )
-        return va
+        return varray
+
+    def _register(
+        self, primary_attributes: dict | None, custom_attributes: dict | None, id_: str | None
+    ) -> VArray:
+        """Write the varray's meta and its chunk arrays' ``vid`` /
+        ``v_position`` views (reference model)."""
+        vid = id_ or str(uuid.uuid4())
+        varray = VArray(self.collection, vid, primary_attributes or {}, custom_attributes or {})
+        meta_dir = self._arrays._meta_dir()
+        write_meta(meta_dir, {**varray.meta(), "is_varray": True})
+        grid = self._grid()
+        for idx in range(grid.n_chunks):
+            write_meta(
+                meta_dir,
+                {
+                    "id": f"{vid}:{idx}",
+                    "primary_attributes": {"vid": vid, "v_position": list(grid.chunk_position(idx))},
+                    "custom_attributes": {},
+                },
+            )
+        return varray
 
     def _varray_meta(self, id_: str) -> dict | None:
         """The varray's own meta file, or None when it is missing or

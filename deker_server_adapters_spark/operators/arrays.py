@@ -607,11 +607,8 @@ def deker_gc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         VArraySchema,
         Warehouse,
     )
-    from deker_server_adapters_spark.core.storage import ChunkStore
-    from deker_server_adapters_spark.sources.deker_datasource import (
-        TMP_PREFIX,
-        register,
-    )
+    from deker_server_adapters_spark.core.storage import TMP_PREFIX, ChunkStore
+    from deker_server_adapters_spark.sources.deker_datasource import register
 
     root = scratch_dir("deker_gc_")
     wh = Warehouse(spark, root)

@@ -32,10 +32,13 @@ cells never pass through per-row Python objects.
 Writes: ``df.write.format("deker").mode("append")`` is BULK CELL
 INGEST (the reference create+write flow, base.py:111-160) — each task
 run-length-encodes its cells into chunk-aligned sub-box rows and
-appends them under the owning chunk directory, shuffle-free and
-append-only. ``cells.writeStream.format("deker")`` is the STREAMING
-form of the same ingest (per-micro-batch append, deterministic
-batch-named files for idempotent replay — see ``DekerStreamWriter``).
+stages them as one file per owning chunk directory, shuffle-free and
+append-only; the commit publishes them. Files are encoded, staged and
+published by the engine's one chunk writer (``core.storage``:
+``encode_runs``, ``stage_chunk_file``, ``publish_staged``).
+``cells.writeStream.format("deker")`` is the STREAMING form of the same
+ingest (per-micro-batch append, deterministic batch-named files for
+idempotent replay — see ``DekerStreamWriter``).
 Subset updates/clears stay on the engine's copy-on-write
 API (``core/storage.py``), which Spark's writer contract cannot
 express (subset PUT semantics, 413 limits); ``mode("overwrite")`` is
@@ -76,19 +79,22 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-
-# writer temp-file prefix: dot-prefixed so Spark's parquet scan, the
-# glob-based listings here, and ChunkStore's compaction all skip it
-# until a commit renames it to a visible name
-TMP_PREFIX = ".part-tmp-"
-from deker_server_adapters_spark.core.array import meta_file_name, write_meta  # noqa: E402
-from deker_server_adapters_spark.core.storage import (  # noqa: E402
+from deker_server_adapters_spark.core.array import meta_file_name, write_meta
+from deker_server_adapters_spark.core.storage import (
     _SEQ_COUNTER_BITS,
-    APPEND_PREFIX,
+    TMP_PREFIX,  # noqa: F401  (re-exported: the writers' temp-name prefix)
+    ChunkGrid,
+    appended_name,
     chunk_dir,
     chunk_runs,
+    default_chunk_grid,
+    discard_staged,
+    encode_runs,
     ordered_runs,
+    publish_staged,
     read_chunk_files,
+    stage_chunk_file,
+    staged_prefix,
     unescape_path_name,
     visible_chunk_files,
 )
@@ -117,8 +123,6 @@ def _grid_geometry(meta: dict) -> tuple[tuple[int, ...], tuple[int, ...]]:
     default_chunk_grid the engine writes with (imported, not copied:
     any drift would silently prune chunks that do overlap). Runs on
     the driver; only the resulting tuples are pickled to tasks."""
-    from deker_server_adapters_spark.core.storage import default_chunk_grid
-
     dims = meta["schema"]["dimensions"]
     shape = tuple(int(d["size"]) for d in dims)
     if meta.get("type") == "varray":
@@ -129,18 +133,9 @@ def _grid_geometry(meta: dict) -> tuple[tuple[int, ...], tuple[int, ...]]:
     return shape, chunk_shape
 
 
-def _chunk_box(
-    idx: int, shape: Sequence[int], chunk_shape: Sequence[int]
-) -> list[tuple[int, int]]:
-    splits = [math.ceil(s / c) for s, c in zip(shape, chunk_shape)]
-    pos = []
-    for g in reversed(splits):
-        pos.append(idx % g)
-        idx //= g
-    pos = list(reversed(pos))
-    return [
-        (p * c, min((p + 1) * c, s)) for p, c, s in zip(pos, chunk_shape, shape)
-    ]
+def _chunk_grid(shape: Sequence[int], chunk_shape: Sequence[int]) -> ChunkGrid:
+    """The engine's grid for a ``(shape, chunk_shape)`` geometry."""
+    return ChunkGrid(shape, [math.ceil(s / c) for s, c in zip(shape, chunk_shape)])
 
 
 @dataclass
@@ -254,7 +249,7 @@ def _chunk_cell_batches(
                 warnings.warn(f"deker chunk file vanished (COW rewrite?): {path}")
 
     if dedup and chunk_shape is not None and partition.chunk_idx >= 0:
-        box = _chunk_box(partition.chunk_idx, shape, chunk_shape)
+        box = _chunk_grid(shape, chunk_shape).chunk_box(partition.chunk_idx)
         ext = [b - a for a, b in box]
         lo0 = np.asarray([a for a, _ in box], dtype=np.int64)
         buf = np.empty(ext, dtype=np.float64)
@@ -426,7 +421,7 @@ class DekerReader(DataSourceReader):
     # -- planning ---------------------------------------------------------
 
     def _chunk_overlaps(self, chunk_idx: int) -> bool:
-        box = _chunk_box(chunk_idx, self.shape, self.chunk_shape)
+        box = _chunk_grid(self.shape, self.chunk_shape).chunk_box(chunk_idx)
         return all(
             lo < hi and lo < b_stop and b_start < hi  # empty range -> no chunk
             for (b_start, b_stop), (lo, hi) in zip(box, self.bounds)
@@ -546,8 +541,13 @@ class DekerStreamReader(DataSourceStreamReader):
 
 @dataclass
 class DekerWriteCommit(WriterCommitMessage):
-    files: tuple[str, ...]
+    files: tuple[str, ...]  # staged temp paths
     array_ids: tuple[str, ...]
+
+
+def _staged(message) -> tuple[str, ...]:
+    """A task's staged files; a task that failed sends no message."""
+    return getattr(message, "files", ()) or ()
 
 
 class DekerWriter(DataSourceArrowWriter):
@@ -566,12 +566,13 @@ class DekerWriter(DataSourceArrowWriter):
        by origin/shape, so a chunk assembled from many tasks' runs
        reads back exactly;
     3. appends one parquet file per (array_id, chunk) it touched —
-       written under a dot-prefixed TEMP name (invisible to every
+       staged under a dot-prefixed TEMP name (invisible to every
        reader) and published by ``commit``'s rename to its task-UUID
-       name, so a crashed job orphans nothing visible; never
-       overwrites (COW-compatible). Each run carries a placement
-       ``seq`` stamp (~ms clock + within-task counter), so a re-written
-       cell resolves LAST-WRITE-WINS through ``read_data``.
+       name (``core.storage.publish_staged``), so a crashed job
+       orphans nothing visible; never overwrites (COW-compatible).
+       Each run carries a placement ``seq`` stamp (~ms clock +
+       within-task counter), so a re-written cell resolves
+       LAST-WRITE-WINS through ``read_data``.
 
     Memory per task is bounded by that task's input cells (the same
     class as a shuffle writer's buffer). Chunk-ALIGNED input (e.g.
@@ -627,10 +628,8 @@ class DekerWriter(DataSourceArrowWriter):
         import uuid
 
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        splits = [math.ceil(s / c) for s, c in zip(self.shape, self.chunk_shape)]
+        splits = _chunk_grid(self.shape, self.chunk_shape).splits
         ndim = len(self.shape)
         # per (array_id, chunk_idx): list of (origin, shape, data) runs
         buf: dict[tuple[str, int], list[tuple[list, list, "np.ndarray"]]] = {}
@@ -693,15 +692,6 @@ class DekerWriter(DataSourceArrowWriter):
         run_counter = 0
         files, array_ids = [], set()
         for (array_id, cidx), runs in sorted(buf.items()):
-            d = chunk_dir(self.chunks_dir, array_id, cidx)
-            os.makedirs(d, exist_ok=True)
-            # dot-prefixed TEMP file: invisible to every reader (Spark
-            # skips hidden files; our own listings glob non-dot) until
-            # commit() renames it. A crashed attempt therefore orphans
-            # nothing a read or compact can see.
-            path = os.path.join(
-                d, f"{TMP_PREFIX}{self.write_id}-{task_id}.parquet"
-            )
             seqs = []
             for _ in runs:
                 if run_counter == 1 << _SEQ_COUNTER_BITS:
@@ -714,53 +704,15 @@ class DekerWriter(DataSourceArrowWriter):
                     run_counter = 0
                 seqs.append(seq_base + run_counter)
                 run_counter += 1
-            table = pa.table(
-                {
-                    "origin": pa.array([r[0] for r in runs], pa.list_(pa.int64())),
-                    "shape": pa.array([r[1] for r in runs], pa.list_(pa.int64())),
-                    "data": pa.array(
-                        [r[2] for r in runs], pa.list_(pa.float64())
-                    ),
-                    "seq": pa.array(seqs, pa.int64()),
-                }
+            files.append(
+                stage_chunk_file(
+                    chunk_dir(self.chunks_dir, array_id, cidx),
+                    encode_runs((q, *run) for q, run in zip(seqs, runs)),
+                    f"{staged_prefix(self.write_id)}{task_id}.parquet",
+                )
             )
-            pq.write_table(table, path)
-            files.append(path)
             array_ids.add(array_id)
         return DekerWriteCommit(files=tuple(files), array_ids=tuple(sorted(array_ids)))
-
-    def _finalize_files(self, messages, rename) -> None:
-        """Driver-side publish: rename each committed task's temp files
-        to their final (visible) names via ``rename(path, pid, i)``,
-        then garbage-collect temp files of THIS WRITE ONLY (names
-        carrying ``self.write_id``) left in the touched chunk dirs —
-        failed/superseded task attempts of this job whose data the
-        committed files already carry. A concurrent writer's in-flight
-        temps carry a different write_id and survive untouched, so two
-        live writers on one collection can both commit (r10; was an
-        unguarded any-temp GC behind a docstring-level single-writer
-        discipline). Temps orphaned by a CRASHED write (never
-        committed, so never GC'd here) stay invisible to every reader
-        and are reclaimed by the explicit age-gated
-        ``ChunkStore.gc_temps`` maintenance path."""
-        own = TMP_PREFIX + self.write_id + "-"
-        touched = set()
-        for pid, m in enumerate(messages):
-            renamed = []
-            for i, path in enumerate(getattr(m, "files", ()) or ()):
-                final = rename(path, pid, i)
-                os.replace(path, final)
-                renamed.append(final)
-                touched.add(os.path.dirname(final))
-            if renamed:
-                m.files = tuple(renamed)
-        for d in touched:
-            for f in os.listdir(d):
-                if f.startswith(own):
-                    try:
-                        os.remove(os.path.join(d, f))
-                    except FileNotFoundError:
-                        pass
 
     def _register_meta(self, messages) -> None:
         """Register written array ids in the catalog (pure JSON file
@@ -779,22 +731,24 @@ class DekerWriter(DataSourceArrowWriter):
                     )
 
     def commit(self, messages) -> None:
-        self._finalize_files(
-            messages,
-            lambda path, pid, i: os.path.join(
-                os.path.dirname(path),
-                APPEND_PREFIX + os.path.basename(path)[len(TMP_PREFIX):],
-            ),
+        """Publish every task's staged files under APPEND_PREFIX names.
+        The publish then removes the temps of THIS write only (names
+        carrying ``self.write_id``) left in the touched dirs — failed
+        or superseded task attempts — so a concurrent writer's in-flight
+        temps survive and two live writers on one collection can both
+        commit. Temps of a CRASHED write stay invisible and are
+        reclaimed by the age-gated ``ChunkStore.gc_temps``."""
+        publish_staged(
+            [(p, appended_name(p)) for m in messages for p in _staged(m)],
+            staged_prefix(self.write_id),
         )
         self._register_meta(messages)
 
     def abort(self, messages) -> None:
-        for m in messages:
-            for path in getattr(m, "files", ()):
-                try:
-                    os.remove(path)
-                except FileNotFoundError:
-                    pass
+        discard_staged(
+            {os.path.dirname(p) for m in messages for p in _staged(m)},
+            staged_prefix(self.write_id),
+        )
 
 
 class DekerStreamWriter(DataSourceStreamWriter):
@@ -859,12 +813,18 @@ class DekerStreamWriter(DataSourceStreamWriter):
         return self._core.write(batches())
 
     def commit(self, messages, batchId: int) -> None:
-        self._core._finalize_files(
-            messages,
-            lambda path, pid, i: os.path.join(
-                os.path.dirname(path),
-                f"part-b{batchId:08d}-p{pid:05d}-{i:03d}.parquet",
-            ),
+        publish_staged(
+            [
+                (
+                    p,
+                    os.path.join(
+                        os.path.dirname(p), f"part-b{batchId:08d}-p{pid:05d}-{i:03d}.parquet"
+                    ),
+                )
+                for pid, m in enumerate(messages)
+                for i, p in enumerate(_staged(m))
+            ],
+            staged_prefix(self._core.write_id),
         )
         self._core._register_meta(messages)
 

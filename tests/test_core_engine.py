@@ -199,63 +199,76 @@ class TestArrays:
         assert e.value.limit == 10 and e.value.requested == 240
 
     def test_read_runs_no_spark_job(self, warehouse, spark):
-        """read_data, update and the metadata requests are served on the
-        driver: a cell, a box and a whole array (one chunk, and a varray
+        """create, read_data, update and the metadata requests are served
+        on the driver: an array and a varray created with and without
+        data, a cell, a box and a whole array (one chunk, and a varray
         spanning six), an update of a one-chunk box, a clear of a varray
         box spanning chunks, a chunk-view update, primary-key lookups
         (a hit, a miss, an unknown key, a chunk-view hit) and a varray's
         meta read and custom-attribute update start no Spark job."""
         coll = warehouse.collections.create("c", SCHEMA)
         ref = np.random.RandomState(5).rand(20, 12)
-        arr = coll.arrays.create({"station": "s"}, data=ref)
         vcoll = warehouse.collections.create("v", VSCHEMA)
         vref = np.random.RandomState(6).rand(12, 8)
-        va = vcoll.varrays.create(data=vref)
-        view = vcoll.arrays.get_by_primary_attributes({"vid": va.id, "v_position": [1, 0]})
         sc = spark.sparkContext
-        reads = {
-            "cell": (lambda: arr.read_data((3, 4)), ref[3, 4]),
-            "box": (lambda: arr[2:9, 1:5], ref[2:9, 1:5]),
-            "whole": (lambda: arr.read_data(), ref),
-            "varray": (lambda: va.read_data(), vref),
+        creates = {
+            "array": (lambda: coll.arrays.create({"station": "f"}), np.full(ref.shape, SCHEMA.fill_value)),
+            "array_data": (lambda: coll.arrays.create({"station": "s"}, data=ref), ref),
+            "varray": (lambda: vcoll.varrays.create(), np.full(vref.shape, VSCHEMA.fill_value)),
+            "varray_data": (lambda: vcoll.varrays.create(data=vref), vref),
         }
-
-        def update_box():
-            arr.update((slice(2, 9), slice(1, 5)), -ref[2:9, 1:5])
-            ref[2:9, 1:5] *= -1
-
-        def clear_varray_box():  # rows 3:9 x cols 2:7 reach 4 of 6 chunks
-            va.clear((slice(3, 9), slice(2, 7)))
-            vref[3:9, 2:7] = va.schema.fill_value
-
-        def update_view():  # chunk (1, 0) covers rows 4:8, cols 0:4
-            view.update((slice(0, 2), 1), [-5.0, -6.0])
-            vref[4:6, 1] = [-5.0, -6.0]
-
-        writes = {
-            "update": (update_box, arr, ref),
-            "clear": (clear_varray_box, va, vref),
-            "view": (update_view, va, vref),
-        }
-
-        def update_varray_meta():
-            vcoll.varrays.update_meta_custom_attributes(va, {})
-            return vcoll.varrays.read_meta(va)
-
-        metas = {
-            "hit": (lambda: coll.arrays.get_by_primary_attributes({"station": "s"}).id, arr.id),
-            "miss": (lambda: coll.arrays.get_by_primary_attributes({"station": "t"}), None),
-            "unknown": (lambda: coll.arrays.get_by_primary_attributes({"bogus": 1}), None),
-            "view": (
-                lambda: vcoll.arrays.get_by_primary_attributes(
-                    {"v_position": [1, 0], "vid": va.id}
-                ).id,
-                view.id,
-            ),
-            "varray_meta": (lambda: vcoll.varrays.read_meta(va)["id"], va.id),
-            "varray_meta_update": (lambda: update_varray_meta()["id"], va.id),
-        }
+        created = {}
         try:
+            for kind, (create, want) in creates.items():
+                group = f"create-no-job-{kind}"
+                sc.setJobGroup(group, kind)
+                created[kind] = create()
+                np.testing.assert_array_equal(created[kind].read_data(), want)
+                assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kind
+            arr, va = created["array_data"], created["varray_data"]
+            view = vcoll.arrays.get_by_primary_attributes({"vid": va.id, "v_position": [1, 0]})
+            reads = {
+                "cell": (lambda: arr.read_data((3, 4)), ref[3, 4]),
+                "box": (lambda: arr[2:9, 1:5], ref[2:9, 1:5]),
+                "whole": (lambda: arr.read_data(), ref),
+                "varray": (lambda: va.read_data(), vref),
+            }
+
+            def update_box():
+                arr.update((slice(2, 9), slice(1, 5)), -ref[2:9, 1:5])
+                ref[2:9, 1:5] *= -1
+
+            def clear_varray_box():  # rows 3:9 x cols 2:7 reach 4 of 6 chunks
+                va.clear((slice(3, 9), slice(2, 7)))
+                vref[3:9, 2:7] = va.schema.fill_value
+
+            def update_view():  # chunk (1, 0) covers rows 4:8, cols 0:4
+                view.update((slice(0, 2), 1), [-5.0, -6.0])
+                vref[4:6, 1] = [-5.0, -6.0]
+
+            writes = {
+                "update": (update_box, arr, ref),
+                "clear": (clear_varray_box, va, vref),
+                "view": (update_view, va, vref),
+            }
+
+            def update_varray_meta():
+                vcoll.varrays.update_meta_custom_attributes(va, {})
+                return vcoll.varrays.read_meta(va)
+
+            metas = {
+                "hit": (lambda: coll.arrays.get_by_primary_attributes({"station": "s"}).id, arr.id),
+                "miss": (lambda: coll.arrays.get_by_primary_attributes({"station": "t"}), None),
+                "unknown": (lambda: coll.arrays.get_by_primary_attributes({"bogus": 1}), None),
+                "view": (
+                    lambda: vcoll.arrays.get_by_primary_attributes(
+                        {"v_position": [1, 0], "vid": va.id}
+                    ).id,
+                    view.id,
+                ),
+                "varray_meta": (lambda: vcoll.varrays.read_meta(va)["id"], va.id),
+                "varray_meta_update": (lambda: update_varray_meta()["id"], va.id),
+            }
             for kind, (read, want) in reads.items():
                 group = f"read-no-job-{kind}"
                 sc.setJobGroup(group, kind)
@@ -507,6 +520,54 @@ def test_write_from_cells_persist_hygiene(warehouse, spark):
     # between the two samples in a full-suite run
     assert after <= before, f"persisted RDDs grew by {after - before}"
     np.testing.assert_allclose(arr.read_data(), data)
+
+
+def test_create_from_cells_publishes_one_file_per_chunk(warehouse, spark, monkeypatch):
+    """A varray built from cells is written once: every chunk dir holds
+    one visible file, the chunks no cell reaches as fill, and all of
+    them when the cells are empty; read_data equals NumPy. A write that
+    fails, in its job (a raising UDF) or after it (the publish), leaves
+    no visible chunk file and no temp of its write."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from deker_server_adapters_spark.core import storage
+
+    coll = warehouse.collections.create("v", VSCHEMA)
+    ref = np.random.RandomState(8).rand(12, 8)
+    fill = np.full(ref.shape, VSCHEMA.fill_value)
+    want = fill.copy()
+    want[:4] = ref[:4]  # chunk row 0: chunks 0 and 1 of six
+    cells = spark.createDataFrame(
+        [(x, y, float(ref[x, y])) for x in range(4) for y in range(8)],
+        "x long, y long, value double",
+    )
+    empty = spark.createDataFrame([], "x long, y long, value double")
+
+    def listing(va_id: str) -> dict:
+        d = storage.chunk_dir(os.path.join(coll.path, "chunks"), va_id)
+        return {c: os.listdir(os.path.join(d, c)) for c in os.listdir(d)} if os.path.isdir(d) else {}
+
+    for src, expect in ((cells, want), (empty, fill)):
+        va = coll.varrays.create_from_cells(src)
+        np.testing.assert_array_equal(va.read_data(), expect)
+        dirs = listing(va.id)
+        assert len(dirs) == 6, dirs
+        assert all(len(n) == 1 and storage.is_visible_chunk_file(n[0]) for n in dirs.values()), dirs
+
+    boom = F.udf(lambda v: 1 / 0, "double")
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        coll.varrays.create_from_cells(cells.withColumn("value", boom("value")), id_="udf")
+
+    def failed_publish(renames, own_prefix):
+        raise OSError("publish failed")
+
+    monkeypatch.setattr(storage, "publish_staged", failed_publish)
+    with pytest.raises(OSError, match="publish failed"):
+        coll.varrays.create_from_cells(cells, id_="publish")
+    for va_id in ("udf", "publish"):
+        assert not any(listing(va_id).values()), listing(va_id)
 
 
 def test_corrupt_meta_file_is_skipped(warehouse):

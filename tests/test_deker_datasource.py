@@ -1313,6 +1313,11 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     coll = wh.collections.create("w", SCHEMA)
     base = np.random.RandomState(4).rand(20, 12)
     a = coll.arrays.create(data=base)
+    (d,) = _glob.glob(os.path.join(root, "collections", "w", "chunks", "array_id=*", "chunk_idx=*"))
+    # a store written by Spark's parquet writer has a Hadoop checksum
+    # companion next to the engine-created file
+    (created,) = visible_chunk_files(d)
+    open(os.path.join(d, f".{os.path.basename(created)}.crc"), "wb").close()
     register(spark)
     (
         spark.createDataFrame(
@@ -1329,7 +1334,6 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     )
     want = base.copy()
     want[2, :] = -1.0
-    (d,) = _glob.glob(os.path.join(root, "collections", "w", "chunks", "array_id=*", "chunk_idx=*"))
     replaced = visible_chunk_files(d)
     assert len(replaced) == 2
     assert any(n.endswith(".crc") for n in os.listdir(d))  # Spark's checksums

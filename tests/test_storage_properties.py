@@ -128,23 +128,6 @@ def _engine_producible(shape, splits) -> bool:
     )
 
 
-@given(shape_and_grid())
-@settings(max_examples=200, deadline=None)
-def test_datasource_chunk_box_matches_chunkgrid(case):
-    """The data source re-derives chunk geometry without the engine's
-    Spark-bound classes; its box math must agree with ChunkGrid for
-    every chunk of any engine-producible shape/grid."""
-    from hypothesis import assume
-
-    from deker_server_adapters_spark.sources.deker_datasource import _chunk_box
-
-    shape, splits = case
-    assume(_engine_producible(shape, splits))
-    grid = ChunkGrid(shape, splits)
-    for idx in range(grid.n_chunks):
-        assert _chunk_box(idx, shape, grid.chunk_shape) == grid.chunk_box(idx)
-
-
 @given(shape_grid_bounds())
 @settings(max_examples=200, deadline=None)
 def test_datasource_pruning_matches_overlapping_chunks(case):
