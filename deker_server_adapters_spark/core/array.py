@@ -184,14 +184,11 @@ class Array:
     def clear(self, bounds: Bounds = slice(None)) -> None:
         self._adapter.clear(self, bounds)
 
-    def cell_df(self, dedup: bool = False) -> DataFrame:
-        """This array as a long-format DataFrame (dims..., value).
-        ``dedup=True`` resolves overlapping runs per cell last-write-
-        wins (read_data semantics); default is the append-log view."""
+    def cell_df(self) -> DataFrame:
+        """This array as a long-format DataFrame (dims..., value), one
+        row per written cell, last-write-wins (read_data semantics)."""
         store = ChunkStore(self.collection.warehouse.spark, self.collection.path)
-        return store.cell_df(
-            self.id, [d.name for d in self.schema.dimensions], dedup=dedup
-        )
+        return store.cell_df(self.id, [d.name for d in self.schema.dimensions])
 
     def reduce(self, dim: str, fn: str = "mean") -> DataFrame:
         """Aggregate out one dimension (xarray-style): returns a

@@ -28,25 +28,36 @@ Spark-first consequences:
   one Spark job whose tasks build and stage whole chunks, which the
   driver publishes once the job has succeeded; the ``deker`` writers
   stage per task and publish at commit.
-- A subset write is copy-on-write at chunk granularity, also on the
-  driver with no Spark job: each overlapped chunk dir is rewritten as
-  one new file holding its patched runs, published by rename before
-  the files it replaces are removed, mirroring Deker's subset PUT
-  (reference base.py:272-303). ``compact`` runs the same rewrite,
-  without a patch, on executors.
+- A subset write appends, also on the driver with no Spark job: each
+  overlapped chunk dir gets one new file holding the update's piece of
+  it as one run stamped newest (a *delta run*), the log-structured form
+  of Deker's subset PUT (reference base.py:272-303). Nothing is
+  removed, so an update has no crash window. Once a dir holds more than
+  ``FOLD_FILES`` files, the update *folds* it: ``_merge_chunk_dir``
+  rewrites the dir as one file whose runs are resolved last-write-wins
+  (no two overlap). ``compact`` runs the same fold on executors.
 - Decoded chunk dirs stay in one process-wide LRU cache on the driver
-  (the role of HDF5's raw-data chunk cache), bounded at
-  ``CHUNK_CACHE_BYTES`` of ``pa.Table.nbytes``; a dir larger than the
-  budget is not cached. Every request lists and stats the dir's
-  visible files and hits only on an identical ``(name, size,
-  mtime_ns, inode)`` signature, so any writer, in this process or
-  another, makes the next request miss; array and collection deletes
-  drop their entries only to free memory. Only the driver's
-  ``read_slice`` and ``update_slice`` use it; ``compact`` and the
-  ``deker`` source read uncached on executors.
-- ``cell_df`` exposes any array as a long-format DataFrame
-  (dim indices + value) with pure-JVM index arithmetic, so arrays
-  join/aggregate with relational tables in one Catalyst plan.
+  (the role of HDF5's raw-data chunk cache): each entry holds a dir's
+  runs in ``ordered_runs`` order, bounded at ``CHUNK_CACHE_BYTES`` of
+  run values; a dir larger than the budget is not cached. Every request
+  lists and stats the dir's visible files and hits only on an identical
+  ``(name, size, mtime_ns, inode)`` signature, so any writer, in this
+  process or another, makes the next request miss. An update extends
+  the entry of the listing it saw with its delta run, so it never
+  forces a re-decode of the chunk; a fold writes its resolved runs
+  through. Array and collection deletes drop entries only to free
+  memory. Only the driver's ``read_slice``, ``update_slice`` and fold
+  use it; ``compact`` and the ``deker`` source read uncached on
+  executors.
+- ``cell_df`` exposes any array as a long-format DataFrame (dim indices
+  + value) with pure-JVM index arithmetic, so arrays join/aggregate
+  with relational tables in one Catalyst plan. It is last-write-wins
+  like ``read_data``: the driver reads only the ``origin``/``shape``
+  columns of each chunk dir, and only dirs whose runs overlap take a
+  resolving aggregate; the rest keep the plain, shuffle-free plan.
+- ``stats()`` snapshots the module's counters: cache hits, misses,
+  evictions and cached bytes, delta appends, folds, and the chunk reads
+  and runs they replayed.
 """
 
 from __future__ import annotations
@@ -309,13 +320,14 @@ def read_chunk_files(paths: Sequence[str]) -> tuple[list[str], list[pa.Table]]:
     """Read one chunk dir's planned files, in the given order; returns
     the paths actually read and their tables.
 
-    A planned file that vanishes before it is opened means ``compact``
-    or an update rewrote the dir, or ``delete_array`` dropped the
-    chunk. Skipping it would silently drop its cells, so the dir is
-    re-listed (with backoff, so a steady rewrite cadence can drain) and
-    the CURRENT visible set is read — the rewritten file carries every
-    removed run. A read racing writers is therefore read-committed per
-    chunk, not a snapshot; a dir that is gone reads as empty."""
+    A planned file that vanishes before it is opened means a fold (an
+    update's, or ``compact``'s) rewrote the dir, or ``delete_array``
+    dropped the chunk. Skipping it would silently drop its cells, so
+    the dir is re-listed (with backoff, so a steady rewrite cadence can
+    drain) and the CURRENT visible set is read — the rewritten file
+    carries every removed run. A read racing writers is therefore
+    read-committed per chunk, not a snapshot; a dir that is gone reads
+    as empty."""
     if not paths:
         return [], []
     d = os.path.dirname(paths[0])
@@ -336,15 +348,49 @@ def read_chunk_files(paths: Sequence[str]) -> tuple[list[str], list[pa.Table]]:
     raise RuntimeError(f"chunk dir kept changing during read: {d}")
 
 
+# Counters read through ``stats()``: one integer add per event, made
+# under ``_CACHE_LOCK`` so that threads lose none.
+_COUNTS = dict.fromkeys(
+    (
+        "cache_hits",
+        "cache_misses",
+        "cache_evictions",
+        "delta_appends",
+        "folds",
+        "chunk_reads",
+        "runs_replayed",
+    ),
+    0,
+)
+
+# A dir holding more than this many visible files after an update is
+# folded by that update: updates alone never leave a dir with more.
+FOLD_FILES = 16
+
 # The driver-side chunk cache (see the module docstring). Entries are
 # keyed by absolute dir path at module level, so every ChunkStore in
 # the process shares them: ``Array`` builds a new adapter per call.
-# Cached tables are only ever read: ``chunk_runs`` hands out read-only
-# views and ``_patched`` copies before it writes.
-CHUNK_CACHE_BYTES = 256 << 20  # budget in pa.Table.nbytes
+# An entry is ``(signature, runs, nbytes)``; cached run values are
+# read-only, and an entry's run list is replaced, never changed in place.
+CHUNK_CACHE_BYTES = 256 << 20  # budget in bytes of run values
 _CACHE_LOCK = threading.Lock()
-_CACHE: OrderedDict[str, tuple[tuple, list[pa.Table], int]] = OrderedDict()
+_CACHE: OrderedDict[str, tuple[tuple, list, int]] = OrderedDict()
 _cache_nbytes = 0
+
+
+def _count(**events: int) -> None:
+    with _CACHE_LOCK:
+        for k, n in events.items():
+            _COUNTS[k] += n
+
+
+def stats() -> dict:
+    """A snapshot of the array counters: chunk-cache hits, misses and
+    evictions, delta appends, folds, chunk reads and the runs those
+    reads replayed, all counted since the process started, plus the
+    bytes and dirs the cache holds now."""
+    with _CACHE_LOCK:
+        return {**_COUNTS, "cached_bytes": _cache_nbytes, "cached_dirs": len(_CACHE)}
 
 
 def _signature(paths: Sequence[str]) -> tuple | None:
@@ -363,23 +409,57 @@ def _signature(paths: Sequence[str]) -> tuple | None:
     return tuple(sig)
 
 
-def _cache_put(d: str, sig: tuple, tables: list[pa.Table]) -> None:
-    """Cache ``tables`` as dir ``d`` under ``sig``, evicting least
-    recently used dirs past the budget; a dir larger than the whole
-    budget is not cached (and its stale entry goes)."""
+def _store_locked(key: str, sig: tuple, runs: list, nbytes: int) -> None:
+    """Cache ``runs`` under ``key`` and ``sig``, evicting least recently
+    used dirs past the budget; a dir larger than the whole budget is not
+    cached (and its stale entry goes). The caller holds the lock."""
     global _cache_nbytes
-    nbytes = sum(t.nbytes for t in tables)
+    old = _CACHE.pop(key, None)
+    if old is not None:
+        _cache_nbytes -= old[2]
+    if nbytes > CHUNK_CACHE_BYTES:
+        return
+    _CACHE[key] = (sig, runs, nbytes)
+    _cache_nbytes += nbytes
+    while _cache_nbytes > CHUNK_CACHE_BYTES:
+        _cache_nbytes -= _CACHE.popitem(last=False)[1][2]
+        _COUNTS["cache_evictions"] += 1
+
+
+def _cache_put(d: str, sig: tuple, runs: list) -> None:
+    """Cache ``runs`` as dir ``d`` under ``sig``."""
+    nbytes = sum(r[3].nbytes for r in runs)
+    with _CACHE_LOCK:
+        _store_locked(os.path.abspath(d), sig, runs, nbytes)
+
+
+def _cached(d: str, sig: tuple | None) -> list | None:
+    """Dir ``d``'s cached runs if its entry has signature ``sig``."""
     key = os.path.abspath(d)
     with _CACHE_LOCK:
-        old = _CACHE.pop(key, None)
-        if old is not None:
-            _cache_nbytes -= old[2]
-        if nbytes > CHUNK_CACHE_BYTES:
+        hit = _CACHE.get(key)
+        if sig is not None and hit is not None and hit[0] == sig:
+            _CACHE.move_to_end(key)
+            _COUNTS["cache_hits"] += 1
+            return hit[1]
+        _COUNTS["cache_misses"] += 1
+        return None
+
+
+def _cache_append(d: str, before: tuple, path: str, run: tuple) -> None:
+    """Extend dir ``d``'s entry with the run file ``path`` just published
+    into it, if the entry is the listing ``before`` taken before the
+    write; any other entry is left to miss on the next request."""
+    added = _signature([path])
+    if added is None:
+        return
+    key = os.path.abspath(d)
+    with _CACHE_LOCK:
+        hit = _CACHE.get(key)
+        if hit is None or hit[0] != before:
             return
-        _CACHE[key] = (sig, tables, nbytes)
-        _cache_nbytes += nbytes
-        while _cache_nbytes > CHUNK_CACHE_BYTES:
-            _cache_nbytes -= _CACHE.popitem(last=False)[1][2]
+        runs = sorted([*hit[1], run], key=_run_seq)  # stable: equal seqs keep their order
+        _store_locked(key, tuple(sorted(before + added)), runs, hit[2] + run[3].nbytes)
 
 
 def drop_cached(d: str) -> None:
@@ -392,26 +472,22 @@ def drop_cached(d: str) -> None:
             _cache_nbytes -= _CACHE.pop(k)[2]
 
 
-def read_chunk_dir(d: str) -> tuple[list[str], list[pa.Table]]:
-    """:func:`read_chunk_files` of dir ``d``'s current listing, through
+def read_chunk_dir(d: str) -> list[tuple[int, np.ndarray, tuple, np.ndarray]]:
+    """The :func:`ordered_runs` of dir ``d``'s current listing, through
     the driver-side cache. The signature is taken before the files are
-    read, so an entry never holds tables older than its signature. A
-    miss is cached only when the files read are exactly the listing; a
-    file gone by the stat falls back to the relisting read, uncached."""
+    read, so an entry never holds runs older than its signature. A miss
+    is cached only when the files read are exactly the listing; a file
+    gone by the stat falls back to the relisting read, uncached."""
     paths = visible_chunk_files(d)
     sig = _signature(paths)
-    if sig is None:
-        return read_chunk_files(paths)
-    key = os.path.abspath(d)
-    with _CACHE_LOCK:
-        hit = _CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            _CACHE.move_to_end(key)
-            return paths, hit[1]
+    runs = _cached(d, sig)
+    if runs is not None:
+        return runs
     read, tables = read_chunk_files(paths)
-    if paths and read == paths:
-        _cache_put(d, sig, tables)
-    return read, tables
+    runs = ordered_runs(tables)
+    if sig is not None and paths and read == paths:
+        _cache_put(d, sig, runs)
+    return runs
 
 
 def _list_parts(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
@@ -421,11 +497,18 @@ def _list_parts(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
     return col.offsets.to_numpy(), values.to_numpy(zero_copy_only=values.null_count == 0)
 
 
+def _list_rows(col: pa.ChunkedArray) -> np.ndarray:
+    """A column of equal-length lists as a 2-d NumPy array, one row per
+    list."""
+    offsets, values = _list_parts(col.combine_chunks())
+    return values[offsets[0] : offsets[-1]].reshape(len(offsets) - 1, -1)
+
+
 def chunk_runs(table: pa.Table) -> Iterator[tuple[int, np.ndarray, tuple, np.ndarray]]:
     """``(seq, origin, shape, values)`` for each run row of one chunk
-    file, in row order. ``values`` is a flat, read-only, zero-copy view
-    of the file's ``data`` list; ``seq`` is -1 for legacy seq-less rows
-    (the oldest)."""
+    file, in row order. ``values`` is a flat, read-only view of the
+    file's ``data`` list; ``seq`` is -1 for legacy seq-less rows (the
+    oldest)."""
     for batch in table.to_batches():
         seqs = (
             batch.column("seq").fill_null(-1).to_numpy().tolist()
@@ -435,6 +518,7 @@ def chunk_runs(table: pa.Table) -> Iterator[tuple[int, np.ndarray, tuple, np.nda
         o_off, o_val = _list_parts(batch.column("origin"))
         s_off, s_val = _list_parts(batch.column("shape"))
         d_off, d_val = _list_parts(batch.column("data"))
+        d_val.setflags(write=False)  # a copy when the list held nulls
         for i, seq in enumerate(seqs):
             yield (
                 seq,
@@ -444,18 +528,62 @@ def chunk_runs(table: pa.Table) -> Iterator[tuple[int, np.ndarray, tuple, np.nda
             )
 
 
+def _run_seq(run: tuple) -> int:
+    return run[0]
+
+
 def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tuple, np.ndarray]]:
     """Every run of one chunk dir's files (given in ascending file-name
     order) in LAST-WRITE-WINS placement order: ascending
     ``(coalesce(seq, -1), file name, row index)``. Stamped runs order by
     ``seq`` alone (the within-task counter makes them strictly
-    increasing); legacy -1 runs fall back to sorted-file-name rank,
-    the same rank ``_merge_chunk_dir`` synthesizes, so a rewrite never
-    changes which legacy run wins. Runs in different chunk dirs never
-    overlap, so per-dir replay equals one global sort."""
-    runs = [run for t in tables for run in chunk_runs(t)]
-    runs.sort(key=lambda run: run[0])  # stable: ties keep (file, row) order
+    increasing). A legacy seq-less run carries its file's rank in the
+    listing as its ``seq`` — older than every stamped run, in file-name
+    order — which a fold writes out, so a rewrite never changes which
+    legacy run wins. Runs in different chunk dirs never overlap, so
+    per-dir replay equals one global sort."""
+    runs = [
+        (rank if seq < 0 else seq, origin, shape, values)
+        for rank, t in enumerate(tables)
+        for seq, origin, shape, values in chunk_runs(t)
+    ]
+    runs.sort(key=_run_seq)  # stable: ties keep (file, row) order
     return runs
+
+
+def run_boxes(runs: Sequence[tuple]) -> tuple[np.ndarray, np.ndarray]:
+    """(origins, shapes) of ``runs``, one row per run."""
+    return np.array([r[1] for r in runs], np.int64), np.array([r[2] for r in runs], np.int64)
+
+
+def runs_overlap(origins: np.ndarray, shapes: np.ndarray) -> bool:
+    """Whether any two boxes ``[origin, origin + shape)`` (one per row)
+    share a cell. A sweep sorts the boxes by start along the dimension
+    that leaves the fewest candidate pairs (later-starting boxes that
+    start before a box ends); the candidates are then compared on every
+    dimension at once, a bounded block at a time — milliseconds for the
+    thousands of runs of a ``deker``-writer chunk."""
+    n = len(origins)
+    if n < 2:
+        return False
+    lo = np.asarray(origins, np.int64).reshape(n, -1)
+    hi = lo + np.asarray(shapes, np.int64).reshape(n, -1)
+    best = None
+    for d in range(lo.shape[1]):
+        order = np.argsort(lo[:, d], kind="stable")
+        ends = np.searchsorted(lo[order, d], hi[order, d])
+        counts = np.maximum(ends - np.arange(1, n + 1), 0)
+        if best is None or counts.sum() < best[1].sum():
+            best = (order, counts)
+    order, counts = best
+    for block in np.array_split(np.arange(n), max(1, int(counts.sum()) >> 20)):
+        c = counts[block]
+        i = np.repeat(block, c)
+        j = i + 1 + np.arange(c.sum()) - np.repeat(np.cumsum(c) - c, c)
+        a, b = order[i], order[j]
+        if np.any(np.all((lo[a] < hi[b]) & (lo[b] < hi[a]), axis=1)):
+            return True
+    return False
 
 
 def _overlap(origin, shape, lo, hi) -> tuple[tuple, tuple] | None:
@@ -472,23 +600,62 @@ def _overlap(origin, shape, lo, hi) -> tuple[tuple, tuple] | None:
     return tuple(in_run), tuple(in_box)
 
 
-def _patched(runs: list, origin: Sequence[int], values: np.ndarray) -> list:
-    """``runs`` with the box ``values`` at ``origin`` written into each
-    run's overlap, every ``seq`` kept. Cells of the box that no run
-    holds (a sparse ``deker`` append) make the whole box one more run,
-    stamped newest, so an update never drops a write."""
+def _outside(inner: tuple, shape: Sequence[int]) -> Iterator[tuple]:
+    """Slices that cut the box ``[0, shape)`` minus its sub-box ``inner``
+    into at most two boxes per dimension."""
+    cur = [slice(0, n) for n in shape]
+    for d, s in enumerate(inner):
+        if s.start > 0:
+            yield tuple(cur[:d] + [slice(0, s.start)] + cur[d + 1 :])
+        if s.stop < shape[d]:
+            yield tuple(cur[:d] + [slice(s.stop, shape[d])] + cur[d + 1 :])
+        cur[d] = s
+
+
+def _patched(runs: list, origin: Sequence[int], values: np.ndarray, seq: int) -> list:
+    """Pairwise disjoint ``runs`` with the newer box ``values`` at
+    ``origin``, stamped ``seq``, placed last-write-wins; the result is
+    pairwise disjoint too. If the runs cover the box, its cells are
+    written into each run's overlap, every ``seq`` kept, and the box is
+    dropped. Otherwise (a sparse ``deker`` append) the box becomes a run
+    and each run it overlaps keeps only its cells outside the box.
+    Read-only run values are copied before they are written."""
+    origin = [int(a) for a in origin]
     hi = [a + n for a, n in zip(origin, values.shape)]
-    covered = np.zeros(values.shape, dtype=bool)
-    out = []
-    for seq, run_origin, shape, data in runs:
+    hits = {}
+    for i, (_, run_origin, shape, _) in enumerate(runs):
         hit = _overlap(run_origin.tolist(), shape, origin, hi)
         if hit is not None:
-            data = data.copy()  # chunk_runs hands out read-only views
-            data.reshape(shape)[hit[0]] = values[hit[1]]
-            covered[hit[1]] = True
-        out.append((seq, run_origin, shape, data))
-    if not covered.all():
-        out.append((next_write_seq(), np.asarray(origin), values.shape, values.ravel()))
+            hits[i] = hit
+    covered = sum(math.prod(s.stop - s.start for s in h[1]) for h in hits.values())
+    if covered == values.size:
+        out = list(runs)
+        for i, (in_run, in_box) in hits.items():
+            run_seq, run_origin, shape, data = runs[i]
+            if not data.flags.writeable:
+                data = data.copy()
+            data.reshape(shape)[in_run] = values[in_box]
+            out[i] = (run_seq, run_origin, shape, data)
+        return out
+    out = [r for i, r in enumerate(runs) if i not in hits]
+    for i, (in_run, _) in hits.items():
+        run_seq, run_origin, shape, data = runs[i]
+        for piece in _outside(in_run, shape):
+            cut = data.reshape(shape)[piece]
+            out.append((run_seq, run_origin + [p.start for p in piece], cut.shape, cut.ravel()))
+    out.append((seq, np.asarray(origin), values.shape, values.ravel()))
+    return out
+
+
+def _resolved(runs: Sequence[tuple]) -> list:
+    """Placement-ordered ``runs`` as pairwise disjoint runs holding the
+    same last-write-wins cells, in ``seq`` order, values read-only."""
+    out: list = []
+    for seq, origin, shape, values in runs:
+        out = _patched(out, origin, values.reshape(shape), seq)
+    out.sort(key=_run_seq)
+    for r in out:
+        r[3].setflags(write=False)
     return out
 
 
@@ -616,50 +783,57 @@ def _rewrite_name(paths: Sequence[str]) -> str:
     return f"part-compact-g{max(gens, default=0) + 1:09d}-{uuid.uuid4().hex[:16]}.parquet"
 
 
-def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = None) -> int:
-    """Rewrite one chunk-partition dir as a single file — the one
-    copy-on-write primitive. ``compact`` calls it on executors with no
-    ``patch`` (a dir with fewer than two files is left alone);
-    ``update_slice`` calls it on the driver with ``patch``, a box's
-    origin and its values, inside this chunk. Returns 1 if the dir was
+def _merge_chunk_dir(d: str) -> int:
+    """Fold one chunk-partition dir into a single file — the one
+    rewrite. An update runs it on the driver once the dir holds more
+    than ``FOLD_FILES`` files; ``compact`` runs it on executors. A dir
+    with fewer than two files is left alone. Returns 1 if the dir was
     rewritten.
 
-    - Placement order survives because it lives in the explicit ``seq``
-      column, kept for every run; a legacy run without ``seq`` gets its
-      rank in sorted-file-name order (the legacy visit-order
-      convention), so it stays older than every stamped run and keeps
-      its precedence among legacy runs.
-    - Runs are read through ``read_chunk_files``, so a file that
-      vanishes mid-read re-lists the dir; only the files actually read
-      are replaced.
+    - The fold *resolves* runs: when the vectorised
+      :func:`runs_overlap` check finds overlapping runs, each newer
+      run's cells are written into the older runs it overlaps and the
+      newer run is dropped once they cover it (:func:`_patched`), so
+      the output holds no two overlapping runs. Dirs without overlap
+      (a ``deker``-writer chunk of thousands of disjoint runs) skip the
+      Python resolution.
+    - Every output run keeps its ``seq``; a legacy run without one
+      keeps its rank in sorted-file-name order (:func:`ordered_runs`),
+      so it stays older than every stamped run.
+    - The runs come from the driver-side cache when it holds this
+      listing (the update that folds just extended it), and the output
+      is then written through; otherwise the files are read through
+      ``read_chunk_files``, so a file that vanishes mid-read re-lists
+      the dir, and only the files actually read are replaced.
     - Publish order: the output is staged and published whole like
       every chunk file, then the replaced files go, each after its
       Hadoop ``.crc`` companion (stores written by Spark's parquet
-      writer have them). The output name sorts after every replaced
-      file, so a reader that sees both (mid-rewrite, or after a crash
-      before the removal) resolves equal-``seq`` runs to the rewritten
-      values, and so does the next rewrite, which heals the dir. A
-      crashed rewrite's temp is GC'd by the next rewrite of the dir.
+      writer have them). A reader that sees both (mid-fold, or after a
+      crash before the removal) replays the replaced runs and the
+      output's resolved runs; the output sorts after every replaced
+      file and every run newer than an output run is still there, so
+      each cell resolves to its last write, and the next fold heals
+      the dir. A crashed fold's temp is GC'd by the next fold of the
+      dir.
     - In-flight writer temps are never touched, and a file committed
-      after the listing is kept. Two concurrent rewrites of the SAME
-      dir (an update racing ``compact``) are unsupported.
+      after the listing (an update's delta, a ``deker`` append) is
+      kept. Two concurrent folds of the SAME dir (an update's fold
+      racing ``compact``) are unsupported.
     """
-    if patch is None:
-        paths, tables = read_chunk_files(visible_chunk_files(d))
+    paths = visible_chunk_files(d)
+    if len(paths) < 2:
+        return 0
+    runs = _cached(d, _signature(paths))
+    hit = runs is not None
+    if not hit:
+        paths, tables = read_chunk_files(paths)
         if len(paths) < 2:
             return 0
-    else:
-        paths, tables = read_chunk_dir(d)
-    runs = [
-        (rank if seq < 0 else seq, origin, shape, data)
-        for rank, t in enumerate(tables)
-        for seq, origin, shape, data in chunk_runs(t)
-    ]
-    if patch is not None:
-        runs = _patched(runs, *patch)
-    merged = encode_runs(runs)
+        runs = ordered_runs(tables)
+    if runs_overlap(*run_boxes(runs)):
+        runs = _resolved(runs)
     out = os.path.join(d, _rewrite_name(paths))
-    tmp = stage_chunk_file(d, merged, f".{os.path.basename(out)}.tmp")
+    tmp = stage_chunk_file(d, encode_runs(runs), f".{os.path.basename(out)}.tmp")
     publish_staged([(tmp, out)], _REWRITE_TMP)
     for p in paths:
         # the companion first: a crash in between leaves a file without
@@ -669,12 +843,10 @@ def _merge_chunk_dir(d: str, patch: tuple[Sequence[int], np.ndarray] | None = No
                 os.remove(q)
             except FileNotFoundError:
                 pass
-    if patch is not None:
-        # write-through: the next request for this chunk is a hit while
-        # the rewrite's file is all the dir holds
-        sig = _signature([out])
-        if sig is not None:
-            _cache_put(d, sig, [merged])
+    _count(folds=1)
+    sig = _signature([out])
+    if hit and sig is not None:
+        _cache_put(d, sig, runs)
     return 1
 
 
@@ -808,29 +980,32 @@ class ChunkStore:
         each).
 
         Distributed: the chunk-dir list parallelizes over executors and
-        each dir is rewritten independently (bounded by one chunk's
-        bytes) by ``_merge_chunk_dir``, the same rewrite a subset update
-        runs on the driver, here without a patch. Placement semantics
-        survive the merge because run precedence is the explicit ``seq``
-        column, not file order (legacy seq-less rows get a synthesized
-        rank). Crash window: a failure between publishing the merged
-        file and removing the inputs leaves duplicate RUNS; the merged
-        file sorts last, so reads resolve to its values, and the next
-        rewrite of the dir heals it.
+        each dir is folded independently (bounded by one chunk's bytes)
+        by ``_merge_chunk_dir``, the same fold an update runs on the
+        driver: overlapping runs are resolved last-write-wins, so a
+        compacted dir holds no two overlapping runs, and dirs without
+        overlap only have their files merged. Placement semantics
+        survive because run precedence is the explicit ``seq`` column,
+        not file order (legacy seq-less rows get a synthesized rank).
+        Crash window: a failure between publishing the merged file and
+        removing the inputs leaves duplicate RUNS; the merged file sorts
+        last and holds each cell's last write, so reads resolve right,
+        and the next fold of the dir heals it.
 
-        Concurrency: safe alongside an active ``writeStream`` — a
-        writer task's in-flight dot-prefixed temp files are invisible
-        here (and to every reader) until its commit renames them, and a
-        committed file that appears after this pass's listing snapshot
-        is simply not merged this time. A file that vanishes mid-read
-        re-lists the dir. Two concurrent compact() calls on the SAME
-        store, or a compact racing an update of the same chunk, are not
-        supported.
+        Concurrency: safe alongside an active ``writeStream`` and
+        alongside updates — a writer task's in-flight dot-prefixed temp
+        files are invisible here (and to every reader) until its commit
+        renames them, and a committed file (an update's delta run, an
+        append) that appears after this pass's listing snapshot is
+        simply not merged this time. A file that vanishes mid-read
+        re-lists the dir. Two concurrent folds of the SAME dir — two
+        compact() calls on one store, or a compact racing the update
+        that folds that chunk — are not supported.
 
         Returns the number of chunk dirs compacted. NOTE for changefeed
         consumers: the merged file is a NEW file, so a running
         ``readStream`` re-emits compacted chunks (CDC re-emission, same
-        as any COW rewrite).
+        as any fold).
 
         Maintenance cadence: each compact() pass also runs the
         age-gated :meth:`gc_temps` (``gc_temp_age_sec``; 0 disables) —
@@ -997,11 +1172,13 @@ class ChunkStore:
 
         Chunk dirs come through the driver-side cache
         (:func:`read_chunk_dir`): every request lists and stats each
-        overlapped dir's files, and reuses the decoded tables only if
+        overlapped dir's files, and reuses the decoded runs only if
         that ``(name, size, mtime_ns, inode)`` signature is exactly the
         cached one. While the hot chunks fit ``CHUNK_CACHE_BYTES`` a
         repeated read decodes no parquet; past it a read pays the
-        decode plus one ``stat`` per file."""
+        decode plus one ``stat`` per file. A read replays at most the
+        runs of ``FOLD_FILES`` files per chunk, since an update folds a
+        dir that would hold more."""
         out_shape_full = [stop - start for start, stop, _ in norm]
         n_points = math.prod(out_shape_full)
         if n_points > max_points:
@@ -1020,12 +1197,15 @@ class ChunkStore:
         # one chunk dir at a time: driver memory is the output, one
         # chunk's runs and the bounded chunk cache; runs in different
         # dirs never overlap
-        for idx in grid.overlapping_chunks(norm):
-            _, tables = read_chunk_dir(chunk_dir(self.path, array_id, idx))
-            for _, origin, shape, values in ordered_runs(tables):
+        idxs, n_runs = grid.overlapping_chunks(norm), 0
+        for idx in idxs:
+            runs = read_chunk_dir(chunk_dir(self.path, array_id, idx))
+            n_runs += len(runs)
+            for _, origin, shape, values in runs:
                 hit = _overlap(origin.tolist(), shape, lo, hi)
                 if hit is not None:
                     out[hit[1]] = values.reshape(shape)[hit[0]]
+        _count(chunk_reads=len(idxs), runs_replayed=n_runs)
         squeeze_axes = tuple(d for d, (_, _, sq) in enumerate(norm) if sq)
         if squeeze_axes:
             out = out.squeeze(axis=squeeze_axes)
@@ -1038,15 +1218,21 @@ class ChunkStore:
         norm: list[tuple[int, int, bool]],
         data: np.ndarray | float,
     ) -> None:
-        """Copy-on-write subset update on the driver, with no Spark job:
-        each overlapped chunk dir is rewritten by ``_merge_chunk_dir``
-        with its part of the patch. A concurrent reader sees each chunk
-        whole, before or after (read-committed per chunk).
+        """Subset update on the driver, with no Spark job: each
+        overlapped chunk dir gets one new file holding the update's piece
+        of it as one run (a delta run), stamped newer than every run
+        before it. The pieces are staged and then published together;
+        nothing is removed, so a crash leaves each chunk's delta absent
+        or whole, and a concurrent reader sees each chunk before or
+        after (read-committed per chunk). A write that fails before its
+        publish leaves no temp behind. ``clear`` takes the same path.
 
-        The rewrite reads each dir through the same signature-checked
-        driver-side cache as :meth:`read_slice` and writes its output
-        through to it, so a read (or another update) right after an
-        update of the chunk decodes no parquet."""
+        The delta costs only its piece's bytes: when the driver-side
+        cache holds the listing the update saw, the entry is extended
+        with the delta run, so neither this update nor the next read
+        decodes the chunk. A dir left holding more than ``FOLD_FILES``
+        files is folded by :func:`_merge_chunk_dir`, once per
+        ``FOLD_FILES`` updates of a chunk."""
         out_shape = [stop - start for start, stop, _ in norm]
         if isinstance(data, (int, float)):
             patch = np.full(out_shape, float(data), dtype=np.float64)
@@ -1060,50 +1246,82 @@ class ChunkStore:
             patch = np.broadcast_to(np.asarray(data, dtype=np.float64), squeezed)
             patch = patch.reshape(out_shape)
         lo = [start for start, _, _ in norm]
-        for idx in grid.overlapping_chunks(norm):
-            box = [
-                (max(a, start), min(b, stop))
-                for (a, b), (start, stop, _) in zip(grid.chunk_box(idx), norm)
-            ]
-            piece = patch[tuple(slice(a - l, b - l) for (a, b), l in zip(box, lo))]
-            _merge_chunk_dir(
-                chunk_dir(self.path, array_id, idx), ([a for a, _ in box], piece)
-            )
+        seq = next_write_seq()  # one stamp per update; the pieces are disjoint
+        prefix = staged_prefix(uuid.uuid4().hex[:16])
+        idxs = grid.overlapping_chunks(norm)
+        deltas = []
+        try:
+            for idx in idxs:
+                box = [
+                    (max(a, start), min(b, stop))
+                    for (a, b), (start, stop, _) in zip(grid.chunk_box(idx), norm)
+                ]
+                # a private C-order copy: the cache may keep it, read-only
+                piece = np.array(patch[tuple(slice(a - l, b - l) for (a, b), l in zip(box, lo))])
+                piece.setflags(write=False)
+                run = (seq, np.array([a for a, _ in box], np.int64), piece.shape, piece.ravel())
+                d = chunk_dir(self.path, array_id, idx)
+                before = _signature(visible_chunk_files(d))
+                tmp = stage_chunk_file(d, encode_runs([run]), f"{prefix}{idx}.parquet")
+                deltas.append((d, before, tmp, run))
+            publish_staged([(tmp, appended_name(tmp)) for _, _, tmp, _ in deltas], prefix)
+        except BaseException:
+            discard_staged([chunk_dir(self.path, array_id, idx) for idx in idxs], prefix)
+            raise
+        _count(delta_appends=len(deltas))
+        for d, before, tmp, run in deltas:
+            if before is not None:
+                _cache_append(d, before, appended_name(tmp), run)
+            if len(visible_chunk_files(d)) > FOLD_FILES:
+                _merge_chunk_dir(d)
 
-    def cell_df(
-        self, array_id: str, dim_names: Sequence[str], dedup: bool = False
-    ) -> DataFrame:
-        """Long-format view: one row per cell, pure-JVM index math
-        (posexplode + div/mod over the chunk shape) — no Python in the
-        path, so arrays compose with SQL at full codegen speed.
+    def _chunks_with_overlapping_runs(self, array_id: str) -> list[int]:
+        """The chunk indices of ``array_id`` whose runs overlap, read on
+        the driver from only the ``origin``/``shape`` columns of each
+        chunk dir's files. A dir a fold rewrites under the read counts
+        as overlapping: the resolving plan is right for any dir."""
+        root = chunk_dir(self.path, array_id)
+        try:
+            names = os.listdir(root)
+        except FileNotFoundError:
+            return []
+        out = []
+        for name in names:
+            if not name.startswith("chunk_idx="):
+                continue
+            origins, shapes = [], []
+            try:
+                for p in visible_chunk_files(os.path.join(root, name)):
+                    with pq.ParquetFile(p) as f:
+                        t = f.read(columns=["origin", "shape"])
+                    if t.num_rows:
+                        origins.append(_list_rows(t.column("origin")))
+                        shapes.append(_list_rows(t.column("shape")))
+            except FileNotFoundError:
+                origins = shapes = None
+            if origins is None or (
+                origins and runs_overlap(np.concatenate(origins), np.concatenate(shapes))
+            ):
+                out.append(int(name.split("=", 1)[1]))
+        return sorted(out)
 
-        ``dedup=False`` (default) is the append-log view: overlapping
-        runs each emit their row, matching the ``deker`` source's
-        default. ``dedup=True`` resolves per-cell LAST-WRITE-WINS
-        (``read_data``'s semantics) as a ``max_by(value, (seq, file))``
-        aggregate over the cell coordinates — still pure JVM, but it
-        costs one shuffle on the dims; at scale prefer the datasource's
-        ``.option("dedup_cells", "true")``, which resolves inside each
-        chunk partition with zero shuffle. Tie order mirrors
-        ``read_slice``'s (seq, file-name) sort; the one divergence is
-        two overlapping runs in the SAME pre-seq legacy file, where the
-        aggregate has no row-order tiebreak (no engine writer produces
-        that layout)."""
+    def cell_df(self, array_id: str, dim_names: Sequence[str]) -> DataFrame:
+        """Long-format view: one row per written cell, pure-JVM index
+        math (posexplode + div/mod over the chunk shape) — no Python in
+        the path, so arrays compose with SQL at full codegen speed.
+
+        Each cell resolves LAST-WRITE-WINS, as in ``read_data``. Chunk
+        dirs whose runs do not overlap
+        (:meth:`_chunks_with_overlapping_runs`, a driver-side read of
+        the run boxes) keep the plain plan, with no shuffle. Only dirs with overlapping runs (delta runs of updates
+        not yet folded, overlapping ``deker`` appends) take a
+        ``max_by(value, (seq, file name, row))`` aggregate over the cell
+        coordinates — ``read_slice``'s placement order — and the two
+        plans are unioned."""
         df = self.scan(array_id)
-        if dedup:
-            df = df.select(
-                "origin",
-                "shape",
-                F.coalesce(F.col("seq"), F.lit(-1)).alias("seq"),
-                F.col("_metadata.file_name").alias("fname"),
-                F.posexplode("data").alias("pos", "value"),
-            )
-        else:
-            df = df.select(
-                "origin", "shape", F.posexplode("data").alias("pos", "value")
-            )
-        strides = []
+        overlapping = self._chunks_with_overlapping_runs(array_id)
         n = len(dim_names)
+        strides = []
         for d in range(n):
             expr = "1L"
             for d2 in range(d + 1, n):
@@ -1113,12 +1331,23 @@ class ChunkStore:
             (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
             for d in range(n)
         ]
-        if dedup:
-            return (
-                df.select(*cols, "value", "seq", "fname")
-                .groupBy(*[F.col(d) for d in dim_names])
-                .agg(
-                    F.max_by("value", F.struct("seq", "fname")).alias("value")
-                )
-            )
-        return df.select(*cols, F.col("value"))
+        cells = F.posexplode("data").alias("pos", "value")
+        in_overlap = F.col("chunk_idx").isin(overlapping)
+        plain = (df.filter(~in_overlap) if overlapping else df).select(
+            "origin", "shape", cells
+        ).select(*cols, "value")
+        if not overlapping:
+            return plain
+        placed = F.struct(
+            F.coalesce(F.col("seq"), F.lit(-1)),
+            F.col("_metadata.file_name"),
+            F.col("_metadata.row_index"),
+        )
+        resolved = (
+            df.filter(in_overlap)
+            .select("origin", "shape", placed.alias("__placed"), cells)
+            .select(*cols, "value", "__placed")
+            .groupBy(*dim_names)
+            .agg(F.max_by("value", "__placed").alias("value"))
+        )
+        return plain.unionByName(resolved)

@@ -71,13 +71,11 @@ class VArray:
     def clear(self, bounds: Bounds = slice(None)) -> None:
         self._adapter.clear(self, bounds)
 
-    def cell_df(self, dedup: bool = False) -> DataFrame:
+    def cell_df(self) -> DataFrame:
         from deker_server_adapters_spark.core.storage import ChunkStore
 
         store = ChunkStore(self.collection.warehouse.spark, self.collection.path)
-        return store.cell_df(
-            self.id, [d.name for d in self.schema.dimensions], dedup=dedup
-        )
+        return store.cell_df(self.id, [d.name for d in self.schema.dimensions])
 
     def meta(self) -> dict:
         return {

@@ -18,6 +18,13 @@ parquet scan inside ``ChunkStore``) and filter pushdown at two levels:
 
 ``value`` predicates (and anything else) are left for Spark.
 
+A batch read is LAST-WRITE-WINS per cell by default, like the engine's
+``read_data``: each written cell emits once, with its latest value, so
+an update's delta runs and overlapping appends are never counted twice.
+A task resolves only a chunk whose runs overlap; every other chunk
+emits its runs as stored. ``.option("dedup_cells", "false")`` and
+``readStream`` keep the append-log view, one row per stored run cell.
+
 Partition planning walks the chunk directory tree on the driver —
 O(surviving chunks) after pruning, the same cost class as Spark's own
 file-source listing. A 100 TB deployment swaps the walk for a
@@ -39,7 +46,7 @@ published by the engine's one chunk writer (``core.storage``:
 ``cells.writeStream.format("deker")`` is the STREAMING form of the same
 ingest (per-micro-batch append, deterministic batch-named files for
 idempotent replay — see ``DekerStreamWriter``).
-Subset updates/clears stay on the engine's copy-on-write
+Subset updates/clears stay on the engine's delta-append
 API (``core/storage.py``), which Spark's writer contract cannot
 express (subset PUT semantics, 413 limits); ``mode("overwrite")`` is
 rejected for the same reason.
@@ -86,13 +93,14 @@ from deker_server_adapters_spark.core.storage import (
     ChunkGrid,
     appended_name,
     chunk_dir,
-    chunk_runs,
     default_chunk_grid,
     discard_staged,
     encode_runs,
     ordered_runs,
     publish_staged,
     read_chunk_files,
+    run_boxes,
+    runs_overlap,
     stage_chunk_file,
     staged_prefix,
     unescape_path_name,
@@ -178,16 +186,19 @@ def _chunk_cell_batches(
     """Expand one chunk partition's parquet rows into Arrow cell
     batches — shared by the batch and stream readers.
 
-    ``dedup=False`` (default): append-log semantics — one row per
-    materialized RUN cell, so a cell re-written by a later append
-    appears once per write (and the stream reader's CDC feed needs
-    exactly this). ``dedup=True`` (batch ``.option("dedup_cells",
-    "true")``): LAST-WRITE-WINS per cell — the chunk's runs replay
-    into a chunk-local buffer in ``core.storage.ordered_runs`` order
-    (the engine's ``read_slice`` replays with the same function) and
-    each written cell emits once with its latest value. Memory for the
-    dedup path is one chunk's dense extent (the storage design unit)
-    plus the run list."""
+    ``dedup=True`` (the batch reader's default, ``dedup_cells``):
+    LAST-WRITE-WINS per cell. A chunk whose runs do not overlap
+    (``core.storage.runs_overlap``, a vectorised check of the run
+    boxes) emits each run's cells as they are; only a chunk with
+    overlapping runs replays them into a chunk-local buffer in
+    ``core.storage.ordered_runs`` order (the engine's ``read_slice``
+    replays with the same function) and emits each written cell once
+    with its latest value. Memory for that replay is one chunk's dense
+    extent (the storage design unit) plus the run list.
+    ``dedup=False`` (``dedup_cells=false``, and the stream reader's
+    changefeed): append-log semantics — one row per materialized RUN
+    cell, so a cell re-written by a later write appears once per
+    write."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -238,7 +249,7 @@ def _chunk_cell_batches(
             try:
                 tables.append(pq.read_table(path))
             except FileNotFoundError:
-                # STREAM semantics (COW race): a concurrent chunk rewrite
+                # STREAM semantics (fold race): a concurrent chunk fold
                 # can delete a file between offset planning and read. The
                 # deleted file's cells are superseded by the rewritten
                 # chunk file the NEXT micro-batch will pick up, so
@@ -246,15 +257,21 @@ def _chunk_cell_batches(
                 # stream forever on a WAL offset whose files are gone.
                 import warnings
 
-                warnings.warn(f"deker chunk file vanished (COW rewrite?): {path}")
+                warnings.warn(f"deker chunk file vanished (fold?): {path}")
 
-    if dedup and chunk_shape is not None and partition.chunk_idx >= 0:
+    runs = ordered_runs(tables)
+    if (
+        dedup
+        and chunk_shape is not None
+        and partition.chunk_idx >= 0
+        and runs_overlap(*run_boxes(runs))
+    ):
         box = _chunk_grid(shape, chunk_shape).chunk_box(partition.chunk_idx)
         ext = [b - a for a, b in box]
         lo0 = np.asarray([a for a, _ in box], dtype=np.int64)
         buf = np.empty(ext, dtype=np.float64)
         written = np.zeros(ext, dtype=bool)
-        for _, origin, run_shape, values in ordered_runs(tables):
+        for _, origin, run_shape, values in runs:
             sel = tuple(
                 slice(o - a, o - a + n)
                 for o, (a, _), n in zip(origin.tolist(), box, run_shape)
@@ -269,13 +286,12 @@ def _chunk_cell_batches(
             yield batch
         return
 
-    for table in tables:
-        for _, origin, run_shape, values in chunk_runs(table):
-            # absolute index per dim for every cell, vectorized
-            idx = np.indices(run_shape).reshape(ndim, -1) + origin[:, None]
-            batch = emit(idx, values)
-            if batch is not None:
-                yield batch
+    for _, origin, run_shape, values in runs:
+        # absolute index per dim for every cell, vectorized
+        idx = np.indices(run_shape).reshape(ndim, -1) + origin[:, None]
+        batch = emit(idx, values)
+        if batch is not None:
+            yield batch
 
 
 class DekerDataSource(DataSource):
@@ -317,7 +333,7 @@ class DekerDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "DekerReader":
         root, coll = self._root_and_collection()
-        dedup = str(self.options.get("dedup_cells", "false")).lower() == "true"
+        dedup = str(self.options.get("dedup_cells", "true")).lower() == "true"
         return DekerReader(root, coll, schema, dedup_cells=dedup)
 
     def streamReader(self, schema: StructType) -> "DekerStreamReader":
@@ -328,7 +344,7 @@ class DekerDataSource(DataSource):
         if overwrite:
             raise ValueError(
                 "deker writes are append-only bulk ingest; subset "
-                "updates/clears go through the engine's copy-on-write "
+                "updates/clears go through the engine's delta-append "
                 "API (core/storage.py), not mode('overwrite')"
             )
         root, coll = self._root_and_collection()
@@ -343,6 +359,10 @@ class DekerDataSource(DataSource):
 
 class DekerReader(DataSourceReader):
     """Batch reader over one collection's chunk store.
+
+    Cells resolve last-write-wins by default (``dedup_cells``, see
+    :func:`_chunk_cell_batches`); ``dedup_cells=false`` emits the
+    append-log rows, one per stored run cell.
 
     Isolation under concurrency: when a planned file vanishes mid-read
     (compact merged it, or delete_array dropped the array), the task
@@ -371,11 +391,11 @@ class DekerReader(DataSourceReader):
         root: str,
         collection: str,
         schema: StructType,
-        dedup_cells: bool = False,
+        dedup_cells: bool = True,
     ):
         meta = _load_collection_meta(root, collection)
-        # .option("dedup_cells", "true"): last-write-wins per cell (the
-        # engine's read_data resolution) instead of append-log rows
+        # last-write-wins per cell (the engine's read_data resolution);
+        # .option("dedup_cells", "false") emits append-log rows instead
         self.dedup_cells = dedup_cells
         self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
         self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
@@ -463,12 +483,13 @@ class DekerReader(DataSourceReader):
 class DekerStreamReader(DataSourceStreamReader):
     """Chunk CHANGEFEED: each micro-batch emits the cells of chunk
     files that appeared since the last offset — a freshly created array
-    streams once; a copy-on-write subset update streams the rewritten
-    chunks again (downstream recompute semantics, like a CDC feed of
-    chunk versions).
+    streams once; a subset update streams just its delta run's cells;
+    a fold (an update's, or ``compact``'s) streams the folded chunk
+    again (downstream recompute semantics, like a CDC feed of chunk
+    versions). Append-log rows: a cell appears once per write.
 
     Offsets are the seen-file set (parquet part files are immutable;
-    COW rewrites create NEW files), stored as a sorted list of paths
+    updates and folds create NEW files), stored as a sorted list of paths
     RELATIVE to the chunks dir to keep the serialized offset small.
     The set still grows with the store, and Spark re-serializes the
     full offset into the offset/commit log EVERY micro-batch — an
@@ -569,7 +590,7 @@ class DekerWriter(DataSourceArrowWriter):
        staged under a dot-prefixed TEMP name (invisible to every
        reader) and published by ``commit``'s rename to its task-UUID
        name (``core.storage.publish_staged``), so a crashed job
-       orphans nothing visible; never overwrites (COW-compatible).
+       orphans nothing visible; never overwrites.
        Each run carries a placement ``seq`` stamp (~ms clock +
        within-task counter), so a re-written cell resolves
        LAST-WRITE-WINS through ``read_data``.
@@ -581,11 +602,10 @@ class DekerWriter(DataSourceArrowWriter):
     writes correctly, just with shorter runs and more files.
 
     Append-only contract: writing a cell that already exists in the
-    collection appends a NEWER run — ``read_data`` resolves it
-    last-write-wins by ``seq``, while the cell-table SCAN keeps
-    append-log semantics (one row per materialized run, like appending
-    duplicate rows to a parquet table) — bulk ingest targets NEW array
-    ids, which
+    collection appends a NEWER run — ``read_data``, ``cell_df`` and the
+    default cell-table SCAN resolve it last-write-wins by ``seq``
+    (``dedup_cells=false`` shows one row per materialized run) — bulk
+    ingest targets NEW array ids, which
     ``commit`` registers in the catalog (``create_arrays`` option,
     default true) with empty attributes; pre-created arrays keep their
     metadata. ``abort`` removes every file the failed write produced.
@@ -786,8 +806,8 @@ class DekerStreamWriter(DataSourceStreamWriter):
     other path in this engine.
 
     Reference parity: the continuous-ingest counterpart of the
-    create+write flow (base.py:111-160); subset PUT stays on the COW
-    engine API, same as the batch writer.
+    create+write flow (base.py:111-160); subset PUT stays on the
+    engine's delta-append API, same as the batch writer.
     """
 
     def __init__(

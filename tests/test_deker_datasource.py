@@ -508,8 +508,8 @@ def test_chunk_read_tolerates_vanished_file(spark, tmp_path):
 
 def test_stream_reader_chunk_changefeed(spark, tmp_path):
     """readStream over the warehouse: a new array streams its cells in
-    the next micro-batch; a COW subset update streams the rewritten
-    chunk's cells AGAIN (chunk-version changefeed semantics)."""
+    the next micro-batch; a subset update streams just the cells it
+    wrote, its delta run (changefeed semantics)."""
     wh = Warehouse(spark, str(tmp_path / "whs"))
     coll = wh.collections.create("weather", SCHEMA)
     data = np.arange(20 * 12, dtype=np.float64).reshape(20, 12)
@@ -538,8 +538,9 @@ def test_stream_reader_chunk_changefeed(spark, tmp_path):
         rows = spark.table("deker_feed").collect()
     finally:
         q.stop()
-    # the updated chunk (x-slab containing rows 0..1) streamed again
+    # the update streamed its 2x12 patched cells, and only those
     assert len(rows) > first
+    assert len(rows) == first + 2 * 12
     latest = {}
     for r in rows:  # later duplicates overwrite: memory sink appends in order
         latest[(r["array_id"], r["x"], r["y"])] = r["value"]
@@ -876,11 +877,12 @@ def test_gc_temps_skips_undeletable_entries_and_runs_from_compact(spark, tmp_pat
 
 @pytest.mark.slow
 def test_dedup_cells_option_resolves_last_write_wins(spark, tmp_path):
-    """The batch reader's default is append-log semantics (one row per
-    materialized run — a re-written cell appears once per write); with
-    ``.option("dedup_cells", "true")`` each written cell emits ONCE
-    with its seq-latest value — the engine's read_data resolution
-    through the datasource surface. Pruning filters still apply."""
+    """With ``.option("dedup_cells", "false")`` the batch reader emits
+    append-log rows (one row per materialized run — a re-written cell
+    appears once per write); with ``dedup_cells`` true, the default,
+    each written cell emits ONCE with its seq-latest value — the
+    engine's read_data resolution through the datasource surface.
+    Pruning filters still apply."""
     root = str(tmp_path / "whdd")
     wh = Warehouse(spark, root)
     wh.collections.create("w", SCHEMA)
@@ -898,7 +900,8 @@ def test_dedup_cells_option_resolves_last_write_wins(spark, tmp_path):
 
     raw = (
         spark.read.format("deker").option("path", root)
-        .option("collection", "w").load().toPandas()
+        .option("collection", "w").option("dedup_cells", "false")
+        .load().toPandas()
     )
     assert len(raw) == len(base) + len(rewrite)  # append-log: both writes
 
@@ -1100,7 +1103,7 @@ def test_writer_property_overlapping_writes_last_wins(spark, tmp_path):
         def check_dedup_view(tag: str) -> None:
             # engine-side LWW long view must agree with read_data on
             # every written cell and emit each exactly once
-            rows = arr.cell_df(dedup=True).collect()
+            rows = arr.cell_df().collect()
             assert len(rows) == len(written), (tag, len(rows), len(written))
             for r in rows:
                 np.testing.assert_allclose(
@@ -1293,9 +1296,125 @@ def test_update_writes_cells_no_run_covers(spark, tmp_path):
     np.testing.assert_array_equal(arr.read_data(), want)
 
 
+def test_analytic_views_resolve_overlapping_runs_last_write_wins(spark, tmp_path):
+    """A deker append of rows 0-1 of a 4x4 array, then an update of
+    rows 1-2, leaves overlapping runs. ``reduce``, ``cell_df`` and the
+    default ``deker`` scan must agree with ``read_data``: 12 written
+    cells, 11 per column, 44 in all. Then a created array with two
+    overlapping updates: ``cell_df`` has one row per cell and sums to
+    the array's."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "whlww")
+    wh = Warehouse(spark, root)
+    small = ArraySchema(
+        dtype="float64", dimensions=(DimensionSchema("x", 4), DimensionSchema("y", 4))
+    )
+    coll = wh.collections.create("w", small)
+    register(spark)
+    (
+        spark.createDataFrame(
+            [("r6", x, y, 1.0) for x in range(2) for y in range(4)],
+            "array_id string, x long, y long, value double",
+        )
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .mode("append").save()
+    )
+    arr = coll.arrays.get_by_id("r6")
+    arr.update((slice(1, 3), slice(0, 4)), 5.0)
+
+    data = arr.read_data()
+    np.testing.assert_array_equal(data[:3].sum(axis=0), [11.0] * 4)
+    sums = {r["y"]: r["sum"] for r in arr.reduce("x", "sum").collect()}
+    assert sums == {y: 11.0 for y in range(4)}
+    cells = arr.cell_df().toPandas()
+    assert len(cells) == 12 and cells.value.sum() == 44.0
+    got = np.zeros((4, 4))
+    got[cells.x, cells.y] = cells.value
+    np.testing.assert_array_equal(got, data)
+    scan = (
+        spark.read.format("deker").option("path", root)
+        .option("collection", "w").load()
+        .agg(F.count("value").alias("n"), F.sum("value").alias("s"))
+        .first()
+    )
+    assert (scan["n"], scan["s"]) == (12, 44.0)
+
+    base = np.arange(16, dtype=np.float64).reshape(4, 4)
+    b = coll.arrays.create(data=base)
+    b.update((slice(0, 3), slice(0, 3)), -1.0)
+    b.update((slice(2, 4), slice(1, 4)), 2.0)
+    want = base.copy()
+    want[0:3, 0:3] = -1.0
+    want[2:4, 1:4] = 2.0
+    np.testing.assert_array_equal(b.read_data(), want)
+    row = b.cell_df().agg(F.count("value").alias("n"), F.sum("value").alias("s")).first()
+    assert (row["n"], row["s"]) == (16, want.sum())
+
+
+def test_array_counters_count_a_fixed_sequence(spark, tmp_path, monkeypatch, empty_chunk_cache):
+    """``storage.stats()`` counts cache hits, misses, evictions and
+    cached bytes, delta appends, folds, chunk reads and the runs they
+    replayed — exactly, for a fixed sequence on one-chunk arrays, with
+    one fold every ``FOLD_FILES`` updates of the chunk."""
+    storage = empty_chunk_cache
+    wh = Warehouse(spark, str(tmp_path / "whcount"))
+    coll = wh.collections.create("w", SCHEMA)
+    a = coll.arrays.create(data=np.zeros((20, 12)))
+    dense = 20 * 12 * 8  # bytes of the one dense run
+    delta = 2 * 2 * 8  # bytes of one 2x2 delta run
+
+    def counted(fn):
+        before = storage.stats()
+        fn()
+        after = storage.stats()
+        return {
+            k: after[k] - before[k]
+            for k in after
+            if k not in ("cached_bytes", "cached_dirs") and after[k] != before[k]
+        }
+
+    # a cold read decodes and caches the chunk; a warm one hits
+    assert counted(a.read_data) == {"cache_misses": 1, "chunk_reads": 1, "runs_replayed": 1}
+    assert counted(a.read_data) == {"cache_hits": 1, "chunk_reads": 1, "runs_replayed": 1}
+    assert storage.stats()["cached_bytes"] == dense
+
+    # an update appends one delta run and extends the cached entry
+    def update(k):
+        return lambda: a.update((slice(2 * (k % 10), 2 * (k % 10) + 2), slice(0, 2)), float(k))
+
+    assert counted(update(0)) == {"delta_appends": 1}
+    assert storage.stats()["cached_bytes"] == dense + delta
+    assert counted(a.read_data) == {"cache_hits": 1, "chunk_reads": 1, "runs_replayed": 2}
+
+    # the FOLD_FILES-th update of the chunk folds it; the fold reads the
+    # entry the update just extended and resolves every delta into the
+    # dense run
+    n = storage.FOLD_FILES
+    for k in range(1, n - 1):
+        assert counted(update(k)) == {"delta_appends": 1}
+    assert counted(update(n - 1)) == {"delta_appends": 1, "folds": 1, "cache_hits": 1}
+    assert storage.stats()["cached_bytes"] == dense
+    assert counted(a.read_data) == {"cache_hits": 1, "chunk_reads": 1, "runs_replayed": 1}
+    for k in range(n, 2 * n - 1):
+        assert counted(update(k)) == {"delta_appends": 1}
+    assert counted(update(2 * n - 1)) == {"delta_appends": 1, "folds": 1, "cache_hits": 1}
+
+    # a budget of one chunk: caching a second chunk evicts the first
+    monkeypatch.setattr(storage, "CHUNK_CACHE_BYTES", dense)
+    b = coll.arrays.create(data=np.ones((20, 12)))
+    assert counted(b.read_data) == {
+        "cache_misses": 1, "cache_evictions": 1, "chunk_reads": 1, "runs_replayed": 1,
+    }
+    assert storage.stats()["cached_bytes"] == dense and storage.stats()["cached_dirs"] == 1
+
+
 def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monkeypatch):
-    """An update publishes its rewritten chunk file before it removes
-    the files it replaces. If it dies in between, reads must already
+    """An update appends a delta run and removes nothing; the fold that
+    later resolves the dir publishes its file before it removes the
+    files it replaces. If the fold dies in between, reads must already
     return the updated values (the new file sorts after every file it
     replaces), a following compact() must keep them, and no Hadoop
     .crc file may outlive its parquet file."""
@@ -1304,6 +1423,7 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
 
     from deker_server_adapters_spark.core.storage import (
         ChunkStore,
+        _merge_chunk_dir,
         is_visible_chunk_file,
         visible_chunk_files,
     )
@@ -1334,9 +1454,12 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     )
     want = base.copy()
     want[2, :] = -1.0
-    replaced = visible_chunk_files(d)
-    assert len(replaced) == 2
+    assert len(visible_chunk_files(d)) == 2
     assert any(n.endswith(".crc") for n in os.listdir(d))  # Spark's checksums
+    a.update((slice(0, 4), slice(3, 9)), np.full((4, 6), 5.0))
+    want[0:4, 3:9] = 5.0
+    replaced = visible_chunk_files(d)
+    assert len(replaced) == 3  # the update appended its delta run
 
     real_remove = os.remove
 
@@ -1349,8 +1472,7 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     with monkeypatch.context() as m:
         m.setattr(os, "remove", crash)
         with pytest.raises(OSError, match="crash before removal"):
-            a.update((slice(0, 4), slice(3, 9)), np.full((4, 6), 5.0))
-    want[0:4, 3:9] = 5.0
+            _merge_chunk_dir(d)
     after = visible_chunk_files(d)
     assert after[:-1] == replaced and after[-1] not in replaced  # sorts last
     np.testing.assert_array_equal(a.read_data(), want)

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 
 import math
+import os
+import uuid
 
 import numpy as np
 from hypothesis import HealthCheck, given, settings
@@ -146,3 +148,129 @@ def test_datasource_pruning_matches_overlapping_chunks(case):
     reader.bounds = [[start, stop] for start, stop, _ in norm]
     got = {i for i in range(grid.n_chunks) if reader._chunk_overlaps(i)}
     assert got == set(grid.overlapping_chunks(norm))
+
+
+# A store of 4 chunks (3x3, 3x2, 3x3, 3x2) for the delta-run property.
+DELTA_SHAPE, DELTA_SPLITS = (6, 5), (2, 2)
+
+
+@st.composite
+def store_ops(draw):
+    """One step against the store: an update or clear of a box, a
+    ``deker``-style sparse append (row runs along the last dimension),
+    a fold of one chunk dir, or ``compact``."""
+    kind = draw(st.sampled_from(["update", "update", "clear", "append", "append", "fold", "compact"]))
+    if kind == "fold":
+        return kind, draw(st.integers(0, 3))
+    if kind == "compact":
+        return (kind,)
+    lo = [draw(st.integers(0, s - 1)) for s in DELTA_SHAPE]
+    hi = [draw(st.integers(a + 1, s)) for a, s in zip(lo, DELTA_SHAPE)]
+    return kind, tuple(slice(a, b) for a, b in zip(lo, hi)), draw(st.integers(0, 2**16))
+
+
+def _sparse_append(store, grid, box, seed, shadow) -> None:
+    """Append random values for the rows of ``box`` the way the ``deker``
+    writer does: one run per row piece inside a chunk, a file per chunk,
+    staged and published through the one chunk writer."""
+    from deker_server_adapters_spark.core import storage
+
+    rng = np.random.RandomState(seed)
+    runs: dict[int, list] = {}
+    seq = storage.next_write_seq()
+    for x in range(box[0].start, box[0].stop):
+        for idx in grid.overlapping_chunks(normalize_bounds((x, box[1]), DELTA_SHAPE)):
+            (_, _), (y0, y1) = grid.chunk_box(idx)
+            a, b = max(y0, box[1].start), min(y1, box[1].stop)
+            values = rng.rand(b - a)
+            shadow[x, a:b] = values
+            runs.setdefault(idx, []).append((seq + len(runs.get(idx, [])), [x, a], [1, b - a], values))
+    prefix = storage.staged_prefix(uuid.uuid4().hex)
+    staged = [
+        storage.stage_chunk_file(
+            storage.chunk_dir(store.path, "a1", idx), storage.encode_runs(r), f"{prefix}{idx}.parquet"
+        )
+        for idx, r in runs.items()
+    ]
+    storage.publish_staged([(p, storage.appended_name(p)) for p in staged], prefix)
+
+
+@given(st.booleans(), st.lists(store_ops(), min_size=1, max_size=24))
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense, ops):
+    """Updates, clears, sparse appends, folds and ``compact`` in any
+    order against a NumPy shadow. After every step ``read_slice``
+    equals the shadow warm and after ``drop_cached``; after an update
+    no dir it touched holds more than ``FOLD_FILES`` files; a folded
+    dir holds no two overlapping runs."""
+    from deker_server_adapters_spark.core import storage
+
+    fill = -9.0
+    grid = ChunkGrid(DELTA_SHAPE, DELTA_SPLITS)
+    store = storage.ChunkStore(spark, str(tmp_path_factory.mktemp("delta")))
+    shadow = np.full(DELTA_SHAPE, fill)
+    if dense:
+        shadow = np.random.RandomState(1).rand(*DELTA_SHAPE)
+        store.write_array("a1", grid, shadow)
+    dirs = [storage.chunk_dir(store.path, "a1", i) for i in range(grid.n_chunks)]
+    full = normalize_bounds(slice(None), DELTA_SHAPE)
+
+    def runs_of(d):
+        return storage.ordered_runs(storage.read_chunk_files(storage.visible_chunk_files(d))[1])
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(storage, "FOLD_FILES", 3)  # fold often
+        for op in ops:
+            kind = op[0]
+            if kind in ("update", "clear"):
+                box, seed = op[1], op[2]
+                values = fill if kind == "clear" else np.random.RandomState(seed).rand(
+                    *shadow[box].shape
+                )
+                norm = normalize_bounds(box, DELTA_SHAPE)
+                store.update_slice("a1", grid, norm, values)
+                shadow[box] = values
+                for i in grid.overlapping_chunks(norm):  # appends do not fold
+                    assert len(storage.visible_chunk_files(dirs[i])) <= storage.FOLD_FILES
+            elif kind == "append":
+                _sparse_append(store, grid, op[1], op[2], shadow)
+            elif kind == "fold":
+                storage._merge_chunk_dir(dirs[op[1]])
+            else:
+                store.compact()
+            if kind in ("fold", "compact"):
+                for d in dirs if kind == "compact" else [dirs[op[1]]]:
+                    assert len(storage.visible_chunk_files(d)) <= 1
+                    assert not storage.runs_overlap(*storage.run_boxes(runs_of(d))), op
+            for d in dirs:  # a dir left by a fold: no two runs overlap
+                files = storage.visible_chunk_files(d)
+                if len(files) == 1 and os.path.basename(files[0]).startswith("part-compact-"):
+                    assert not storage.runs_overlap(*storage.run_boxes(runs_of(d)))
+            got = store.read_slice("a1", grid, full, np.dtype("float64"), fill_value=fill)
+            np.testing.assert_array_equal(got, shadow, err_msg=f"warm after {op}")
+            storage.drop_cached(store.path)
+            got = store.read_slice("a1", grid, full, np.dtype("float64"), fill_value=fill)
+            np.testing.assert_array_equal(got, shadow, err_msg=f"cold after {op}")
+
+
+@given(st.integers(1, 3), st.lists(st.tuples(st.integers(0, 5), st.integers(0, 3)), max_size=24))
+@settings(max_examples=200, deadline=None)
+def test_runs_overlap_matches_pairwise(ndim, corners):
+    """The vectorised sweep agrees with a pairwise comparison of boxes,
+    empty boxes included."""
+    from deker_server_adapters_spark.core.storage import runs_overlap
+
+    rng = np.random.RandomState(len(corners) * 7 + ndim)
+    origins = np.array([[o + rng.randint(0, 3) for _ in range(ndim)] for o, _ in corners]).reshape(-1, ndim)
+    shapes = np.array([[s + rng.randint(0, 2) for _ in range(ndim)] for _, s in corners]).reshape(-1, ndim)
+    ends = origins + shapes
+    want = any(
+        np.all((origins[i] < ends[j]) & (origins[j] < ends[i]))
+        for i in range(len(corners))
+        for j in range(i + 1, len(corners))
+    )
+    assert runs_overlap(origins, shapes) == want
