@@ -40,11 +40,9 @@ from deker_server_adapters_spark.core.errors import (
 )
 from deker_server_adapters_spark.core.schema import validate_attributes
 from deker_server_adapters_spark.core.storage import (
-    CHUNK_SCHEMA,
     Bounds,
     ChunkGrid,
     ChunkStore,
-    default_chunk_grid,
     normalize_bounds,
     resolve_bounds,
 )
@@ -187,15 +185,12 @@ class Array:
     def cell_df(self) -> DataFrame:
         """This array as a long-format DataFrame (dims..., value), one
         row per written cell, last-write-wins (read_data semantics)."""
-        store = ChunkStore(self.collection.warehouse.spark, self.collection.path)
-        return store.cell_df(self.id, [d.name for d in self.schema.dimensions])
+        return self._adapter.cells_df([self.id]).drop("array_id")
 
     def reduce(self, dim: str, fn: str = "mean") -> DataFrame:
         """Aggregate out one dimension (xarray-style): returns a
         DataFrame keyed by the remaining dims with fn(value).
         Runs as one Catalyst plan over the chunk dataset."""
-        from pyspark.sql import functions as F
-
         names = [d.name for d in self.schema.dimensions]
         if dim not in names:
             raise KeyError(f"unknown dimension {dim!r}; have {names}")
@@ -235,10 +230,7 @@ class ArrayAdapter:
         return os.path.join(self._meta_dir(), meta_file_name(id_))
 
     def _grid(self) -> ChunkGrid:
-        schema = self.collection.array_schema
-        vschema = self.collection.varray_schema
-        splits = vschema.vgrid if vschema else default_chunk_grid(schema.shape)
-        return ChunkGrid(schema.shape, splits)
+        return ChunkGrid.for_schema(self.collection.schema)
 
     # -- CRUD ----------------------------------------------------------------
 
@@ -474,27 +466,12 @@ class ArrayAdapter:
 
     def cells_df(self, array_ids: list[str] | None = None) -> DataFrame:
         """Cross-array long view: (array_id, dims..., value) for many
-        arrays in one Catalyst plan — ensemble statistics across arrays
-        are a groupBy away, with partition pruning when ids are given."""
+        arrays (every array when ``array_ids`` is None) in one Catalyst
+        plan, last-write-wins per cell like ``read_data`` — ensemble
+        statistics across arrays are a groupBy away, with partition
+        pruning when ids are given (``ChunkStore.cell_df``)."""
         dim_names = [d.name for d in self.collection.array_schema.dimensions]
-        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.store.path)
-        if array_ids is not None:
-            df = df.filter(F.col("array_id").isin(array_ids))
-        exploded = df.select(
-            "array_id", "origin", "shape", F.posexplode("data").alias("pos", "value")
-        )
-        n = len(dim_names)
-        strides = []
-        for d in range(n):
-            expr = "1L"
-            for d2 in range(d + 1, n):
-                expr = f"{expr} * shape[{d2}]"
-            strides.append(expr)
-        cols = [
-            F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]").alias(dim_names[d])
-            for d in range(n)
-        ]
-        return exploded.select("array_id", *cols, F.col("value"))
+        return self.store.cell_df(array_ids, dim_names)
 
     # -- data ----------------------------------------------------------------
 

@@ -20,7 +20,7 @@ from deker_server_adapters_spark.core.errors import (
     DekerCollectionAlreadyExistsError,
     DekerCollectionNotExistsError,
 )
-from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema
+from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema, collection_schema
 from deker_server_adapters_spark.core.storage import drop_cached
 
 if TYPE_CHECKING:
@@ -110,9 +110,7 @@ class CollectionAdapter:
         if not os.path.exists(mp):
             raise DekerCollectionNotExistsError(name)
         with open(mp) as f:
-            d = json.load(f)
-        schema_cls = VArraySchema if d["type"] == "varray" else ArraySchema
-        return Collection(self.warehouse, name, schema_cls.from_dict(d["schema"]))
+            return Collection(self.warehouse, name, collection_schema(json.load(f)))
 
     def delete(self, collection: Collection) -> None:
         if not os.path.exists(self._meta_path(collection.name)):

@@ -196,6 +196,12 @@ class VArraySchema(ArraySchema):
         )
 
 
+def collection_schema(meta: dict) -> ArraySchema:
+    """The schema a collection's ``collection.json`` declares."""
+    cls = VArraySchema if meta["type"] == "varray" else ArraySchema
+    return cls.from_dict(meta["schema"])
+
+
 def validate_attributes(
     schema: ArraySchema, primary: dict[str, Any], custom: dict[str, Any]
 ) -> None:

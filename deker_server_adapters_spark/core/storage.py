@@ -7,6 +7,21 @@ Layout (one dataset per collection):
         shape:  array<long>   -- chunk shape (per dim)
         data:   array<double> -- C-order flattened cells
 
+This module makes each of the engine's core decisions once; the
+arrays, varrays and the ``deker`` source call it rather than repeat it:
+
+- *chunk layout*: ``chunk_dir`` names a chunk directory and
+  ``walk_chunk_dirs`` lists them as ``(array_id, chunk_idx, path)``,
+  pruned to given array ids at the directory level; nothing else
+  builds or parses ``array_id=``/``chunk_idx=`` names;
+- *grid*: ``ChunkGrid.for_schema`` is the grid of every array of a
+  collection (the vgrid of a varray schema, else
+  ``default_chunk_grid``);
+- *cell view*: ``ChunkStore.cell_df`` is the one long-format view of
+  any set of arrays;
+- *run replay*: ``place_runs`` places a chunk's runs into a box, last
+  write winning, for ``read_slice`` and the ``deker`` source alike.
+
 Spark-first consequences:
 
 - ``array_id`` and ``chunk_idx`` are *directory partition columns*, so
@@ -49,12 +64,13 @@ Spark-first consequences:
   memory. Only the driver's ``read_slice``, ``update_slice`` and fold
   use it; ``compact`` and the ``deker`` source read uncached on
   executors.
-- ``cell_df`` exposes any array as a long-format DataFrame (dim indices
-  + value) with pure-JVM index arithmetic, so arrays join/aggregate
-  with relational tables in one Catalyst plan. It is last-write-wins
-  like ``read_data``: the driver reads only the ``origin``/``shape``
-  columns of each chunk dir, and only dirs whose runs overlap take a
-  resolving aggregate; the rest keep the plain, shuffle-free plan.
+- ``cell_df`` exposes any set of arrays as a long-format DataFrame
+  (array id, dim indices, value) with pure-JVM index arithmetic, so
+  arrays join/aggregate with relational tables in one Catalyst plan.
+  It is last-write-wins like ``read_data``: the driver reads only the
+  ``origin``/``shape`` columns of each chunk dir, and only dirs whose
+  runs overlap take a resolving aggregate; the rest keep the plain,
+  shuffle-free plan.
 - ``stats()`` snapshots the module's counters: cache hits, misses,
   evictions and cached bytes, delta appends, folds, and the chunk reads
   and runs they replayed.
@@ -62,7 +78,9 @@ Spark-first consequences:
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import os
 import re
 import threading
@@ -86,6 +104,7 @@ from pyspark.sql.types import (
 )
 
 from deker_server_adapters_spark.core.errors import DekerDataPointsLimitError, DekerSubsetError
+from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema
 
 Bounds = Union[int, slice, tuple]
 
@@ -219,6 +238,15 @@ class ChunkGrid:
             math.ceil(s / g) for s, g in zip(self.shape, self.splits)
         )
 
+    @classmethod
+    def for_schema(cls, schema: ArraySchema) -> "ChunkGrid":
+        """The grid every array of a collection of ``schema`` is stored
+        on: the vgrid of a varray schema, else :func:`default_chunk_grid`
+        (so a varray's chunk arrays are its vgrid cells)."""
+        if isinstance(schema, VArraySchema):
+            return cls(schema.shape, schema.vgrid)
+        return cls(schema.shape, default_chunk_grid(schema.shape))
+
     @property
     def n_chunks(self) -> int:
         return math.prod(self.splits)
@@ -290,6 +318,35 @@ def chunk_dir(chunks_root: str, array_id: str, chunk_idx: int | None = None) -> 
     ids with ``#``, ``%``, ``/`` … land in and leave one directory."""
     d = os.path.join(chunks_root, f"array_id={escape_path_name(array_id)}")
     return d if chunk_idx is None else os.path.join(d, f"chunk_idx={int(chunk_idx)}")
+
+
+def _listed(d: str, key: str) -> list[tuple[str, str]]:
+    """``(value, name)`` of the ``key=value`` entries of dir ``d``; a dir
+    that is gone (never written, or deleted mid-walk) has none."""
+    try:
+        names = os.listdir(d)
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+    return [(n[len(key) + 1 :], n) for n in names if n.startswith(f"{key}=")]
+
+
+def walk_chunk_dirs(
+    chunks_root: str, array_ids: Iterable[str] | None = None
+) -> Iterator[tuple[str, int, str]]:
+    """``(array_id, chunk_idx, path)`` of every chunk dir under
+    ``chunks_root``, ordered by array id, then chunk index. Given
+    ``array_ids``, only those arrays' dirs are listed: the walk never
+    lists the other arrays (directory-level pruning)."""
+    if array_ids is None:
+        arrays = [
+            (unescape_path_name(v), os.path.join(chunks_root, n))
+            for v, n in _listed(chunks_root, "array_id")
+        ]
+    else:
+        arrays = [(a, chunk_dir(chunks_root, a)) for a in set(array_ids)]
+    for array_id, adir in sorted(arrays):
+        for idx, name in sorted((int(v), n) for v, n in _listed(adir, "chunk_idx")):
+            yield array_id, idx, os.path.join(adir, name)
 
 
 def is_visible_chunk_file(name: str) -> bool:
@@ -598,6 +655,23 @@ def _overlap(origin, shape, lo, hi) -> tuple[tuple, tuple] | None:
         in_run.append(slice(start - o, stop - o))
         in_box.append(slice(start - a, stop - a))
     return tuple(in_run), tuple(in_box)
+
+
+def place_runs(
+    runs: Iterable[tuple], lo: Sequence[int], out: np.ndarray, written: np.ndarray | None = None
+) -> None:
+    """Replay placement-ordered ``runs`` (:func:`ordered_runs`) into
+    ``out``, the box of ``out.shape`` cells at ``lo`` (Python ints):
+    each run's cells inside the box overwrite it in turn, so the last
+    write wins. Cells no run covers are left as they are; ``written``,
+    a boolean array of the box's shape, marks the cells placed."""
+    hi = [a + n for a, n in zip(lo, out.shape)]
+    for _, origin, shape, values in runs:
+        hit = _overlap(origin.tolist(), shape, lo, hi)
+        if hit is not None:
+            out[hit[1]] = values.reshape(shape)[hit[0]]
+            if written is not None:
+                written[hit[1]] = True
 
 
 def _outside(inner: tuple, shape: Sequence[int]) -> Iterator[tuple]:
@@ -961,13 +1035,6 @@ class ChunkStore:
 
     # -- read -------------------------------------------------------------
 
-    def scan(self, array_id: str, chunk_idxs: list[int] | None = None) -> DataFrame:
-        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
-        df = df.filter(F.col("array_id") == array_id)
-        if chunk_idxs is not None:
-            df = df.filter(F.col("chunk_idx").isin([int(i) for i in chunk_idxs]))
-        return df
-
     def compact(self, min_files: int = 2, gc_temp_age_sec: float = 86400.0) -> int:
         """Maintenance: merge multi-file chunk partitions back to ONE
         parquet file per (array_id, chunk_idx) dir. Bulk appends via the
@@ -1017,21 +1084,20 @@ class ChunkStore:
 
         WRITER-DURATION CONTRACT (r11 advice): the age gate assumes no
         live writer holds an uncommitted temp file longer than
-        ``gc_temp_age_sec`` (default 1 h) — a bulk write legitimately
-        in flight past that horizon would have its temps reclaimed by
-        a concurrent compact() and lose the write silently. Deployments
+        ``gc_temp_age_sec`` (default 86400 s, one day, as for
+        ``gc_temps``) — a bulk write legitimately in flight past that
+        horizon would have its temps reclaimed by a concurrent
+        compact() and lose the write silently. Deployments
         with longer-running writers must raise ``gc_temp_age_sec``
         above their worst-case write duration, or pass 0 to make
         compact() side-effect-free and run ``gc_temps`` on their own
         schedule. The same contract governs standalone ``gc_temps``.
         """
-        import glob as _glob
-
         if gc_temp_age_sec > 0:
             self.gc_temps(max_age_sec=gc_temp_age_sec)
         dirs = [
             d
-            for d in _glob.glob(os.path.join(self.path, "array_id=*", "chunk_idx=*"))
+            for _, _, d in walk_chunk_dirs(self.path)
             if len(visible_chunk_files(d)) >= min_files
         ]
         if not dirs:
@@ -1051,19 +1117,15 @@ class ChunkStore:
         work parallelizes over executors, so millions of chunk dirs
         stat at cluster width, not driver speed. Vanished files/dirs
         (concurrent delete or compact) are tolerated."""
-        import glob as _glob
-
-        dirs = _glob.glob(os.path.join(self.path, "array_id=*", "chunk_idx=*"))
+        dirs = list(walk_chunk_dirs(self.path))
+        schema = "array_id string, chunk_idx long, n_files long, bytes long, n_temp long"
         if not dirs:
-            return self.spark.createDataFrame(
-                [],
-                "array_id string, chunk_idx long, n_files long, "
-                "bytes long, n_temp long",
-            )
+            return self.spark.createDataFrame([], schema)
 
-        def _stat(d: str):
+        def _stat(entry: tuple[str, int, str]):
             import os as _os
 
+            array_id, chunk_idx, d = entry
             try:
                 names = _os.listdir(d)
             except FileNotFoundError:
@@ -1076,27 +1138,14 @@ class ChunkStore:
                     total += _os.path.getsize(_os.path.join(d, f))
                 except FileNotFoundError:
                     pass
-            parts = dict(
-                p.split("=", 1) for p in d.split(_os.sep)[-2:] if "=" in p
-            )
-            return (
-                unescape_path_name(parts.get("array_id", "")),
-                int(parts.get("chunk_idx", -1)),
-                len(vis),
-                total,
-                n_temp,
-            )
+            return array_id, chunk_idx, len(vis), total, n_temp
 
         sc = self.spark.sparkContext
         n_slices = min(len(dirs), sc.defaultParallelism)
         rows = sc.parallelize(dirs, n_slices).map(_stat).filter(
             lambda r: r is not None
         )
-        return self.spark.createDataFrame(
-            rows,
-            "array_id string, chunk_idx long, n_files long, "
-            "bytes long, n_temp long",
-        )
+        return self.spark.createDataFrame(rows, schema)
 
     def gc_temps(self, max_age_sec: float = 86400.0) -> int:
         """Reclaim dot-prefixed temp files orphaned by CRASHED writes.
@@ -1111,13 +1160,10 @@ class ChunkStore:
         the longest write a live job could still be executing (default
         one day). Distributed the same way as ``maintenance_stats`` —
         driver lists dirs (metadata), executors stat and delete."""
-        import glob as _glob
-        import time as _time
-
-        dirs = _glob.glob(os.path.join(self.path, "array_id=*", "chunk_idx=*"))
+        dirs = [d for _, _, d in walk_chunk_dirs(self.path)]
         if not dirs:
             return 0
-        cutoff = _time.time() - float(max_age_sec)
+        cutoff = time.time() - float(max_age_sec)
 
         def _gc(d: str) -> int:
             import os as _os
@@ -1188,7 +1234,6 @@ class ChunkStore:
                 requested=n_points,
             )
         lo = [start for start, _, _ in norm]
-        hi = [stop for _, stop, _ in norm]
         # cells no stored run covers read as the ARRAY'S fill value:
         # engine-created arrays materialize full chunks so this never
         # surfaces there, but the deker writer's bulk appends are
@@ -1201,10 +1246,7 @@ class ChunkStore:
         for idx in idxs:
             runs = read_chunk_dir(chunk_dir(self.path, array_id, idx))
             n_runs += len(runs)
-            for _, origin, shape, values in runs:
-                hit = _overlap(origin.tolist(), shape, lo, hi)
-                if hit is not None:
-                    out[hit[1]] = values.reshape(shape)[hit[0]]
+            place_runs(runs, lo, out)
         _count(chunk_reads=len(idxs), runs_replayed=n_runs)
         squeeze_axes = tuple(d for d, (_, _, sq) in enumerate(norm) if sq)
         if squeeze_axes:
@@ -1275,23 +1317,17 @@ class ChunkStore:
             if len(visible_chunk_files(d)) > FOLD_FILES:
                 _merge_chunk_dir(d)
 
-    def _chunks_with_overlapping_runs(self, array_id: str) -> list[int]:
-        """The chunk indices of ``array_id`` whose runs overlap, read on
+    def _chunks_with_overlapping_runs(self, array_ids: Sequence[str] | None) -> dict[str, list[int]]:
+        """Per array id, the chunk indices whose runs overlap, read on
         the driver from only the ``origin``/``shape`` columns of each
-        chunk dir's files. A dir a fold rewrites under the read counts
-        as overlapping: the resolving plan is right for any dir."""
-        root = chunk_dir(self.path, array_id)
-        try:
-            names = os.listdir(root)
-        except FileNotFoundError:
-            return []
-        out = []
-        for name in names:
-            if not name.startswith("chunk_idx="):
-                continue
+        chunk dir's files (every array's dirs when ``array_ids`` is
+        None). A dir a fold rewrites under the read counts as
+        overlapping: the resolving plan is right for any dir."""
+        out: dict[str, list[int]] = {}
+        for array_id, idx, d in walk_chunk_dirs(self.path, array_ids):
             origins, shapes = [], []
             try:
-                for p in visible_chunk_files(os.path.join(root, name)):
+                for p in visible_chunk_files(d):
                     with pq.ParquetFile(p) as f:
                         t = f.read(columns=["origin", "shape"])
                     if t.num_rows:
@@ -1302,24 +1338,31 @@ class ChunkStore:
             if origins is None or (
                 origins and runs_overlap(np.concatenate(origins), np.concatenate(shapes))
             ):
-                out.append(int(name.split("=", 1)[1]))
-        return sorted(out)
+                out.setdefault(array_id, []).append(idx)
+        return out
 
-    def cell_df(self, array_id: str, dim_names: Sequence[str]) -> DataFrame:
-        """Long-format view: one row per written cell, pure-JVM index
-        math (posexplode + div/mod over the chunk shape) — no Python in
-        the path, so arrays compose with SQL at full codegen speed.
+    def cell_df(self, array_ids: Sequence[str] | None, dim_names: Sequence[str]) -> DataFrame:
+        """Long-format view of the arrays ``array_ids`` (every array of
+        the collection when None): one ``(array_id, dims..., value)``
+        row per written cell, pure-JVM index math (each run's ``data``
+        exploded with its positions, then div/mod over the run shape) —
+        no Python in the path, so arrays compose with SQL at full
+        codegen speed. The ids filter the ``array_id`` partition
+        column, so the scan reads only those arrays' dirs.
 
         Each cell resolves LAST-WRITE-WINS, as in ``read_data``. Chunk
         dirs whose runs do not overlap
         (:meth:`_chunks_with_overlapping_runs`, a driver-side read of
-        the run boxes) keep the plain plan, with no shuffle. Only dirs with overlapping runs (delta runs of updates
-        not yet folded, overlapping ``deker`` appends) take a
-        ``max_by(value, (seq, file name, row))`` aggregate over the cell
+        the run boxes) keep the plain plan, with no shuffle. Only dirs
+        with overlapping runs (delta runs of updates not yet folded,
+        overlapping ``deker`` appends) take a ``max_by(value, (seq,
+        file name, row))`` aggregate over the array id and cell
         coordinates — ``read_slice``'s placement order — and the two
         plans are unioned."""
-        df = self.scan(array_id)
-        overlapping = self._chunks_with_overlapping_runs(array_id)
+        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
+        if array_ids is not None:
+            df = df.filter(F.col("array_id").isin(list(array_ids)))
+        overlapping = self._chunks_with_overlapping_runs(array_ids)
         n = len(dim_names)
         strides = []
         for d in range(n):
@@ -1332,10 +1375,14 @@ class ChunkStore:
             for d in range(n)
         ]
         cells = F.posexplode("data").alias("pos", "value")
-        in_overlap = F.col("chunk_idx").isin(overlapping)
-        plain = (df.filter(~in_overlap) if overlapping else df).select(
-            "origin", "shape", cells
-        ).select(*cols, "value")
+        plain = df
+        if overlapping:
+            in_overlap = functools.reduce(
+                operator.or_,
+                [(F.col("array_id") == a) & F.col("chunk_idx").isin(idxs) for a, idxs in overlapping.items()],
+            )
+            plain = df.filter(~in_overlap)
+        plain = plain.select("array_id", "origin", "shape", cells).select("array_id", *cols, "value")
         if not overlapping:
             return plain
         placed = F.struct(
@@ -1345,9 +1392,9 @@ class ChunkStore:
         )
         resolved = (
             df.filter(in_overlap)
-            .select("origin", "shape", placed.alias("__placed"), cells)
-            .select(*cols, "value", "__placed")
-            .groupBy(*dim_names)
+            .select("array_id", "origin", "shape", placed.alias("__placed"), cells)
+            .select("array_id", *cols, "value", "__placed")
+            .groupBy("array_id", *dim_names)
             .agg(F.max_by("value", "__placed").alias("value"))
         )
         return plain.unionByName(resolved)

@@ -72,10 +72,7 @@ class VArray:
         self._adapter.clear(self, bounds)
 
     def cell_df(self) -> DataFrame:
-        from deker_server_adapters_spark.core.storage import ChunkStore
-
-        store = ChunkStore(self.collection.warehouse.spark, self.collection.path)
-        return store.cell_df(self.id, [d.name for d in self.schema.dimensions])
+        return ArrayAdapter(self.collection).cells_df([self.id]).drop("array_id")
 
     def meta(self) -> dict:
         return {
@@ -105,9 +102,7 @@ class VArrayAdapter:
         self.store = self._arrays.store
 
     def _grid(self) -> ChunkGrid:
-        schema = self.collection.varray_schema
-        assert schema is not None
-        return ChunkGrid(schema.shape, schema.vgrid)
+        return ChunkGrid.for_schema(self.collection.schema)
 
     def create(
         self,

@@ -434,8 +434,8 @@ def deker_write_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def deker_dedup_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The slice-aggregate through the ``.option("dedup_cells",
-    "true")`` LAST-WRITE-WINS batch read (SURVEY §7 r9): the dense grid
+    """The slice-aggregate through the ``deker`` source's LAST-WRITE-WINS
+    batch read (SURVEY §7 r9): the dense grid
     is bulk-written TWICE — first a decoy pass (every value shifted by
     +1000), then the real cells — so every cell exists in two
     overlapping runs and only seq-ordered per-cell resolution can
@@ -481,7 +481,6 @@ def deker_dedup_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.format("deker")
         .option("path", root)
         .option("collection", "events_grid")
-        .option("dedup_cells", "true")
         .load()
     )
     return (
@@ -607,7 +606,11 @@ def deker_gc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         VArraySchema,
         Warehouse,
     )
-    from deker_server_adapters_spark.core.storage import TMP_PREFIX, ChunkStore
+    from deker_server_adapters_spark.core.storage import (
+        TMP_PREFIX,
+        ChunkStore,
+        walk_chunk_dirs,
+    )
     from deker_server_adapters_spark.sources.deker_datasource import register
 
     root = scratch_dir("deker_gc_")
@@ -639,11 +642,7 @@ def deker_gc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .save()
     )
     store = ChunkStore(spark, coll.path)
-    import glob as _glob
-
-    dirs = sorted(
-        _glob.glob(_os.path.join(store.path, "array_id=*", "chunk_idx=*"))
-    )
+    dirs = [d for _, _, d in walk_chunk_dirs(store.path)]
     stale = _time.time() - 7200.0
     for d in dirs:  # one crashed-writer temp per chunk dir
         p = _os.path.join(d, f"{TMP_PREFIX}deadc0de-0.parquet")
@@ -748,9 +747,9 @@ OPS = {
         deker_dedup_read_scan,
         ARRAY_SLICE_SQL,
         description=(
-            "last-write-wins dedup_cells batch read over a doubly-"
-            "written grid; decoy first pass makes wrong or missing "
-            "resolution a hash mismatch"
+            "last-write-wins deker batch read over a doubly-written "
+            "grid; decoy first pass makes wrong or missing resolution "
+            "a hash mismatch"
         ),
     ),
     "deker_compact_stats": Op(

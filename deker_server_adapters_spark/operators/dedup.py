@@ -687,27 +687,6 @@ _EMB_BITS = 8
 _EMB_THRESHOLD = 0.95
 
 
-def _emb_lsh_buckets_expr(emb: DataFrame) -> DataFrame:
-    """The pre-r17 Catalyst-expression form of ``_emb_lsh_buckets`` —
-    kept as the reference the kernel parity test pins against (the
-    interpreted-HOF dot folds made it the op's dominant cost)."""
-    from deker_server_adapters_spark.functions.vectors import dot
-    from deker_server_adapters_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(_EMB_TABLES * _EMB_BITS)
-    tables = []
-    for t in range(_EMB_TABLES):
-        sig = F.lit(0)
-        for i in range(_EMB_BITS):
-            pl = F.array(*[F.lit(v) for v in planes[t * _EMB_BITS + i]])
-            bit = F.when(dot(F.col("embedding"), pl) > 0, 1).otherwise(0)
-            sig = sig + F.shiftleft(bit, i)
-        tables.append(F.struct(F.lit(t).alias("tbl"), sig.cast("int").alias("bucket")))
-    return emb.withColumn("tb", F.explode(F.array(*tables))).select(
-        "vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    )
-
-
 def _emb_lsh_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, tbl, bucket) — one row per LSH table; bucket = integer
     of the 8 hyperplane sign bits. Shares ``similarity._hyperplanes``
@@ -716,8 +695,8 @@ def _emb_lsh_buckets(emb: DataFrame) -> DataFrame:
     r17: evaluated through the Arrow kernel
     (``functions/veccompute.signature_rows``) — the expression form's
     32 per-plane ``aggregate`` folds ran interpreted per row; rows out
-    are pinned bit-identical (``_emb_lsh_buckets_expr`` is the
-    reference)."""
+    are pinned bit-identical to the reference form
+    ``_emb_lsh_buckets_expr`` in ``tests/reference_forms.py``."""
     from deker_server_adapters_spark.functions.veccompute import signature_rows
     from deker_server_adapters_spark.operators.similarity import _hyperplanes
 
@@ -867,26 +846,6 @@ def _knn_bits_sql() -> str:
     return f"(SELECT CASE {cases} ELSE {_KNN_MAX_BITS} END FROM embeddings)"
 
 
-def _knn_lsh_buckets_expr(emb: DataFrame, bits: int) -> DataFrame:
-    """The pre-r17 Catalyst-expression form of ``_knn_lsh_buckets`` —
-    kept as the reference the kernel parity test pins against."""
-    from deker_server_adapters_spark.functions.vectors import dot
-    from deker_server_adapters_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(_KNN_TABLES * _KNN_MAX_BITS)
-    tables = []
-    for t in range(_KNN_TABLES):
-        sig = F.lit(0)
-        for i in range(bits):
-            pl = F.array(*[F.lit(v) for v in planes[t * _KNN_MAX_BITS + i]])
-            bit = F.when(dot(F.col("embedding"), pl) > 0, 1).otherwise(0)
-            sig = sig + F.shiftleft(bit, i)
-        tables.append(F.struct(F.lit(t).alias("tbl"), sig.cast("int").alias("bucket")))
-    return emb.withColumn("tb", F.explode(F.array(*tables))).select(
-        "vec_id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    )
-
-
 def _knn_lsh_buckets(emb: DataFrame, bits: int) -> DataFrame:
     """(vec_id, tbl, bucket) at ladder resolution: each of the
     ``_KNN_TABLES`` tables owns ``_KNN_MAX_BITS`` reserved hyperplanes
@@ -900,7 +859,7 @@ def _knn_lsh_buckets(emb: DataFrame, bits: int) -> DataFrame:
     each table repacked at stride ``bits``, so kernel index t·bits+i
     addresses exactly the expression's plane t·16+i (and no dot is
     computed for the unused tail planes). Rows pinned bit-identical
-    against ``_knn_lsh_buckets_expr``."""
+    against ``_knn_lsh_buckets_expr`` in ``tests/reference_forms.py``."""
     from deker_server_adapters_spark.functions.veccompute import signature_rows
     from deker_server_adapters_spark.operators.similarity import _hyperplanes
 

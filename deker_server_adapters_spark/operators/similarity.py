@@ -188,23 +188,6 @@ def _hyperplanes(n_planes: int = _N_PLANES, dim: int = _DIM) -> list[list[float]
     return planes
 
 
-def _lsh_signatures_expr(emb: DataFrame) -> DataFrame:
-    """The pre-r17 Catalyst-expression form of ``lsh_signatures`` —
-    kept as the reference the kernel parity test pins against."""
-    planes = _hyperplanes(_N_PLANES)
-    buckets = []
-    for t in range(_N_TABLES):
-        sig = F.lit(0).cast("long")
-        for i in range(_BITS_PER_TABLE):
-            pl = F.array(*[F.lit(v) for v in planes[t * _BITS_PER_TABLE + i]])
-            bit = F.when(dot(F.col("embedding"), pl) > 0, 1).otherwise(0).cast("long")
-            sig = sig + F.shiftleft(bit, i)
-        buckets.append(F.struct(F.lit(t).alias("tbl"), sig.alias("bucket")))
-    return emb.withColumn("tb", F.explode(F.array(*buckets))).select(
-        "*", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
-    ).drop("tb")
-
-
 def lsh_signatures(emb: DataFrame) -> DataFrame:
     """One (table, bucket) row per input row per LSH table: the
     multi-table signature index. A vector's bucket in table t is the
@@ -212,8 +195,8 @@ def lsh_signatures(emb: DataFrame) -> DataFrame:
 
     r17: evaluated through the Arrow kernel (``signature_rows``) — the
     expression form's 32 per-plane ``aggregate`` folds ran interpreted
-    per row; rows out are pinned bit-identical
-    (``_lsh_signatures_expr`` is the reference)."""
+    per row; rows out are pinned bit-identical to the reference form
+    ``_lsh_signatures_expr`` in ``tests/reference_forms.py``."""
     from deker_server_adapters_spark.functions.veccompute import signature_rows
 
     planes = _hyperplanes(_N_PLANES)
@@ -840,28 +823,6 @@ def _sem_nblocks(n: int, k: int) -> int:
     return max(1, min(64, -(-per_cell // _SEM_BLOCK_ROWS)))
 
 
-def _sem_pair_agg_expr(asg: DataFrame) -> DataFrame:
-    """The Catalyst expression form of ``dedup_semantic``'s per-vector
-    pair aggregation — superseded by the blocked ``cell_pair_stats``
-    kernel (r18) but kept as the reference its parity test pins
-    against: (vec_id, n_lower, n_dup_lower, max_sim_lower) over all
-    within-cell pairs with ``vid_b < vec_id``."""
-    a = asg.select("vec_id", F.col("embedding").alias("ea"), "cell")
-    b = asg.select(F.col("vec_id").alias("vid_b"), F.col("embedding").alias("eb"), "cell")
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("vid_b") < F.col("vec_id"))
-        .withColumn(
-            "cos", round_ties_safe(cosine_similarity(F.col("ea"), F.col("eb")), 6)
-        )
-    )
-    return pairs.groupBy("vec_id").agg(
-        F.count("*").alias("n_lower"),
-        F.sum(F.when(F.col("cos") >= _SEM_TAU, 1).otherwise(0)).alias("n_dup_lower"),
-        F.max("cos").alias("max_sim_lower"),
-    )
-
-
 def _sem_assignments(
     emb: DataFrame, with_sim: bool = False, n: "int | None" = None
 ) -> "DataFrame | None":
@@ -936,8 +897,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).limit(0)
         )
     # r18 (VERDICT item 4, guide §2.2/§8.4): the expression-form pair
-    # scoring (kept below as ``_sem_pair_agg_expr``, the parity-test
-    # reference) self-joins the assignment ON ``cell`` — k distinct
+    # scoring (``_sem_pair_agg_expr`` in ``tests/reference_forms.py``,
+    # the parity-test reference) self-joins the assignment ON ``cell`` — k distinct
     # keys — so the whole pair stream lived on ≤ k partitions (k = 8
     # at the sf0.1 ladder point); the r17 straight Arrow rescore
     # collapsed onto those k tasks and was reverted. The blocked
@@ -2452,7 +2413,8 @@ def kmeans_assignments(
     def assign(cs: list[list[float]]) -> DataFrame:
         # r17: evaluates through the Arrow kernel
         # (functions/veccompute.kmeans_rows) — the DECIMAL(30,12)
-        # term-sum device (reference form: _kmeans_assign_expr below,
+        # term-sum device (reference form: _kmeans_assign_expr in
+        # tests/reference_forms.py,
         # pinned row-identical to the kernel by
         # test_veccompute_ann_kernels_match_expression_forms) compiled
         # to a ~k·dim-node interpreted HOF expression per row; the
@@ -2488,45 +2450,6 @@ def kmeans_assignments(
             for c in range(len(cents))
         ]
     return assign(cents), cents
-
-
-def _kmeans_assign_expr(emb: DataFrame, cs: "list[list[float]]") -> DataFrame:
-    """The pre-r17 Catalyst expression form of the Lloyd assignment —
-    kept as the engine-exact REFERENCE the Arrow kernel is pinned
-    against (test_veccompute_ann_kernels_match_expression_forms) and
-    as the documentation of the decimal device the DuckDB oracle
-    replays.
-
-    Per-dim squared diffs are IDENTICAL doubles in both engines (IEEE
-    ops on identical inputs); each term is tie-safe QUANTIZED to 12 dp
-    while still a double, THEN cast to DECIMAL(30,12) — a double
-    sitting (within float epsilon) on an exact 12-dp value casts to
-    the same decimal in both engines, which a raw double->decimal cast
-    does NOT guarantee (second r12 review find: Spark HALF_UPs the
-    shortest decimal rendering, DuckDB half-evens the binary-scaled
-    value, so terms at a 12-dp half-boundary cast one ulp apart).
-    12-dp terms then sum exactly and order-independently, so Spark's
-    in-order fold equals DuckDB's unordered row sum bit-for-bit (first
-    find: a plain double fold vs DuckDB's order-unspecified sum() was
-    a nondeterministic-flakiness class at 0.5e-9 rounding
-    boundaries)."""
-
-    def dist_expr(c: list[float]) -> str:
-        arr = "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-        term = round_ties_safe_sql("(x - y) * (x - y)", 12)
-        return round_ties_safe_sql(
-            "CAST(aggregate("
-            f"zip_with(embedding, {arr}, (x, y) -> CAST({term} AS DECIMAL(30,12))),"
-            " CAST(0 AS DECIMAL(30,12)),"
-            " (acc, v) -> CAST(acc + v AS DECIMAL(30,12))) AS DOUBLE)",
-            9,
-        )
-
-    dists = "array(" + ", ".join(dist_expr(c) for c in cs) + ")"
-    return emb.withColumn("dists", F.expr(dists)).withColumn(
-        "cluster",
-        (F.expr("array_position(dists, array_min(dists))") - 1).cast("int"),
-    )
 
 
 _PQ_M = 8  # subspaces
@@ -3379,6 +3302,16 @@ def _tj_bits_ladder_sql(n_expr: str) -> str:
             f"WHEN {n_expr} <= {_TJ_TARGET_BUCKET * (1 << b)} THEN {b}"
         )
     return f"CASE {' '.join(branches)} ELSE {_TJ_MAX_BITS} END"
+
+
+def _ladder_bits(n: int, delta: int) -> int:
+    """The Python form of :func:`_tj_bits_ladder_sql` for a corpus of
+    ``n`` vectors, moved ``delta`` steps up the ladder (capped at
+    ``_TJ_MAX_BITS``)."""
+    for b in range(_TJ_MIN_BITS, _TJ_MAX_BITS):
+        if n <= _TJ_TARGET_BUCKET * (1 << b):
+            return min(b + delta, _TJ_MAX_BITS)
+    return _TJ_MAX_BITS
 
 
 def _tj_signatures(emb: DataFrame, nrow: DataFrame) -> DataFrame:

@@ -18,17 +18,21 @@ parquet scan inside ``ChunkStore``) and filter pushdown at two levels:
 
 ``value`` predicates (and anything else) are left for Spark.
 
-A batch read is LAST-WRITE-WINS per cell by default, like the engine's
-``read_data``: each written cell emits once, with its latest value, so
-an update's delta runs and overlapping appends are never counted twice.
-A task resolves only a chunk whose runs overlap; every other chunk
-emits its runs as stored. ``.option("dedup_cells", "false")`` and
-``readStream`` keep the append-log view, one row per stored run cell.
+A batch read is LAST-WRITE-WINS per cell, like the engine's
+``read_data`` and ``cell_df``: each written cell emits once, with its
+latest value, so an update's delta runs and overlapping appends are
+never counted twice. A task resolves only a chunk whose runs overlap;
+every other chunk emits its runs as stored. ``readStream`` keeps the
+append-log changefeed, one row per stored run cell.
 
-Partition planning walks the chunk directory tree on the driver —
-O(surviving chunks) after pruning, the same cost class as Spark's own
-file-source listing. A 100 TB deployment swaps the walk for a
-manifest/metastore lookup; the partition contract stays identical.
+Every storage decision comes from ``core.storage``, none is repeated
+here: the chunk-dir walk (``walk_chunk_dirs``), the grid
+(``ChunkGrid.for_schema`` of the collection's schema), the file codec
+and the run replay (``place_runs``). Partition planning walks the
+chunk directory tree on the driver — O(surviving chunks) after
+pruning, the same cost class as Spark's own file-source listing. A
+100 TB deployment swaps the walk for a manifest/metastore lookup; the
+partition contract stays identical.
 
 Reference parity: this is the "DataFrame I/O for multidimensional
 arrays via a custom data source" surface — the reference adapter's
@@ -54,9 +58,7 @@ rejected for the same reason.
 
 from __future__ import annotations
 
-import glob
 import json
-import math
 import os
 from dataclasses import dataclass
 from typing import Iterator, Sequence
@@ -87,24 +89,25 @@ from pyspark.sql.types import (
 )
 
 from deker_server_adapters_spark.core.array import meta_file_name, write_meta
+from deker_server_adapters_spark.core.schema import collection_schema
 from deker_server_adapters_spark.core.storage import (
     _SEQ_COUNTER_BITS,
     TMP_PREFIX,  # noqa: F401  (re-exported: the writers' temp-name prefix)
     ChunkGrid,
     appended_name,
     chunk_dir,
-    default_chunk_grid,
     discard_staged,
     encode_runs,
     ordered_runs,
+    place_runs,
     publish_staged,
     read_chunk_files,
     run_boxes,
     runs_overlap,
     stage_chunk_file,
     staged_prefix,
-    unescape_path_name,
     visible_chunk_files,
+    walk_chunk_dirs,
 )
 
 
@@ -124,26 +127,6 @@ def _load_collection_meta(root: str, collection: str) -> dict:
         )
     with open(meta_path) as f:
         return json.load(f)
-
-
-def _grid_geometry(meta: dict) -> tuple[tuple[int, ...], tuple[int, ...]]:
-    """(shape, chunk_shape) from collection.json — the SAME
-    default_chunk_grid the engine writes with (imported, not copied:
-    any drift would silently prune chunks that do overlap). Runs on
-    the driver; only the resulting tuples are pickled to tasks."""
-    dims = meta["schema"]["dimensions"]
-    shape = tuple(int(d["size"]) for d in dims)
-    if meta.get("type") == "varray":
-        splits = tuple(int(g) for g in meta["schema"]["vgrid"])
-    else:
-        splits = default_chunk_grid(shape)
-    chunk_shape = tuple(math.ceil(s / g) for s, g in zip(shape, splits))
-    return shape, chunk_shape
-
-
-def _chunk_grid(shape: Sequence[int], chunk_shape: Sequence[int]) -> ChunkGrid:
-    """The engine's grid for a ``(shape, chunk_shape)`` geometry."""
-    return ChunkGrid(shape, [math.ceil(s / c) for s, c in zip(shape, chunk_shape)])
 
 
 @dataclass
@@ -174,37 +157,38 @@ def _dim_meta(meta: dict) -> dict[str, dict]:
 
 def _chunk_cell_batches(
     partition: DekerChunkPartition,
-    shape: Sequence[int],
+    grid: ChunkGrid,
     dim_names: Sequence[str],
     bounds: Sequence[Sequence[int]],
     read_cols: Sequence[str],
     dim_meta: dict[str, dict] | None = None,
-    chunk_shape: Sequence[int] | None = None,
-    dedup: bool = False,
-    on_vanish: str = "skip",
+    batch: bool = False,
 ):
     """Expand one chunk partition's parquet rows into Arrow cell
     batches — shared by the batch and stream readers.
 
-    ``dedup=True`` (the batch reader's default, ``dedup_cells``):
-    LAST-WRITE-WINS per cell. A chunk whose runs do not overlap
-    (``core.storage.runs_overlap``, a vectorised check of the run
-    boxes) emits each run's cells as they are; only a chunk with
-    overlapping runs replays them into a chunk-local buffer in
-    ``core.storage.ordered_runs`` order (the engine's ``read_slice``
-    replays with the same function) and emits each written cell once
-    with its latest value. Memory for that replay is one chunk's dense
-    extent (the storage design unit) plus the run list.
-    ``dedup=False`` (``dedup_cells=false``, and the stream reader's
-    changefeed): append-log semantics — one row per materialized RUN
-    cell, so a cell re-written by a later write appears once per
-    write."""
+    ``batch=True`` (the batch reader): LAST-WRITE-WINS per cell. A
+    chunk whose runs do not overlap (``core.storage.runs_overlap``, a
+    vectorised check of the run boxes) emits each run's cells as they
+    are, the cheaper side for a dense chunk of one run. Only a chunk
+    with overlapping runs replays them into a chunk-local buffer
+    through ``core.storage.place_runs``, the engine's ``read_slice``
+    replay, and emits each written cell once with its latest value —
+    the cheaper side for a ``deker``-writer chunk of many short runs.
+    Memory for that replay is one chunk's dense extent (the storage
+    design unit) plus the run list. A planned file that vanished is
+    re-listed (``read_chunk_files``).
+    ``batch=False`` (the stream reader's changefeed): append-log
+    semantics — one row per materialized RUN cell, so a cell re-written
+    by a later write appears once per write; a vanished file is
+    skipped."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if not partition.files:
         return
+    shape = grid.shape
     ndim = len(shape)
     dim_meta = dim_meta or {}
     dim_pos = {n: i for i, n in enumerate(dim_names)}
@@ -239,7 +223,7 @@ def _chunk_cell_batches(
             names.append(name)
         return pa.RecordBatch.from_arrays(cols, names=names)
 
-    if on_vanish == "relist":
+    if batch:
         # BATCH semantics: a batch query has no "next batch" to heal a
         # vanished file, so re-list and read the current visible set
         _, tables = read_chunk_files(partition.files)
@@ -260,38 +244,26 @@ def _chunk_cell_batches(
                 warnings.warn(f"deker chunk file vanished (fold?): {path}")
 
     runs = ordered_runs(tables)
-    if (
-        dedup
-        and chunk_shape is not None
-        and partition.chunk_idx >= 0
-        and runs_overlap(*run_boxes(runs))
-    ):
-        box = _chunk_grid(shape, chunk_shape).chunk_box(partition.chunk_idx)
-        ext = [b - a for a, b in box]
-        lo0 = np.asarray([a for a, _ in box], dtype=np.int64)
-        buf = np.empty(ext, dtype=np.float64)
-        written = np.zeros(ext, dtype=bool)
-        for _, origin, run_shape, values in runs:
-            sel = tuple(
-                slice(o - a, o - a + n)
-                for o, (a, _), n in zip(origin.tolist(), box, run_shape)
-            )
-            buf[sel] = values.reshape(run_shape)
-            written[sel] = True
+    if batch and runs_overlap(*run_boxes(runs)):
+        box = grid.chunk_box(partition.chunk_idx)
+        lo = [a for a, _ in box]
+        buf = np.empty([b - a for a, b in box], dtype=np.float64)
+        written = np.zeros(buf.shape, dtype=bool)
+        place_runs(runs, lo, buf, written)
         rel = np.argwhere(written)
         if not len(rel):
             return
-        batch = emit(rel.T + lo0[:, None], buf[written])
-        if batch is not None:
-            yield batch
+        cells = emit(rel.T + np.asarray(lo, dtype=np.int64)[:, None], buf[written])
+        if cells is not None:
+            yield cells
         return
 
     for _, origin, run_shape, values in runs:
         # absolute index per dim for every cell, vectorized
         idx = np.indices(run_shape).reshape(ndim, -1) + origin[:, None]
-        batch = emit(idx, values)
-        if batch is not None:
-            yield batch
+        cells = emit(idx, values)
+        if cells is not None:
+            yield cells
 
 
 class DekerDataSource(DataSource):
@@ -333,8 +305,7 @@ class DekerDataSource(DataSource):
 
     def reader(self, schema: StructType) -> "DekerReader":
         root, coll = self._root_and_collection()
-        dedup = str(self.options.get("dedup_cells", "true")).lower() == "true"
-        return DekerReader(root, coll, schema, dedup_cells=dedup)
+        return DekerReader(root, coll, schema)
 
     def streamReader(self, schema: StructType) -> "DekerStreamReader":
         root, coll = self._root_and_collection()
@@ -360,9 +331,8 @@ class DekerDataSource(DataSource):
 class DekerReader(DataSourceReader):
     """Batch reader over one collection's chunk store.
 
-    Cells resolve last-write-wins by default (``dedup_cells``, see
-    :func:`_chunk_cell_batches`); ``dedup_cells=false`` emits the
-    append-log rows, one per stored run cell.
+    Cells resolve last-write-wins, one row per written cell (see
+    :func:`_chunk_cell_batches`).
 
     Isolation under concurrency: when a planned file vanishes mid-read
     (compact merged it, or delete_array dropped the array), the task
@@ -386,27 +356,18 @@ class DekerReader(DataSourceReader):
     ``_chunk_cell_batches``) is already the single seam — populating it
     from a pruned schema is the only change the emit path needs."""
 
-    def __init__(
-        self,
-        root: str,
-        collection: str,
-        schema: StructType,
-        dedup_cells: bool = True,
-    ):
+    def __init__(self, root: str, collection: str, schema: StructType):
         meta = _load_collection_meta(root, collection)
-        # last-write-wins per cell (the engine's read_data resolution);
-        # .option("dedup_cells", "false") emits append-log rows instead
-        self.dedup_cells = dedup_cells
         self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
         self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
         self.dim_meta = _dim_meta(meta)
-        self.shape, self.chunk_shape = _grid_geometry(meta)
+        self.grid = ChunkGrid.for_schema(collection_schema(meta))
         # full source schema: the Python DS API has no projection
         # pushdown (see class docstring, column-pruning boundary)
         self.read_cols = [f.name for f in schema.fields]
         self.array_ids: set[str] | None = None  # None = all arrays
         # per-dim [lo, hi) bounds, tightened by pushed filters
-        self.bounds = [[0, s] for s in self.shape]
+        self.bounds = [[0, s] for s in self.grid.shape]
 
     # -- pushdown ---------------------------------------------------------
 
@@ -414,11 +375,8 @@ class DekerReader(DataSourceReader):
         dim_pos = {n: i for i, n in enumerate(self.dim_names)}
         for f in filters:
             col = f.attribute[0] if len(getattr(f, "attribute", ())) == 1 else None
-            if col == "array_id" and isinstance(f, EqualTo):
-                ids = {f.value}
-                self.array_ids = ids if self.array_ids is None else self.array_ids & ids
-            elif col == "array_id" and isinstance(f, In):
-                ids = set(f.value)
+            if col == "array_id" and isinstance(f, (EqualTo, In)):
+                ids = set(f.value if isinstance(f, In) else (f.value,)) - {None}
                 self.array_ids = ids if self.array_ids is None else self.array_ids & ids
             elif col in dim_pos and isinstance(
                 f, (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
@@ -441,7 +399,7 @@ class DekerReader(DataSourceReader):
     # -- planning ---------------------------------------------------------
 
     def _chunk_overlaps(self, chunk_idx: int) -> bool:
-        box = _chunk_grid(self.shape, self.chunk_shape).chunk_box(chunk_idx)
+        box = self.grid.chunk_box(chunk_idx)
         return all(
             lo < hi and lo < b_stop and b_start < hi  # empty range -> no chunk
             for (b_start, b_stop), (lo, hi) in zip(box, self.bounds)
@@ -449,34 +407,21 @@ class DekerReader(DataSourceReader):
 
     def partitions(self) -> list[DekerChunkPartition]:
         parts: list[DekerChunkPartition] = []
-        if not os.path.isdir(self.chunks_dir):
-            return [DekerChunkPartition("", -1, ())]  # empty store: 1 no-op task
-        for adir in sorted(os.listdir(self.chunks_dir)):
-            if not adir.startswith("array_id="):
-                continue
-            array_id = unescape_path_name(adir.split("=", 1)[1])
-            if self.array_ids is not None and array_id not in self.array_ids:
-                continue  # directory-level prune
-            for cdir in sorted(os.listdir(os.path.join(self.chunks_dir, adir))):
-                if not cdir.startswith("chunk_idx="):
-                    continue
-                chunk_idx = int(cdir.split("=", 1)[1])
-                if not self._chunk_overlaps(chunk_idx):
-                    continue  # grid-level prune
-                files = tuple(
-                    visible_chunk_files(os.path.join(self.chunks_dir, adir, cdir))
-                )
+        # directory-level prune by the pushed array ids, then grid-level
+        for array_id, chunk_idx, d in walk_chunk_dirs(self.chunks_dir, self.array_ids):
+            if self._chunk_overlaps(chunk_idx):
+                files = tuple(visible_chunk_files(d))
                 if files:
                     parts.append(DekerChunkPartition(array_id, chunk_idx, files))
+        # an empty store or prune: one no-op task
         return parts or [DekerChunkPartition("", -1, ())]
 
     # -- execution --------------------------------------------------------
 
     def read(self, partition: DekerChunkPartition):
         yield from _chunk_cell_batches(
-            partition, self.shape, self.dim_names, self.bounds, self.read_cols,
-            self.dim_meta, chunk_shape=self.chunk_shape, dedup=self.dedup_cells,
-            on_vanish="relist",
+            partition, self.grid, self.dim_names, self.bounds, self.read_cols,
+            self.dim_meta, batch=True,
         )
 
 
@@ -505,16 +450,15 @@ class DekerStreamReader(DataSourceStreamReader):
         self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
         self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
         self.dim_meta = _dim_meta(meta)
-        self.shape, self.chunk_shape = _grid_geometry(meta)
+        self.grid = ChunkGrid.for_schema(collection_schema(meta))
         self.read_cols = [f.name for f in schema.fields]
-        self.bounds = [[0, s] for s in self.shape]  # streams: no pushdown
+        self.bounds = [[0, s] for s in self.grid.shape]  # streams: no pushdown
 
     def _current_files(self) -> list[str]:
-        pattern = os.path.join(
-            self.chunks_dir, "array_id=*", "chunk_idx=*", "*.parquet"
-        )
         return sorted(
-            os.path.relpath(p, self.chunks_dir) for p in glob.glob(pattern)
+            os.path.relpath(p, self.chunks_dir)
+            for _, _, d in walk_chunk_dirs(self.chunks_dir)
+            for p in visible_chunk_files(d)
         )
 
     def initialOffset(self) -> dict:
@@ -525,22 +469,16 @@ class DekerStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[DekerChunkPartition]:
         seen = set(start.get("files", ()))  # list (current) or dict (legacy)
-        fresh = [
-            os.path.join(self.chunks_dir, p)
-            for p in end.get("files", ())
-            if p not in seen
-        ]
-        by_chunk: dict[tuple[str, int], list[str]] = {}
-        for path in fresh:
-            adir, cdir = path.split(os.sep)[-3:-1]
-            key = (
-                unescape_path_name(adir.split("=", 1)[1]),
-                int(cdir.split("=", 1)[1]),
-            )
-            by_chunk.setdefault(key, []).append(path)
+        by_dir: dict[str, list[str]] = {}
+        for p in end.get("files", ()):
+            if p not in seen:
+                by_dir.setdefault(os.path.dirname(p), []).append(os.path.join(self.chunks_dir, p))
+        # the walk names each fresh file's chunk; the files of a dir
+        # deleted since the offset (delete_array) are gone and plan none
         parts = [
-            DekerChunkPartition(aid, cidx, tuple(sorted(files)))
-            for (aid, cidx), files in sorted(by_chunk.items())
+            DekerChunkPartition(aid, cidx, tuple(sorted(by_dir[rel])))
+            for aid, cidx, d in walk_chunk_dirs(self.chunks_dir)
+            if (rel := os.path.relpath(d, self.chunks_dir)) in by_dir
         ]
         # a deletion-only offset change (delete_array between triggers)
         # plans a batch with no fresh files: ship one no-op partition
@@ -550,9 +488,10 @@ class DekerStreamReader(DataSourceStreamReader):
 
     def read(self, partition: DekerChunkPartition):
         # CDC semantics by design: every run of every new file emits
-        # (no dedup option here — a changefeed consumer wants writes)
+        # (no last-write-wins resolution — a changefeed consumer wants
+        # writes)
         yield from _chunk_cell_batches(
-            partition, self.shape, self.dim_names, self.bounds, self.read_cols,
+            partition, self.grid, self.dim_names, self.bounds, self.read_cols,
             self.dim_meta,
         )
 
@@ -603,8 +542,8 @@ class DekerWriter(DataSourceArrowWriter):
 
     Append-only contract: writing a cell that already exists in the
     collection appends a NEWER run — ``read_data``, ``cell_df`` and the
-    default cell-table SCAN resolve it last-write-wins by ``seq``
-    (``dedup_cells=false`` shows one row per materialized run) — bulk
+    batch cell-table SCAN resolve it last-write-wins by ``seq`` (the
+    ``readStream`` changefeed shows one row per materialized run) — bulk
     ingest targets NEW array ids, which
     ``commit`` registers in the catalog (``create_arrays`` option,
     default true) with empty attributes; pre-created arrays keep their
@@ -627,7 +566,7 @@ class DekerWriter(DataSourceArrowWriter):
         self.collection_dir = os.path.join(root, "collections", collection)
         self.chunks_dir = os.path.join(self.collection_dir, "chunks")
         self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
-        self.shape, self.chunk_shape = _grid_geometry(meta)
+        self.grid = ChunkGrid.for_schema(collection_schema(meta))
         self.create_arrays = create_arrays
         # per-WRITE job id, minted driver-side and serialized into
         # every task: temp files carry it, and commit-time GC removes
@@ -649,8 +588,8 @@ class DekerWriter(DataSourceArrowWriter):
 
         import numpy as np
 
-        splits = _chunk_grid(self.shape, self.chunk_shape).splits
-        ndim = len(self.shape)
+        grid = self.grid
+        ndim = len(grid.shape)
         # per (array_id, chunk_idx): list of (origin, shape, data) runs
         buf: dict[tuple[str, int], list[tuple[list, list, "np.ndarray"]]] = {}
         for batch in iterator:
@@ -661,20 +600,20 @@ class DekerWriter(DataSourceArrowWriter):
             )
             vals = np.asarray(cols["value"], dtype=np.float64)
             for d in range(ndim):
-                bad = (coords[d] < 0) | (coords[d] >= self.shape[d])
+                bad = (coords[d] < 0) | (coords[d] >= grid.shape[d])
                 if bad.any():
                     j = int(np.argmax(bad))
                     raise ValueError(
                         f"cell {self.dim_names[d]}={int(coords[d][j])} outside "
-                        f"dimension size {self.shape[d]}"
+                        f"dimension size {grid.shape[d]}"
                     )
             chunk_idx = np.zeros(len(vals), dtype=np.int64)
             for d in range(ndim):
-                chunk_idx = chunk_idx * splits[d] + coords[d] // self.chunk_shape[d]
+                chunk_idx = chunk_idx * grid.splits[d] + coords[d] // grid.chunk_shape[d]
             # C-order sort key within each (array, chunk) group
             flat = np.zeros(len(vals), dtype=np.int64)
             for d in range(ndim):
-                flat = flat * self.shape[d] + coords[d]
+                flat = flat * grid.shape[d] + coords[d]
             aid_codes, aid_inv = np.unique(np.asarray(aid, dtype=object), return_inverse=True)
             order = np.lexsort((flat, chunk_idx, aid_inv))
             s_aid, s_chunk, s_flat = aid_inv[order], chunk_idx[order], flat[order]

@@ -57,8 +57,8 @@ from deker_server_adapters_spark.operators.similarity import (
     _TJ_TABLES,
     _TJ_TAU,
     _hyperplanes,
+    _ladder_bits,
 )
-from deker_server_adapters_spark.tools.tj_sweep import _ladder_bits
 
 EMBEDDINGS_STREAM_SCHEMA = StructType(
     [

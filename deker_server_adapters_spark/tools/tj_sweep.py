@@ -31,19 +31,11 @@ from deker_server_adapters_spark.functions.vectors import cosine_similarity, dot
 from deker_server_adapters_spark.operators.similarity import (
     _DIM,
     _TJ_MAX_BITS,
-    _TJ_MIN_BITS,
-    _TJ_TARGET_BUCKET,
     _TJ_TAU,
     _hyperplanes,
+    _ladder_bits,
 )
 from deker_server_adapters_spark.sources.tables import load_table
-
-
-def _ladder_bits(n: int, delta: int) -> int:
-    for b in range(_TJ_MIN_BITS, _TJ_MAX_BITS):
-        if n <= _TJ_TARGET_BUCKET * (1 << b):
-            return min(b + delta, _TJ_MAX_BITS)
-    return _TJ_MAX_BITS
 
 
 def lsh_pairs(emb: DataFrame, tables: int, nbits: int) -> DataFrame:

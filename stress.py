@@ -269,10 +269,10 @@ def run_skew_join(spark, base: str, k: int, skew_frac: float = 0.1) -> dict:
 
 
 def run_dedup_read(spark, k: int) -> dict:
-    """10x ratio for the deker ``dedup_cells`` read path (SURVEY §7
+    """10x ratio for the deker last-write-wins batch read (SURVEY §7
     r9): bulk-write a dense grid D times (duplication 2 and 4), read
-    it back through ``.option("dedup_cells", "true")`` at base cells
-    and k·base cells, and report seconds + ratios. The dedup reader
+    it back through ``spark.read.format("deker")`` at base cells
+    and k·base cells, and report seconds + ratios. The batch reader
     resolves cells per chunk partition (numpy last-write-wins over the
     chunk's runs), so time should grow ~linearly in cells × dup — a
     super-linear ratio means per-chunk resolution has a cliff."""
@@ -327,7 +327,6 @@ def run_dedup_read(spark, k: int) -> dict:
                 spark.read.format("deker")
                 .option("path", root)
                 .option("collection", "g")
-                .option("dedup_cells", "true")
             )
             reader.load().count()  # warmup: JIT + Python worker spin-up
             secs = []

@@ -152,20 +152,27 @@ class TestWriter:
         ).repartition(n_parts)
 
     def test_roundtrip_scattered_input(self, spark, tmp_path):
-        """Cells scattered across 5 arbitrary partitions write correctly
-        (short runs, many files) and read back exactly via BOTH the
-        engine read_data path and the datasource reader."""
+        """Cells scattered across 5 arbitrary partitions, each task fed
+        several Arrow batches, write correctly (short runs, many files)
+        and read back exactly via BOTH the engine read_data path and
+        the datasource reader."""
         root = str(tmp_path / "whw")
         wh = Warehouse(spark, root)
         wh.collections.create("w", SCHEMA)
         register(spark)
         rng = np.random.RandomState(7)
         data = rng.rand(20, 12)
-        (
-            self._cells_df(spark, data).write.format("deker")
-            .option("path", root).option("collection", "w")
-            .mode("append").save()
-        )
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "16")
+        try:
+            (
+                self._cells_df(spark, data).write.format("deker")
+                .option("path", root).option("collection", "w")
+                .mode("append").save()
+            )
+        finally:
+            spark.conf.set(key, before)
         got = wh.collections.read("w").arrays.get_by_id("a1").read_data(
             (slice(None), slice(None))
         )
@@ -477,6 +484,7 @@ def test_chunk_read_tolerates_vanished_file(spark, tmp_path):
     (ADVICE r5)."""
     import warnings
 
+    from deker_server_adapters_spark.core.storage import ChunkGrid
     from deker_server_adapters_spark.sources.deker_datasource import (
         DekerChunkPartition,
         _chunk_cell_batches,
@@ -498,7 +506,7 @@ def test_chunk_read_tolerates_vanished_file(spark, tmp_path):
         warnings.simplefilter("always")
         batches = list(
             _chunk_cell_batches(
-                part, (20, 12), ["x", "y"], [(0, 20), (0, 12)],
+                part, ChunkGrid((20, 12), (1, 1)), ["x", "y"], [(0, 20), (0, 12)],
                 ["array_id", "x", "y", "value"],
             )
         )
@@ -876,12 +884,10 @@ def test_gc_temps_skips_undeletable_entries_and_runs_from_compact(spark, tmp_pat
 
 
 @pytest.mark.slow
-def test_dedup_cells_option_resolves_last_write_wins(spark, tmp_path):
-    """With ``.option("dedup_cells", "false")`` the batch reader emits
-    append-log rows (one row per materialized run — a re-written cell
-    appears once per write); with ``dedup_cells`` true, the default,
-    each written cell emits ONCE with its seq-latest value — the
-    engine's read_data resolution through the datasource surface.
+def test_batch_read_resolves_last_write_wins(spark, tmp_path):
+    """The batch reader emits each written cell ONCE with its
+    seq-latest value — the engine's read_data resolution through the
+    datasource surface — after a second write re-wrote some cells.
     Pruning filters still apply."""
     root = str(tmp_path / "whdd")
     wh = Warehouse(spark, root)
@@ -898,16 +904,9 @@ def test_dedup_cells_option_resolves_last_write_wins(spark, tmp_path):
             .mode("append").save()
         )
 
-    raw = (
-        spark.read.format("deker").option("path", root)
-        .option("collection", "w").option("dedup_cells", "false")
-        .load().toPandas()
-    )
-    assert len(raw) == len(base) + len(rewrite)  # append-log: both writes
-
     dd = (
         spark.read.format("deker").option("path", root)
-        .option("collection", "w").option("dedup_cells", "true")
+        .option("collection", "w")
         .load().toPandas()
     )
     assert len(dd) == len(base)  # one row per written cell
@@ -923,10 +922,10 @@ def test_dedup_cells_option_resolves_last_write_wins(spark, tmp_path):
     chk = np.zeros((4, 12))
     chk[dd.x, dd.y] = dd.value
     np.testing.assert_allclose(chk, eng)
-    # pushdown still prunes with dedup on
+    # pushdown still prunes under the resolution
     one = (
         spark.read.format("deker").option("path", root)
-        .option("collection", "w").option("dedup_cells", "true")
+        .option("collection", "w")
         .load().filter("x = 0").toPandas()
     )
     assert len(one) == 12 and set(one.x) == {0}
@@ -1354,6 +1353,76 @@ def test_analytic_views_resolve_overlapping_runs_last_write_wins(spark, tmp_path
     assert (row["n"], row["s"]) == (16, want.sum())
 
 
+def test_cells_df_resolves_last_write_wins_like_cell_df(spark, tmp_path):
+    """``ArrayAdapter.cells_df`` is the same last-write-wins view as
+    ``Array.cell_df`` and ``read_data``: after an update of one array
+    and an overlapping ``deker`` append to another, it has one row per
+    cell, holding the cell's latest value, equal to NumPy."""
+    root = str(tmp_path / "whcells")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    register(spark)
+    base = np.arange(240, dtype=np.float64).reshape(20, 12)
+    a = coll.arrays.create(id_="a", data=base)
+    b = coll.arrays.create(id_="b", data=-base)
+    a.update((slice(2, 5), slice(3, 6)), 1000.0)
+    (
+        spark.createDataFrame(
+            [("b", 7, y, 500.0 + y) for y in range(12)],
+            "array_id string, x long, y long, value double",
+        )
+        .coalesce(1)
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .mode("append").save()
+    )
+    want = {"a": base.copy(), "b": -base}
+    want["a"][2:5, 3:6] = 1000.0
+    want["b"][7, :] = 500.0 + np.arange(12)
+
+    def dense(pdf):
+        got = np.full((20, 12), np.nan)
+        got[pdf.x, pdf.y] = pdf.value
+        return got
+
+    cells = coll.arrays.cells_df(["a", "b"]).toPandas()
+    assert list(cells.columns) == ["array_id", "x", "y", "value"]
+    for aid, arr in (("a", a), ("b", b)):
+        mine = cells[cells.array_id == aid]
+        assert len(mine) == 240  # one row per cell, not one per run cell
+        np.testing.assert_array_equal(dense(mine), want[aid])
+        np.testing.assert_array_equal(dense(arr.cell_df().toPandas()), want[aid])
+        np.testing.assert_array_equal(arr.read_data(), want[aid])
+    everything = coll.arrays.cells_df().toPandas()  # no ids: every array
+    assert len(everything) == 480
+    assert everything.value.sum() == want["a"].sum() + want["b"].sum()
+
+
+def test_walk_chunk_dirs_names_and_prunes(tmp_path):
+    """The one chunk-dir walker: ``(array_id, chunk_idx, path)`` by id,
+    then chunk index (numeric, not by name), unescaping ids; given ids,
+    only their dirs, and none for an id with no dir or a missing root."""
+    import os
+
+    from deker_server_adapters_spark.core.storage import chunk_dir, walk_chunk_dirs
+
+    root = str(tmp_path / "chunks")
+    for aid, idx in (("b", 10), ("b", 2), ("a#1/x", 0), ("c", 1)):
+        os.makedirs(chunk_dir(root, aid, idx))
+    os.makedirs(os.path.join(root, ".array_id=tmp"))  # not a chunk dir
+    assert list(walk_chunk_dirs(root)) == [
+        ("a#1/x", 0, chunk_dir(root, "a#1/x", 0)),
+        ("b", 2, chunk_dir(root, "b", 2)),
+        ("b", 10, chunk_dir(root, "b", 10)),
+        ("c", 1, chunk_dir(root, "c", 1)),
+    ]
+    assert [(a, i) for a, i, _ in walk_chunk_dirs(root, ["c", "a#1/x", "gone"])] == [
+        ("a#1/x", 0),
+        ("c", 1),
+    ]
+    assert list(walk_chunk_dirs(str(tmp_path / "missing"))) == []
+
+
 def test_array_counters_count_a_fixed_sequence(spark, tmp_path, monkeypatch, empty_chunk_cache):
     """``storage.stats()`` counts cache hits, misses, evictions and
     cached bytes, delta appends, folds, chunk reads and the runs they
@@ -1609,7 +1678,7 @@ def test_changefeed_compact_read_maintenance_cycle(spark, tmp_path):
     -state dedup batch read — pinned end to end on one store:
 
       1. pre-compact, the changefeed-accumulated cells (dedup by cell
-         identity) equal the batch ``dedup_cells`` read;
+         identity) equal the last-write-wins batch read;
       2. ``compact()`` merges the multi-file chunk dirs (>0 dirs);
       3. the SAME stream/checkpoint resumed after compact re-emits the
          merged chunks (the documented CDC re-emission contract,
@@ -1674,8 +1743,7 @@ def test_changefeed_compact_read_maintenance_cycle(spark, tmp_path):
     def batch_dedup():
         return (
             spark.read.format("deker")
-            .option("path", root).option("collection", "w")
-            .option("dedup_cells", "true").load()
+            .option("path", root).option("collection", "w").load()
             .toPandas()
             .sort_values(["array_id", "x", "y"])
             .reset_index(drop=True)
@@ -2033,7 +2101,7 @@ def test_spark_escaped_array_id_roundtrip_and_delete(spark, tmp_path):
     ]
     pdf = (
         spark.read.format("deker").option("path", root)
-        .option("collection", "w").option("dedup_cells", "true").load()
+        .option("collection", "w").load()
         .filter(F.col("array_id") == aid).toPandas()
     )
     assert set(pdf.array_id) == {aid} and len(pdf) == 240

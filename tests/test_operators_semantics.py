@@ -2854,9 +2854,9 @@ def test_cell_pair_stats_matches_expression_form(spark):
     from deker_server_adapters_spark.operators.similarity import (
         _SEM_TAU,
         _sem_assignments,
-        _sem_pair_agg_expr,
     )
     from deker_server_adapters_spark.sources.tables import load_table
+    from tests.reference_forms import _sem_pair_agg_expr
 
     def kernel_agg(asg, nb):
         partials = cell_pair_stats(asg, _SEM_TAU, 6, nb)
@@ -2995,11 +2995,11 @@ def test_veccompute_ann_kernels_match_expression_forms(spark):
         _IVF_PROBES,
         _PQ_M,
         _centroid_rows,
-        _kmeans_assign_expr,
         kmeans_assignments,
         pq_codebooks,
     )
     from deker_server_adapters_spark.sources.tables import load_table
+    from tests.reference_forms import _kmeans_assign_expr
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
 
@@ -3093,15 +3093,15 @@ def test_veccompute_lsh_bucket_kernels_match_expression_forms(spark):
     from deker_server_adapters_spark.functions.veccompute import cos_scored
     from deker_server_adapters_spark.operators.dedup import (
         _emb_lsh_buckets,
-        _emb_lsh_buckets_expr,
         _knn_lsh_buckets,
-        _knn_lsh_buckets_expr,
     )
-    from deker_server_adapters_spark.operators.similarity import (
-        _lsh_signatures_expr,
-        lsh_signatures,
-    )
+    from deker_server_adapters_spark.operators.similarity import lsh_signatures
     from deker_server_adapters_spark.sources.tables import load_table
+    from tests.reference_forms import (
+        _emb_lsh_buckets_expr,
+        _knn_lsh_buckets_expr,
+        _lsh_signatures_expr,
+    )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
 

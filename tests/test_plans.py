@@ -600,9 +600,9 @@ def test_hybrid_tables_ladder_sql_matches_python(spark):
         _hy_probes_ladder_sql,
         _hy_tables_for_bits,
         _hy_tables_ladder_sql,
+        _ladder_bits,
         _tj_bits_ladder_sql,
     )
-    from deker_server_adapters_spark.tools.tj_sweep import _ladder_bits
 
     con = duckdb.connect()
     for b in range(_TJ_MIN_BITS, _TJ_MAX_BITS + 1):

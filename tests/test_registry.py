@@ -263,3 +263,32 @@ def test_sync_fingerprints_records_only_green_ops(tmp_path):
     assert "not_a_real_op" not in out
     on_disk = json.loads((tmp_path / "VERIFIED_FINGERPRINTS.json").read_text())
     assert on_disk == out
+
+
+def test_only_tools_import_tools():
+    """``tools/`` holds one-off harnesses: no package module outside it
+    may import from it, so deleting a tool never breaks an operator.
+    (The package imports absolutely throughout.)"""
+    import ast
+    from pathlib import Path
+
+    import deker_server_adapters_spark
+
+    pkg = Path(deker_server_adapters_spark.__file__).parent
+    tools = "deker_server_adapters_spark.tools"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        if rel.parts[0] == "tools":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                assert node.level == 0, f"relative import in {rel}:{node.lineno}"
+                names = [node.module, *(f"{node.module}.{a.name}" for a in node.names)]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            if any(n == tools or n.startswith(tools + ".") for n in names):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == []

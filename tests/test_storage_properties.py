@@ -144,7 +144,7 @@ def test_datasource_pruning_matches_overlapping_chunks(case):
     grid = ChunkGrid(shape, splits)
     norm = normalize_bounds(bounds, shape)
     reader = DekerReader.__new__(DekerReader)  # pure geometry, no meta IO
-    reader.shape, reader.chunk_shape = shape, grid.chunk_shape
+    reader.grid = grid
     reader.bounds = [[start, stop] for start, stop, _ in norm]
     got = {i for i in range(grid.n_chunks) if reader._chunk_overlaps(i)}
     assert got == set(grid.overlapping_chunks(norm))
