@@ -98,15 +98,6 @@ def cos_scored(
 _TRUE_PAIRS_BROADCAST_MAX = 2 * 1024**3  # bytes; see cos_true_pairs
 
 
-def _plan_size_estimate(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes (no job), or
-    -1 when unavailable (Spark Connect, plan-shape drift)."""
-    try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return -1
-
-
 def cos_true_pairs(
     emb: DataFrame,
     tau: float,
@@ -167,6 +158,8 @@ def cos_true_pairs(
     way (parity-pinned with a forced-degrade run)."""
     from pyspark.sql import functions as F
 
+    from deker_server_adapters_spark.plans.limits import estimated_bytes
+
     scale = float(10**digits)
     blocks = (
         emb.filter(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
@@ -194,7 +187,10 @@ def cos_true_pairs(
         F.col("ids").alias("ids_b"),
         F.col("embs").alias("embs_b"),
     )
-    est = _plan_size_estimate(emb)
+    try:
+        est = estimated_bytes(emb)
+    except Exception:  # no estimate (Spark Connect, plan-shape drift)
+        est = -1
     if 0 <= est <= broadcast_max_bytes:
         bp = a.join(F.broadcast(b), F.col("blk_a") <= F.col("blk_b"))
     else:

@@ -466,8 +466,9 @@ def deker_dedup_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both write passes (decoy shift + real) derive from the same dense
     # table — a lazy cut makes the events scan + grid join evaluate once
-    # at the first write instead of once per pass (and never at plan
-    # build, which registry-wide plan enumeration relies on)
+    # instead of once per pass. Under AQE the cut runs the join's
+    # shuffle stages at this call (docs/PERF.md); the rest waits for
+    # the first write
     dense = dense.localCheckpoint(eager=False)
     for pass_df in (dense.withColumn("value", F.col("value") + 1000.0), dense):
         (
@@ -543,7 +544,8 @@ def deker_compact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("value", F.lit(0.0)).alias("value"),
     )
     # the even/odd-hour passes both evaluate this subtree — lazy-cut it
-    # so the events scan + grid join run once (first write), not twice
+    # so the events scan + grid join run once, not twice (under AQE
+    # the join's shuffle stages run at the cut, see docs/PERF.md)
     dense = dense.localCheckpoint(eager=False)
     for parity in (0, 1):
         (

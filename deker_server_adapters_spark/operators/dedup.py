@@ -31,6 +31,7 @@ from deker_server_adapters_spark.functions.histogram import (
     round_ties_safe_sql,
 )
 from deker_server_adapters_spark.operators import Op
+from deker_server_adapters_spark.plans.lineage import release
 from deker_server_adapters_spark.sources.tables import load_table
 
 _NORM = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
@@ -1084,39 +1085,44 @@ def components_from_pairs(nd_pairs: DataFrame, max_rounds: int = 20) -> DataFram
     the work on pathological long-chain graphs — on exhaustion the op
     WARNS and returns the partially-propagated labels (still a valid
     clustering refinement, just possibly non-canonical) instead of
-    failing the whole pipeline."""
+    failing the whole pipeline.
+
+    Round state follows ``plans.lineage``: every label generation is a
+    lazy ``localCheckpoint`` that the round's convergence ``count``
+    materializes, after which the previous generation is released.
+    The cached edge table is dropped before returning, so the result
+    rests on one cut."""
     pairs = nd_pairs.select("doc_a", "doc_b")
-    fwd = pairs
     rev = pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    # persist edges ALREADY HASHED on the per-round join key: the cached
-    # relation's outputPartitioning satisfies the join requirement, so
-    # the (big) edge table is shuffled once here instead of once per
-    # propagation round — at scale the edge shuffle dominates the loop
-    edges = fwd.unionByName(rev).repartition(F.col("doc_b")).persist()
-    edges.count()  # materialize once; every round joins this table
+    # cache the edges ALREADY HASHED on the per-round join key: the
+    # cached relation keeps the repartition's outputPartitioning, so the
+    # (big) edge table is shuffled once here instead of once per
+    # propagation round — at scale the edge shuffle dominates the loop.
+    # A localCheckpoint would not do: under AQE it reports
+    # UnknownPartitioning, and every round would re-shuffle the edges.
+    edges = pairs.unionByName(rev).repartition(F.col("doc_b")).persist()
     # Fold the label init and the FIRST propagation round into one
     # aggregate (r17): label_1(v) = min(v, min over v's neighbors) —
     # the node set is exactly distinct(doc_a) (edges carry both
     # directions), so the old init (a full distinct shuffle over the
     # edge table) plus round 1's join+aggregate+join machinery collapse
-    # to a single groupBy over the cached edges. nmin is never NULL:
-    # every doc_a has at least one neighbor by construction.
-    labels = (
+    # to a single groupBy over the edges. nmin is never NULL: every
+    # doc_a has at least one neighbor by construction.
+    gen = (
         edges.groupBy("doc_a")
         .agg(F.min("doc_b").alias("nmin"))
         .select(
             F.col("doc_a").alias("doc_id"),
             F.least(F.col("doc_a"), F.col("nmin")).alias("label"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
+    labels = gen
     changed = -1
-    ckpt_rdds: list = []  # superseded local-checkpoint storage to free
-    prev_gen = labels  # the handle persist/unpersist operates on
     # rounds 2..max_rounds: round 1 already happened inside the init
     # aggregate above, so the budget still bounds total propagation
     # rounds at max_rounds
-    for round_no in range(2, max_rounds + 1):  # diameter bound; tiny components converge fast
+    for _ in range(2, max_rounds + 1):  # diameter bound; tiny components converge fast
         neighbor_min = (
             edges.join(labels, edges.doc_b == labels.doc_id)
             .groupBy(F.col("doc_a").alias("doc_id"))
@@ -1125,51 +1131,22 @@ def components_from_pairs(nd_pairs: DataFrame, max_rounds: int = 20) -> DataFram
         # carry the did-it-change bit through the SAME join that builds
         # the new labels (nmin < label; null nmin -> no neighbors -> no
         # change) — the convergence check is then a filter-count over
-        # the cached generation, not a second labels join per round
-        new_labels = labels.join(neighbor_min, "doc_id", "left").select(
-            "doc_id",
-            F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
-            (F.col("nmin") < F.col("label")).alias("chg"),
+        # the new generation, not a second labels join per round
+        new_gen = (
+            labels.join(neighbor_min, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
+                (F.col("nmin") < F.col("label")).alias("chg"),
+            )
+            .localCheckpoint(eager=False)
         )
-        # cut lineage every few rounds — each iteration otherwise stacks
-        # another join onto the logical plan and planning time grows
-        # superlinearly on a long-diameter graph. Eager checkpoint doubles
-        # as the generation's cache (no extra persist on top — a
-        # DataFrame-level unpersist can't free RDD-level checkpoint
-        # storage, so stacking both leaks the checkpointed generations).
-        is_ckpt_round = round_no % 5 == 0
-        if is_ckpt_round:
-            # LAZY checkpoint (r18, VERDICT item 8): the convergence
-            # count below materializes every partition anyway, so it
-            # doubles as the checkpoint's materializing action — one
-            # job per round instead of the eager form's two (checkpoint
-            # job + count job) on checkpoint rounds
-            new_labels = new_labels.localCheckpoint(eager=False)
-        else:
-            new_labels = new_labels.persist()
-        # materializes new_labels; the old generation can go
-        changed = new_labels.filter("chg").count()
-        prev_gen.unpersist()  # no-op on checkpoint generations (not persisted)
-        if is_ckpt_round:
-            # the new checkpoint is materialized and the previous
-            # generation is gone — nothing can reach the older
-            # checkpoint's truncated lineage anymore; free its RDD
-            # storage (this is what DataFrame.unpersist cannot do)
-            while ckpt_rdds:
-                try:
-                    ckpt_rdds.pop().unpersist(False)
-                except Exception:
-                    pass
-            try:
-                # private JVM plan walk (classic PySpark only): under
-                # Spark Connect or a different localCheckpoint plan shape
-                # degrade to leaving the old checkpoint cached instead of
-                # failing the whole op
-                ckpt_rdds.append(new_labels._jdf.queryExecution().analyzed().rdd())
-            except Exception:
-                pass
-        prev_gen = new_labels
-        labels = new_labels.select("doc_id", "label")
+        # the count reads every partition of the new generation, so it
+        # materializes the lazy cut; an eager cut would add a pass
+        changed = new_gen.filter("chg").count()
+        release(gen)
+        gen = new_gen
+        labels = gen.select("doc_id", "label")
         if changed == 0:
             break
     if changed != 0:
@@ -1245,9 +1222,10 @@ def docs_near_dup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # documents scan 22x and the md5 shingle hash 18x, because
     # exchange reuse does not dedup these subtrees (the r17 graph
     # lesson). Both tables are narrow and candidate-bounded, so cut
-    # them with LAZY localCheckpoints: nothing executes at plan-build
-    # time (registry-wide plan enumeration stays cheap), and at the
-    # first action each subtree evaluates exactly once.
+    # them with LAZY localCheckpoints: each subtree evaluates exactly
+    # once. Under AQE a lazy cut still runs its input's shuffle stages
+    # at the call (docs/PERF.md); only the final stage waits for the
+    # first action.
     pairs = minhash_pairs_df(
         load_table(spark, sf_dir, "documents")
     ).localCheckpoint(eager=False)

@@ -1680,9 +1680,10 @@ def _sh_context(emb: DataFrame, lo_all: bool = False) -> "dict | None":
     sets is BY CONSTRUCTION (the survivor pass keeps cross-shard
     pairs only; shard-pass pairs are same-shard only), so no
     anti-join ever needs the pair set as a table. The two cuts' RDD
-    storage stays referenced by the returned DataFrames (the
-    ``dedup_components`` precedent: a lineage cut the result rests
-    on cannot be freed inside the builder)."""
+    storage stays referenced by the returned DataFrames: a lineage cut
+    the result rests on cannot be freed inside the builder (the
+    ``plans.lineage`` rule; ``components_from_pairs`` likewise returns
+    one cut unreleased)."""
     from deker_server_adapters_spark.functions.hashing import h32
 
     n = emb.count()

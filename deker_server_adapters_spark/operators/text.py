@@ -16,6 +16,7 @@ from deker_server_adapters_spark.functions.histogram import (
     round_ties_safe_sql,
 )
 from deker_server_adapters_spark.operators import Op
+from deker_server_adapters_spark.plans.lineage import release
 from deker_server_adapters_spark.sources.tables import load_table
 
 # Normalized text / token helpers (Spark SQL + DuckDB twins).
@@ -1117,35 +1118,59 @@ def _bpe_apply_merge(s, a: str, b: str):
     )
 
 
-def bpe_merge_table(
-    docs: DataFrame, k: int = _BPE_MERGES, checkpoint_every: int = 32
-) -> list[tuple[int, str, str, int]]:
+def _bpe_top_pair(enc: DataFrame):
+    """One BPE round's action: the corpus-wide most frequent adjacent
+    symbol pair (count desc, pair asc tiebreak) as a Row(a, b, n), or
+    None when no pair occurs at least twice. Reads every partition of
+    ``enc``, so it materializes a lazy cut of it."""
+    rows = (
+        # guard: a fully-merged (or 1-char) word has no adjacent pair;
+        # sequence(0, -1) would generate a DESCENDING range and
+        # fabricate null-symbol pairs
+        enc.filter(F.expr("size(s) >= 2"))
+        .select(
+            "freq",
+            F.explode(
+                F.expr(
+                    "transform(sequence(0, size(s) - 2),"
+                    " i -> struct(s[i] AS a, s[i+1] AS b))"
+                )
+            ).alias("p"),
+        )
+        .groupBy("p.a", "p.b")
+        .agg(F.sum("freq").alias("n"))
+        .orderBy(F.desc("n"), "a", "b")
+        .limit(1)
+        .collect()
+    )
+    return rows[0] if rows and rows[0].n >= 2 else None
+
+
+def bpe_merge_table(docs: DataFrame, k: int = _BPE_MERGES) -> list[tuple[int, str, str, int]]:
     """Learn the first ``k`` BPE merges over the corpus, distributed.
 
     Classic BPE tokenizer training: start from characters (within
     words), repeatedly count adjacent symbol pairs corpus-wide and
     merge the most frequent pair (count desc, pair asc tiebreak). The
-    working state is the encoded symbol-array column, CACHED between
-    rounds: each round applies exactly ONE new merge to the cached
-    previous encoding (an O(1)-size fold expression, see
-    ``_bpe_apply_merge``) and runs one pair-count aggregate; only the
-    single top pair comes back to the driver per round, so driver
-    traffic is k rows total. At 100 TB each round is one pass over the
-    cached encodings — exactly how production BPE trainers distribute
-    (the count table is the shuffle; symbols never leave the
-    executors). Lineage grows one projection per round, so every
-    ``checkpoint_every`` rounds the encoding is ``localCheckpoint``-ed:
-    plan depth and the recompute chain reset to O(checkpoint_every)
-    instead of O(k), making k in the thousands a parameter choice, not
-    a caveat (k=256 pinned by test). Local checkpoints trade
-    executor-loss recoverability for lineage truncation — the right
-    trade for a trainer whose full restart is cheap. The default
-    cadence is 32: the chained-persist generations between checkpoints
-    each add a round of plan analysis over the whole chain, and a
-    ~63-generation chain (k=64 under the old every=64 default, whose
-    only fire point sat past the last re-encode) was measured to both
-    quadratically inflate analysis time and intermittently overflow
-    the JVM stack serializing the lineage (r18, ADVICE item 1)."""
+    working state is the encoded symbol-array column, one
+    ``localCheckpoint`` generation per round: each round applies
+    exactly ONE new merge to the previous generation (an O(1)-size
+    fold expression, see ``_bpe_apply_merge``) and runs one pair-count
+    aggregate; only the single top pair comes back to the driver per
+    round, so driver traffic is k rows total. At 100 TB each round is
+    one pass over the cut encodings — exactly how production BPE
+    trainers distribute (the count table is the shuffle; symbols
+    never leave the executors).
+
+    Round state follows ``plans.lineage``: each generation is a lazy
+    cut that the round's top-pair ``collect`` materializes, after
+    which the previous generation is released, and the last one is
+    released before returning (the result is a Python list). Every
+    round's plan is one projection over a leaf, so k in the hundreds
+    is a parameter choice, not a caveat (k=256 pinned by test).
+    Local checkpoints trade executor-loss recoverability for lineage
+    truncation — the right trade for a trainer whose full restart is
+    cheap."""
     # r17 (guide §2.3, aggregate before you shuffle): train on the WORD
     # FREQUENCY table, not the raw occurrence stream — a pair's corpus
     # count is Σ_words freq(word)·occurrences-in-word, so every round's
@@ -1155,7 +1180,7 @@ def bpe_merge_table(
     # Merges are applied WITHOUT re-grouping: two distinct words can
     # collapse to the same symbol array after a merge, but weighted
     # counts are unchanged by duplicate rows and the table never grows.
-    # The eager localCheckpoint cuts the aggregate OUT of the per-round
+    # The localCheckpoint cuts the aggregate OUT of the per-round
     # lineage: with the aggregate left inline, each round's plan chains
     # the 3-reference merge expression over it and the optimizer's
     # project-collapse inlines it multiplicatively (3^rounds plan-string
@@ -1168,61 +1193,21 @@ def bpe_merge_table(
         .select(F.expr("filter(split(w, ''), c -> c != '')").alias("s"))
         .groupBy("s")
         .agg(F.count("*").alias("freq"))
-        # the eager checkpoint doubles as round 0's cache — no persist
-        # on top (a DataFrame unpersist can't free checkpoint storage;
-        # stacking both would leak it, the components-loop lesson)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     merges: list[tuple[int, str, str, int]] = []
-    prev = None
-    try:
-        for rank in range(k):
-            pairs = (
-                # guard: a fully-merged (or 1-char) word has no adjacent
-                # pair; sequence(0, -1) would generate a DESCENDING range
-                # and fabricate null-symbol pairs
-                enc.filter(F.expr("size(s) >= 2"))
-                .select(
-                    "freq",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(0, size(s) - 2),"
-                            " i -> struct(s[i] AS a, s[i+1] AS b))"
-                        )
-                    ).alias("p"),
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("freq").alias("n"))
-                .orderBy(F.desc("n"), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            # the collect above materialized enc's cache; the encoding
-            # it was derived from is now safe to drop
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if not pairs or pairs[0].n < 2:
-                break
-            top = pairs[0]
-            merges.append((rank, top.a, top.b, int(top.n)))
-            if rank < k - 1:
-                new_enc = enc.select(
-                    _bpe_apply_merge(F.col("s"), top.a, top.b).alias("s"), "freq"
-                )
-                if (rank + 1) % checkpoint_every == 0:
-                    # eager checkpoint materializes fresh blocks, so the
-                    # previous cache can drop immediately
-                    new_enc = new_enc.localCheckpoint(eager=True)
-                    enc.unpersist()
-                    prev, enc = None, new_enc
-                else:
-                    new_enc = new_enc.persist()
-                    prev, enc = enc, new_enc
-    finally:
-        enc.unpersist()
-        if prev is not None:
-            prev.unpersist()
+    top = _bpe_top_pair(enc) if k > 0 else None
+    while top is not None:
+        merges.append((len(merges), top.a, top.b, int(top.n)))
+        if len(merges) == k:
+            break
+        nxt = enc.select(
+            _bpe_apply_merge(F.col("s"), top.a, top.b).alias("s"), "freq"
+        ).localCheckpoint(eager=False)
+        top = _bpe_top_pair(nxt)
+        release(enc)
+        enc = nxt
+    release(enc)
     return merges
 
 

@@ -26,6 +26,7 @@ from deker_server_adapters_spark.functions.histogram import (
     round_ties_safe_sql,
 )
 from deker_server_adapters_spark.operators import Op
+from deker_server_adapters_spark.plans.lineage import release
 from deker_server_adapters_spark.sources.tables import load_table
 
 
@@ -2260,7 +2261,9 @@ def _lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
     per-node window over that node's distinct neighbor labels (≤ deg
     rows — never a global sort). Labels localCheckpoint per round:
     without the lineage cut round r's plan nests every earlier round
-    (the dedup_components/k-core lesson)."""
+    (the dedup_components/k-core lesson). No round runs an action of
+    its own, so the cuts are eager; superseded generations and the
+    adjacency are released (``plans.lineage``)."""
     adj = (
         edges.select(F.col("u").alias("n"), F.col("v").alias("nb"))
         .union(edges.select(F.col("v").alias("n"), F.col("u").alias("nb")))
@@ -2288,12 +2291,15 @@ def _lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
             .groupBy("n", "label")
             .agg(F.count("*").alias("c"))
         )
-        labels = (
+        nxt = (
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("n", "label")
             .localCheckpoint(eager=True)
         )
+        release(labels)
+        labels = nxt
+    release(adj)
     return labels
 
 

@@ -67,8 +67,8 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     EqualTo,
     Filter,
     GreaterThan,
@@ -710,18 +710,18 @@ class DekerWriter(DataSourceArrowWriter):
         )
 
 
-class DekerStreamWriter(DataSourceStreamWriter):
+class DekerStreamWriter(DataSourceStreamArrowWriter):
     """Streaming cell ingest: ``cells.writeStream.format("deker")`` —
     the sink half of the chunk-changefeed loop (``readStream`` emits
     chunk versions; this appends new cells per micro-batch).
 
-    Each task delegates to the batch ``DekerWriter`` core (same
-    run-length chunk-append, same geometry import), feeding the row
-    iterator through bounded Arrow batches. Tasks write dot-prefixed
-    TEMP files (invisible to every reader); ``commit`` RENAMES them to
-    deterministic ``part-b{batch}-p{part}-{i}`` names and
-    garbage-collects any temp file a failed/crashed attempt left in
-    the touched chunk dirs. Failure accounting:
+    Each task hands its Arrow record batches straight to the batch
+    ``DekerWriter`` core (same run-length chunk-append, same geometry
+    import). Tasks write dot-prefixed TEMP files (invisible to every
+    reader); ``commit`` RENAMES them to deterministic
+    ``part-b{batch}-p{part}-{i}`` names and garbage-collects any temp
+    file a failed/crashed attempt left in the touched chunk dirs.
+    Failure accounting:
 
     - task retry within a batch: the failed attempt's file is a temp
       file — never visible, removed at this batch's commit;
@@ -755,21 +755,7 @@ class DekerStreamWriter(DataSourceStreamWriter):
         self._core = DekerWriter(root, collection, schema, create_arrays)
 
     def write(self, iterator) -> DekerWriteCommit:
-        import pyarrow as pa
-
-        rows_per_batch = 65536
-
-        def batches():
-            buf = []
-            for row in iterator:
-                buf.append(row.asDict())
-                if len(buf) >= rows_per_batch:
-                    yield pa.RecordBatch.from_pylist(buf)
-                    buf = []
-            if buf:
-                yield pa.RecordBatch.from_pylist(buf)
-
-        return self._core.write(batches())
+        return self._core.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
         publish_staged(

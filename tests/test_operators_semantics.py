@@ -234,10 +234,10 @@ def test_enforce_budget_rows(spark, sf_dir):
 
 
 def test_components_checkpoint_hygiene_long_diameter(spark):
-    """A 16-node path graph needs ~15 propagation rounds — three
-    checkpoint generations (rounds 5/10/15). Superseded checkpoints are
-    RDD-level caches that DataFrame.unpersist cannot free; the loop must
-    release them explicitly, keeping only the final generation."""
+    """A 16-node path graph needs ~15 propagation rounds, each its own
+    checkpoint generation. Superseded checkpoints are RDD-level caches
+    that DataFrame.unpersist cannot free; the loop must release them
+    explicitly, keeping only the final generation."""
     from deker_server_adapters_spark.operators.dedup import components_from_pairs
 
     chain = spark.createDataFrame(
@@ -250,12 +250,11 @@ def test_components_checkpoint_hygiene_long_diameter(spark):
     # correctness: one component, canonical = min id, label crossed the
     # whole diameter
     assert got == {i: 0 for i in range(16)}
-    # hygiene: at most the final labels generation + the checkpoint its
-    # lineage still depends on survive (freeing that one would truncate
-    # recoverability); the superseded round-5/round-10 checkpoints and
-    # every per-round generation must be gone — unbounded growth was the
-    # r2 leak (one checkpointed generation retained per 5 rounds)
-    assert after - before <= 2, f"persisted RDDs grew by {after - before}"
+    # hygiene: only the final labels generation survives; every
+    # superseded generation and the edge table must be gone —
+    # unbounded growth was the r2 leak (one checkpointed generation
+    # retained per 5 rounds)
+    assert after - before <= 1, f"persisted RDDs grew by {after - before}"
 
 
 def test_simhash_table_drops_null_docs(spark, tmp_path):
@@ -761,10 +760,9 @@ def test_bpe_scales_past_codegen_limits(spark):
 @pytest.mark.slow
 def test_bpe_large_k_with_lineage_checkpoints(spark):
     """VERDICT r7 item 9: k in the hundreds must be a parameter choice,
-    not a caveat. With ``checkpoint_every`` interleaving
-    ``localCheckpoint``, plan depth stays O(checkpoint_every) instead
-    of O(k); k=256 (8 checkpoint generations at every=32) completes in
-    bounded time and still matches the canonical greedy reference
+    not a caveat. With every round's encoding a ``localCheckpoint``
+    generation, plan depth stays O(1) instead of O(k); k=256 completes
+    in bounded time and still matches the canonical greedy reference
     merge-for-merge."""
     import random
     import time
@@ -778,7 +776,7 @@ def test_bpe_large_k_with_lineage_checkpoints(spark):
     texts = [" ".join(words + words)]  # every word twice: merges stay productive
     docs = spark.createDataFrame([(1, t) for t in texts], "doc_id int, text string")
     t0 = time.time()
-    got = bpe_merge_table(docs, k=256, checkpoint_every=32)
+    got = bpe_merge_table(docs, k=256)
     elapsed = time.time() - t0
     want = _bpe_ref_train(texts, 256)
     assert len(got) == 256
@@ -787,6 +785,36 @@ def test_bpe_large_k_with_lineage_checkpoints(spark):
     # through quadratic analysis cost long before the margin is reached
     assert elapsed < 300, f"k=256 took {elapsed:.0f}s"
 
+
+
+def test_driver_loops_release_superseded_generations(spark):
+    """Loop hygiene: each round's generation is a localCheckpoint, and
+    the loop releases the one it superseded. ``bpe_merge_table``
+    returns a Python list, so it may leave no persisted RDD behind;
+    ``_lpa_labels`` returns a table that rests on its last generation
+    only, so it may leave at most that one (before, 2 and 5 survived)."""
+    from deker_server_adapters_spark.operators.text import bpe_merge_table
+    from deker_server_adapters_spark.operators.tpch import _lpa_labels
+
+    jsc = spark.sparkContext._jsc
+    alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
+    texts = [f"{alpha} {alpha} {alpha[::-1]} {alpha[::-1]}"]
+    docs = spark.createDataFrame([(1, t) for t in texts], "doc_id int, text string")
+    before = jsc.getPersistentRDDs().size()
+    assert len(bpe_merge_table(docs, k=64)) == 64
+    grew = jsc.getPersistentRDDs().size() - before
+    assert grew <= 0, f"bpe_merge_table left {grew} persisted RDD(s)"
+
+    cliques = ([0, 1, 2, 3, 4], [10, 11, 12, 13, 14])
+    edges = [
+        (u, v) for c in cliques for i, u in enumerate(c) for v in c[i + 1 :]
+    ] + [(4, 10)]
+    df = spark.createDataFrame(edges, "u long, v long")
+    before = jsc.getPersistentRDDs().size()
+    labels = {r.n: r.label for r in _lpa_labels(df, 4).collect()}
+    grew = jsc.getPersistentRDDs().size() - before
+    assert labels == {n: c[0] for c in cliques for n in c}
+    assert grew <= 1, f"_lpa_labels left {grew} persisted RDD(s)"
 
 def test_bpe_equal_sided_merge_is_greedy(spark):
     """a == b merges overlap ('aaa' merges only the first two): the

@@ -314,6 +314,42 @@ def test_dedup_pipeline_single_corpus_evaluation(spark, sf_dir):
     assert "md5" not in plan
 
 
+
+def test_components_round_join_keeps_edges_partitioned(spark, monkeypatch):
+    """The CC loop hashes its edge table on the round join key once:
+    no round may plan an Exchange on doc_b (the edge side). A
+    localCheckpoint of the edges would lose the partitioning under AQE
+    (it reports UnknownPartitioning), so the edges stay a cached
+    relation while the label generations are cuts."""
+    import re
+
+    from deker_server_adapters_spark.operators.dedup import components_from_pairs
+
+    cls = type(spark.range(1))
+    cut = cls.localCheckpoint
+    rounds = []
+
+    def capture(self, *a, **k):
+        if "chg" in self.columns:
+            rounds.append(physical_plan(self))
+        return cut(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", capture)
+    # a broadcast join would hide both sides' exchanges on a tiny graph
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
+        )
+        components_from_pairs(chain, max_rounds=3)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert len(rounds) == 2
+    for plan in rounds:
+        assert "SortMergeJoin" in plan
+        assert not re.search(r"Exchange hashpartitioning\(doc_b#\d+L?, \d+\), ENSURE", plan), plan
+
 def test_lm_quality_tiers_window_never_single_partition(spark, sf_dir):
     """ntile runs per SOURCE partition; a global (empty-partitionBy)
     window here would serialize the whole corpus through one task."""
