@@ -42,15 +42,21 @@ Spark-first consequences:
   per chunk on the driver with no Spark job; ``write_from_cells`` is
   one Spark job whose tasks build and stage whole chunks, which the
   driver publishes once the job has succeeded; the ``deker`` writers
-  stage per task and publish at commit.
+  stage per task and publish at commit. Cells that are not a whole
+  chunk become runs through one encoder, ``written_runs``: one run
+  when the written cells fill their bounding box, else one run per
+  segment along the last dimension. The ``deker`` writers and the fold
+  both use it.
 - A subset write appends, also on the driver with no Spark job: each
   overlapped chunk dir gets one new file holding the update's piece of
   it as one run stamped newest (a *delta run*), the log-structured form
   of Deker's subset PUT (reference base.py:272-303). Nothing is
   removed, so an update has no crash window. Once a dir holds more than
   ``FOLD_FILES`` files, the update *folds* it: ``_merge_chunk_dir``
-  rewrites the dir as one file whose runs are resolved last-write-wins
-  (no two overlap). ``compact`` runs the same fold on executors.
+  replays the dir's runs last-write-wins (``place_runs``) and rewrites
+  it as one file of the replayed cells, encoded by ``written_runs`` (no
+  two runs overlap; a dense chunk folds to one run). ``compact`` runs
+  the same fold on executors.
 - Decoded chunk dirs stay in one process-wide LRU cache on the driver
   (the role of HDF5's raw-data chunk cache): each entry holds a dir's
   runs in ``ordered_runs`` order, bounded at ``CHUNK_CACHE_BYTES`` of
@@ -78,9 +84,7 @@ Spark-first consequences:
 
 from __future__ import annotations
 
-import functools
 import math
-import operator
 import os
 import re
 import threading
@@ -116,7 +120,8 @@ CHUNK_SCHEMA = StructType(
         StructField("shape", ArrayType(LongType(), False), False),
         StructField("data", ArrayType(DoubleType(), True), False),
         # placement rank: when runs overlap, the HIGHEST seq wins. Every
-        # writer stamps it ((~ms clock) << 20 | within-task counter), so
+        # writer stamps it (next_write_seq: a ~ms clock, one stamp per
+        # write event or writer task, whose runs are disjoint), so
         # ordering is explicit in the data — not derived from file names,
         # which neither Spark's scan (size-packed splits) nor compaction
         # (merged files) preserves. Nullable: legacy files read as null
@@ -133,9 +138,9 @@ _SEQ_LAST = 0
 
 
 def next_write_seq() -> int:
-    """Base placement stamp for one write event: wall-clock at ~ms
-    granularity shifted to leave ``_SEQ_COUNTER_BITS`` low bits for a
-    within-task run counter. Fits int64 until ~year 2150.
+    """Placement stamp for one write event: wall-clock nanoseconds with
+    the ``_SEQ_COUNTER_BITS`` low bits cleared, ~ms granularity. Fits
+    int64 until ~year 2150.
 
     Strictly MONOTONIC within a process: two write events issued
     back-to-back in the same clock tick (or across an NTP step
@@ -593,12 +598,12 @@ def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tupl
     """Every run of one chunk dir's files (given in ascending file-name
     order) in LAST-WRITE-WINS placement order: ascending
     ``(coalesce(seq, -1), file name, row index)``. Stamped runs order by
-    ``seq`` alone (the within-task counter makes them strictly
-    increasing). A legacy seq-less run carries its file's rank in the
-    listing as its ``seq`` — older than every stamped run, in file-name
-    order — which a fold writes out, so a rewrite never changes which
-    legacy run wins. Runs in different chunk dirs never overlap, so
-    per-dir replay equals one global sort."""
+    ``seq`` alone: runs that share a stamp come from one write event or
+    one fold, and are disjoint. A legacy seq-less run carries its file's
+    rank in the listing as its ``seq`` — older than every stamped run,
+    in file-name order — which a fold writes out, so a rewrite never
+    changes which legacy run wins. Runs in different chunk dirs never
+    overlap, so per-dir replay equals one global sort."""
     runs = [
         (rank if seq < 0 else seq, origin, shape, values)
         for rank, t in enumerate(tables)
@@ -674,63 +679,36 @@ def place_runs(
                 written[hit[1]] = True
 
 
-def _outside(inner: tuple, shape: Sequence[int]) -> Iterator[tuple]:
-    """Slices that cut the box ``[0, shape)`` minus its sub-box ``inner``
-    into at most two boxes per dimension."""
-    cur = [slice(0, n) for n in shape]
-    for d, s in enumerate(inner):
-        if s.start > 0:
-            yield tuple(cur[:d] + [slice(0, s.start)] + cur[d + 1 :])
-        if s.stop < shape[d]:
-            yield tuple(cur[:d] + [slice(s.stop, shape[d])] + cur[d + 1 :])
-        cur[d] = s
-
-
-def _patched(runs: list, origin: Sequence[int], values: np.ndarray, seq: int) -> list:
-    """Pairwise disjoint ``runs`` with the newer box ``values`` at
-    ``origin``, stamped ``seq``, placed last-write-wins; the result is
-    pairwise disjoint too. If the runs cover the box, its cells are
-    written into each run's overlap, every ``seq`` kept, and the box is
-    dropped. Otherwise (a sparse ``deker`` append) the box becomes a run
-    and each run it overlaps keeps only its cells outside the box.
-    Read-only run values are copied before they are written."""
-    origin = [int(a) for a in origin]
-    hi = [a + n for a, n in zip(origin, values.shape)]
-    hits = {}
-    for i, (_, run_origin, shape, _) in enumerate(runs):
-        hit = _overlap(run_origin.tolist(), shape, origin, hi)
-        if hit is not None:
-            hits[i] = hit
-    covered = sum(math.prod(s.stop - s.start for s in h[1]) for h in hits.values())
-    if covered == values.size:
-        out = list(runs)
-        for i, (in_run, in_box) in hits.items():
-            run_seq, run_origin, shape, data = runs[i]
-            if not data.flags.writeable:
-                data = data.copy()
-            data.reshape(shape)[in_run] = values[in_box]
-            out[i] = (run_seq, run_origin, shape, data)
-        return out
-    out = [r for i, r in enumerate(runs) if i not in hits]
-    for i, (in_run, _) in hits.items():
-        run_seq, run_origin, shape, data = runs[i]
-        for piece in _outside(in_run, shape):
-            cut = data.reshape(shape)[piece]
-            out.append((run_seq, run_origin + [p.start for p in piece], cut.shape, cut.ravel()))
-    out.append((seq, np.asarray(origin), values.shape, values.ravel()))
-    return out
-
-
-def _resolved(runs: Sequence[tuple]) -> list:
-    """Placement-ordered ``runs`` as pairwise disjoint runs holding the
-    same last-write-wins cells, in ``seq`` order, values read-only."""
-    out: list = []
-    for seq, origin, shape, values in runs:
-        out = _patched(out, origin, values.reshape(shape), seq)
-    out.sort(key=_run_seq)
-    for r in out:
-        r[3].setflags(write=False)
-    return out
+def written_runs(seq: int, lo: Sequence[int], values: np.ndarray, written: np.ndarray) -> list:
+    """The one cells-to-runs encoder: the cells of ``values``, the box at
+    ``lo``, that the boolean ``written`` marks, as pairwise disjoint runs
+    stamped ``seq`` — one run over the bounding box of the written cells
+    when they fill it, else one run per maximal segment along the last
+    dimension. Run values are read-only views of ``values`` (a copy only
+    when a dense run's box is not contiguous in it). The fold and the
+    ``deker`` writer both encode through here."""
+    box = []
+    for d in range(written.ndim):
+        hit = np.flatnonzero(written.any(axis=tuple(a for a in range(written.ndim) if a != d)))
+        if not len(hit):
+            return []
+        box.append(slice(int(hit[0]), int(hit[-1]) + 1))
+    values, written = values[tuple(box)], written[tuple(box)]
+    lo = np.array([int(a) + b.start for a, b in zip(lo, box)], np.int64)
+    if written.all():
+        values = np.ascontiguousarray(values)
+        values.setflags(write=False)
+        return [(seq, lo, values.shape, values.ravel())]
+    values.setflags(write=False)
+    # +1 where a segment starts along the last dimension, -1 past its end
+    pad = [(0, 0)] * (written.ndim - 1) + [(1, 1)]
+    edges = np.diff(np.pad(written, pad).astype(np.int8), axis=-1)
+    starts, stops = np.argwhere(edges == 1), np.argwhere(edges == -1)[:, -1]
+    ones = (1,) * (written.ndim - 1)
+    return [
+        (seq, lo + at, ones + (stop - at[-1],), values[tuple(at[:-1])][at[-1] : stop])
+        for at, stop in zip(starts.tolist(), stops.tolist())
+    ]
 
 
 def _list_array(parts: list, type_: pa.DataType) -> pa.ListArray:
@@ -864,16 +842,21 @@ def _merge_chunk_dir(d: str) -> int:
     with fewer than two files is left alone. Returns 1 if the dir was
     rewritten.
 
-    - The fold *resolves* runs: when the vectorised
-      :func:`runs_overlap` check finds overlapping runs, each newer
-      run's cells are written into the older runs it overlaps and the
-      newer run is dropped once they cover it (:func:`_patched`), so
-      the output holds no two overlapping runs. Dirs without overlap
-      (a ``deker``-writer chunk of thousands of disjoint runs) skip the
-      Python resolution.
-    - Every output run keeps its ``seq``; a legacy run without one
-      keeps its rank in sorted-file-name order (:func:`ordered_runs`),
-      so it stays older than every stamped run.
+    - The fold *replays* the dir's runs last-write-wins with
+      :func:`place_runs` into one buffer over the runs' bounding box (at
+      most the chunk's extent) and encodes the written cells with
+      :func:`written_runs`: no two output runs overlap, and a chunk the
+      runs fill, such as a dense chunk with its deltas or a ``deker``
+      chunk written row by row, folds to one run.
+    - Every output run is stamped with the oldest ``seq`` the fold
+      replaces, as if the newer runs were written into the oldest one; a
+      legacy run without a ``seq`` has its rank in sorted-file-name
+      order (:func:`ordered_runs`), so it stays older than every
+      stamped run. Race window: a write stamped before the fold lists
+      the dir but published after it is newer than the output, so it
+      overrides the output's cells, even those a replaced run newer
+      than that write held (a long ``deker`` append racing updates that
+      fold the chunk). Keeping each cell's own ``seq`` would close it.
     - The runs come from the driver-side cache when it holds this
       listing (the update that folds just extended it), and the output
       is then written through; otherwise the files are read through
@@ -884,7 +867,7 @@ def _merge_chunk_dir(d: str) -> int:
       Hadoop ``.crc`` companion (stores written by Spark's parquet
       writer have them). A reader that sees both (mid-fold, or after a
       crash before the removal) replays the replaced runs and the
-      output's resolved runs; the output sorts after every replaced
+      output's runs; the output sorts after every replaced
       file and every run newer than an output run is still there, so
       each cell resolves to its last write, and the next fold heals
       the dir. A crashed fold's temp is GC'd by the next fold of the
@@ -904,8 +887,13 @@ def _merge_chunk_dir(d: str) -> int:
         if len(paths) < 2:
             return 0
         runs = ordered_runs(tables)
-    if runs_overlap(*run_boxes(runs)):
-        runs = _resolved(runs)
+    if runs:
+        origins, shapes = run_boxes(runs)
+        lo = origins.min(axis=0).tolist()
+        buf = np.empty((origins + shapes).max(axis=0) - lo)
+        written = np.zeros(buf.shape, bool)
+        place_runs(runs, lo, buf, written)
+        runs = written_runs(runs[0][0], lo, buf, written)  # the oldest seq replaced
     out = os.path.join(d, _rewrite_name(paths))
     tmp = stage_chunk_file(d, encode_runs(runs), f".{os.path.basename(out)}.tmp")
     publish_staged([(tmp, out)], _REWRITE_TMP)
@@ -1049,9 +1037,9 @@ class ChunkStore:
         Distributed: the chunk-dir list parallelizes over executors and
         each dir is folded independently (bounded by one chunk's bytes)
         by ``_merge_chunk_dir``, the same fold an update runs on the
-        driver: overlapping runs are resolved last-write-wins, so a
-        compacted dir holds no two overlapping runs, and dirs without
-        overlap only have their files merged. Placement semantics
+        driver: the dir's runs are replayed last-write-wins and encoded
+        again, so a compacted dir holds no two overlapping runs, and a
+        chunk its runs fill holds one. Placement semantics
         survive because run precedence is the explicit ``seq`` column,
         not file order (legacy seq-less rows get a synthesized rank).
         Crash window: a failure between publishing the merged file and
@@ -1377,10 +1365,10 @@ class ChunkStore:
         cells = F.posexplode("data").alias("pos", "value")
         plain = df
         if overlapping:
-            in_overlap = functools.reduce(
-                operator.or_,
-                [(F.col("array_id") == a) & F.col("chunk_idx").isin(idxs) for a, idxs in overlapping.items()],
-            )
+            # one IN-set over a dir key: a chunk index holds no "/", so
+            # the key names one dir, however many arrays overlap
+            keys = [f"{a}/{i}" for a, idxs in overlapping.items() for i in idxs]
+            in_overlap = F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys)
             plain = df.filter(~in_overlap)
         plain = plain.select("array_id", "origin", "shape", cells).select("array_id", *cols, "value")
         if not overlapping:

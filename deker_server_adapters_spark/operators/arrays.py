@@ -381,7 +381,7 @@ def deker_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def deker_write_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The slice-aggregate again, but the array is ingested through the
     WRITER half of the custom data source: a dense cell DataFrame goes
-    in via ``df.write.format("deker")`` (per-task run-length chunk
+    in via ``df.write.format("deker")`` (per-task run-packed chunk
     append, no imposed shuffle), then reads back through the same
     pushdown reader — value-checking the full write->read loop against
     the DuckDB oracle. The input is densified (grid left-join,

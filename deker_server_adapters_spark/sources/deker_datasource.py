@@ -42,10 +42,10 @@ cells never pass through per-row Python objects.
 
 Writes: ``df.write.format("deker").mode("append")`` is BULK CELL
 INGEST (the reference create+write flow, base.py:111-160) — each task
-run-length-encodes its cells into chunk-aligned sub-box rows and
-stages them as one file per owning chunk directory, shuffle-free and
-append-only; the commit publishes them. Files are encoded, staged and
-published by the engine's one chunk writer (``core.storage``:
+packs its cells of each chunk into runs and stages them as one file
+per owning chunk directory, shuffle-free and append-only; the commit
+publishes them. Runs, files, staging and publishing come from the
+engine's one chunk writer (``core.storage``: ``written_runs``,
 ``encode_runs``, ``stage_chunk_file``, ``publish_staged``).
 ``cells.writeStream.format("deker")`` is the STREAMING form of the same
 ingest (per-micro-batch append, deterministic batch-named files for
@@ -91,7 +91,6 @@ from pyspark.sql.types import (
 from deker_server_adapters_spark.core.array import meta_file_name, write_meta
 from deker_server_adapters_spark.core.schema import collection_schema
 from deker_server_adapters_spark.core.storage import (
-    _SEQ_COUNTER_BITS,
     TMP_PREFIX,  # noqa: F401  (re-exported: the writers' temp-name prefix)
     ChunkGrid,
     appended_name,
@@ -170,14 +169,14 @@ def _chunk_cell_batches(
     ``batch=True`` (the batch reader): LAST-WRITE-WINS per cell. A
     chunk whose runs do not overlap (``core.storage.runs_overlap``, a
     vectorised check of the run boxes) emits each run's cells as they
-    are, the cheaper side for a dense chunk of one run. Only a chunk
-    with overlapping runs replays them into a chunk-local buffer
-    through ``core.storage.place_runs``, the engine's ``read_slice``
-    replay, and emits each written cell once with its latest value —
-    the cheaper side for a ``deker``-writer chunk of many short runs.
-    Memory for that replay is one chunk's dense extent (the storage
-    design unit) plus the run list. A planned file that vanished is
-    re-listed (``read_chunk_files``).
+    are: a folded chunk, or the disjoint runs ``written_runs`` packed
+    for one writer task. Only a chunk with overlapping runs (unfolded
+    update deltas, appends that re-write cells) replays them into a
+    chunk-local buffer through ``core.storage.place_runs``, the
+    engine's ``read_slice`` replay, and emits each written cell once
+    with its latest value. Memory for that replay is one chunk's dense
+    extent (the storage design unit) plus the run list. A planned file
+    that vanished is re-listed (``read_chunk_files``).
     ``batch=False`` (the stream reader's changefeed): append-log
     semantics — one row per materialized RUN cell, so a cell re-written
     by a later write appears once per write; a vanished file is
@@ -519,26 +518,32 @@ class DekerWriter(DataSourceArrowWriter):
     1. assigns every cell its owning chunk via the same mixed-radix
        grid arithmetic the engine stores with (imported geometry, so
        writer and reader can never drift);
-    2. sorts its cells in C order and run-length-encodes maximal runs
-       along the last dimension into sub-box rows
-       (origin=[.., run_start], shape=[1,..,1,run_len]) — the patch
-       form ``read_slice`` and the batch/stream readers already place
-       by origin/shape, so a chunk assembled from many tasks' runs
-       reads back exactly;
+    2. groups its cells by (array_id, chunk) with a stable sort, keeping
+       the LAST row of a cell the task got twice (in one Arrow batch or
+       across batches), places each group into a buffer over its
+       bounding box and encodes it with ``core.storage.written_runs``:
+       one run when the cells fill that box (a task that covers a whole
+       chunk writes one dense run), else one run per segment along the
+       last dimension — the run form ``read_slice`` and the batch/stream
+       readers place by origin/shape, so a chunk assembled from many
+       tasks' runs reads back exactly;
     3. appends one parquet file per (array_id, chunk) it touched —
        staged under a dot-prefixed TEMP name (invisible to every
        reader) and published by ``commit``'s rename to its task-UUID
        name (``core.storage.publish_staged``), so a crashed job
        orphans nothing visible; never overwrites.
-       Each run carries a placement ``seq`` stamp (~ms clock +
-       within-task counter), so a re-written cell resolves
-       LAST-WRITE-WINS through ``read_data``.
+       Every run of a task carries one placement ``seq`` stamp
+       (``next_write_seq``; the task's runs are disjoint), so a cell
+       another write re-writes resolves LAST-WRITE-WINS through
+       ``read_data``.
 
-    Memory per task is bounded by that task's input cells (the same
-    class as a shuffle writer's buffer). Chunk-ALIGNED input (e.g.
-    ``df.repartition("array_id")`` or a full-array partition per task)
-    yields one file and maximal runs per chunk; scattered input still
-    writes correctly, just with shorter runs and more files.
+    Memory per task is its input cells (the same class as a shuffle
+    writer's buffer) plus one group's bounding-box buffer at a time, at
+    most one chunk's extent — the bound the batch reader's replay has.
+    Chunk-ALIGNED input (e.g. ``df.repartition("array_id")`` or a
+    full-array partition per task) yields one file and one run per
+    chunk; scattered input still writes correctly, just with more runs
+    and more files.
 
     Append-only contract: writing a cell that already exists in the
     collection appends a NEWER run — ``read_data``, ``cell_df`` and the
@@ -587,86 +592,65 @@ class DekerWriter(DataSourceArrowWriter):
         import uuid
 
         import numpy as np
+        import pyarrow as pa
+
+        from deker_server_adapters_spark.core.storage import next_write_seq, written_runs
 
         grid = self.grid
         ndim = len(grid.shape)
-        # per (array_id, chunk_idx): list of (origin, shape, data) runs
-        buf: dict[tuple[str, int], list[tuple[list, list, "np.ndarray"]]] = {}
+        aids, coords, vals = [], [], []
         for batch in iterator:
-            cols = {n: batch.column(n) for n in batch.schema.names}
-            aid = cols["array_id"].to_pylist()
-            coords = np.stack(
-                [np.asarray(cols[n], dtype=np.int64) for n in self.dim_names]
-            )
-            vals = np.asarray(cols["value"], dtype=np.float64)
+            c = np.stack([np.asarray(batch.column(n), dtype=np.int64) for n in self.dim_names])
             for d in range(ndim):
-                bad = (coords[d] < 0) | (coords[d] >= grid.shape[d])
+                bad = (c[d] < 0) | (c[d] >= grid.shape[d])
                 if bad.any():
                     j = int(np.argmax(bad))
                     raise ValueError(
-                        f"cell {self.dim_names[d]}={int(coords[d][j])} outside "
+                        f"cell {self.dim_names[d]}={int(c[d][j])} outside "
                         f"dimension size {grid.shape[d]}"
                     )
-            chunk_idx = np.zeros(len(vals), dtype=np.int64)
-            for d in range(ndim):
-                chunk_idx = chunk_idx * grid.splits[d] + coords[d] // grid.chunk_shape[d]
-            # C-order sort key within each (array, chunk) group
-            flat = np.zeros(len(vals), dtype=np.int64)
-            for d in range(ndim):
-                flat = flat * grid.shape[d] + coords[d]
-            aid_codes, aid_inv = np.unique(np.asarray(aid, dtype=object), return_inverse=True)
-            order = np.lexsort((flat, chunk_idx, aid_inv))
-            s_aid, s_chunk, s_flat = aid_inv[order], chunk_idx[order], flat[order]
-            s_coords, s_vals = coords[:, order], vals[order]
-            # run break: new (array, chunk), any non-last coord change,
-            # or last coord not consecutive. The flat index alone is
-            # NOT enough: (x, last_max) -> (x+1, 0) is flat-consecutive
-            # but a box at origin [x, last_max] may not spill past the
-            # row end, so the last coord must itself advance by 1.
-            brk = np.ones(len(s_vals), dtype=bool)
-            if len(s_vals) > 1:
-                brk[1:] = (
-                    (s_aid[1:] != s_aid[:-1])
-                    | (s_chunk[1:] != s_chunk[:-1])
-                    | (s_flat[1:] != s_flat[:-1] + 1)
-                    | (s_coords[-1][1:] != s_coords[-1][:-1] + 1)
-                )
-            starts = np.flatnonzero(brk)
-            ends = np.append(starts[1:], len(s_vals))
-            for a, b in zip(starts, ends):
-                key = (str(aid_codes[s_aid[a]]), int(s_chunk[a]))
-                origin = [int(c) for c in s_coords[:, a]]
-                shape = [1] * (ndim - 1) + [int(b - a)]
-                buf.setdefault(key, []).append((origin, shape, s_vals[a:b]))
-
-        from deker_server_adapters_spark.core.storage import next_write_seq
-
+            aids.append(batch.column("array_id"))
+            coords.append(c)
+            vals.append(np.asarray(batch.column("value"), dtype=np.float64))
+        if not sum(map(len, vals)):
+            return DekerWriteCommit(files=(), array_ids=())
+        # ids stay Arrow strings: one Python str per distinct id, not per cell
+        ids = pa.concat_arrays(aids).dictionary_encode()
+        aid_codes, remap = np.unique(ids.dictionary.to_pylist(), return_inverse=True)
+        aid = remap[ids.indices.to_numpy()]
+        coords, vals = np.concatenate(coords, axis=1), np.concatenate(vals)
+        chunk_idx = np.zeros(len(vals), dtype=np.int64)
+        flat = np.zeros(len(vals), dtype=np.int64)
+        for d in range(ndim):
+            chunk_idx = chunk_idx * grid.splits[d] + coords[d] // grid.chunk_shape[d]
+            flat = flat * grid.shape[d] + coords[d]
+        # a stable sort by (array, chunk, cell) keeps a task's rows of one
+        # cell in arrival order, so keeping the last of them lets the
+        # later row win
+        order = np.lexsort((flat, chunk_idx, aid))
+        aid, chunk_idx, flat = aid[order], chunk_idx[order], flat[order]
+        last = np.ones(len(order), dtype=bool)
+        last[:-1] = (aid[1:] != aid[:-1]) | (flat[1:] != flat[:-1])
+        order, aid, chunk_idx = order[last], aid[last], chunk_idx[last]
+        starts = np.flatnonzero(
+            np.r_[True, (aid[1:] != aid[:-1]) | (chunk_idx[1:] != chunk_idx[:-1])]
+        )
         task_id = uuid.uuid4().hex
-        # placement stamps: one monotonic base per task (the engine's
-        # stamp source, see core.storage.CHUNK_SCHEMA) + a within-task
-        # run counter — later runs in this task get strictly larger
-        # seq, so an intra-batch re-write of a cell resolves to the
-        # later row
-        seq_base = next_write_seq()
-        run_counter = 0
+        # one stamp for the task: its runs are pairwise disjoint
+        seq = next_write_seq()
         files, array_ids = [], set()
-        for (array_id, cidx), runs in sorted(buf.items()):
-            seqs = []
-            for _ in runs:
-                if run_counter == 1 << _SEQ_COUNTER_BITS:
-                    # reserve the next range through the process-global
-                    # counter (never a local bump: a local seq_base +=
-                    # range is invisible to _SEQ_LAST, so a later
-                    # next_write_seq() in this process could hand out a
-                    # stamp at or below it, inverting last-write-wins)
-                    seq_base = next_write_seq()
-                    run_counter = 0
-                seqs.append(seq_base + run_counter)
-                run_counter += 1
+        for a, b in zip(starts.tolist(), [*starts[1:].tolist(), len(order)]):
+            array_id, cidx = str(aid_codes[aid[a]]), int(chunk_idx[a])
+            cells = coords[:, order[a:b]]
+            lo = cells.min(axis=1)
+            box = np.empty(cells.max(axis=1) + 1 - lo)
+            written = np.zeros(box.shape, dtype=bool)
+            at = tuple(cells - lo[:, None])
+            box[at], written[at] = vals[order[a:b]], True
             files.append(
                 stage_chunk_file(
                     chunk_dir(self.chunks_dir, array_id, cidx),
-                    encode_runs((q, *run) for q, run in zip(seqs, runs)),
+                    encode_runs(written_runs(seq, lo.tolist(), box, written)),
                     f"{staged_prefix(self.write_id)}{task_id}.parquet",
                 )
             )
@@ -716,7 +700,7 @@ class DekerStreamWriter(DataSourceStreamArrowWriter):
     chunk versions; this appends new cells per micro-batch).
 
     Each task hands its Arrow record batches straight to the batch
-    ``DekerWriter`` core (same run-length chunk-append, same geometry
+    ``DekerWriter`` core (same per-chunk run packing, same geometry
     import). Tasks write dot-prefixed TEMP files (invisible to every
     reader); ``commit`` RENAMES them to deterministic
     ``part-b{batch}-p{part}-{i}`` names and garbage-collects any temp

@@ -3,6 +3,8 @@ with chunk-aligned partitions and planning-time pruning."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -138,7 +140,7 @@ def test_joins_with_relational_tables(spark, filled):
 
 class TestWriter:
     """spark.write.format('deker'): bulk cell ingest, per-task
-    run-length chunk append (reference create+write flow,
+    run-packed chunk append (reference create+write flow,
     base.py:111-160)."""
 
     def _cells_df(self, spark, data, array_id="a1", n_parts=5):
@@ -187,8 +189,9 @@ class TestWriter:
         np.testing.assert_allclose(chk, data)
 
     def test_aligned_input_compresses_to_runs(self, spark, tmp_path):
-        """Chunk-aligned input (1 partition) produces maximal last-dim
-        runs: 240 cells -> one sub-box row per x-row, not per cell."""
+        """Chunk-aligned input (1 partition) that fills the chunk
+        packs into one dense run: 240 cells -> one run, not one per
+        x-row or per cell."""
         from deker_server_adapters_spark.core.storage import CHUNK_SCHEMA
 
         root = str(tmp_path / "whr")
@@ -205,7 +208,7 @@ class TestWriter:
             spark.read.schema(CHUNK_SCHEMA)
             .parquet(root + "/collections/w/chunks").count()
         )
-        assert n_rows == 20  # maximal runs given C-order row bound
+        assert n_rows == 1  # the cells fill the chunk's box
         got = wh.collections.read("w").arrays.get_by_id("a1").read_data(
             (slice(None), slice(None))
         )
@@ -1398,6 +1401,107 @@ def test_cells_df_resolves_last_write_wins_like_cell_df(spark, tmp_path):
     assert everything.value.sum() == want["a"].sum() + want["b"].sum()
 
 
+def test_cells_df_excludes_overlapping_dirs_of_many_arrays(spark, tmp_path, monkeypatch):
+    """The plain plan excludes every dir with overlapping runs through one
+    set of dir keys, not a term per array: with 2000 arrays reported as
+    overlapping, a per-array OR tree overflowed the JVM stack while the
+    filter was built. A real updated array still reads one row per
+    cell, with its latest value."""
+    from deker_server_adapters_spark.core.storage import ChunkStore
+
+    wh = Warehouse(spark, str(tmp_path / "whmany"))
+    coll = wh.collections.create("w", SCHEMA)
+    base = np.arange(240, dtype=np.float64).reshape(20, 12)
+    a = coll.arrays.create(id_="a", data=base)
+    a.update((slice(2, 5), slice(3, 6)), -1.0)
+    want = base.copy()
+    want[2:5, 3:6] = -1.0
+    found = ChunkStore._chunks_with_overlapping_runs
+
+    def many(self, array_ids):
+        out = found(self, array_ids)
+        assert out == {"a": [0]}
+        return {**out, **{f"ghost{i}": [0, 1] for i in range(2000)}}
+
+    monkeypatch.setattr(ChunkStore, "_chunks_with_overlapping_runs", many)
+    cells = coll.arrays.cells_df().toPandas()
+    assert len(cells) == 240
+    got = np.full((20, 12), np.nan)
+    got[cells.x, cells.y] = cells.value
+    np.testing.assert_array_equal(got, want)
+
+
+def test_filled_box_append_writes_one_run_per_file(spark, tmp_path):
+    """Each writer task whose cells fill a box (whole rows of a range
+    of x) stages one run, not one per row; ``compact`` folds the
+    chunk's files into one file of one run, since together they fill
+    the chunk."""
+    import pyarrow.parquet as pq
+
+    from deker_server_adapters_spark.core.storage import ChunkStore, visible_chunk_files
+
+    root = str(tmp_path / "whbox")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+    register(spark)
+    data = np.arange(240, dtype=np.float64).reshape(20, 12)
+    (
+        spark.createDataFrame(
+            [("a1", i, j, float(data[i, j])) for i in range(20) for j in range(12)],
+            "array_id string, x long, y long, value double",
+        )
+        .repartitionByRange(4, "x")
+        .write.format("deker")
+        .option("path", root).option("collection", "w")
+        .mode("append").save()
+    )
+    (d,) = [
+        os.path.join(dp, n)
+        for dp, dirs, _ in os.walk(os.path.join(root, "collections", "w", "chunks"))
+        for n in dirs
+        if n.startswith("chunk_idx=")
+    ]
+    files = visible_chunk_files(d)
+    assert len(files) > 1
+    assert [pq.read_metadata(f).num_rows for f in files] == [1] * len(files)
+    ChunkStore(spark, os.path.join(root, "collections", "w")).compact()
+    (folded,) = visible_chunk_files(d)
+    assert pq.read_metadata(folded).num_rows == 1
+    np.testing.assert_array_equal(coll.arrays.get_by_id("a1").read_data(), data)
+
+
+def test_writer_task_keeps_the_later_row_of_a_cell(spark, tmp_path):
+    """A writer task given one cell twice, within one Arrow batch or
+    across two, stores the later row."""
+    import pyarrow as pa
+
+    from deker_server_adapters_spark.sources.deker_datasource import DekerWriter
+
+    root = str(tmp_path / "whdup")
+    wh = Warehouse(spark, root)
+    coll = wh.collections.create("w", SCHEMA)
+
+    def batch(rows):
+        x, y, v = zip(*rows)
+        return pa.record_batch(
+            {
+                "array_id": pa.array(["d1"] * len(rows)),
+                "x": pa.array(x, pa.int64()),
+                "y": pa.array(y, pa.int64()),
+                "value": pa.array(v, pa.float64()),
+            }
+        )
+
+    schema = spark.createDataFrame([], "array_id string, x long, y long, value double").schema
+    writer = DekerWriter(root, "w", schema, create_arrays=True)
+    first = [(0, 0, 1.0), (3, 4, 5.0), (0, 1, 2.0), (0, 0, 3.0), (0, 0, 4.0)]
+    second = [(0, 1, 6.0), (3, 5, 7.0), (3, 4, 8.0)]
+    writer.commit([writer.write(iter([batch(first), batch(second)]))])
+    want = np.zeros((20, 12))
+    want[0, 0], want[0, 1], want[3, 4], want[3, 5] = 4.0, 6.0, 8.0, 7.0
+    np.testing.assert_array_equal(coll.arrays.get_by_id("d1").read_data(), want)
+
+
 def test_walk_chunk_dirs_names_and_prunes(tmp_path):
     """The one chunk-dir walker: ``(array_id, chunk_idx, path)`` by id,
     then chunk index (numeric, not by name), unescaping ids; given ids,
@@ -1555,14 +1659,10 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
 
 
 def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):
-    """ADVICE r8: when a task's within-task run counter overflows its
-    seq range, the writer must reserve the next range through the
-    process-global counter — a later next_write_seq() in the same
-    process must stamp NEWER than every run the overflowing task
-    wrote, or last-write-wins inverts. Counter bits shrink to 2 and
-    the clock freezes so the overflow path runs deterministically."""
-    import glob as _glob
-    import os
+    """ADVICE r8: a later next_write_seq() in the same process must
+    stamp NEWER than every run a writer task wrote, or last-write-wins
+    inverts. Counter bits shrink to 2 and the clock freezes, so every
+    stamp comes from the process-global monotonic branch."""
     import time
 
     import pyarrow as pa
@@ -1582,7 +1682,6 @@ def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):
     wh = Warehouse(spark, root)
     wh.collections.create("w", SCHEMA)
     monkeypatch.setattr(storage, "_SEQ_COUNTER_BITS", 2)
-    monkeypatch.setattr(dds, "_SEQ_COUNTER_BITS", 2)
     # frozen clock: every next_write_seq() takes the monotonic branch
     monkeypatch.setattr(time, "time_ns", lambda: 0)
     struct = StructType(
@@ -1594,7 +1693,7 @@ def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):
         ]
     )
     writer = dds.DekerWriter(root, "w", struct, create_arrays=True)
-    # 24 single-cell runs (gapped y) -> five 2-bit counter overflows
+    # 24 single-cell runs (gapped y)
     cells = [(x, y) for x in range(4) for y in range(0, 12, 2)]
     batch = pa.record_batch(
         {
@@ -1605,9 +1704,7 @@ def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):
         }
     )
     commit = writer.write(iter([batch]))
-    max_seq = max(
-        pq.read_table(f)["seq"].to_pylist()[-1] for f in commit.files
-    )
+    max_seq = max(max(pq.read_table(f)["seq"].to_pylist()) for f in commit.files)
     assert storage.next_write_seq() > max_seq
 
 

@@ -21,6 +21,25 @@ def _plan(spark, sf_dir, name):
     return _OPS[name].builder(spark, sf_dir)
 
 
+def _poison_actions(spark, monkeypatch) -> None:
+    """Make every driver action of this session's DataFrame class raise
+    until ``monkeypatch.undo()``. The class is ``type(spark.range(1))``:
+    the classic DataFrame subclass defines its own actions, so poisoning
+    ``pyspark.sql.DataFrame`` would never reach them."""
+    cls = type(spark.range(1))
+
+    def poisoned(name):
+        def action(self, *a, **k):
+            raise AssertionError(f"builder called eager action DataFrame.{name}()")
+
+        return action
+
+    for name in ("first", "head", "take", "collect", "count", "toPandas"):
+        monkeypatch.setattr(cls, name, poisoned(name))
+    with pytest.raises(AssertionError, match="eager action"):
+        spark.range(1).count()
+
+
 def test_q1_filter_reaches_scan(spark, sf_dir):
     pf = pushed_filters(_plan(spark, sf_dir, "q1_pricing_summary"))
     assert "LessThanOrEqual(l_shipdate" in pf
@@ -285,16 +304,7 @@ def test_user_value_decay_lazy_broadcast_tmax(spark, sf_dir, monkeypatch):
     synchronous barrier and a second full scan at plan-BUILD time
     (VERDICT r6 item 2). Poison every driver action for the duration of
     the build: a lazy builder never needs one."""
-    from pyspark.sql import DataFrame
-
-    def _poisoned(name):
-        def action(self, *a, **k):
-            raise AssertionError(f"builder called eager action DataFrame.{name}()")
-
-        return action
-
-    for name in ("first", "head", "take", "collect", "count", "toPandas"):
-        monkeypatch.setattr(DataFrame, name, _poisoned(name))
+    _poison_actions(spark, monkeypatch)
     df = _plan(spark, sf_dir, "events_user_value_decay")
     monkeypatch.undo()
     plan = physical_plan(df)
@@ -369,16 +379,7 @@ def test_cross_source_matrix_pairs_broadcast(spark, sf_dir):
 def test_source_token_mix_total_is_lazy_broadcast(spark, sf_dir, monkeypatch):
     """The corpus token total reaches the share expression as a
     broadcast 1-row aggregate, never an eager driver action."""
-    from pyspark.sql import DataFrame
-
-    def _poisoned(name):
-        def action(self, *a, **k):
-            raise AssertionError(f"builder called eager action DataFrame.{name}()")
-
-        return action
-
-    for name in ("first", "head", "take", "collect", "count", "toPandas"):
-        monkeypatch.setattr(DataFrame, name, _poisoned(name))
+    _poison_actions(spark, monkeypatch)
     df = _plan(spark, sf_dir, "docs_source_token_mix")
     monkeypatch.undo()
     assert "BroadcastNestedLoopJoin" in physical_plan(df)
@@ -390,16 +391,7 @@ def test_corpus_total_is_lazy_broadcast(spark, sf_dir, monkeypatch, op_name):
     1-row aggregate (the oracle's CROSS JOIN n shape), never an eager
     driver .count() — an eager action in the builder is a synchronous
     barrier and an extra pass at plan-BUILD time (VERDICT r7 item 5)."""
-    from pyspark.sql import DataFrame
-
-    def _poisoned(name):
-        def action(self, *a, **k):
-            raise AssertionError(f"builder called eager action DataFrame.{name}()")
-
-        return action
-
-    for name in ("first", "head", "take", "collect", "count", "toPandas"):
-        monkeypatch.setattr(DataFrame, name, _poisoned(name))
+    _poison_actions(spark, monkeypatch)
     df = _plan(spark, sf_dir, op_name)
     monkeypatch.undo()
     assert "BroadcastNestedLoopJoin" in physical_plan(df)  # 1-row side
