@@ -18,9 +18,11 @@ arrays, varrays and the ``deker`` source call it rather than repeat it:
   collection (the vgrid of a varray schema, else
   ``default_chunk_grid``);
 - *cell view*: ``ChunkStore.cell_df`` is the one long-format view of
-  any set of arrays;
-- *run replay*: ``place_runs`` places a chunk's runs into a box, last
-  write winning, for ``read_slice`` and the ``deker`` source alike.
+  any set of arrays, planned from the directory listing alone;
+- *run replay*: ``ordered_runs`` is the one placement order, and
+  ``place_runs`` places a chunk's runs into a box, last write winning,
+  for ``read_slice``; ``replay_runs`` resolves a whole chunk that way
+  for the fold, ``cell_df`` and the ``deker`` batch reader alike.
 
 Spark-first consequences:
 
@@ -73,10 +75,11 @@ Spark-first consequences:
 - ``cell_df`` exposes any set of arrays as a long-format DataFrame
   (array id, dim indices, value) with pure-JVM index arithmetic, so
   arrays join/aggregate with relational tables in one Catalyst plan.
-  It is last-write-wins like ``read_data``: the driver reads only the
-  ``origin``/``shape`` columns of each chunk dir, and only dirs whose
-  runs overlap take a resolving aggregate; the rest keep the plain,
-  shuffle-free plan.
+  It is last-write-wins like ``read_data``. A file's runs never overlap,
+  so only a chunk dir of two or more files can hold a cell twice: the
+  driver picks those dirs from the listing, without opening a file,
+  and replays each one in a ``mapInArrow`` task (``replay_runs``);
+  every other dir keeps the plain, shuffle-free plan.
 - ``stats()`` snapshots the module's counters: cache hits, misses,
   evictions and cached bytes, delta appends, folds, and the chunk reads
   and runs they replayed.
@@ -559,13 +562,6 @@ def _list_parts(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
     return col.offsets.to_numpy(), values.to_numpy(zero_copy_only=values.null_count == 0)
 
 
-def _list_rows(col: pa.ChunkedArray) -> np.ndarray:
-    """A column of equal-length lists as a 2-d NumPy array, one row per
-    list."""
-    offsets, values = _list_parts(col.combine_chunks())
-    return values[offsets[0] : offsets[-1]].reshape(len(offsets) - 1, -1)
-
-
 def chunk_runs(table: pa.Table) -> Iterator[tuple[int, np.ndarray, tuple, np.ndarray]]:
     """``(seq, origin, shape, values)`` for each run row of one chunk
     file, in row order. ``values`` is a flat, read-only view of the
@@ -613,41 +609,6 @@ def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tupl
     return runs
 
 
-def run_boxes(runs: Sequence[tuple]) -> tuple[np.ndarray, np.ndarray]:
-    """(origins, shapes) of ``runs``, one row per run."""
-    return np.array([r[1] for r in runs], np.int64), np.array([r[2] for r in runs], np.int64)
-
-
-def runs_overlap(origins: np.ndarray, shapes: np.ndarray) -> bool:
-    """Whether any two boxes ``[origin, origin + shape)`` (one per row)
-    share a cell. A sweep sorts the boxes by start along the dimension
-    that leaves the fewest candidate pairs (later-starting boxes that
-    start before a box ends); the candidates are then compared on every
-    dimension at once, a bounded block at a time — milliseconds for the
-    thousands of runs of a ``deker``-writer chunk."""
-    n = len(origins)
-    if n < 2:
-        return False
-    lo = np.asarray(origins, np.int64).reshape(n, -1)
-    hi = lo + np.asarray(shapes, np.int64).reshape(n, -1)
-    best = None
-    for d in range(lo.shape[1]):
-        order = np.argsort(lo[:, d], kind="stable")
-        ends = np.searchsorted(lo[order, d], hi[order, d])
-        counts = np.maximum(ends - np.arange(1, n + 1), 0)
-        if best is None or counts.sum() < best[1].sum():
-            best = (order, counts)
-    order, counts = best
-    for block in np.array_split(np.arange(n), max(1, int(counts.sum()) >> 20)):
-        c = counts[block]
-        i = np.repeat(block, c)
-        j = i + 1 + np.arange(c.sum()) - np.repeat(np.cumsum(c) - c, c)
-        a, b = order[i], order[j]
-        if np.any(np.all((lo[a] < hi[b]) & (lo[b] < hi[a]), axis=1)):
-            return True
-    return False
-
-
 def _overlap(origin, shape, lo, hi) -> tuple[tuple, tuple] | None:
     """The cells a run at ``origin``/``shape`` shares with the box
     ``[lo, hi)``, as (slices into the run, slices into the box), or
@@ -677,6 +638,22 @@ def place_runs(
             out[hit[1]] = values.reshape(shape)[hit[0]]
             if written is not None:
                 written[hit[1]] = True
+
+
+def replay_runs(runs: Sequence[tuple]) -> tuple[list[int], np.ndarray, np.ndarray]:
+    """``(lo, values, written)``: one chunk dir's placement-ordered
+    ``runs`` (:func:`ordered_runs`, at least one) replayed by
+    :func:`place_runs` into a buffer over their bounding box at ``lo``,
+    at most the chunk's extent, with the mask of the cells they write.
+    The fold, ``cell_df`` and the ``deker`` batch reader resolve a
+    chunk's cells through here."""
+    origins = np.array([r[1] for r in runs], np.int64)
+    ends = origins + np.array([r[2] for r in runs], np.int64)
+    lo = origins.min(axis=0).tolist()
+    values = np.empty(ends.max(axis=0) - lo)
+    written = np.zeros(values.shape, bool)
+    place_runs(runs, lo, values, written)
+    return lo, values, written
 
 
 def written_runs(seq: int, lo: Sequence[int], values: np.ndarray, written: np.ndarray) -> list:
@@ -720,7 +697,13 @@ def _list_array(parts: list, type_: pa.DataType) -> pa.ListArray:
 def encode_runs(runs: Iterable[tuple[int, Sequence[int], Sequence[int], np.ndarray]]) -> pa.Table:
     """The one chunk-file encoding: a row per ``(seq, origin, shape,
     values)`` run, ``values`` flat in C order — what :func:`chunk_runs`
-    reads back. Every writer of chunk files encodes through here."""
+    reads back. Every writer of chunk files encodes through here.
+
+    Invariant: the runs of one file are pairwise disjoint. Each writer
+    passes one dense run, one delta run or the :func:`written_runs` of
+    one box, so a cell is written at most once per file, and only a
+    chunk dir holding two or more files can hold a cell twice — the
+    one kind of dir ``cell_df`` replays."""
     runs = list(runs)
     return pa.table(
         {
@@ -843,8 +826,8 @@ def _merge_chunk_dir(d: str) -> int:
     rewritten.
 
     - The fold *replays* the dir's runs last-write-wins with
-      :func:`place_runs` into one buffer over the runs' bounding box (at
-      most the chunk's extent) and encodes the written cells with
+      :func:`replay_runs` into one buffer over the runs' bounding box
+      (at most the chunk's extent) and encodes the written cells with
       :func:`written_runs`: no two output runs overlap, and a chunk the
       runs fill, such as a dense chunk with its deltas or a ``deker``
       chunk written row by row, folds to one run.
@@ -888,12 +871,7 @@ def _merge_chunk_dir(d: str) -> int:
             return 0
         runs = ordered_runs(tables)
     if runs:
-        origins, shapes = run_boxes(runs)
-        lo = origins.min(axis=0).tolist()
-        buf = np.empty((origins + shapes).max(axis=0) - lo)
-        written = np.zeros(buf.shape, bool)
-        place_runs(runs, lo, buf, written)
-        runs = written_runs(runs[0][0], lo, buf, written)  # the oldest seq replaced
+        runs = written_runs(runs[0][0], *replay_runs(runs))  # the oldest seq replaced
     out = os.path.join(d, _rewrite_name(paths))
     tmp = stage_chunk_file(d, encode_runs(runs), f".{os.path.basename(out)}.tmp")
     publish_staged([(tmp, out)], _REWRITE_TMP)
@@ -1305,52 +1283,34 @@ class ChunkStore:
             if len(visible_chunk_files(d)) > FOLD_FILES:
                 _merge_chunk_dir(d)
 
-    def _chunks_with_overlapping_runs(self, array_ids: Sequence[str] | None) -> dict[str, list[int]]:
-        """Per array id, the chunk indices whose runs overlap, read on
-        the driver from only the ``origin``/``shape`` columns of each
-        chunk dir's files (every array's dirs when ``array_ids`` is
-        None). A dir a fold rewrites under the read counts as
-        overlapping: the resolving plan is right for any dir."""
-        out: dict[str, list[int]] = {}
-        for array_id, idx, d in walk_chunk_dirs(self.path, array_ids):
-            origins, shapes = [], []
-            try:
-                for p in visible_chunk_files(d):
-                    with pq.ParquetFile(p) as f:
-                        t = f.read(columns=["origin", "shape"])
-                    if t.num_rows:
-                        origins.append(_list_rows(t.column("origin")))
-                        shapes.append(_list_rows(t.column("shape")))
-            except FileNotFoundError:
-                origins = shapes = None
-            if origins is None or (
-                origins and runs_overlap(np.concatenate(origins), np.concatenate(shapes))
-            ):
-                out.setdefault(array_id, []).append(idx)
-        return out
-
     def cell_df(self, array_ids: Sequence[str] | None, dim_names: Sequence[str]) -> DataFrame:
         """Long-format view of the arrays ``array_ids`` (every array of
         the collection when None): one ``(array_id, dims..., value)``
-        row per written cell, pure-JVM index math (each run's ``data``
-        exploded with its positions, then div/mod over the run shape) —
-        no Python in the path, so arrays compose with SQL at full
-        codegen speed. The ids filter the ``array_id`` partition
-        column, so the scan reads only those arrays' dirs.
+        row per written cell, each resolved LAST-WRITE-WINS as in
+        ``read_data``.
 
-        Each cell resolves LAST-WRITE-WINS, as in ``read_data``. Chunk
-        dirs whose runs do not overlap
-        (:meth:`_chunks_with_overlapping_runs`, a driver-side read of
-        the run boxes) keep the plain plan, with no shuffle. Only dirs
-        with overlapping runs (delta runs of updates not yet folded,
-        overlapping ``deker`` appends) take a ``max_by(value, (seq,
-        file name, row))`` aggregate over the array id and cell
-        coordinates — ``read_slice``'s placement order — and the two
+        The driver lists the chunk dirs (``walk_chunk_dirs``, pruned to
+        the given ids) and their visible files, and opens none. A file's
+        runs never overlap (:func:`encode_runs`), so a dir of one file
+        takes the plain plan: a scan of the chunk dataset, each run's
+        ``data`` exploded with its positions and div/mod over the run
+        shape — pure-JVM index math, no Python and no shuffle, with the
+        ids as an ``array_id`` partition filter. A dir of two or more
+        files (unfolded update deltas, ``deker`` appends) is left out
+        of that scan and replayed instead: one ``mapInArrow`` over the
+        ``(array_id, dir)`` table, each task replaying one dir at a time
+        through :func:`replay_runs`, as ``read_data`` and the ``deker``
+        source do, and emitting its written cells. A task holds one
+        dir's runs and one buffer of at most the chunk's extent. The two
         plans are unioned."""
         df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
         if array_ids is not None:
             df = df.filter(F.col("array_id").isin(list(array_ids)))
-        overlapping = self._chunks_with_overlapping_runs(array_ids)
+        multi = [
+            (array_id, idx, d)
+            for array_id, idx, d in walk_chunk_dirs(self.path, array_ids)
+            if len(visible_chunk_files(d)) > 1
+        ]
         n = len(dim_names)
         strides = []
         for d in range(n):
@@ -1362,27 +1322,35 @@ class ChunkStore:
             (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
             for d in range(n)
         ]
-        cells = F.posexplode("data").alias("pos", "value")
-        plain = df
-        if overlapping:
+        if multi:
             # one IN-set over a dir key: a chunk index holds no "/", so
-            # the key names one dir, however many arrays overlap
-            keys = [f"{a}/{i}" for a, idxs in overlapping.items() for i in idxs]
-            in_overlap = F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys)
-            plain = df.filter(~in_overlap)
-        plain = plain.select("array_id", "origin", "shape", cells).select("array_id", *cols, "value")
-        if not overlapping:
+            # the key names one dir, however many arrays have such dirs
+            keys = [f"{a}/{i}" for a, i, _ in multi]
+            df = df.filter(~F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys))
+        plain = df.select("array_id", "origin", "shape", F.posexplode("data").alias("pos", "value"))
+        plain = plain.select("array_id", *cols, "value")
+        if not multi:
             return plain
-        placed = F.struct(
-            F.coalesce(F.col("seq"), F.lit(-1)),
-            F.col("_metadata.file_name"),
-            F.col("_metadata.row_index"),
+        schema = StructType(
+            [StructField("array_id", StringType())]
+            + [StructField(name, LongType()) for name in dim_names]
+            + [StructField("value", DoubleType())]
         )
-        resolved = (
-            df.filter(in_overlap)
-            .select("array_id", "origin", "shape", placed.alias("__placed"), cells)
-            .select("array_id", *cols, "value", "__placed")
-            .groupBy("array_id", *dim_names)
-            .agg(F.max_by("value", "__placed").alias("value"))
-        )
-        return plain.unionByName(resolved)
+
+        def replay(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                for array_id, d in zip(batch.column("array_id").to_pylist(), batch.column("dir").to_pylist()):
+                    runs = ordered_runs(read_chunk_files(visible_chunk_files(d))[1])
+                    if not runs:
+                        continue  # a dir deleted or emptied since planning
+                    lo, values, written = replay_runs(runs)
+                    at = np.argwhere(written)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.repeat(pa.scalar(array_id), len(at))]
+                        + [pa.array(at[:, k] + lo[k]) for k in range(n)]
+                        + [pa.array(values[written])],
+                        names=schema.names,
+                    )
+
+        dirs = self.spark.createDataFrame([(a, d) for a, _, d in multi], "array_id string, dir string")
+        return plain.unionByName(dirs.mapInArrow(replay, schema))

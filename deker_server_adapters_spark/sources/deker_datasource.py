@@ -19,16 +19,16 @@ parquet scan inside ``ChunkStore``) and filter pushdown at two levels:
 ``value`` predicates (and anything else) are left for Spark.
 
 A batch read is LAST-WRITE-WINS per cell, like the engine's
-``read_data`` and ``cell_df``: each written cell emits once, with its
-latest value, so an update's delta runs and overlapping appends are
-never counted twice. A task resolves only a chunk whose runs overlap;
-every other chunk emits its runs as stored. ``readStream`` keeps the
-append-log changefeed, one row per stored run cell.
+``read_data`` and ``cell_df``: each task replays its chunk's runs
+(``core.storage.replay_runs``) and emits each written cell once, with
+its latest value, so an update's delta runs and overlapping appends are
+never counted twice. ``readStream`` keeps the append-log changefeed,
+one row per stored run cell.
 
 Every storage decision comes from ``core.storage``, none is repeated
 here: the chunk-dir walk (``walk_chunk_dirs``), the grid
 (``ChunkGrid.for_schema`` of the collection's schema), the file codec
-and the run replay (``place_runs``). Partition planning walks the
+and the run replay (``replay_runs``). Partition planning walks the
 chunk directory tree on the driver — O(surviving chunks) after
 pruning, the same cost class as Spark's own file-source listing. A
 100 TB deployment swaps the walk for a manifest/metastore lookup; the
@@ -91,18 +91,15 @@ from pyspark.sql.types import (
 from deker_server_adapters_spark.core.array import meta_file_name, write_meta
 from deker_server_adapters_spark.core.schema import collection_schema
 from deker_server_adapters_spark.core.storage import (
-    TMP_PREFIX,  # noqa: F401  (re-exported: the writers' temp-name prefix)
     ChunkGrid,
     appended_name,
     chunk_dir,
     discard_staged,
     encode_runs,
     ordered_runs,
-    place_runs,
     publish_staged,
     read_chunk_files,
-    run_boxes,
-    runs_overlap,
+    replay_runs,
     stage_chunk_file,
     staged_prefix,
     visible_chunk_files,
@@ -166,17 +163,13 @@ def _chunk_cell_batches(
     """Expand one chunk partition's parquet rows into Arrow cell
     batches — shared by the batch and stream readers.
 
-    ``batch=True`` (the batch reader): LAST-WRITE-WINS per cell. A
-    chunk whose runs do not overlap (``core.storage.runs_overlap``, a
-    vectorised check of the run boxes) emits each run's cells as they
-    are: a folded chunk, or the disjoint runs ``written_runs`` packed
-    for one writer task. Only a chunk with overlapping runs (unfolded
-    update deltas, appends that re-write cells) replays them into a
-    chunk-local buffer through ``core.storage.place_runs``, the
-    engine's ``read_slice`` replay, and emits each written cell once
-    with its latest value. Memory for that replay is one chunk's dense
-    extent (the storage design unit) plus the run list. A planned file
-    that vanished is re-listed (``read_chunk_files``).
+    ``batch=True`` (the batch reader): LAST-WRITE-WINS per cell. The
+    chunk's runs are replayed through ``core.storage.replay_runs``, the
+    one replay the fold and ``cell_df`` use, into a buffer over their
+    bounding box, and each written cell emits once with its latest
+    value. Memory for that replay is at most one chunk's dense extent
+    (the storage design unit) plus the run list. A planned file that
+    vanished is re-listed (``read_chunk_files``).
     ``batch=False`` (the stream reader's changefeed): append-log
     semantics — one row per materialized RUN cell, so a cell re-written
     by a later write appears once per write; a vanished file is
@@ -243,16 +236,9 @@ def _chunk_cell_batches(
                 warnings.warn(f"deker chunk file vanished (fold?): {path}")
 
     runs = ordered_runs(tables)
-    if batch and runs_overlap(*run_boxes(runs)):
-        box = grid.chunk_box(partition.chunk_idx)
-        lo = [a for a, _ in box]
-        buf = np.empty([b - a for a, b in box], dtype=np.float64)
-        written = np.zeros(buf.shape, dtype=bool)
-        place_runs(runs, lo, buf, written)
-        rel = np.argwhere(written)
-        if not len(rel):
-            return
-        cells = emit(rel.T + np.asarray(lo, dtype=np.int64)[:, None], buf[written])
+    if batch and runs:
+        lo, values, written = replay_runs(runs)
+        cells = emit(np.argwhere(written).T + np.asarray(lo, dtype=np.int64)[:, None], values[written])
         if cells is not None:
             yield cells
         return
@@ -330,7 +316,9 @@ class DekerDataSource(DataSource):
 class DekerReader(DataSourceReader):
     """Batch reader over one collection's chunk store.
 
-    Cells resolve last-write-wins, one row per written cell (see
+    Cells resolve last-write-wins, one row per written cell: each task
+    replays its chunk's runs through ``core.storage.replay_runs``, as
+    ``read_data`` and ``cell_df`` resolve them (see
     :func:`_chunk_cell_batches`).
 
     Isolation under concurrency: when a planned file vanishes mid-read

@@ -608,3 +608,44 @@ def test_array_writes_leave_partition_overwrite_mode_alone(warehouse, spark, tmp
     coll = warehouse.collections.create("weather", SCHEMA)
     coll.arrays.create({"station": "s1"}, data=np.ones((20, 12)))
     assert partitions_after_overwrite(str(tmp_path / "after")) == ["c"]
+
+
+def test_request_path_runs_without_a_session(tmp_path):
+    """The request ops run on a ``Warehouse`` with no SparkSession and
+    agree with NumPy: collection create; array create with data,
+    ``update`` (enough of them to fold a chunk), ``clear`` and
+    ``read_data``; ``get_by_primary_attributes``, ``get_by_id``,
+    ``read_meta``, ``update_meta_custom_attributes`` and ``delete``;
+    varray create, update and read. docs/PARITY.md lists the ops that
+    need a session."""
+    from deker_server_adapters_spark.core.storage import FOLD_FILES
+
+    wh = Warehouse(None, str(tmp_path / "wh"))
+    coll = wh.collections.create("weather", SCHEMA)
+    want = np.arange(240, dtype=np.float64).reshape(20, 12)
+    arr = coll.arrays.create({"station": "s1"}, {"comment": "a"}, data=want)
+    arr.update((slice(2, 7), slice(3, 9)), -1.0)
+    want[2:7, 3:9] = -1.0
+    for i in range(FOLD_FILES + 1):
+        arr.update((i % 20, slice(None)), np.arange(12.0) * i)
+        want[i % 20] = np.arange(12.0) * i
+    arr.clear((slice(10, 12), slice(0, 5)))
+    want[10:12, 0:5] = SCHEMA.fill_value
+    np.testing.assert_array_equal(arr.read_data(), want)
+    np.testing.assert_array_equal(arr.read_data((slice(1, 5), 3)), want[1:5, 3])
+
+    assert coll.arrays.get_by_primary_attributes({"station": "s1"}).id == arr.id
+    assert coll.arrays.get_by_id(arr.id).primary_attributes == {"station": "s1"}
+    coll.arrays.update_meta_custom_attributes(arr, {"comment": "b"})
+    assert coll.arrays.read_meta(arr)["custom_attributes"] == {"comment": "b"}
+    coll.arrays.delete(arr)
+    assert coll.arrays.get_by_id(arr.id) is None
+    assert coll.arrays.get_by_primary_attributes({"station": "s1"}) is None
+
+    vcoll = wh.collections.create("grid", VSCHEMA)
+    vwant = np.arange(96, dtype=np.float64).reshape(12, 8)
+    va = vcoll.varrays.create(data=vwant)
+    va.update((slice(2, 9), slice(1, 6)), 5.0)  # spans four vgrid cells
+    vwant[2:9, 1:6] = 5.0
+    np.testing.assert_array_equal(vcoll.varrays.get_by_id(va.id).read_data(), vwant)
+    np.testing.assert_array_equal(va.read_data((slice(3, 5), 4)), vwant[3:5, 4])

@@ -767,11 +767,8 @@ def test_orphaned_temp_files_are_invisible_and_gcd(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from deker_server_adapters_spark.core.storage import ChunkStore
-    from deker_server_adapters_spark.sources.deker_datasource import (
-        DekerStreamReader,
-        TMP_PREFIX,
-    )
+    from deker_server_adapters_spark.core.storage import TMP_PREFIX, ChunkStore
+    from deker_server_adapters_spark.sources.deker_datasource import DekerStreamReader
 
     root = str(tmp_path / "whorph")
     wh = Warehouse(spark, root)
@@ -846,8 +843,7 @@ def test_gc_temps_skips_undeletable_entries_and_runs_from_compact(spark, tmp_pat
     import glob as _glob
     import os
 
-    from deker_server_adapters_spark.core.storage import ChunkStore
-    from deker_server_adapters_spark.sources.deker_datasource import TMP_PREFIX
+    from deker_server_adapters_spark.core.storage import TMP_PREFIX, ChunkStore
 
     root = str(tmp_path / "whgc")
     wh = Warehouse(spark, root)
@@ -1401,34 +1397,90 @@ def test_cells_df_resolves_last_write_wins_like_cell_df(spark, tmp_path):
     assert everything.value.sum() == want["a"].sum() + want["b"].sum()
 
 
-def test_cells_df_excludes_overlapping_dirs_of_many_arrays(spark, tmp_path, monkeypatch):
-    """The plain plan excludes every dir with overlapping runs through one
-    set of dir keys, not a term per array: with 2000 arrays reported as
-    overlapping, a per-array OR tree overflowed the JVM stack while the
-    filter was built. A real updated array still reads one row per
-    cell, with its latest value."""
-    from deker_server_adapters_spark.core.storage import ChunkStore
+def test_cells_df_excludes_overlapping_dirs_of_many_arrays(spark, tmp_path):
+    """The plain plan excludes every multi-file dir through one set of
+    dir keys, not a term per array: a per-array OR tree overflowed the
+    JVM stack while the filter was built. 2000 arrays whose one chunk
+    holds an unfolded update (copies of one updated array's dir) read
+    one row per cell, each with its latest value, beside an array
+    without an update."""
+    import os
+    import shutil
 
-    wh = Warehouse(spark, str(tmp_path / "whmany"))
+    from pyspark.sql import functions as F
+
+    from deker_server_adapters_spark.core.storage import chunk_dir, visible_chunk_files
+
+    root = str(tmp_path / "whmany")
+    wh = Warehouse(spark, root)
+    small = ArraySchema(
+        dtype="float64", dimensions=(DimensionSchema("x", 4), DimensionSchema("y", 4))
+    )
+    coll = wh.collections.create("w", small)
+    base = np.arange(16, dtype=np.float64).reshape(4, 4)
+    a = coll.arrays.create(id_="a", data=base)
+    a.update((slice(1, 3), slice(1, 4)), -1.0)
+    coll.arrays.create(id_="plain", data=base)
+    chunks = os.path.join(root, "collections", "w", "chunks")
+    assert len(visible_chunk_files(chunk_dir(chunks, "a", 0))) == 2
+    for i in range(2000):
+        shutil.copytree(chunk_dir(chunks, "a"), chunk_dir(chunks, f"c{i:04d}"))
+    want = base.copy()
+    want[1:3, 1:4] = -1.0
+
+    cells = coll.arrays.cells_df()
+    per_array = cells.groupBy("array_id").agg(F.count("value").alias("n"), F.sum("value").alias("s"))
+    got = {r["array_id"]: (r["n"], r["s"]) for r in per_array.collect()}
+    assert got.pop("plain") == (16, base.sum())
+    assert got == {aid: (16, want.sum()) for aid in ["a", *(f"c{i:04d}" for i in range(2000))]}
+    mine = cells.filter(F.col("array_id") == "c1999").toPandas()
+    dense = np.full((4, 4), np.nan)
+    dense[mine.x, mine.y] = mine.value
+    np.testing.assert_array_equal(dense, want)
+
+
+def test_cell_df_build_opens_no_chunk_file(spark, tmp_path, monkeypatch):
+    """Building ``cell_df`` over an updated array plans from the
+    directory listing alone: no chunk file is opened on the driver
+    while the DataFrame is built. The view still resolves the update."""
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path / "whnoopen"))
     coll = wh.collections.create("w", SCHEMA)
     base = np.arange(240, dtype=np.float64).reshape(20, 12)
     a = coll.arrays.create(id_="a", data=base)
     a.update((slice(2, 5), slice(3, 6)), -1.0)
     want = base.copy()
     want[2:5, 3:6] = -1.0
-    found = ChunkStore._chunks_with_overlapping_runs
 
-    def many(self, array_ids):
-        out = found(self, array_ids)
-        assert out == {"a": [0]}
-        return {**out, **{f"ghost{i}": [0, 1] for i in range(2000)}}
+    def opened(*args, **kwargs):
+        raise AssertionError(f"chunk file opened on the driver: {args}")
 
-    monkeypatch.setattr(ChunkStore, "_chunks_with_overlapping_runs", many)
-    cells = coll.arrays.cells_df().toPandas()
+    with monkeypatch.context() as m:
+        m.setattr(pq, "ParquetFile", opened)
+        df = a.cell_df()
+    cells = df.toPandas()
     assert len(cells) == 240
     got = np.full((20, 12), np.nan)
     got[cells.x, cells.y] = cells.value
     np.testing.assert_array_equal(got, want)
+
+
+def test_cell_df_plan_resolves_without_an_aggregate(spark, tmp_path):
+    """``cell_df`` over an array with an unfolded update replays the
+    multi-file dir in a ``mapInArrow`` task, as ``read_data`` replays it:
+    its physical plan holds no ``max_by`` and no aggregate keyed on the
+    cell coordinates, and no shuffle."""
+    from deker_server_adapters_spark.plans.explain import physical_plan
+
+    wh = Warehouse(spark, str(tmp_path / "whnoagg"))
+    coll = wh.collections.create("w", SCHEMA)
+    a = coll.arrays.create(id_="a", data=np.zeros((20, 12)))
+    a.update((slice(0, 2), slice(0, 2)), 1.0)
+    plan = physical_plan(a.cell_df())
+    for node in ("max_by", "Aggregate", "Exchange"):
+        assert node not in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_filled_box_append_writes_one_run_per_file(spark, tmp_path):
@@ -1472,10 +1524,14 @@ def test_filled_box_append_writes_one_run_per_file(spark, tmp_path):
 
 def test_writer_task_keeps_the_later_row_of_a_cell(spark, tmp_path):
     """A writer task given one cell twice, within one Arrow batch or
-    across two, stores the later row."""
+    across two, stores the later row. Every file a task writes holds
+    pairwise disjoint runs (the ``encode_runs`` invariant ``cell_df``
+    rests on), also for scattered cells given many times over."""
     import pyarrow as pa
 
+    from deker_server_adapters_spark.core.storage import visible_chunk_files, walk_chunk_dirs
     from deker_server_adapters_spark.sources.deker_datasource import DekerWriter
+    from tests.test_storage_properties import file_runs_disjoint
 
     root = str(tmp_path / "whdup")
     wh = Warehouse(spark, root)
@@ -1500,6 +1556,17 @@ def test_writer_task_keeps_the_later_row_of_a_cell(spark, tmp_path):
     want = np.zeros((20, 12))
     want[0, 0], want[0, 1], want[3, 4], want[3, 5] = 4.0, 6.0, 8.0, 7.0
     np.testing.assert_array_equal(coll.arrays.get_by_id("d1").read_data(), want)
+
+    rng = np.random.RandomState(7)
+    rows = list(zip(rng.randint(0, 20, 300).tolist(), rng.randint(0, 12, 300).tolist(), rng.rand(300).tolist()))
+    writer = DekerWriter(root, "w", schema, create_arrays=True)
+    writer.commit([writer.write(iter([batch(rows[:150]), batch(rows[150:])]))])
+    for x, y, v in rows:
+        want[x, y] = v
+    np.testing.assert_array_equal(coll.arrays.get_by_id("d1").read_data(), want)
+    chunks = os.path.join(root, "collections", "w", "chunks")
+    files = [f for _, _, d in walk_chunk_dirs(chunks) for f in visible_chunk_files(d)]
+    assert len(files) == 2 and all(file_runs_disjoint(f) for f in files)
 
 
 def test_walk_chunk_dirs_names_and_prunes(tmp_path):
@@ -1720,10 +1787,8 @@ def test_two_concurrent_writers_both_commit(spark, tmp_path):
 
     import pyarrow as pa
 
-    from deker_server_adapters_spark.sources.deker_datasource import (
-        DekerWriter,
-        TMP_PREFIX,
-    )
+    from deker_server_adapters_spark.core.storage import TMP_PREFIX
+    from deker_server_adapters_spark.sources.deker_datasource import DekerWriter
 
     root = str(tmp_path / "wh2w")
     wh = Warehouse(spark, root)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import pytest
 
 import math
-import os
 import uuid
 
 import numpy as np
@@ -195,6 +194,21 @@ def _sparse_append(store, grid, box, seed, shadow) -> None:
     storage.publish_staged([(p, storage.appended_name(p)) for p in staged], prefix)
 
 
+def file_runs_disjoint(path: str) -> bool:
+    """Whether no two runs of one chunk file share a cell, the invariant
+    ``encode_runs`` states, by comparing every pair of run boxes."""
+    import pyarrow.parquet as pq
+
+    from deker_server_adapters_spark.core.storage import chunk_runs
+
+    boxes = [(o, o + np.asarray(s)) for _, o, s, _ in chunk_runs(pq.read_table(path))]
+    return not any(
+        np.all((lo < hi2) & (lo2 < hi))
+        for i, (lo, hi) in enumerate(boxes)
+        for lo2, hi2 in boxes[i + 1 :]
+    )
+
+
 @given(st.booleans(), st.lists(store_ops(), min_size=1, max_size=24))
 @settings(
     max_examples=15,
@@ -204,9 +218,9 @@ def _sparse_append(store, grid, box, seed, shadow) -> None:
 def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense, ops):
     """Updates, clears, sparse appends, folds and ``compact`` in any
     order against a NumPy shadow. After every step ``read_slice``
-    equals the shadow warm and after ``drop_cached``; after an update
-    no dir it touched holds more than ``FOLD_FILES`` files; a folded
-    dir holds no two overlapping runs."""
+    equals the shadow warm and after ``drop_cached``, and no visible
+    file holds two overlapping runs; after an update no dir it touched
+    holds more than ``FOLD_FILES`` files; a fold leaves one file."""
     from deker_server_adapters_spark.core import storage
 
     fill = -9.0
@@ -218,9 +232,6 @@ def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense
         store.write_array("a1", grid, shadow)
     dirs = [storage.chunk_dir(store.path, "a1", i) for i in range(grid.n_chunks)]
     full = normalize_bounds(slice(None), DELTA_SHAPE)
-
-    def runs_of(d):
-        return storage.ordered_runs(storage.read_chunk_files(storage.visible_chunk_files(d))[1])
 
     with pytest.MonkeyPatch.context() as m:
         m.setattr(storage, "FOLD_FILES", 3)  # fold often
@@ -245,32 +256,11 @@ def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense
             if kind in ("fold", "compact"):
                 for d in dirs if kind == "compact" else [dirs[op[1]]]:
                     assert len(storage.visible_chunk_files(d)) <= 1
-                    assert not storage.runs_overlap(*storage.run_boxes(runs_of(d))), op
-            for d in dirs:  # a dir left by a fold: no two runs overlap
-                files = storage.visible_chunk_files(d)
-                if len(files) == 1 and os.path.basename(files[0]).startswith("part-compact-"):
-                    assert not storage.runs_overlap(*storage.run_boxes(runs_of(d)))
+            for d in dirs:
+                for f in storage.visible_chunk_files(d):
+                    assert file_runs_disjoint(f), (op, f)
             got = store.read_slice("a1", grid, full, np.dtype("float64"), fill_value=fill)
             np.testing.assert_array_equal(got, shadow, err_msg=f"warm after {op}")
             storage.drop_cached(store.path)
             got = store.read_slice("a1", grid, full, np.dtype("float64"), fill_value=fill)
             np.testing.assert_array_equal(got, shadow, err_msg=f"cold after {op}")
-
-
-@given(st.integers(1, 3), st.lists(st.tuples(st.integers(0, 5), st.integers(0, 3)), max_size=24))
-@settings(max_examples=200, deadline=None)
-def test_runs_overlap_matches_pairwise(ndim, corners):
-    """The vectorised sweep agrees with a pairwise comparison of boxes,
-    empty boxes included."""
-    from deker_server_adapters_spark.core.storage import runs_overlap
-
-    rng = np.random.RandomState(len(corners) * 7 + ndim)
-    origins = np.array([[o + rng.randint(0, 3) for _ in range(ndim)] for o, _ in corners]).reshape(-1, ndim)
-    shapes = np.array([[s + rng.randint(0, 2) for _ in range(ndim)] for _, s in corners]).reshape(-1, ndim)
-    ends = origins + shapes
-    want = any(
-        np.all((origins[i] < ends[j]) & (origins[j] < ends[i]))
-        for i in range(len(corners))
-        for j in range(i + 1, len(corners))
-    )
-    assert runs_overlap(origins, shapes) == want
