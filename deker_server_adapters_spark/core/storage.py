@@ -75,11 +75,14 @@ Spark-first consequences:
 - ``cell_df`` exposes any set of arrays as a long-format DataFrame
   (array id, dim indices, value) with pure-JVM index arithmetic, so
   arrays join/aggregate with relational tables in one Catalyst plan.
-  It is last-write-wins like ``read_data``. A file's runs never overlap,
-  so only a chunk dir of two or more files can hold a cell twice: the
-  driver picks those dirs from the listing, without opening a file,
-  and replays each one in a ``mapInArrow`` task (``replay_runs``);
-  every other dir keeps the plain, shuffle-free plan.
+  It is last-write-wins like ``read_data``. A file's runs never overlap
+  in a store marked ``RUNS_DISJOINT``, so only a chunk dir of two or
+  more files can hold a cell twice: the driver picks those dirs from
+  the listing, without opening a file, and replays each one in a
+  ``mapInArrow`` task (``replay_runs``); every other dir keeps the
+  plain, shuffle-free plan. An unmarked store, written before that
+  invariant held, is replayed whole until ``compact`` mends and marks
+  it.
 - ``stats()`` snapshots the module's counters: cache hits, misses,
   evictions and cached bytes, delta appends, folds, and the chunk reads
   and runs they replayed.
@@ -372,6 +375,19 @@ def visible_chunk_files(d: str) -> list[str]:
     except FileNotFoundError:
         return []
     return sorted(os.path.join(d, f) for f in names if is_visible_chunk_file(f))
+
+
+# Marks a chunk store whose every file holds pairwise disjoint runs
+# (:func:`encode_runs`); stores written by older compactions and
+# ``deker`` writers may not. Spark's listing skips "_"-prefixed files.
+RUNS_DISJOINT = "_runs_disjoint"
+
+
+def mark_runs_disjoint(chunks_root: str) -> None:
+    """Mark a chunk store :data:`RUNS_DISJOINT`: collection create and
+    clear, and ``compact`` once it has mended an older store."""
+    os.makedirs(chunks_root, exist_ok=True)
+    open(os.path.join(chunks_root, RUNS_DISJOINT), "a").close()
 
 
 def _read_parquet(path: str) -> pa.Table:
@@ -822,8 +838,9 @@ def _merge_chunk_dir(d: str) -> int:
     """Fold one chunk-partition dir into a single file — the one
     rewrite. An update runs it on the driver once the dir holds more
     than ``FOLD_FILES`` files; ``compact`` runs it on executors. A dir
-    with fewer than two files is left alone. Returns 1 if the dir was
-    rewritten.
+    of one file is rewritten only if that file's runs overlap, as in a
+    store written before :data:`RUNS_DISJOINT` held. Returns 1 if the
+    dir was rewritten.
 
     - The fold *replays* the dir's runs last-write-wins with
       :func:`replay_runs` into one buffer over the runs' bounding box
@@ -861,17 +878,22 @@ def _merge_chunk_dir(d: str) -> int:
       racing ``compact``) are unsupported.
     """
     paths = visible_chunk_files(d)
-    if len(paths) < 2:
+    if not paths:
         return 0
     runs = _cached(d, _signature(paths))
     hit = runs is not None
     if not hit:
         paths, tables = read_chunk_files(paths)
-        if len(paths) < 2:
+        if not paths:
             return 0
         runs = ordered_runs(tables)
     if runs:
-        runs = written_runs(runs[0][0], *replay_runs(runs))  # the oldest seq replaced
+        lo, values, written = replay_runs(runs)
+        if len(paths) == 1 and written.sum() == sum(r[3].size for r in runs):
+            return 0  # one file whose runs write each cell once
+        runs = written_runs(runs[0][0], lo, values, written)  # the oldest seq replaced
+    elif len(paths) == 1:
+        return 0
     out = os.path.join(d, _rewrite_name(paths))
     tmp = stage_chunk_file(d, encode_runs(runs), f".{os.path.basename(out)}.tmp")
     publish_staged([(tmp, out)], _REWRITE_TMP)
@@ -888,6 +910,10 @@ def _merge_chunk_dir(d: str) -> int:
     if hit and sig is not None:
         _cache_put(d, sig, runs)
     return 1
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 
 class ChunkStore:
@@ -1035,6 +1061,9 @@ class ChunkStore:
         compact() calls on one store, or a compact racing the update
         that folds that chunk — are not supported.
 
+        On a store not marked :data:`RUNS_DISJOINT`, the pass also
+        rewrites each single-file dir whose runs overlap, then marks it.
+
         Returns the number of chunk dirs compacted. NOTE for changefeed
         consumers: the merged file is a NEW file, so a running
         ``readStream`` re-emits compacted chunks (CDC re-emission, same
@@ -1061,18 +1090,26 @@ class ChunkStore:
         """
         if gc_temp_age_sec > 0:
             self.gc_temps(max_age_sec=gc_temp_age_sec)
+        mend = not self.runs_disjoint()
         dirs = [
             d
             for _, _, d in walk_chunk_dirs(self.path)
-            if len(visible_chunk_files(d)) >= min_files
+            if (n := len(visible_chunk_files(d))) >= max(min_files, 2) or (mend and n == 1)
         ]
-        if not dirs:
-            return 0
-        sc = self.spark.sparkContext
-        n_slices = min(len(dirs), sc.defaultParallelism)
-        return int(
-            sc.parallelize(dirs, n_slices).map(_merge_chunk_dir).sum()
-        )
+        done = 0
+        if dirs:
+            sc = self.spark.sparkContext
+            n_slices = min(len(dirs), sc.defaultParallelism)
+            done = int(
+                sc.parallelize(dirs, n_slices).map(_merge_chunk_dir).sum()
+            )
+        if mend:
+            mark_runs_disjoint(self.path)
+        return done
+
+    def runs_disjoint(self) -> bool:
+        """Whether this store is marked :data:`RUNS_DISJOINT`."""
+        return os.path.exists(os.path.join(self.path, RUNS_DISJOINT))
 
     def maintenance_stats(self) -> DataFrame:
         """Per-chunk-dir maintenance view — the table an operator
@@ -1290,47 +1327,70 @@ class ChunkStore:
         ``read_data``.
 
         The driver lists the chunk dirs (``walk_chunk_dirs``, pruned to
-        the given ids) and their visible files, and opens none. A file's
-        runs never overlap (:func:`encode_runs`), so a dir of one file
-        takes the plain plan: a scan of the chunk dataset, each run's
-        ``data`` exploded with its positions and div/mod over the run
-        shape — pure-JVM index math, no Python and no shuffle, with the
-        ids as an ``array_id`` partition filter. A dir of two or more
-        files (unfolded update deltas, ``deker`` appends) is left out
-        of that scan and replayed instead: one ``mapInArrow`` over the
-        ``(array_id, dir)`` table, each task replaying one dir at a time
-        through :func:`replay_runs`, as ``read_data`` and the ``deker``
-        source do, and emitting its written cells. A task holds one
-        dir's runs and one buffer of at most the chunk's extent. The two
-        plans are unioned."""
-        df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
-        if array_ids is not None:
-            df = df.filter(F.col("array_id").isin(list(array_ids)))
-        multi = [
-            (array_id, idx, d)
+        the given ids) and their visible files, and opens none. In a
+        store marked :data:`RUNS_DISJOINT` a file's runs never overlap
+        (:func:`encode_runs`), so a dir of one file takes the plain
+        plan: a scan of the chunk dataset, each run's ``data`` exploded
+        with its positions and div/mod over the run shape — pure-JVM
+        index math, no Python and no shuffle, with the ids as an
+        ``array_id`` partition filter. A dir of two or more files
+        (unfolded update deltas, ``deker`` appends) is left out of that
+        scan and replayed instead: one ``mapInArrow`` over the
+        ``(array_id, files)`` table, each task replaying one dir at a
+        time through :func:`replay_runs`, as ``read_data`` and the
+        ``deker`` source do, and emitting its written cells. A task
+        holds one dir's runs and one buffer of at most the chunk's
+        extent. The two plans are unioned. An unmarked store is replayed
+        whole until ``compact`` mends it.
+
+        Both plans read the listing made here, so a re-executed
+        DataFrame reads each chunk as planned, or, where a fold has
+        removed a planned file since, as the fold left it
+        (``read_chunk_files`` re-lists)."""
+        disjoint = self.runs_disjoint()
+        if disjoint:
+            with _LISTING_LOCK:
+                # list on the driver, as walk_chunk_dirs does: past 32
+                # paths Spark lists in a job of one task per array dir.
+                # Only for this read; measured on a local filesystem.
+                conf = self.spark.conf
+                was = conf.get(_LISTING_THRESHOLD, None)
+                conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+                try:
+                    df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
+                finally:
+                    if was is None:
+                        conf.unset(_LISTING_THRESHOLD)
+                    else:
+                        conf.set(_LISTING_THRESHOLD, was)
+            if array_ids is not None:
+                df = df.filter(F.col("array_id").isin(list(array_ids)))
+        replayed = [
+            (array_id, idx, files)
             for array_id, idx, d in walk_chunk_dirs(self.path, array_ids)
-            if len(visible_chunk_files(d)) > 1
+            if len(files := visible_chunk_files(d)) > (1 if disjoint else 0)
         ]
         n = len(dim_names)
-        strides = []
-        for d in range(n):
-            expr = "1L"
-            for d2 in range(d + 1, n):
-                expr = f"{expr} * shape[{d2}]"
-            strides.append(expr)
-        cols = [
-            (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
-            for d in range(n)
-        ]
-        if multi:
-            # one IN-set over a dir key: a chunk index holds no "/", so
-            # the key names one dir, however many arrays have such dirs
-            keys = [f"{a}/{i}" for a, i, _ in multi]
-            df = df.filter(~F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys))
-        plain = df.select("array_id", "origin", "shape", F.posexplode("data").alias("pos", "value"))
-        plain = plain.select("array_id", *cols, "value")
-        if not multi:
-            return plain
+        if disjoint:
+            strides = []
+            for d in range(n):
+                expr = "1L"
+                for d2 in range(d + 1, n):
+                    expr = f"{expr} * shape[{d2}]"
+                strides.append(expr)
+            cols = [
+                (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
+                for d in range(n)
+            ]
+            if replayed:
+                # one IN-set over a dir key: a chunk index holds no "/", so
+                # the key names one dir, however many arrays have such dirs
+                keys = [f"{a}/{i}" for a, i, _ in replayed]
+                df = df.filter(~F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys))
+            plain = df.select("array_id", "origin", "shape", F.posexplode("data").alias("pos", "value"))
+            plain = plain.select("array_id", *cols, "value")
+            if not replayed:
+                return plain
         schema = StructType(
             [StructField("array_id", StringType())]
             + [StructField(name, LongType()) for name in dim_names]
@@ -1339,8 +1399,8 @@ class ChunkStore:
 
         def replay(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                for array_id, d in zip(batch.column("array_id").to_pylist(), batch.column("dir").to_pylist()):
-                    runs = ordered_runs(read_chunk_files(visible_chunk_files(d))[1])
+                for array_id, files in zip(batch.column("array_id").to_pylist(), batch.column("files").to_pylist()):
+                    runs = ordered_runs(read_chunk_files(files)[1])
                     if not runs:
                         continue  # a dir deleted or emptied since planning
                     lo, values, written = replay_runs(runs)
@@ -1352,5 +1412,8 @@ class ChunkStore:
                         names=schema.names,
                     )
 
-        dirs = self.spark.createDataFrame([(a, d) for a, _, d in multi], "array_id string, dir string")
-        return plain.unionByName(dirs.mapInArrow(replay, schema))
+        dirs = self.spark.createDataFrame(
+            [(a, files) for a, _, files in replayed], "array_id string, files array<string>"
+        )
+        replays = dirs.mapInArrow(replay, schema)
+        return plain.unionByName(replays) if disjoint else replays

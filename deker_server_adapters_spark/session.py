@@ -34,12 +34,6 @@ def get_spark(
         # the deker Python data source implements pushFilters(); Spark
         # refuses to plan it unless pushdown is explicitly enabled
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # list file-source paths on the driver, never in a Spark job: past
-        # the default of 32 paths Spark starts a listing job of one task
-        # per path, and a chunk store holds one partition dir per array,
-        # so every scan of a store of many arrays paid for that job
-        # (docs/PERF.md)
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

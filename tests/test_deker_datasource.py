@@ -1483,6 +1483,85 @@ def test_cell_df_plan_resolves_without_an_aggregate(spark, tmp_path):
     assert "MapInArrow" in plan, plan
 
 
+def test_cell_df_build_starts_no_listing_job(spark, tmp_path):
+    """Past 32 paths Spark lists a file source in a job of one task per
+    path, and a chunk store holds one dir per array. ``cell_df`` lists
+    its own scan on the driver instead, in any session, and leaves the
+    session's listing threshold as it found it."""
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    wh = Warehouse(spark, str(tmp_path / "whlisting"))
+    coll = wh.collections.create("w", SCHEMA)
+    for k in range(40):
+        coll.arrays.create(id_=f"a{k:02d}", data=np.full((20, 12), float(k)))
+    sc = spark.sparkContext
+    before = spark.conf.get(key, None)
+    sc.setJobGroup("cell_df_build", "cell_df build")
+    try:
+        df = coll.arrays.cells_df(None)
+        jobs = sc.statusTracker().getJobIdsForGroup("cell_df_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert spark.conf.get(key, None) == before
+    assert df.count() == 40 * 240
+
+
+def test_cell_df_agrees_with_read_data_on_a_store_of_overlapping_file_runs(spark, tmp_path):
+    """A store written before every file held pairwise disjoint runs
+    carries no ``RUNS_DISJOINT`` mark and may hold one file whose rows
+    overlap. ``cell_df`` replays every dir of such a store and agrees
+    with ``read_data``. ``compact`` rewrites that file alone, marks the
+    store, and ``cell_df`` then reads it on the plain plan, still in
+    agreement."""
+    import pyarrow.parquet as pq
+
+    from deker_server_adapters_spark.core.storage import (
+        RUNS_DISJOINT,
+        ChunkStore,
+        encode_runs,
+        visible_chunk_files,
+    )
+    from deker_server_adapters_spark.plans.explain import physical_plan
+    from tests.test_storage_properties import file_runs_disjoint
+
+    wh = Warehouse(spark, str(tmp_path / "wholdruns"))
+    coll = wh.collections.create("w", SCHEMA)
+    a = coll.arrays.create(id_="a", data=np.zeros((20, 12)))
+    coll.arrays.create(id_="b", data=np.ones((20, 12)))
+    store = ChunkStore(spark, coll.path)
+    os.remove(os.path.join(store.path, RUNS_DISJOINT))
+    (f,) = visible_chunk_files(os.path.join(store.path, "array_id=a", "chunk_idx=0"))
+    # one file, two rows: the dense chunk, then a newer run over part of it
+    pq.write_table(
+        encode_runs([(1, [0, 0], [20, 12], np.zeros(240)), (2, [1, 4], [2, 3], np.full(6, 5.0))]), f
+    )
+    assert not file_runs_disjoint(f)
+    want = {"a": np.zeros((20, 12)), "b": np.ones((20, 12))}
+    want["a"][1:3, 4:7] = 5.0
+    np.testing.assert_array_equal(a.read_data(), want["a"])
+
+    def check(df):
+        cells = df.toPandas()
+        assert len(cells) == 2 * 240
+        for aid, expected in want.items():
+            mine = cells[cells.array_id == aid]
+            got = np.full((20, 12), np.nan)
+            got[mine.x, mine.y] = mine.value
+            np.testing.assert_array_equal(got, expected)
+
+    df = store.cell_df(None, ["x", "y"])
+    assert "MapInArrow" in physical_plan(df)
+    check(df)
+    assert store.compact() == 1
+    assert store.runs_disjoint()
+    (f,) = visible_chunk_files(os.path.join(store.path, "array_id=a", "chunk_idx=0"))
+    assert file_runs_disjoint(f)
+    df = store.cell_df(None, ["x", "y"])
+    assert "MapInArrow" not in physical_plan(df)
+    check(df)
+    np.testing.assert_array_equal(a.read_data(), want["a"])
+
+
 def test_filled_box_append_writes_one_run_per_file(spark, tmp_path):
     """Each writer task whose cells fill a box (whole rows of a range
     of x) stages one run, not one per row; ``compact`` folds the
