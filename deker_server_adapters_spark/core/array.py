@@ -7,9 +7,10 @@ get_by_id, get_by_primary_attributes, iterate, delete_all_by_vid
 (array_adapter.py:41-77).
 
 Catalog layout under ``<collection>/meta``: one ``<id>.json`` per
-array or varray (``:`` in chunk-view ids becomes ``__``), which Spark
-scans as ``meta/*.json`` for ``meta_df``, ``lookup_df`` and iteration;
-and a primary-key index, ``_primary/<md5 of the canonical key>/<meta
+array or varray (``:`` in chunk-view ids becomes ``__``), which
+``read_catalog`` lists and loads on the driver for iteration, vid
+deletes, the index build, ``meta_df`` and ``lookup_df``; and a
+primary-key index, ``_primary/<md5 of the canonical key>/<meta
 file name>``, of empty markers, which serves
 ``get_by_primary_attributes`` on the driver. The canonical key is
 ``json.dumps(primary_attributes, sort_keys=True)``; arrays with no
@@ -44,6 +45,7 @@ from deker_server_adapters_spark.core.storage import (
     ChunkGrid,
     ChunkStore,
     normalize_bounds,
+    require_session,
     resolve_bounds,
 )
 
@@ -113,6 +115,29 @@ def remove_meta(meta_dir: str, id_: str) -> bool:
         except FileNotFoundError:
             pass
     return True
+
+
+def read_catalog(meta_dir: str) -> list[dict]:
+    """Every meta of the catalog, sorted by id: ``meta_dir`` listed
+    once, each regular ``*.json`` file loaded (temps end in ``.tmp``,
+    the index is a directory). A file that vanishes, does not parse or
+    has no ``id`` is skipped; a missing ``meta_dir`` is an empty
+    catalog. Pure file I/O."""
+    try:
+        with os.scandir(meta_dir) as it:
+            paths = [e.path for e in it if e.name.endswith(".json") and e.is_file()]
+    except FileNotFoundError:
+        return []
+    metas = []
+    for path in paths:
+        try:
+            with open(path) as f:
+                meta = json.load(f)
+        except (FileNotFoundError, ValueError):
+            continue
+        if isinstance(meta, dict) and meta.get("id") is not None:
+            metas.append(meta)
+    return sorted(metas, key=lambda m: str(m["id"]))
 
 
 def find_meta(meta_dir: str, primary_attributes: dict) -> dict | None:
@@ -185,12 +210,14 @@ class Array:
     def cell_df(self) -> DataFrame:
         """This array as a long-format DataFrame (dims..., value), one
         row per written cell, last-write-wins (read_data semantics)."""
+        require_session(self.collection.warehouse.spark, "cell_df")
         return self._adapter.cells_df([self.id]).drop("array_id")
 
     def reduce(self, dim: str, fn: str = "mean") -> DataFrame:
         """Aggregate out one dimension (xarray-style): returns a
         DataFrame keyed by the remaining dims with fn(value).
         Runs as one Catalyst plan over the chunk dataset."""
+        require_session(self.collection.warehouse.spark, "reduce")
         names = [d.name for d in self.schema.dimensions]
         if dim not in names:
             raise KeyError(f"unknown dimension {dim!r}; have {names}")
@@ -265,6 +292,7 @@ class ArrayAdapter:
         """Create an array from a long-format DataFrame whose dim-index
         columns are named after the schema dimensions — fully
         distributed (no driver-side ndarray)."""
+        require_session(self.spark, "create_from_cells")
         schema = self.collection.array_schema
         primary = primary_attributes or {}
         custom = custom_attributes or {}
@@ -303,15 +331,10 @@ class ArrayAdapter:
         """Delete every array whose primary attribute vid matches
         (reference array_adapter.py:41-77). The chunk arrays hold the
         varray's data, so their shared chunk dataset goes with them.
-
-        Victim selection is a Catalyst filter over the catalog scan
-        (``lookup_df``): only the matching ids come back to the driver —
-        O(matches) driver work, not O(n_arrays) iteration."""
-        df = self.lookup_df({"vid": vid})
-        if df is not None:
-            for row in df.select("id").collect():
-                with open(self._meta_path(row["id"])) as f:
-                    self.delete(self._from_meta(json.load(f)))
+        Victims are picked from ``read_catalog`` on the driver."""
+        for meta in read_catalog(self._meta_dir()):
+            if (meta.get("primary_attributes") or {}).get("vid") == vid:
+                self.delete(self._from_meta(meta))
         self.store.delete_array(vid)
 
     # -- lookup ----------------------------------------------------------------
@@ -341,15 +364,13 @@ class ArrayAdapter:
 
     def lookup_df(self, primary_attributes: dict) -> DataFrame | None:
         """The catalog filtered to arrays whose primary attributes
-        include the given key-values — a Catalyst plan over ``meta_df``
-        (filter evaluated executor-side over the distributed scan), not
-        a driver loop. This is the filter over a subset of the
-        attributes (``delete_all_by_vid`` selects by ``vid`` alone);
+        include the given key-values: a Catalyst filter over
+        ``meta_df``. This is the filter over a subset of the attributes;
         a point lookup by the full key is ``get_by_primary_attributes``.
         Returns None when the catalog is empty or a wanted key exists
         on no array (reference base.py:333-434, minus the per-array
         HTTP round trips)."""
-        df = self._catalog_df()
+        df = self._catalog_df("lookup_df")
         if df is None:
             return None
         pa_type = None
@@ -371,8 +392,8 @@ class ArrayAdapter:
         primary-key index with no Spark job; among arrays sharing the
         key, the one whose meta file name sorts first. A partial key is
         a miss (filter by a subset through ``lookup_df``). A catalog
-        written before the index existed is indexed once, from the
-        catalog scan, on its first lookup."""
+        written before the index existed is indexed once, from
+        ``read_catalog``, on its first lookup."""
         meta_dir = self._meta_dir()
         if not os.path.exists(os.path.join(meta_dir, PRIMARY_INDEX, INDEX_COMPLETE)):
             if not os.path.isdir(meta_dir):
@@ -382,77 +403,36 @@ class ArrayAdapter:
         return None if meta is None else self._from_meta(meta)
 
     def _build_index(self) -> None:
-        """Mark every cataloged array, then flag the index complete.
-        Markers come from the meta files themselves, not from the
-        scanned rows, whose attribute types schema inference unifies."""
+        """Mark every cataloged array, then flag the index complete."""
         meta_dir = self._meta_dir()
-        df = self._catalog_df()
-        if df is not None:
-            for row in df.select("id").toLocalIterator():
-                try:
-                    with open(self._meta_path(row["id"])) as f:
-                        _mark(meta_dir, json.load(f))
-                except (FileNotFoundError, ValueError):
-                    continue
+        for meta in read_catalog(meta_dir):
+            _mark(meta_dir, meta)
         init_index(meta_dir)
 
-    @staticmethod
-    def _row_meta(row) -> dict:
-        """A catalog Row back to its meta dict. Schema inference unions
-        attribute structs across arrays, so attributes another array has
-        appear here as nulls — strip them (explicit null attribute
-        values are not storable: json.dump writes them but
-        validate_attributes rejects None)."""
-        meta = row.asDict(recursive=True)
-        out = {}
-        for k, v in meta.items():
-            if k in ("primary_attributes", "custom_attributes"):
-                out[k] = {k2: v2 for k2, v2 in (v or {}).items() if v2 is not None}
-            elif v is not None:  # varray metas carry extra keys (is_varray, vid)
-                out[k] = v
-        out.setdefault("primary_attributes", {})
-        out.setdefault("custom_attributes", {})
-        return out
-
     def __iter__(self) -> Iterator[dict]:
-        """Iterate array metas via the distributed catalog scan:
-        scan/parse runs in Spark, the driver receives rows partition by
-        partition (``toLocalIterator``) — never an O(n_arrays) listdir
-        (reference base.py:436-453 pages the server; same idea)."""
-        df = self._catalog_df()
-        if df is None:
-            return
-        for row in df.orderBy("id").toLocalIterator():
-            yield self._row_meta(row)
+        """Every array meta, sorted by id, each as ``read_meta`` returns
+        it (reference base.py:436-453 pages the server)."""
+        yield from read_catalog(self._meta_dir())
 
-    def _catalog_df(self) -> DataFrame | None:
-        d = self._meta_dir()
-        if not os.path.isdir(d):
+    def _catalog_df(self, op: str) -> DataFrame | None:
+        """``read_catalog``'s metas, as JSON texts, parsed by Spark's
+        JSON reader, which infers one schema over them, as a scan of
+        the meta files would; None for an empty catalog."""
+        spark = require_session(self.spark, op)
+        texts = [json.dumps(m) for m in read_catalog(self._meta_dir())]
+        if not texts:
             return None
-        try:
-            df = self.spark.read.json(os.path.join(d, "*.json"))
-        except Exception:  # empty glob -> PATH_NOT_FOUND
-            return None
-        if "_corrupt_record" in df.columns:
-            # PERMISSIVE mode parks unparsable files in _corrupt_record
-            # with every schema field null — drop them instead of
-            # yielding a meta dict with no id
-            df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-        if "id" not in df.columns:  # dir exists, no parsable metas
-            return None
-        return df.filter(F.col("id").isNotNull())
+        return spark.read.json(spark.sparkContext.parallelize(texts))
 
     def meta_df(self) -> DataFrame:
-        """The array catalog as a DataFrame (id + attribute structs) —
-        metadata queries scale with Spark instead of a driver loop
-        (find-by-attribute over millions of arrays). Same corrupt-file
-        hygiene as the internal catalog scan.
+        """The array catalog as a DataFrame (id + attribute structs), for
+        metadata queries in Spark (find-by-attribute over many arrays).
 
         An existing collection with no arrays yet is a legitimate
         catalog state and yields an EMPTY DataFrame (id + empty
         attribute structs); the exception is reserved for a collection
         whose meta dir does not exist at all (ADVICE r5)."""
-        df = self._catalog_df()
+        df = self._catalog_df("meta_df")
         if df is not None:
             return df
         if os.path.isdir(self._meta_dir()):
@@ -470,22 +450,27 @@ class ArrayAdapter:
         plan, last-write-wins per cell like ``read_data`` — ensemble
         statistics across arrays are a groupBy away, with partition
         pruning when ids are given (``ChunkStore.cell_df``)."""
+        require_session(self.spark, "cells_df")
         dim_names = [d.name for d in self.collection.array_schema.dimensions]
         return self.store.cell_df(array_ids, dim_names)
 
     # -- data ----------------------------------------------------------------
 
-    def _chunk_view(self, array: Array):
-        """A chunk-array view ("vid:idx") addresses one vgrid cell of
-        its parent varray's dataset. Returns (vid, box) or None."""
+    def _resolve(self, array: Array, bounds: Bounds) -> tuple[str, list[tuple[int, int, bool]]]:
+        """The stored array ``bounds`` address and the normalized box in
+        it. A chunk-array view ("vid:idx") addresses one vgrid cell of
+        its parent varray's dataset, so its box is shifted to that
+        cell's origin."""
+        dims = array.schema.dimensions
         if ":" not in array.id:
-            return None
+            return array.id, normalize_bounds(resolve_bounds(bounds, dims), array.shape)
         vid, idx = array.id.rsplit(":", 1)
         box = self._grid().chunk_box(int(idx))
-        return vid, box
+        norm = normalize_bounds(resolve_bounds(bounds, dims), tuple(b - a for a, b in box))
+        return vid, [(a + lo, b + lo, sq) for (a, b, sq), (lo, _) in zip(norm, box)]
 
     @staticmethod
-    def _strip_steps(bounds: Bounds, rank: int):
+    def _strip_steps(bounds: Bounds):
         """Split stepped slices into (contiguous bounds, post-selector).
         The chunk store reads the contiguous box; stepping is applied on
         the assembled ndarray (reads at most the box, never the array)."""
@@ -506,41 +491,18 @@ class ArrayAdapter:
         return tuple(stripped), tuple(post)
 
     def read_data(self, array: Array, bounds: Bounds) -> np.ndarray:
-        bounds, post = self._strip_steps(bounds, len(array.schema.dimensions))
+        bounds, post = self._strip_steps(bounds)
         if any(p != slice(None) for p in post):
-            full = self.read_data(array, bounds)
-            return full[post]
-        view = self._chunk_view(array)
-        if view is not None:
-            vid, box = view
-            chunk_shape = tuple(b - a for a, b in box)
-            norm = normalize_bounds(
-                resolve_bounds(bounds, array.schema.dimensions), chunk_shape
-            )
-            shifted = [(a + lo, b + lo, sq) for (a, b, sq), (lo, _) in zip(norm, box)]
-            return self.store.read_slice(
-                vid, self._grid(), shifted, array.dtype,
-                fill_value=self.collection.array_schema.fill_value,
-            )
-        norm = normalize_bounds(resolve_bounds(bounds, array.schema.dimensions), array.shape)
+            return self.read_data(array, bounds)[post]
+        array_id, norm = self._resolve(array, bounds)
         return self.store.read_slice(
-            array.id, self._grid(), norm, array.dtype,
+            array_id, self._grid(), norm, array.dtype,
             fill_value=self.collection.array_schema.fill_value,
         )
 
     def update(self, array: Array, bounds: Bounds, data) -> None:
-        view = self._chunk_view(array)
-        if view is not None:
-            vid, box = view
-            chunk_shape = tuple(b - a for a, b in box)
-            norm = normalize_bounds(
-                resolve_bounds(bounds, array.schema.dimensions), chunk_shape
-            )
-            shifted = [(a + lo, b + lo, sq) for (a, b, sq), (lo, _) in zip(norm, box)]
-            self.store.update_slice(vid, self._grid(), shifted, data)
-            return
-        norm = normalize_bounds(resolve_bounds(bounds, array.schema.dimensions), array.shape)
-        self.store.update_slice(array.id, self._grid(), norm, data)
+        array_id, norm = self._resolve(array, bounds)
+        self.store.update_slice(array_id, self._grid(), norm, data)
 
     def clear(self, array: Array, bounds: Bounds = slice(None)) -> None:
         """Reset a subset to the schema fill value (reference

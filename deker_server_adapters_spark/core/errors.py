@@ -30,6 +30,11 @@ class DekerSubsetError(DekerSparkError):
     pass
 
 
+class DekerSessionRequiredError(DekerSparkError):
+    """An op that runs Spark was called on a ``Warehouse`` built with no
+    SparkSession."""
+
+
 class DekerDataPointsLimitError(DekerSparkError):
     """Requested subset exceeds the configured data-points budget
     (parity with the reference's 413 CONTENT_TOO_LARGE handling,

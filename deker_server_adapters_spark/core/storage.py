@@ -113,7 +113,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from deker_server_adapters_spark.core.errors import DekerDataPointsLimitError, DekerSubsetError
+from deker_server_adapters_spark.core.errors import (
+    DekerDataPointsLimitError,
+    DekerSessionRequiredError,
+    DekerSubsetError,
+)
 from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema
 
 Bounds = Union[int, slice, tuple]
@@ -916,6 +920,15 @@ _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_LOCK = threading.Lock()
 
 
+def require_session(spark: SparkSession | None, op: str) -> SparkSession:
+    """``spark``, or an error naming ``op``: the one check each op that
+    runs Spark makes, since the request path serves a ``Warehouse``
+    built with no session."""
+    if spark is None:
+        raise DekerSessionRequiredError(f"{op} needs a SparkSession; this Warehouse has none")
+    return spark
+
+
 class ChunkStore:
     """Reads/writes the chunk dataset of one collection."""
 
@@ -1088,6 +1101,7 @@ class ChunkStore:
         compact() side-effect-free and run ``gc_temps`` on their own
         schedule. The same contract governs standalone ``gc_temps``.
         """
+        sc = require_session(self.spark, "compact").sparkContext
         if gc_temp_age_sec > 0:
             self.gc_temps(max_age_sec=gc_temp_age_sec)
         mend = not self.runs_disjoint()
@@ -1098,7 +1112,6 @@ class ChunkStore:
         ]
         done = 0
         if dirs:
-            sc = self.spark.sparkContext
             n_slices = min(len(dirs), sc.defaultParallelism)
             done = int(
                 sc.parallelize(dirs, n_slices).map(_merge_chunk_dir).sum()
@@ -1115,40 +1128,27 @@ class ChunkStore:
         """Per-chunk-dir maintenance view — the table an operator
         queries to decide WHERE to compact: visible file count and
         bytes (feeds ``plans.layout.compaction_plan`` thresholds) plus
-        in-flight/orphaned dot-prefixed temp count. Dir names list on
-        the driver (pure metadata, same as ``compact``); per-dir stat
-        work parallelizes over executors, so millions of chunk dirs
-        stat at cluster width, not driver speed. Vanished files/dirs
-        (concurrent delete or compact) are tolerated."""
-        dirs = list(walk_chunk_dirs(self.path))
-        schema = "array_id string, chunk_idx long, n_files long, bytes long, n_temp long"
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
-
-        def _stat(entry: tuple[str, int, str]):
-            import os as _os
-
-            array_id, chunk_idx, d = entry
+        in-flight/orphaned dot-prefixed temp count. The driver lists
+        and stats every dir, as ``compact`` lists them. Vanished
+        files/dirs (concurrent delete or compact) are tolerated."""
+        spark = require_session(self.spark, "maintenance_stats")
+        rows = []
+        for array_id, chunk_idx, d in walk_chunk_dirs(self.path):
             try:
-                names = _os.listdir(d)
+                names = os.listdir(d)
             except FileNotFoundError:
-                return None
+                continue
             vis = [f for f in names if is_visible_chunk_file(f)]
-            n_temp = sum(1 for f in names if is_staged_chunk_file(f))
             total = 0
             for f in vis:
                 try:
-                    total += _os.path.getsize(_os.path.join(d, f))
+                    total += os.path.getsize(os.path.join(d, f))
                 except FileNotFoundError:
                     pass
-            return array_id, chunk_idx, len(vis), total, n_temp
-
-        sc = self.spark.sparkContext
-        n_slices = min(len(dirs), sc.defaultParallelism)
-        rows = sc.parallelize(dirs, n_slices).map(_stat).filter(
-            lambda r: r is not None
+            rows.append((array_id, chunk_idx, len(vis), total, sum(map(is_staged_chunk_file, names))))
+        return spark.createDataFrame(
+            rows, "array_id string, chunk_idx long, n_files long, bytes long, n_temp long"
         )
-        return self.spark.createDataFrame(rows, schema)
 
     def gc_temps(self, max_age_sec: float = 86400.0) -> int:
         """Reclaim dot-prefixed temp files orphaned by CRASHED writes.
@@ -1161,28 +1161,20 @@ class ChunkStore:
         temp older than ``max_age_sec``. The age gate is the safety
         contract: run it only with ``max_age_sec`` comfortably above
         the longest write a live job could still be executing (default
-        one day). Distributed the same way as ``maintenance_stats`` —
-        driver lists dirs (metadata), executors stat and delete."""
-        dirs = [d for _, _, d in walk_chunk_dirs(self.path)]
-        if not dirs:
-            return 0
+        one day). Pure file I/O on the driver, like ``compact``'s
+        listing."""
         cutoff = time.time() - float(max_age_sec)
-
-        def _gc(d: str) -> int:
-            import os as _os
-
-            removed = 0
+        removed = 0
+        for _, _, d in walk_chunk_dirs(self.path):
             try:
-                names = _os.listdir(d)
+                names = os.listdir(d)
             except FileNotFoundError:
-                return 0
-            for f in names:
-                if not is_staged_chunk_file(f):
-                    continue
-                p = _os.path.join(d, f)
+                continue
+            for f in filter(is_staged_chunk_file, names):
+                p = os.path.join(d, f)
                 try:
-                    if _os.path.getmtime(p) < cutoff:
-                        _os.remove(p)
+                    if os.path.getmtime(p) < cutoff:
+                        os.remove(p)
                         removed += 1
                 except OSError:
                     # skip-and-continue: a vanished/unreadable/undeletable
@@ -1190,11 +1182,7 @@ class ChunkStore:
                     # EIO) must not abort the whole maintenance sweep and
                     # lose the count of temps already reclaimed
                     pass
-            return removed
-
-        sc = self.spark.sparkContext
-        n_slices = min(len(dirs), sc.defaultParallelism)
-        return sc.parallelize(dirs, n_slices).map(_gc).sum()
+        return removed
 
     def delete_array(self, array_id: str) -> None:
         """Drop all chunk partitions of one array (metadata-cheap: a

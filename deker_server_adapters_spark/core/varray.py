@@ -25,7 +25,13 @@ from deker_server_adapters_spark.core.array import Array, ArrayAdapter, remove_m
 from deker_server_adapters_spark.core.collection import Collection
 from deker_server_adapters_spark.core.errors import DekerArrayNotExistsError
 from deker_server_adapters_spark.core.schema import VArraySchema
-from deker_server_adapters_spark.core.storage import Bounds, ChunkGrid, normalize_bounds, resolve_bounds
+from deker_server_adapters_spark.core.storage import (
+    Bounds,
+    ChunkGrid,
+    normalize_bounds,
+    require_session,
+    resolve_bounds,
+)
 
 
 class VArray:
@@ -72,6 +78,7 @@ class VArray:
         self._adapter.clear(self, bounds)
 
     def cell_df(self) -> DataFrame:
+        require_session(self.collection.warehouse.spark, "cell_df")
         return ArrayAdapter(self.collection).cells_df([self.id]).drop("array_id")
 
     def meta(self) -> dict:
@@ -131,6 +138,7 @@ class VArrayAdapter:
     ) -> VArray:
         """Distributed varray build from a long-format DataFrame; the
         vgrid IS the chunk grid. Every cell is written once."""
+        require_session(self.spark, "create_from_cells")
         schema = self.collection.varray_schema
         assert schema is not None
         varray = self._register(primary_attributes, custom_attributes, id_)

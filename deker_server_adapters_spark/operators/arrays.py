@@ -24,6 +24,7 @@ from deker_server_adapters_spark.functions.histogram import (
     round_ties_safe_sql,
 )
 from deker_server_adapters_spark.operators import Op
+from deker_server_adapters_spark.plans.lineage import release
 from deker_server_adapters_spark.sources.scratch import scratch_dir
 from deker_server_adapters_spark.sources.tables import EVENTS_DUCK, load_table
 
@@ -478,6 +479,7 @@ def deker_dedup_read_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
+    release(dense)  # the result reads the store, not the cut
     cells = (
         spark.read.format("deker")
         .option("path", root)
@@ -556,6 +558,7 @@ def deker_compact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
+    release(dense)
     store = ChunkStore(spark, coll.path)
     dirs_compacted = store.compact()
     post = store.maintenance_stats().agg(

@@ -474,27 +474,42 @@ class TestVArrays:
 
 
 class TestDistributedLookup:
-    def test_lookup_many_arrays_no_driver_listdir(self, warehouse, monkeypatch):
-        """__iter__ runs as a Spark plan over the catalog scan and
-        get_by_primary_attributes reads only its key's index entry —
-        os.listdir of the meta dir must never appear in the lookup path
-        (the reference-brief scale trap at millions of arrays)."""
+    def test_lookup_many_arrays_no_driver_listdir(self, warehouse, spark, monkeypatch):
+        """Iteration reads the catalog on the driver and starts no Spark
+        job; get_by_primary_attributes lists only its key's index dir,
+        never the meta dir (the reference-brief scale trap at millions
+        of arrays)."""
         import os as _os
 
         coll = warehouse.collections.create("many", SCHEMA)
         for i in range(12):
             coll.arrays.create({"station": f"st{i}"}, id_=f"arr{i}")
+        meta_dir = _os.path.join(coll.path, "meta")
+        listed = []
+        for name in ("listdir", "scandir"):
+            real = getattr(_os, name)
 
-        def _banned(*a, **k):
-            raise AssertionError("os.listdir called in distributed lookup path")
+            def spy(path=".", _real=real):
+                listed.append(_os.path.normpath(path))
+                return _real(path)
 
-        monkeypatch.setattr(_os, "listdir", _banned)
+            monkeypatch.setattr(_os, name, spy)
         found = coll.arrays.get_by_primary_attributes({"station": "st7"})
         assert found is not None and found.id == "arr7"
         assert coll.arrays.get_by_primary_attributes({"station": "nope"}) is None
         assert coll.arrays.get_by_primary_attributes({"bogus_key": 1}) is None
-        metas = list(coll.arrays)
-        assert [m["id"] for m in metas] == [f"arr{i}" for i in sorted(range(12), key=lambda i: f"arr{i}")]
+        assert len(listed) == 3 and all(
+            _os.path.dirname(p) == _os.path.join(meta_dir, "_primary") for p in listed
+        ), listed
+        sc = spark.sparkContext
+        sc.setJobGroup("catalog_iteration", "catalog iteration")
+        try:
+            metas = list(coll.arrays)
+            jobs = sc.statusTracker().getJobIdsForGroup("catalog_iteration")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(jobs) == []
+        assert [m["id"] for m in metas] == sorted(f"arr{i}" for i in range(12))
         assert all(m["primary_attributes"] == {"station": f"st{m['id'][3:]}"} for m in metas)
 
     def test_lookup_on_empty_collection(self, warehouse):
@@ -590,6 +605,56 @@ def test_corrupt_meta_file_is_skipped(warehouse):
     assert coll.arrays.get_by_primary_attributes({"station": "s1"}).id == a.id
 
 
+def test_catalog_lists_underscore_prefixed_ids(warehouse):
+    """An id starting with ``_`` is an array like any other: iteration,
+    ``meta_df`` and ``lookup_df`` list it, as ``get_by_id`` finds it."""
+    coll = warehouse.collections.create("weather", SCHEMA)
+    for id_ in ("_hidden", "plain"):
+        coll.arrays.create({"station": "s1"}, id_=id_)
+    assert coll.arrays.get_by_id("_hidden") is not None
+    assert [m["id"] for m in coll.arrays] == ["_hidden", "plain"]
+    assert sorted(r["id"] for r in coll.arrays.meta_df().collect()) == ["_hidden", "plain"]
+    got = coll.arrays.lookup_df({"station": "s1"}).select("id").collect()
+    assert sorted(r["id"] for r in got) == ["_hidden", "plain"]
+
+
+def test_iteration_returns_metas_as_read_meta_does(warehouse):
+    """Iteration keeps each meta's own attribute types: an int, a dict
+    and a string stored under one custom attribute come back as stored,
+    equal to ``read_meta``, not as one type inferred for the catalog."""
+    coll = warehouse.collections.create("weather", SCHEMA)
+    arrays = [
+        coll.arrays.create({"station": f"s{i}"}, {"comment": c}, id_=f"a{i}")
+        for i, c in enumerate([5, {"n": 1}, "text"])
+    ]
+    vcoll = warehouse.collections.create("grid", VSCHEMA)
+    va = vcoll.varrays.create(id_="va")
+    metas = list(coll.arrays)
+    assert metas == [coll.arrays.read_meta(a) for a in arrays]
+    assert [m["custom_attributes"]["comment"] for m in metas] == [5, {"n": 1}, "text"]
+    assert list(vcoll.varrays) == [vcoll.varrays.read_meta(va)]
+    assert [m["id"] for m in vcoll.arrays] == ["va"] + [f"va:{i}" for i in range(6)]
+
+
+def test_meta_df_schema_is_the_glob_scans(warehouse, spark):
+    """``meta_df`` parses the meta texts the driver loaded with Spark's
+    JSON reader: its plan scans no file, and its schema is the one a
+    scan of ``meta/*.json`` infers."""
+    import os
+
+    from deker_server_adapters_spark.plans.explain import physical_plan
+
+    coll = warehouse.collections.create("weather", SCHEMA)
+    coll.arrays.create({"station": "s1"}, {"comment": "a"}, id_="a")
+    coll.arrays.create({"station": "s2"}, id_="b")
+    vcoll = warehouse.collections.create("grid", VSCHEMA)
+    vcoll.varrays.create(id_="va")
+    for c in (coll, vcoll):
+        df = c.arrays.meta_df()
+        assert "FileScan" not in physical_plan(df)
+        assert df.schema == spark.read.json(os.path.join(c.path, "meta", "*.json")).schema
+
+
 def test_array_writes_leave_partition_overwrite_mode_alone(warehouse, spark, tmp_path):
     """An overwrite of a partitioned output through ``sources.io``
     replaces every partition, before and after the engine writes an
@@ -616,9 +681,14 @@ def test_request_path_runs_without_a_session(tmp_path):
     ``update`` (enough of them to fold a chunk), ``clear`` and
     ``read_data``; ``get_by_primary_attributes``, ``get_by_id``,
     ``read_meta``, ``update_meta_custom_attributes`` and ``delete``;
-    varray create, update and read. docs/PARITY.md lists the ops that
-    need a session."""
-    from deker_server_adapters_spark.core.storage import FOLD_FILES
+    array and varray iteration, ``chunk_arrays``, ``delete_all_by_vid``
+    and varray ``delete``; ``gc_temps``; the first lookup of a catalog
+    whose primary-key index is gone; varray create, update and read.
+    docs/PARITY.md lists the ops that need a session."""
+    import os
+    import shutil
+
+    from deker_server_adapters_spark.core.storage import FOLD_FILES, TMP_PREFIX, ChunkStore
 
     wh = Warehouse(None, str(tmp_path / "wh"))
     coll = wh.collections.create("weather", SCHEMA)
@@ -649,3 +719,58 @@ def test_request_path_runs_without_a_session(tmp_path):
     vwant[2:9, 1:6] = 5.0
     np.testing.assert_array_equal(vcoll.varrays.get_by_id(va.id).read_data(), vwant)
     np.testing.assert_array_equal(va.read_data((slice(3, 5), 4)), vwant[3:5, 4])
+
+    b = coll.arrays.create({"station": "s2"}, id_="b", data=want)
+    coll.arrays.create({"station": "s3"}, id_="c")
+    assert [m["id"] for m in coll.arrays] == ["b", "c"]
+    shutil.rmtree(os.path.join(coll.path, "meta", "_primary"))
+    assert coll.arrays.get_by_primary_attributes({"station": "s2"}).id == "b"
+    assert coll.arrays.get_by_primary_attributes({"station": "s3"}).id == "c"
+    d = os.path.join(coll.path, "chunks", "array_id=b", "chunk_idx=0")
+    orphan = os.path.join(d, f"{TMP_PREFIX}dead-0.parquet")
+    open(orphan, "wb").close()
+    os.utime(orphan, (1.0, 1.0))
+    assert ChunkStore(None, coll.path).gc_temps(max_age_sec=3600) == 1
+    np.testing.assert_array_equal(b.read_data(), want)
+
+    vb = vcoll.varrays.create(id_="vb")
+    assert [m["id"] for m in vcoll.varrays] == sorted([va.id, "vb"])
+    assert sorted(c.id for c in vb.chunk_arrays()) == [f"vb:{i}" for i in range(6)]
+    assert len(list(vcoll.arrays)) == 2 + 2 * 6
+    vcoll.arrays.delete_all_by_vid(va.id)
+    assert va.chunk_arrays() == [] and len(vb.chunk_arrays()) == 6
+    vcoll.varrays.delete(vb)
+    assert [m["id"] for m in vcoll.arrays] == [va.id]
+    assert vcoll.varrays.get_by_id("vb") is None
+
+
+def test_spark_ops_without_a_session_name_the_op(tmp_path):
+    """Each op that runs Spark, called on a ``Warehouse`` with no
+    SparkSession, raises one error naming it (docs/PARITY.md)."""
+    from deker_server_adapters_spark.core.errors import DekerSessionRequiredError
+    from deker_server_adapters_spark.core.storage import ChunkStore
+
+    wh = Warehouse(None, str(tmp_path / "wh"))
+    coll = wh.collections.create("weather", SCHEMA)
+    vcoll = wh.collections.create("grid", VSCHEMA)
+    arr = coll.arrays.create({"station": "s1"})
+    va = vcoll.varrays.create()
+    store = ChunkStore(None, coll.path)
+    calls = {
+        "cell_df": [arr.cell_df, va.cell_df],
+        "reduce": [lambda: arr.reduce("x")],
+        "cells_df": [lambda: coll.arrays.cells_df(None)],
+        "create_from_cells": [
+            lambda: coll.arrays.create_from_cells(None, primary_attributes={"station": "s2"}),
+            lambda: vcoll.varrays.create_from_cells(None),
+        ],
+        "lookup_df": [lambda: coll.arrays.lookup_df({"station": "s1"})],
+        "meta_df": [coll.arrays.meta_df],
+        "maintenance_stats": [store.maintenance_stats],
+        "compact": [store.compact],
+    }
+    for op, fns in calls.items():
+        for fn in fns:
+            with pytest.raises(DekerSessionRequiredError, match=f"^{op} needs a SparkSession"):
+                fn()
+    assert [m["id"] for m in coll.arrays] == [arr.id]
