@@ -21,7 +21,7 @@ from deker_server_adapters_spark.core.errors import (
     DekerCollectionNotExistsError,
 )
 from deker_server_adapters_spark.core.schema import ArraySchema, VArraySchema, collection_schema
-from deker_server_adapters_spark.core.storage import drop_cached, mark_runs_disjoint
+from deker_server_adapters_spark.core.storage import drop_cached
 
 if TYPE_CHECKING:
     from deker_server_adapters_spark.core.array import ArrayAdapter
@@ -100,7 +100,7 @@ class CollectionAdapter:
         if os.path.exists(self._meta_path(name)):
             raise DekerCollectionAlreadyExistsError(name)
         init_index(os.path.join(path, "meta"))
-        mark_runs_disjoint(os.path.join(path, "chunks"))
+        os.makedirs(os.path.join(path, "chunks"), exist_ok=True)
         coll = Collection(self.warehouse, name, schema)
         with open(self._meta_path(name), "w") as f:
             json.dump(coll.as_dict(), f)
@@ -130,7 +130,7 @@ class CollectionAdapter:
             shutil.rmtree(os.path.join(collection.path, sub), ignore_errors=True)
         drop_cached(collection.path)
         init_index(os.path.join(collection.path, "meta"))
-        mark_runs_disjoint(os.path.join(collection.path, "chunks"))
+        os.makedirs(os.path.join(collection.path, "chunks"), exist_ok=True)
 
     def __iter__(self) -> Iterator[dict]:
         base = os.path.join(self.warehouse.root, "collections")

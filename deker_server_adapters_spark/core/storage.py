@@ -22,7 +22,8 @@ arrays, varrays and the ``deker`` source call it rather than repeat it:
 - *run replay*: ``ordered_runs`` is the one placement order, and
   ``place_runs`` places a chunk's runs into a box, last write winning,
   for ``read_slice``; ``replay_runs`` resolves a whole chunk that way
-  for the fold, ``cell_df`` and the ``deker`` batch reader alike.
+  for the fold, and ``chunk_cells`` turns it into a dir's written
+  cells for ``cell_df`` and the ``deker`` batch reader alike.
 
 Spark-first consequences:
 
@@ -76,13 +77,15 @@ Spark-first consequences:
   (array id, dim indices, value) with pure-JVM index arithmetic, so
   arrays join/aggregate with relational tables in one Catalyst plan.
   It is last-write-wins like ``read_data``. A file's runs never overlap
-  in a store marked ``RUNS_DISJOINT``, so only a chunk dir of two or
-  more files can hold a cell twice: the driver picks those dirs from
-  the listing, without opening a file, and replays each one in a
-  ``mapInArrow`` task (``replay_runs``); every other dir keeps the
-  plain, shuffle-free plan. An unmarked store, written before that
-  invariant held, is replayed whole until ``compact`` mends and marks
-  it.
+  (:func:`encode_runs`), so only a chunk dir of two or more files can
+  hold a cell twice: the driver picks those dirs from the listing,
+  without opening a file, and replays each one in a ``mapInArrow``
+  task (:func:`chunk_cells`); every other dir keeps the plain,
+  shuffle-free plan.
+- One store format is read: the one every writer above produces, in
+  which every run carries a ``seq`` and the runs of one file are
+  pairwise disjoint. Chunk stores written before that format held are
+  unsupported.
 - ``stats()`` snapshots the module's counters: cache hits, misses,
   evictions and cached bytes, delta appends, folds, and the chunk reads
   and runs they replayed.
@@ -102,7 +105,7 @@ from typing import Iterable, Iterator, Sequence, Union
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -134,11 +137,10 @@ CHUNK_SCHEMA = StructType(
         # write event or writer task, whose runs are disjoint), so
         # ordering is explicit in the data — not derived from file names,
         # which neither Spark's scan (size-packed splits) nor compaction
-        # (merged files) preserves. Nullable: legacy files read as null
-        # (treated as oldest). Write events that land in the same ~ms on
-        # different writers are mutually unordered, same as any two
-        # uncoordinated appends.
-        StructField("seq", LongType(), True),
+        # (merged files) preserves. Write events that land in the same
+        # ~ms on different writers are mutually unordered, same as any
+        # two uncoordinated appends.
+        StructField("seq", LongType(), False),
     ]
 )
 
@@ -366,8 +368,8 @@ def walk_chunk_dirs(
 
 def is_visible_chunk_file(name: str) -> bool:
     """A committed chunk file. Writer and compaction temps are
-    dot-prefixed (as are Hadoop ``.crc`` companions), so every reader,
-    compaction and stat skips them until a rename publishes them."""
+    dot-prefixed, so every reader, compaction and stat skips them until
+    a rename publishes them."""
     return name.endswith(".parquet") and not name.startswith(".")
 
 
@@ -379,19 +381,6 @@ def visible_chunk_files(d: str) -> list[str]:
     except FileNotFoundError:
         return []
     return sorted(os.path.join(d, f) for f in names if is_visible_chunk_file(f))
-
-
-# Marks a chunk store whose every file holds pairwise disjoint runs
-# (:func:`encode_runs`); stores written by older compactions and
-# ``deker`` writers may not. Spark's listing skips "_"-prefixed files.
-RUNS_DISJOINT = "_runs_disjoint"
-
-
-def mark_runs_disjoint(chunks_root: str) -> None:
-    """Mark a chunk store :data:`RUNS_DISJOINT`: collection create and
-    clear, and ``compact`` once it has mended an older store."""
-    os.makedirs(chunks_root, exist_ok=True)
-    open(os.path.join(chunks_root, RUNS_DISJOINT), "a").close()
 
 
 def _read_parquet(path: str) -> pa.Table:
@@ -576,27 +565,19 @@ def read_chunk_dir(d: str) -> list[tuple[int, np.ndarray, tuple, np.ndarray]]:
 
 
 def _list_parts(col: pa.ListArray) -> tuple[np.ndarray, np.ndarray]:
-    """(offsets, flat values) of a list column as NumPy views; null
-    elements (none of the engine's writers produce them) read as NaN."""
-    values = col.values
-    return col.offsets.to_numpy(), values.to_numpy(zero_copy_only=values.null_count == 0)
+    """(offsets, flat values) of a list column as zero-copy NumPy views."""
+    return col.offsets.to_numpy(), col.values.to_numpy()
 
 
 def chunk_runs(table: pa.Table) -> Iterator[tuple[int, np.ndarray, tuple, np.ndarray]]:
     """``(seq, origin, shape, values)`` for each run row of one chunk
     file, in row order. ``values`` is a flat, read-only view of the
-    file's ``data`` list; ``seq`` is -1 for legacy seq-less rows (the
-    oldest)."""
+    file's ``data`` list."""
     for batch in table.to_batches():
-        seqs = (
-            batch.column("seq").fill_null(-1).to_numpy().tolist()
-            if "seq" in batch.schema.names
-            else [-1] * batch.num_rows
-        )
+        seqs = batch.column("seq").to_numpy().tolist()
         o_off, o_val = _list_parts(batch.column("origin"))
         s_off, s_val = _list_parts(batch.column("shape"))
         d_off, d_val = _list_parts(batch.column("data"))
-        d_val.setflags(write=False)  # a copy when the list held nulls
         for i, seq in enumerate(seqs):
             yield (
                 seq,
@@ -612,19 +593,13 @@ def _run_seq(run: tuple) -> int:
 
 def ordered_runs(tables: Sequence[pa.Table]) -> list[tuple[int, np.ndarray, tuple, np.ndarray]]:
     """Every run of one chunk dir's files (given in ascending file-name
-    order) in LAST-WRITE-WINS placement order: ascending
-    ``(coalesce(seq, -1), file name, row index)``. Stamped runs order by
-    ``seq`` alone: runs that share a stamp come from one write event or
-    one fold, and are disjoint. A legacy seq-less run carries its file's
-    rank in the listing as its ``seq`` — older than every stamped run,
-    in file-name order — which a fold writes out, so a rewrite never
-    changes which legacy run wins. Runs in different chunk dirs never
-    overlap, so per-dir replay equals one global sort."""
-    runs = [
-        (rank if seq < 0 else seq, origin, shape, values)
-        for rank, t in enumerate(tables)
-        for seq, origin, shape, values in chunk_runs(t)
-    ]
+    order) in LAST-WRITE-WINS placement order: ascending ``(seq, file
+    name, row index)``. Runs that share a stamp come from one write
+    event or one fold, and are disjoint, except across a fold's crash
+    window, where the (file, row) order keeps the fold's output, which
+    sorts last, over the files it replaces. Runs in different chunk dirs
+    never overlap, so per-dir replay equals one global sort."""
+    runs = [run for t in tables for run in chunk_runs(t)]
     runs.sort(key=_run_seq)  # stable: ties keep (file, row) order
     return runs
 
@@ -665,8 +640,8 @@ def replay_runs(runs: Sequence[tuple]) -> tuple[list[int], np.ndarray, np.ndarra
     ``runs`` (:func:`ordered_runs`, at least one) replayed by
     :func:`place_runs` into a buffer over their bounding box at ``lo``,
     at most the chunk's extent, with the mask of the cells they write.
-    The fold, ``cell_df`` and the ``deker`` batch reader resolve a
-    chunk's cells through here."""
+    The fold and :func:`chunk_cells` resolve a chunk's cells through
+    here."""
     origins = np.array([r[1] for r in runs], np.int64)
     ends = origins + np.array([r[2] for r in runs], np.int64)
     lo = origins.min(axis=0).tolist()
@@ -674,6 +649,21 @@ def replay_runs(runs: Sequence[tuple]) -> tuple[list[int], np.ndarray, np.ndarra
     written = np.zeros(values.shape, bool)
     place_runs(runs, lo, values, written)
     return lo, values, written
+
+
+def chunk_cells(paths: Sequence[str]) -> tuple[np.ndarray, np.ndarray] | None:
+    """``(coords, values)``: the cells one chunk dir's files ``paths``
+    write, each once with its last-written value — ``coords`` the
+    ``(ndim, n)`` absolute cell indices. The files are read through
+    :func:`read_chunk_files` and replayed through :func:`replay_runs`;
+    None when the dir holds no run (deleted or emptied since its
+    listing). ``cell_df`` and the ``deker`` batch reader resolve a dir
+    through here."""
+    runs = ordered_runs(read_chunk_files(paths)[1])
+    if not runs:
+        return None
+    lo, values, written = replay_runs(runs)
+    return np.argwhere(written).T + np.asarray(lo, np.int64)[:, None], values[written]
 
 
 def written_runs(seq: int, lo: Sequence[int], values: np.ndarray, written: np.ndarray) -> list:
@@ -753,7 +743,7 @@ _REWRITE_GEN = re.compile(r"part-compact-g(\d+)-")
 
 def is_staged_chunk_file(name: str) -> bool:
     """An unpublished writer or rewrite temp — in flight, or orphaned by
-    a crash. Hadoop ``.crc`` companions and other dotfiles are not."""
+    a crash. Other dotfiles are not."""
     return name.startswith(TMP_PREFIX) or (
         name.startswith(_REWRITE_TMP) and name.endswith(".tmp")
     )
@@ -839,12 +829,10 @@ def _rewrite_name(paths: Sequence[str]) -> str:
 
 
 def _merge_chunk_dir(d: str) -> int:
-    """Fold one chunk-partition dir into a single file — the one
-    rewrite. An update runs it on the driver once the dir holds more
-    than ``FOLD_FILES`` files; ``compact`` runs it on executors. A dir
-    of one file is rewritten only if that file's runs overlap, as in a
-    store written before :data:`RUNS_DISJOINT` held. Returns 1 if the
-    dir was rewritten.
+    """Fold one chunk-partition dir of two or more files into a single
+    file — the one rewrite. An update runs it on the driver once the dir
+    holds more than ``FOLD_FILES`` files; ``compact`` runs it on
+    executors. Returns 1 if the dir was rewritten.
 
     - The fold *replays* the dir's runs last-write-wins with
       :func:`replay_runs` into one buffer over the runs' bounding box
@@ -853,62 +841,50 @@ def _merge_chunk_dir(d: str) -> int:
       runs fill, such as a dense chunk with its deltas or a ``deker``
       chunk written row by row, folds to one run.
     - Every output run is stamped with the oldest ``seq`` the fold
-      replaces, as if the newer runs were written into the oldest one; a
-      legacy run without a ``seq`` has its rank in sorted-file-name
-      order (:func:`ordered_runs`), so it stays older than every
-      stamped run. Race window: a write stamped before the fold lists
-      the dir but published after it is newer than the output, so it
-      overrides the output's cells, even those a replaced run newer
-      than that write held (a long ``deker`` append racing updates that
-      fold the chunk). Keeping each cell's own ``seq`` would close it.
+      replaces, as if the newer runs were written into the oldest one.
+      Race window: a write stamped before the fold lists the dir but
+      published after it is newer than the output, so it overrides the
+      output's cells, even those a replaced run newer than that write
+      held (a long ``deker`` append racing updates that fold the chunk).
+      Keeping each cell's own ``seq`` would close it.
     - The runs come from the driver-side cache when it holds this
       listing (the update that folds just extended it), and the output
       is then written through; otherwise the files are read through
       ``read_chunk_files``, so a file that vanishes mid-read re-lists
       the dir, and only the files actually read are replaced.
     - Publish order: the output is staged and published whole like
-      every chunk file, then the replaced files go, each after its
-      Hadoop ``.crc`` companion (stores written by Spark's parquet
-      writer have them). A reader that sees both (mid-fold, or after a
-      crash before the removal) replays the replaced runs and the
-      output's runs; the output sorts after every replaced
-      file and every run newer than an output run is still there, so
-      each cell resolves to its last write, and the next fold heals
-      the dir. A crashed fold's temp is GC'd by the next fold of the
-      dir.
+      every chunk file, then the replaced files go. A reader that sees
+      both (mid-fold, or after a crash before the removal) replays the
+      replaced runs and the output's runs; the output sorts after every
+      replaced file and every run newer than an output run is still
+      there, so each cell resolves to its last write, and the next fold
+      heals the dir. A crashed fold's temp is GC'd by the next fold of
+      the dir.
     - In-flight writer temps are never touched, and a file committed
       after the listing (an update's delta, a ``deker`` append) is
       kept. Two concurrent folds of the SAME dir (an update's fold
       racing ``compact``) are unsupported.
     """
     paths = visible_chunk_files(d)
-    if not paths:
+    if len(paths) < 2:
         return 0
     runs = _cached(d, _signature(paths))
     hit = runs is not None
     if not hit:
         paths, tables = read_chunk_files(paths)
-        if not paths:
+        if len(paths) < 2:
             return 0
         runs = ordered_runs(tables)
     if runs:
-        lo, values, written = replay_runs(runs)
-        if len(paths) == 1 and written.sum() == sum(r[3].size for r in runs):
-            return 0  # one file whose runs write each cell once
-        runs = written_runs(runs[0][0], lo, values, written)  # the oldest seq replaced
-    elif len(paths) == 1:
-        return 0
+        runs = written_runs(runs[0][0], *replay_runs(runs))  # the oldest seq replaced
     out = os.path.join(d, _rewrite_name(paths))
     tmp = stage_chunk_file(d, encode_runs(runs), f".{os.path.basename(out)}.tmp")
     publish_staged([(tmp, out)], _REWRITE_TMP)
     for p in paths:
-        # the companion first: a crash in between leaves a file without
-        # its checksum (read unverified), never a checksum without a file
-        for q in (os.path.join(d, f".{os.path.basename(p)}.crc"), p):
-            try:
-                os.remove(q)
-            except FileNotFoundError:
-                pass
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
     _count(folds=1)
     sig = _signature([out])
     if hit and sig is not None:
@@ -918,6 +894,17 @@ def _merge_chunk_dir(d: str) -> int:
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _LISTING_LOCK = threading.Lock()
+
+
+def _sql_in(expr: str, values: Iterable[str]) -> Column:
+    """``expr IN (values...)`` as one SQL expression, each value a
+    Spark SQL string literal: one Py4J call however many values, where
+    ``Column.isin`` makes one per value. Over partition columns it is a
+    static partition filter, like ``isin``'s."""
+    literals = ["'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values]
+    if not literals:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(literals)})")
 
 
 def require_session(spark: SparkSession | None, op: str) -> SparkSession:
@@ -1058,7 +1045,7 @@ class ChunkStore:
         again, so a compacted dir holds no two overlapping runs, and a
         chunk its runs fill holds one. Placement semantics
         survive because run precedence is the explicit ``seq`` column,
-        not file order (legacy seq-less rows get a synthesized rank).
+        not file order.
         Crash window: a failure between publishing the merged file and
         removing the inputs leaves duplicate RUNS; the merged file sorts
         last and holds each cell's last write, so reads resolve right,
@@ -1073,9 +1060,6 @@ class ChunkStore:
         re-lists the dir. Two concurrent folds of the SAME dir — two
         compact() calls on one store, or a compact racing the update
         that folds that chunk — are not supported.
-
-        On a store not marked :data:`RUNS_DISJOINT`, the pass also
-        rewrites each single-file dir whose runs overlap, then marks it.
 
         Returns the number of chunk dirs compacted. NOTE for changefeed
         consumers: the merged file is a NEW file, so a running
@@ -1104,25 +1088,15 @@ class ChunkStore:
         sc = require_session(self.spark, "compact").sparkContext
         if gc_temp_age_sec > 0:
             self.gc_temps(max_age_sec=gc_temp_age_sec)
-        mend = not self.runs_disjoint()
         dirs = [
             d
             for _, _, d in walk_chunk_dirs(self.path)
-            if (n := len(visible_chunk_files(d))) >= max(min_files, 2) or (mend and n == 1)
+            if len(visible_chunk_files(d)) >= max(min_files, 2)
         ]
-        done = 0
-        if dirs:
-            n_slices = min(len(dirs), sc.defaultParallelism)
-            done = int(
-                sc.parallelize(dirs, n_slices).map(_merge_chunk_dir).sum()
-            )
-        if mend:
-            mark_runs_disjoint(self.path)
-        return done
-
-    def runs_disjoint(self) -> bool:
-        """Whether this store is marked :data:`RUNS_DISJOINT`."""
-        return os.path.exists(os.path.join(self.path, RUNS_DISJOINT))
+        if not dirs:
+            return 0
+        n_slices = min(len(dirs), sc.defaultParallelism)
+        return int(sc.parallelize(dirs, n_slices).map(_merge_chunk_dir).sum())
 
     def maintenance_stats(self) -> DataFrame:
         """Per-chunk-dir maintenance view — the table an operator
@@ -1315,70 +1289,63 @@ class ChunkStore:
         ``read_data``.
 
         The driver lists the chunk dirs (``walk_chunk_dirs``, pruned to
-        the given ids) and their visible files, and opens none. In a
-        store marked :data:`RUNS_DISJOINT` a file's runs never overlap
-        (:func:`encode_runs`), so a dir of one file takes the plain
-        plan: a scan of the chunk dataset, each run's ``data`` exploded
-        with its positions and div/mod over the run shape — pure-JVM
-        index math, no Python and no shuffle, with the ids as an
-        ``array_id`` partition filter. A dir of two or more files
-        (unfolded update deltas, ``deker`` appends) is left out of that
-        scan and replayed instead: one ``mapInArrow`` over the
-        ``(array_id, files)`` table, each task replaying one dir at a
-        time through :func:`replay_runs`, as ``read_data`` and the
-        ``deker`` source do, and emitting its written cells. A task
-        holds one dir's runs and one buffer of at most the chunk's
-        extent. The two plans are unioned. An unmarked store is replayed
-        whole until ``compact`` mends it.
+        the given ids) and their visible files, and opens none. A file's
+        runs never overlap (:func:`encode_runs`), so a dir of one file
+        takes the plain plan: a scan of the chunk dataset, each run's
+        ``data`` exploded with its positions and div/mod over the run
+        shape — pure-JVM index math, no Python and no shuffle, with the
+        ids as an ``array_id`` partition filter. A dir of two or more
+        files (unfolded update deltas, ``deker`` appends) is left out of
+        that scan by a second partition filter and replayed instead: one
+        ``mapInArrow`` over the ``(array_id, files)`` table, each task
+        resolving one dir at a time through :func:`chunk_cells`, as the
+        ``deker`` source does. A task holds one dir's runs and one
+        buffer of at most the chunk's extent. The two plans are unioned.
 
         Both plans read the listing made here, so a re-executed
         DataFrame reads each chunk as planned, or, where a fold has
         removed a planned file since, as the fold left it
         (``read_chunk_files`` re-lists)."""
-        disjoint = self.runs_disjoint()
-        if disjoint:
-            with _LISTING_LOCK:
-                # list on the driver, as walk_chunk_dirs does: past 32
-                # paths Spark lists in a job of one task per array dir.
-                # Only for this read; measured on a local filesystem.
-                conf = self.spark.conf
-                was = conf.get(_LISTING_THRESHOLD, None)
-                conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
-                try:
-                    df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
-                finally:
-                    if was is None:
-                        conf.unset(_LISTING_THRESHOLD)
-                    else:
-                        conf.set(_LISTING_THRESHOLD, was)
-            if array_ids is not None:
-                df = df.filter(F.col("array_id").isin(list(array_ids)))
+        with _LISTING_LOCK:
+            # list on the driver, as walk_chunk_dirs does: past 32
+            # paths Spark lists in a job of one task per array dir.
+            # Only for this read; measured on a local filesystem.
+            conf = self.spark.conf
+            was = conf.get(_LISTING_THRESHOLD, None)
+            conf.set(_LISTING_THRESHOLD, str(2**31 - 1))
+            try:
+                df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.path)
+            finally:
+                if was is None:
+                    conf.unset(_LISTING_THRESHOLD)
+                else:
+                    conf.set(_LISTING_THRESHOLD, was)
+        if array_ids is not None:
+            df = df.filter(_sql_in("array_id", array_ids))
         replayed = [
             (array_id, idx, files)
             for array_id, idx, d in walk_chunk_dirs(self.path, array_ids)
-            if len(files := visible_chunk_files(d)) > (1 if disjoint else 0)
+            if len(files := visible_chunk_files(d)) > 1
         ]
+        if replayed:
+            # a chunk index holds no "/", so a key names one dir
+            key = "concat_ws('/', array_id, CAST(chunk_idx AS STRING))"
+            df = df.filter(~_sql_in(key, [f"{a}/{i}" for a, i, _ in replayed]))
         n = len(dim_names)
-        if disjoint:
-            strides = []
-            for d in range(n):
-                expr = "1L"
-                for d2 in range(d + 1, n):
-                    expr = f"{expr} * shape[{d2}]"
-                strides.append(expr)
-            cols = [
-                (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
-                for d in range(n)
-            ]
-            if replayed:
-                # one IN-set over a dir key: a chunk index holds no "/", so
-                # the key names one dir, however many arrays have such dirs
-                keys = [f"{a}/{i}" for a, i, _ in replayed]
-                df = df.filter(~F.concat_ws("/", "array_id", F.col("chunk_idx").cast("string")).isin(keys))
-            plain = df.select("array_id", "origin", "shape", F.posexplode("data").alias("pos", "value"))
-            plain = plain.select("array_id", *cols, "value")
-            if not replayed:
-                return plain
+        strides = []
+        for d in range(n):
+            expr = "1L"
+            for d2 in range(d + 1, n):
+                expr = f"{expr} * shape[{d2}]"
+            strides.append(expr)
+        cols = [
+            (F.expr(f"origin[{d}] + (pos DIV ({strides[d]})) % shape[{d}]")).alias(dim_names[d])
+            for d in range(n)
+        ]
+        plain = df.select("array_id", "origin", "shape", F.posexplode("data").alias("pos", "value"))
+        plain = plain.select("array_id", *cols, "value")
+        if not replayed:
+            return plain
         schema = StructType(
             [StructField("array_id", StringType())]
             + [StructField(name, LongType()) for name in dim_names]
@@ -1388,20 +1355,18 @@ class ChunkStore:
         def replay(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for batch in batches:
                 for array_id, files in zip(batch.column("array_id").to_pylist(), batch.column("files").to_pylist()):
-                    runs = ordered_runs(read_chunk_files(files)[1])
-                    if not runs:
-                        continue  # a dir deleted or emptied since planning
-                    lo, values, written = replay_runs(runs)
-                    at = np.argwhere(written)
+                    cells = chunk_cells(files)
+                    if cells is None:
+                        continue
+                    coords, values = cells
                     yield pa.RecordBatch.from_arrays(
-                        [pa.repeat(pa.scalar(array_id), len(at))]
-                        + [pa.array(at[:, k] + lo[k]) for k in range(n)]
-                        + [pa.array(values[written])],
+                        [pa.repeat(pa.scalar(array_id), len(values))]
+                        + [pa.array(c) for c in coords]
+                        + [pa.array(values)],
                         names=schema.names,
                     )
 
         dirs = self.spark.createDataFrame(
             [(a, files) for a, _, files in replayed], "array_id string, files array<string>"
         )
-        replays = dirs.mapInArrow(replay, schema)
-        return plain.unionByName(replays) if disjoint else replays
+        return plain.unionByName(dirs.mapInArrow(replay, schema))

@@ -196,10 +196,13 @@ class VArrayAdapter:
         varray.custom_attributes = meta["custom_attributes"]
 
     def delete(self, varray: VArray) -> None:
-        """Delete the varray: its chunk dataset and every chunk-array
-        view (reference deletes all arrays with this vid)."""
-        self._arrays.delete_all_by_vid(varray.id)
-        remove_meta(self._arrays._meta_dir(), varray.id)
+        """Delete the varray: every chunk-array view, by the ids its
+        vgrid names, then its own meta, then its chunk dataset
+        (reference deletes all arrays with this vid). No catalog scan."""
+        meta_dir = self._arrays._meta_dir()
+        for idx in range(self._grid().n_chunks):
+            remove_meta(meta_dir, f"{varray.id}:{idx}")
+        remove_meta(meta_dir, varray.id)
         self.store.delete_array(varray.id)
 
     def get_by_id(self, id_: str) -> VArray | None:

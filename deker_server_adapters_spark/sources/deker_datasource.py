@@ -19,8 +19,8 @@ parquet scan inside ``ChunkStore``) and filter pushdown at two levels:
 ``value`` predicates (and anything else) are left for Spark.
 
 A batch read is LAST-WRITE-WINS per cell, like the engine's
-``read_data`` and ``cell_df``: each task replays its chunk's runs
-(``core.storage.replay_runs``) and emits each written cell once, with
+``read_data`` and ``cell_df``: each task resolves its chunk's runs
+(``core.storage.chunk_cells``) and emits each written cell once, with
 its latest value, so an update's delta runs and overlapping appends are
 never counted twice. ``readStream`` keeps the append-log changefeed,
 one row per stored run cell.
@@ -28,7 +28,7 @@ one row per stored run cell.
 Every storage decision comes from ``core.storage``, none is repeated
 here: the chunk-dir walk (``walk_chunk_dirs``), the grid
 (``ChunkGrid.for_schema`` of the collection's schema), the file codec
-and the run replay (``replay_runs``). Partition planning walks the
+and the cell resolver (``chunk_cells``). Partition planning walks the
 chunk directory tree on the driver — O(surviving chunks) after
 pruning, the same cost class as Spark's own file-source listing. A
 100 TB deployment swaps the walk for a manifest/metastore lookup; the
@@ -93,13 +93,12 @@ from deker_server_adapters_spark.core.schema import collection_schema
 from deker_server_adapters_spark.core.storage import (
     ChunkGrid,
     appended_name,
+    chunk_cells,
     chunk_dir,
     discard_staged,
     encode_runs,
     ordered_runs,
     publish_staged,
-    read_chunk_files,
-    replay_runs,
     stage_chunk_file,
     staged_prefix,
     visible_chunk_files,
@@ -164,12 +163,11 @@ def _chunk_cell_batches(
     batches — shared by the batch and stream readers.
 
     ``batch=True`` (the batch reader): LAST-WRITE-WINS per cell. The
-    chunk's runs are replayed through ``core.storage.replay_runs``, the
-    one replay the fold and ``cell_df`` use, into a buffer over their
-    bounding box, and each written cell emits once with its latest
-    value. Memory for that replay is at most one chunk's dense extent
-    (the storage design unit) plus the run list. A planned file that
-    vanished is re-listed (``read_chunk_files``).
+    chunk is resolved by ``core.storage.chunk_cells``, the one cell
+    resolver ``cell_df`` also uses, and each written cell emits once
+    with its latest value. Memory for that replay is at most one
+    chunk's dense extent (the storage design unit) plus the run list. A
+    planned file that vanished is re-listed (``read_chunk_files``).
     ``batch=False`` (the stream reader's changefeed): append-log
     semantics — one row per materialized RUN cell, so a cell re-written
     by a later write appears once per write; a vanished file is
@@ -217,33 +215,30 @@ def _chunk_cell_batches(
 
     if batch:
         # BATCH semantics: a batch query has no "next batch" to heal a
-        # vanished file, so re-list and read the current visible set
-        _, tables = read_chunk_files(partition.files)
-    else:
-        tables = []
-        for path in partition.files:
-            try:
-                tables.append(pq.read_table(path))
-            except FileNotFoundError:
-                # STREAM semantics (fold race): a concurrent chunk fold
-                # can delete a file between offset planning and read. The
-                # deleted file's cells are superseded by the rewritten
-                # chunk file the NEXT micro-batch will pick up, so
-                # skipping is correct — raising would wedge a restarted
-                # stream forever on a WAL offset whose files are gone.
-                import warnings
-
-                warnings.warn(f"deker chunk file vanished (fold?): {path}")
-
-    runs = ordered_runs(tables)
-    if batch and runs:
-        lo, values, written = replay_runs(runs)
-        cells = emit(np.argwhere(written).T + np.asarray(lo, dtype=np.int64)[:, None], values[written])
+        # vanished file, so chunk_cells re-lists and reads the current
+        # visible set
+        resolved = chunk_cells(partition.files)
+        cells = None if resolved is None else emit(*resolved)
         if cells is not None:
             yield cells
         return
 
-    for _, origin, run_shape, values in runs:
+    tables = []
+    for path in partition.files:
+        try:
+            tables.append(pq.read_table(path))
+        except FileNotFoundError:
+            # STREAM semantics (fold race): a concurrent chunk fold
+            # can delete a file between offset planning and read. The
+            # deleted file's cells are superseded by the rewritten
+            # chunk file the NEXT micro-batch will pick up, so
+            # skipping is correct — raising would wedge a restarted
+            # stream forever on a WAL offset whose files are gone.
+            import warnings
+
+            warnings.warn(f"deker chunk file vanished (fold?): {path}")
+
+    for _, origin, run_shape, values in ordered_runs(tables):
         # absolute index per dim for every cell, vectorized
         idx = np.indices(run_shape).reshape(ndim, -1) + origin[:, None]
         cells = emit(idx, values)
@@ -317,8 +312,8 @@ class DekerReader(DataSourceReader):
     """Batch reader over one collection's chunk store.
 
     Cells resolve last-write-wins, one row per written cell: each task
-    replays its chunk's runs through ``core.storage.replay_runs``, as
-    ``read_data`` and ``cell_df`` resolve them (see
+    resolves its chunk through ``core.storage.chunk_cells``, as
+    ``cell_df`` does and as ``read_data`` places runs (see
     :func:`_chunk_cell_batches`).
 
     Isolation under concurrency: when a planned file vanishes mid-read

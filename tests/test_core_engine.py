@@ -428,6 +428,37 @@ class TestVArrays:
         coll.arrays.delete_all_by_vid(va.id)
         assert va.chunk_arrays() == []
 
+    def test_varray_delete_scans_no_catalog(self, warehouse, monkeypatch):
+        """A varray delete removes its views by the ids its vgrid names,
+        then its own meta and its chunk dataset, without reading the
+        catalog: it succeeds with ``read_catalog`` raising, and leaves
+        no view meta, no index marker and no chunk dir. Another
+        varray's views and data are kept."""
+        import os
+
+        from deker_server_adapters_spark.core import array as array_mod
+        from deker_server_adapters_spark.core.storage import chunk_dir
+
+        coll = warehouse.collections.create("v", VSCHEMA)
+        va = coll.varrays.create(data=np.ones((12, 8)))
+        vb = coll.varrays.create(data=np.full((12, 8), 2.0))
+
+        def scan(meta_dir):
+            raise AssertionError(f"catalog scan of {meta_dir}")
+
+        with monkeypatch.context() as m:
+            m.setattr(array_mod, "read_catalog", scan)
+            coll.varrays.delete(va)
+        meta_dir = os.path.join(coll.path, "meta")
+        assert not [n for n in os.listdir(meta_dir) if n.startswith(va.id)]
+        markers = [n for _, _, names in os.walk(os.path.join(meta_dir, "_primary")) for n in names]
+        assert not [n for n in markers if n.startswith(va.id)]
+        assert len([n for n in markers if n.startswith(vb.id)]) == 6
+        assert not os.path.exists(chunk_dir(os.path.join(coll.path, "chunks"), va.id))
+        assert coll.varrays.get_by_id(va.id) is None
+        assert len(vb.chunk_arrays()) == 6
+        np.testing.assert_array_equal(vb.read_data(), np.full((12, 8), 2.0))
+
     def test_chunk_views_read_and_write_real_data(self, warehouse):
         """Chunk-array views are live windows onto the varray's cells
         (reference chunk arrays hold the data; parity requires the

@@ -1213,60 +1213,6 @@ def test_compact_publishes_atomically_and_gcs_stale_tmp(spark, tmp_path):
     assert len(t) >= 1 and "seq" in t.schema.names
 
 
-def test_cow_rewrite_preserves_legacy_run_precedence(spark, tmp_path):
-    """ADVICE r8: a COW update must stamp seq-less legacy rows with
-    their sorted-file-name rank (the _merge_chunk_dir convention)
-    instead of a flat -1 — otherwise overlapping pre-seq runs OUTSIDE
-    the patched slice read back with scan-dependent precedence after
-    the rewrite moves them into new files."""
-    import glob as _glob
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = str(tmp_path / "whlegacy")
-    wh = Warehouse(spark, root)
-    coll = wh.collections.create("w", SCHEMA)
-    a = coll.arrays.create(data=np.zeros((20, 12)))
-    chunks = os.path.join(root, "collections", "w", "chunks")
-    dirs = _glob.glob(os.path.join(chunks, "array_id=*", "chunk_idx=*"))
-    # find the chunk dir covering row 0 (chunk grids split dim 0)
-    d = sorted(dirs)[0]
-    # make the store PRE-SEQ: strip the seq column from the engine file
-    # (and its Hadoop .crc companion, which would no longer match)
-    for f in os.listdir(d):
-        p = os.path.join(d, f)
-        if f.endswith(".parquet") and not f.startswith("."):
-            t = pq.read_table(p)
-            if "seq" in t.schema.names:
-                pq.write_table(t.drop_columns(["seq"]), p)
-        elif f.startswith(".") and f.endswith(".crc"):
-            os.remove(p)
-
-    def legacy_file(name: str, value: float):
-        # a pre-seq run covering cells (0, 0..11) — NO seq column
-        t = pa.table(
-            {
-                "origin": pa.array([[0, 0]], pa.list_(pa.int64())),
-                "shape": pa.array([[1, 12]], pa.list_(pa.int64())),
-                "data": pa.array([[value] * 12], pa.list_(pa.float64())),
-            }
-        )
-        pq.write_table(t, os.path.join(d, name))
-
-    # sorted-file-name order: aaa < bbb -> bbb must win reads
-    legacy_file("part-aaa-legacy.parquet", 100.0)
-    legacy_file("part-bbb-legacy.parquet", 200.0)
-    before = a.read_data((0, slice(0, 12)))
-    np.testing.assert_allclose(before, [200.0] * 12)
-    # COW-update a DISJOINT region of the same chunk (row 1)
-    a.update((1, slice(0, 12)), np.full(12, 7.0))
-    after = a.read_data((0, slice(0, 12)))
-    np.testing.assert_allclose(after, [200.0] * 12)
-    np.testing.assert_allclose(a.read_data((1, slice(0, 12))), [7.0] * 12)
-
-
 def test_update_writes_cells_no_run_covers(spark, tmp_path):
     """A sparse deker append covers part of an update's box. The update
     must write every cell of the box, not only the appended ones, and
@@ -1506,60 +1452,39 @@ def test_cell_df_build_starts_no_listing_job(spark, tmp_path):
     assert df.count() == 40 * 240
 
 
-def test_cell_df_agrees_with_read_data_on_a_store_of_overlapping_file_runs(spark, tmp_path):
-    """A store written before every file held pairwise disjoint runs
-    carries no ``RUNS_DISJOINT`` mark and may hold one file whose rows
-    overlap. ``cell_df`` replays every dir of such a store and agrees
-    with ``read_data``. ``compact`` rewrites that file alone, marks the
-    store, and ``cell_df`` then reads it on the plain plan, still in
-    agreement."""
-    import pyarrow.parquet as pq
+def test_cell_df_id_filters_are_partition_filters(spark, tmp_path):
+    """``cell_df``'s id filter and its filter of the replayed dirs are
+    each one SQL IN-list over partition columns. Ids holding ``'``,
+    ``\\`` and ``/`` select exactly their arrays, and both predicates sit
+    in the scan's ``PartitionFilters``, so pruning stays static."""
+    import re
 
-    from deker_server_adapters_spark.core.storage import (
-        RUNS_DISJOINT,
-        ChunkStore,
-        encode_runs,
-        visible_chunk_files,
-    )
-    from deker_server_adapters_spark.plans.explain import physical_plan
-    from tests.test_storage_properties import file_runs_disjoint
+    from deker_server_adapters_spark.core.storage import ChunkGrid, ChunkStore, normalize_bounds
+    from deker_server_adapters_spark.plans.explain import formatted_plan
 
-    wh = Warehouse(spark, str(tmp_path / "wholdruns"))
-    coll = wh.collections.create("w", SCHEMA)
-    a = coll.arrays.create(id_="a", data=np.zeros((20, 12)))
-    coll.arrays.create(id_="b", data=np.ones((20, 12)))
-    store = ChunkStore(spark, coll.path)
-    os.remove(os.path.join(store.path, RUNS_DISJOINT))
-    (f,) = visible_chunk_files(os.path.join(store.path, "array_id=a", "chunk_idx=0"))
-    # one file, two rows: the dense chunk, then a newer run over part of it
-    pq.write_table(
-        encode_runs([(1, [0, 0], [20, 12], np.zeros(240)), (2, [1, 4], [2, 3], np.full(6, 5.0))]), f
-    )
-    assert not file_runs_disjoint(f)
-    want = {"a": np.zeros((20, 12)), "b": np.ones((20, 12))}
-    want["a"][1:3, 4:7] = 5.0
-    np.testing.assert_array_equal(a.read_data(), want["a"])
-
-    def check(df):
-        cells = df.toPandas()
-        assert len(cells) == 2 * 240
-        for aid, expected in want.items():
-            mine = cells[cells.array_id == aid]
-            got = np.full((20, 12), np.nan)
-            got[mine.x, mine.y] = mine.value
-            np.testing.assert_array_equal(got, expected)
-
-    df = store.cell_df(None, ["x", "y"])
-    assert "MapInArrow" in physical_plan(df)
-    check(df)
-    assert store.compact() == 1
-    assert store.runs_disjoint()
-    (f,) = visible_chunk_files(os.path.join(store.path, "array_id=a", "chunk_idx=0"))
-    assert file_runs_disjoint(f)
-    df = store.cell_df(None, ["x", "y"])
-    assert "MapInArrow" not in physical_plan(df)
-    check(df)
-    np.testing.assert_array_equal(a.read_data(), want["a"])
+    store = ChunkStore(spark, str(tmp_path / "whquote"))
+    grid = ChunkGrid((20, 12), (2, 1))
+    ids = ["it's", "back\\slash", "a/b", "plain", "q\\'x"]
+    for k, aid in enumerate(ids):
+        store.write_array(aid, grid, np.full((20, 12), float(k)))
+    for aid in ("a/b", "it's"):  # a second file in chunk 0
+        store.update_slice(aid, grid, normalize_bounds((slice(0, 2), slice(0, 2)), (20, 12)), -1.0)
+    df = store.cell_df(ids[:4], ["x", "y"])
+    (filters,) = [line for line in formatted_plan(df).splitlines() if "PartitionFilters" in line]
+    assert re.search(r"array_id#\d+ IN \(it's,back\\slash,a/b,plain\)", filters), filters
+    assert re.search(
+        r"NOT concat_ws\(/, array_id#\d+, cast\(chunk_idx#\d+L as string\)\) IN \(a/b/0,it's/0\)", filters
+    ), filters
+    cells = df.toPandas()
+    assert sorted(set(cells.array_id)) == sorted(ids[:4])
+    for k, aid in enumerate(ids[:4]):
+        want = np.full((20, 12), float(k))
+        if aid in ("a/b", "it's"):
+            want[0:2, 0:2] = -1.0
+        mine = cells[cells.array_id == aid]
+        got = np.full((20, 12), np.nan)
+        got[mine.x, mine.y] = mine.value
+        np.testing.assert_array_equal(got, want, err_msg=aid)
 
 
 def test_filled_box_append_writes_one_run_per_file(spark, tmp_path):
@@ -1735,8 +1660,7 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     later resolves the dir publishes its file before it removes the
     files it replaces. If the fold dies in between, reads must already
     return the updated values (the new file sorts after every file it
-    replaces), a following compact() must keep them, and no Hadoop
-    .crc file may outlive its parquet file."""
+    replaces), and a following compact() must keep them."""
     import glob as _glob
     import os
 
@@ -1753,10 +1677,6 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     base = np.random.RandomState(4).rand(20, 12)
     a = coll.arrays.create(data=base)
     (d,) = _glob.glob(os.path.join(root, "collections", "w", "chunks", "array_id=*", "chunk_idx=*"))
-    # a store written by Spark's parquet writer has a Hadoop checksum
-    # companion next to the engine-created file
-    (created,) = visible_chunk_files(d)
-    open(os.path.join(d, f".{os.path.basename(created)}.crc"), "wb").close()
     register(spark)
     (
         spark.createDataFrame(
@@ -1774,7 +1694,6 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     want = base.copy()
     want[2, :] = -1.0
     assert len(visible_chunk_files(d)) == 2
-    assert any(n.endswith(".crc") for n in os.listdir(d))  # Spark's checksums
     a.update((slice(0, 4), slice(3, 9)), np.full((4, 6), 5.0))
     want[0:4, 3:9] = 5.0
     replaced = visible_chunk_files(d)
@@ -1784,7 +1703,7 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
 
     def crash(path):
         name = os.path.basename(path)
-        if is_visible_chunk_file(name) or name.endswith(".crc"):
+        if is_visible_chunk_file(name):
             raise OSError("crash before removal")
         real_remove(path)
 
@@ -1799,9 +1718,6 @@ def test_update_crash_before_removal_keeps_updated_values(spark, tmp_path, monke
     assert ChunkStore(spark, os.path.join(root, "collections", "w")).compact() == 1
     assert len(visible_chunk_files(d)) == 1
     np.testing.assert_array_equal(a.read_data(), want)
-    names = set(os.listdir(d))
-    orphans = [n for n in names if n.endswith(".crc") and n[1 : -len(".crc")] not in names]
-    assert orphans == []
 
 
 def test_seq_overflow_reserves_global_range(spark, tmp_path, monkeypatch):

@@ -220,16 +220,23 @@ def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense
     order against a NumPy shadow. After every step ``read_slice``
     equals the shadow warm and after ``drop_cached``, and no visible
     file holds two overlapping runs; after an update no dir it touched
-    holds more than ``FOLD_FILES`` files; a fold leaves one file."""
+    holds more than ``FOLD_FILES`` files; a fold leaves one file. At the
+    end ``cell_df`` holds exactly the written cells, once each, with
+    the shadow's values."""
+    import os
+
     from deker_server_adapters_spark.core import storage
 
     fill = -9.0
     grid = ChunkGrid(DELTA_SHAPE, DELTA_SPLITS)
     store = storage.ChunkStore(spark, str(tmp_path_factory.mktemp("delta")))
+    os.makedirs(store.path)  # as collection create makes it
     shadow = np.full(DELTA_SHAPE, fill)
+    written = np.zeros(DELTA_SHAPE, bool)
     if dense:
         shadow = np.random.RandomState(1).rand(*DELTA_SHAPE)
         store.write_array("a1", grid, shadow)
+        written[:] = True
     dirs = [storage.chunk_dir(store.path, "a1", i) for i in range(grid.n_chunks)]
     full = normalize_bounds(slice(None), DELTA_SHAPE)
 
@@ -245,10 +252,12 @@ def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense
                 norm = normalize_bounds(box, DELTA_SHAPE)
                 store.update_slice("a1", grid, norm, values)
                 shadow[box] = values
+                written[box] = True
                 for i in grid.overlapping_chunks(norm):  # appends do not fold
                     assert len(storage.visible_chunk_files(dirs[i])) <= storage.FOLD_FILES
             elif kind == "append":
                 _sparse_append(store, grid, op[1], op[2], shadow)
+                written[op[1]] = True
             elif kind == "fold":
                 storage._merge_chunk_dir(dirs[op[1]])
             else:
@@ -264,3 +273,12 @@ def test_delta_runs_folds_and_compact_match_numpy(spark, tmp_path_factory, dense
             storage.drop_cached(store.path)
             got = store.read_slice("a1", grid, full, np.dtype("float64"), fill_value=fill)
             np.testing.assert_array_equal(got, shadow, err_msg=f"cold after {op}")
+
+    cells = store.cell_df(["a1"], ["x", "y"]).toPandas()
+    at = (cells.x.to_numpy(np.int64), cells.y.to_numpy(np.int64))
+    seen = np.zeros(DELTA_SHAPE, bool)
+    seen[at] = True
+    assert len(cells) == written.sum() and (seen == written).all(), ops
+    got = np.full(DELTA_SHAPE, np.nan)
+    got[at] = cells.value.to_numpy(np.float64)
+    np.testing.assert_array_equal(got[written], shadow[written], err_msg="cell_df")
