@@ -90,13 +90,18 @@ class VArray:
         }
 
     def chunk_arrays(self) -> list[Array]:
-        """The vgrid chunk arrays (vid + v_position views)."""
+        """The vgrid chunk arrays (vid + v_position views) in vgrid
+        order, read by the ids the vgrid names (``<vid>:<idx>``), with
+        no catalog scan; a view whose meta is missing is skipped."""
         adapter = ArrayAdapter(self.collection)
-        return [
-            adapter._from_meta(m)
-            for m in adapter
-            if m["primary_attributes"].get("vid") == self.id
-        ]
+        views = []
+        for idx in range(ChunkGrid.for_schema(self.collection.schema).n_chunks):
+            try:
+                with open(adapter._meta_path(f"{self.id}:{idx}")) as f:
+                    views.append(adapter._from_meta(json.load(f)))
+            except FileNotFoundError:
+                continue
+        return views
 
 
 class VArrayAdapter:

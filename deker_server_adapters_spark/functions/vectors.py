@@ -57,12 +57,12 @@ def centroid_argmax_cell(centroids) -> "tuple[Column, Column]":
     can't match NaN degrades to the same lowest-cell verdict instead of
     ``element_at(0)`` erroring), not the mechanism.
 
-    ``centroids`` is a sequence of rows with ``.cell`` (int id) and
-    ``.ce`` (float list); callers pass it sorted by cell so first-max
-    resolves to the lowest cell id. Pure codegen — NO per-vector window
-    shuffle; k centroids become k inlined literal arrays, so the
-    expression ships with the plan and the corpus never reshuffles for
-    assignment.
+    ``centroids`` is the trainer's list of ``(cell, centroid)`` pairs
+    (``operators/similarity._ivf_centroids``), sorted by cell so
+    first-max resolves to the lowest cell id. Pure codegen — NO
+    per-vector window shuffle; k centroids become k inlined literal
+    arrays, so the expression ships with the plan and the corpus never
+    reshuffles for assignment.
     """
     from deker_server_adapters_spark.functions.histogram import round_ties_safe
 
@@ -71,14 +71,14 @@ def centroid_argmax_cell(centroids) -> "tuple[Column, Column]":
             round_ties_safe(
                 cosine_similarity(
                     F.col("embedding"),
-                    F.array(*[F.lit(float(v)) for v in r.ce]),
+                    F.array(*[F.lit(float(v)) for v in ce]),
                 ),
                 9,
             )
-            for r in centroids
+            for _, ce in centroids
         ]
     )
-    cell_ids = F.array(*[F.lit(int(r.cell)) for r in centroids])
+    cell_ids = F.array(*[F.lit(int(cell)) for cell, _ in centroids])
     pos = F.array_position(sims, F.array_max(sims))
     cell = F.element_at(cell_ids, F.greatest(pos, F.lit(1)).cast("int"))
     return cell, F.array_max(sims)

@@ -252,16 +252,12 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid + dispersion — the IVF coarse-quantizer step
     (centroids here are the 'inverted file' cells)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exploded = emb.select(
-        "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "v")
-    )
     return (
-        exploded.groupBy("label", "dim")
-        .agg(round_ties_safe(F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count("v"), 6).alias("centroid_v"))
+        _exact_means(emb, ["label"], "embedding", 6)
         .groupBy("label")
         .agg(
             F.count("*").alias("n_dims"),
-            F.round(F.sum(F.abs(F.col("centroid_v")).cast("decimal(30,12)")), 4).cast("double").alias("centroid_l1"),
+            F.round(F.sum(F.abs(F.col("cv")).cast("decimal(30,12)")), 4).cast("double").alias("centroid_l1"),
         )
     )
 
@@ -283,81 +279,83 @@ _IVF_CELLS = 8
 _IVF_PROBES = 3
 
 
-def _ivf_centroids(emb: DataFrame, k: int = _IVF_CELLS) -> DataFrame:
-    """Coarse quantizer: k-means-lite with deterministic seeds (the
-    md5-smallest vec_ids) and one Lloyd refinement, all as DataFrame
-    aggregations — no mllib dependency, fully distributed.
+def _exact_means(df: DataFrame, keys: "list[str]", vec_col: str, digits: int) -> DataFrame:
+    """(keys..., d, cv): the per-key mean of the vector column, one row
+    per dim — each component cast to double, summed in DECIMAL(30,12),
+    divided by the count and rounded tie-safe to ``digits``.
+    Order-independent and engine-exact, so the DuckDB oracles replay
+    it bit for bit; the one mean behind every centroid trainer."""
+    return (
+        df.select(*keys, F.posexplode(F.col(vec_col).cast("array<double>")).alias("d", "v"))
+        .groupBy(*keys, "d")
+        .agg(
+            round_ties_safe(
+                F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count("v"), digits
+            ).alias("cv")
+        )
+    )
 
-    Determinism discipline (so the recall oracle can replay it in
-    DuckDB): assignment sims round to 1e-9 before ranking (ties break
-    to the lowest cell), and the refined per-dim means accumulate in
-    DECIMAL then round to 1e-9 — order-independent and engine-exact,
-    the same device ``label_centroids`` / ``kmeans_assignments`` use.
 
-    r17: the assignment evaluates through the Arrow kernel
-    (``functions/veccompute.cells_ranked``) instead of a
-    crossJoin(broadcast) + per-vector window — one map-only stage in
-    place of an n·k-row window shuffle, identical rows (the kernel
-    replays the rounded-cosine fold and the desc-sim/lowest-cell rank
-    order). The k seed rows collect to the driver exactly as
-    ``pq_codebooks``'s seeds already do."""
+def _mean_vectors(df: DataFrame, keys: "list[str]", vec_col: str) -> "dict[tuple, list[float]]":
+    """``_exact_means`` at 1e-9, collected: {key tuple: mean vector}.
+    A key no row carries has no entry."""
+    by_key: dict[tuple, dict[int, float]] = {}
+    for r in _exact_means(df, keys, vec_col, 9).collect():
+        by_key.setdefault(tuple(r[c] for c in keys), {})[r.d] = r.cv
+    return {key: [ds[d] for d in range(len(ds))] for key, ds in by_key.items()}
+
+
+def _seed_vectors(emb: DataFrame, k: int) -> "list[list[float]]":
+    """The seeds of every centroid trainer: the embeddings of the k
+    vec_ids with the smallest h32(vec_id), ordered by (h32, vec_id) so
+    a hash tie at the k boundary picks the lower id, returned sorted by
+    vec_id (seed i seeds cell i). One k-row collect; [] on an empty
+    corpus."""
     from deker_server_adapters_spark.functions.hashing import h32
-    from deker_server_adapters_spark.functions.veccompute import cells_ranked
 
-    seed_rows = (
+    rows = (
         emb.withColumn("hk", h32(F.col("vec_id")))
-        .orderBy("hk")
+        .orderBy("hk", "vec_id")
         .limit(k)
         .select("vec_id", "embedding")
         .collect()
     )
-    if not seed_rows:  # empty corpus: typed empty centroid table
-        return emb.sparkSession.createDataFrame([], "cell int, ce array<double>")
-    seeds = [
-        (cell, [float(v) for v in r.embedding])
-        for cell, r in enumerate(sorted(seed_rows, key=lambda r: r.vec_id))
-    ]
-
-    # one Lloyd iteration: reassign -> recompute mean centroids (only
-    # the embedding column crosses the Arrow boundary — guide §4.2)
-    assigned = cells_ranked(emb.select("embedding"), seeds, 1, ["embedding"])
-    new_cents = (
-        assigned.select("cell", F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "v"))
-        .groupBy("cell", "d")
-        .agg(
-            round_ties_safe(
-                F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count("v"), 9
-            ).alias("cv")
-        )
-        .groupBy("cell")
-        .agg(F.array_sort(F.collect_list(F.struct("d", "cv"))).alias("pairs"))
-        .select("cell", F.expr("transform(pairs, p -> p.cv)").alias("ce"))
-    )
-    return new_cents
+    return [[float(v) for v in r.embedding] for r in sorted(rows, key=lambda r: r.vec_id)]
 
 
-def _local_centroids(emb: DataFrame, k: int = _IVF_CELLS) -> DataFrame:
-    """``_ivf_centroids`` materialized to a K-row LocalRelation.
-
-    The consumers reference the centroid table from several plan
-    branches (inverted file + query probes); a ``persist()`` here used
-    to leak past the builder (the one r7 deviation from the repo's
-    persist-hygiene rule). Collecting K=8 tiny rows once instead runs
-    the trainer exactly once, leaves nothing persisted, and gives the
-    branches a LocalRelation that broadcasts without a recompute — the
-    shape that survives 100 TB, where re-running the quantizer per
-    branch would double the corpus scans."""
-    cents = _ivf_centroids(emb, k)
-    return emb.sparkSession.createDataFrame(cents.collect(), schema=cents.schema)
+def _lloyd(assign, cents: "dict[tuple, list[float]]", keys: "list[str]", vec_col: str, iters: int):
+    """``iters`` Lloyd rounds on the driver-side centroid dict (keyed
+    by the group-key tuple): ``assign(cents)`` is a DataFrame carrying
+    ``keys`` and ``vec_col``; its ``_mean_vectors`` are the next
+    centroids, and a key that lost every member keeps its old centroid
+    (the oracles' ``COALESCE``). Data stays put, centroids travel."""
+    for _ in range(iters):
+        means = _mean_vectors(assign(cents), keys, vec_col)
+        cents = {key: means.get(key, c) for key, c in cents.items()}
+    return cents
 
 
-def _centroid_rows(emb: DataFrame, k: int = _IVF_CELLS) -> "list[tuple[int, list[float]]]":
-    """The trained IVF centroid table as a sorted driver-side list of
-    (cell, centroid) — the form ``cells_ranked`` takes (r17). Same
-    single-collect discipline as ``_local_centroids``."""
-    return sorted(
-        (int(r.cell), [float(v) for v in r.ce]) for r in _ivf_centroids(emb, k).collect()
-    )
+def _ivf_centroids(emb: DataFrame, k: int = _IVF_CELLS) -> "list[tuple[int, list[float]]]":
+    """Coarse quantizer: k-means-lite with deterministic seeds
+    (``_seed_vectors``) and one Lloyd refinement, as a sorted driver
+    list of (cell, centroid) — the form ``cells_ranked`` and
+    ``centroid_argmax_cell`` take. A cell the refinement empties is
+    dropped (ids can have gaps), as the oracle's ``cents`` does.
+
+    Determinism discipline (so the recall oracle can replay it in
+    DuckDB): assignment sims round to 1e-9 before ranking (ties break
+    to the lowest cell), and the refined means are ``_exact_means`` at
+    1e-9. The assignment evaluates through the Arrow kernel
+    (``functions/veccompute.cells_ranked``); only the embedding column
+    crosses the Arrow boundary."""
+    from deker_server_adapters_spark.functions.veccompute import cells_ranked
+
+    seeds = _seed_vectors(emb, k)
+    if not seeds:
+        return []
+    assigned = cells_ranked(emb.select("embedding"), list(enumerate(seeds)), 1, ["embedding"])
+    means = _mean_vectors(assigned, ["cell"], "embedding")
+    return sorted((cell, ce) for (cell,), ce in means.items())
 
 
 def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +369,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deker_server_adapters_spark.functions.veccompute import cells_ranked
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroid_rows(emb)
+    cents = _ivf_centroids(emb)
     # inverted file: cell assignment for every vector (sims rounded to
     # 1e-9 before ranking — same determinism discipline as the
     # quantizer, so the recall oracle can replay the assignment).
@@ -629,7 +627,7 @@ def _ivf_inv_cte(limit_sql: str = str(_IVF_CELLS)) -> str:
 seeds AS (
   SELECT vec_id, embedding,
          CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cell
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY {h32_sql("vec_id")} LIMIT {limit_sql})
+  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY {h32_sql("vec_id")}, vec_id LIMIT {limit_sql})
 ), a0 AS (
   SELECT e.vec_id, e.embedding, s.cell,
          {round_ties_safe_sql("list_cosine_similarity(e.embedding::DOUBLE[], s.embedding::DOUBLE[])", 9)} AS sim
@@ -835,7 +833,7 @@ def _sem_assignments(
     already counted the corpus (the block ladder reads the same
     scalar) skip the count action here."""
     k = _sem_k(emb.count() if n is None else n)
-    cents = sorted(_local_centroids(emb, k).collect(), key=lambda r: r.cell)
+    cents = _ivf_centroids(emb, k)
     if not cents:
         return None
     # The NaN/gap-robust compiled argmin lives in functions/vectors.py
@@ -1597,21 +1595,11 @@ def _sh_assignments(emb2: DataFrame, meta: DataFrame) -> DataFrame:
             F.expr("max_by(cell, struct(sim, -cell))").alias("cell")
         )
 
-    asg0 = assign(seeds)
+    # the refined means fold back to a ``ce`` array on the DataFrame
+    # side: every shard trains in the same pass, so nothing collects
+    asg0 = assign(seeds).join(emb2.select("vec_id", "embedding"), "vec_id")
     cent = (
-        asg0.join(emb2.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "shard",
-            "cell",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "v"),
-        )
-        .groupBy("shard", "cell", "d")
-        .agg(
-            round_ties_safe(
-                F.sum(F.col("v").cast("decimal(30,12)")).cast("double") / F.count("v"),
-                9,
-            ).alias("cv")
-        )
+        _exact_means(asg0, ["shard", "cell"], "embedding", 9)
         .groupBy("shard", "cell")
         .agg(F.array_sort(F.collect_list(F.struct("d", "cv"))).alias("pairs"))
         .select("shard", "cell", F.expr("transform(pairs, p -> p.cv)").alias("ce"))
@@ -2205,7 +2193,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = emb.filter(~new_pred)
     new = emb.filter(new_pred)
     k = _sem_k(old.count())
-    cents = sorted(_local_centroids(old, k).collect(), key=lambda r: r.cell)
+    cents = _ivf_centroids(old, k)
     if not cents:  # empty existing corpus: every new vector is unique
         return new.select(
             "vec_id",
@@ -2393,15 +2381,7 @@ def kmeans_assignments(
     order-independent and engine-exact, the same device
     ``_ivf_centroids`` uses — before compilation into the next
     iteration's expression."""
-    from deker_server_adapters_spark.functions.hashing import h32
-
-    seeds = (
-        emb.withColumn("hk", h32(F.col("vec_id")))
-        .orderBy("hk", "vec_id")
-        .limit(k)
-        .select("vec_id", "embedding")
-        .collect()
-    )
+    seeds = _seed_vectors(emb, k)
     if not seeds:  # empty corpus: typed empty assignment, no centroids
         empty = emb.select(
             "*",
@@ -2409,9 +2389,8 @@ def kmeans_assignments(
             F.lit(0).cast("int").alias("cluster"),
         ).limit(0)
         return empty, []
-    cents = [list(map(float, r.embedding)) for r in sorted(seeds, key=lambda r: r.vec_id)]
 
-    def assign(cs: list[list[float]]) -> DataFrame:
+    def assign(cs: "dict[tuple, list[float]]") -> DataFrame:
         # r17: evaluates through the Arrow kernel
         # (functions/veccompute.kmeans_rows) — the DECIMAL(30,12)
         # term-sum device (reference form: _kmeans_assign_expr in
@@ -2422,35 +2401,12 @@ def kmeans_assignments(
         # kernel replays it in exact int64 fixed-point arithmetic.
         from deker_server_adapters_spark.functions.veccompute import kmeans_rows
 
-        return kmeans_rows(emb, cs)
+        return kmeans_rows(emb, [cs[(c,)] for c in range(len(seeds))])
 
-    for _ in range(iters):
-        assigned = assign(cents)
-        rows = (
-            assigned.select(
-                "cluster",
-                F.posexplode(F.col("embedding").cast("array<double>")).alias("d", "v"),
-            )
-            .groupBy("cluster", "d")
-            .agg(
-                round_ties_safe(
-                    F.sum(F.col("v").cast("decimal(30,12)")).cast("double")
-                    / F.count("v"),
-                    9,
-                ).alias("cv")
-            )
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cluster.setdefault(r.cluster, {})[r.d] = r.cv
-        cents = [
-            [by_cluster[c][d] for d in range(len(cents[0]))]
-            if c in by_cluster
-            else cents[c]  # empty cluster keeps its centroid
-            for c in range(len(cents))
-        ]
-    return assign(cents), cents
+    cents = _lloyd(
+        assign, {(c,): s for c, s in enumerate(seeds)}, ["cluster"], "embedding", iters
+    )
+    return assign(cents), [cents[(c,)] for c in range(len(seeds))]
 
 
 _PQ_M = 8  # subspaces
@@ -2480,8 +2436,6 @@ def pq_codebooks(
 
     Returns (codes_df: (vec_id, m, code), books[m][c] centroid lists).
     """
-    from deker_server_adapters_spark.functions.hashing import h32
-
     sub = _DIM // m
     parts = F.array(
         *[
@@ -2496,14 +2450,8 @@ def pq_codebooks(
         "vec_id", F.col("p.m").alias("m"), F.col("p.sv").alias("sv")
     )
 
-    seed_rows = (
-        emb.withColumn("hk", h32(F.col("vec_id")))
-        .orderBy("hk", "vec_id")
-        .limit(k)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not seed_rows:  # empty corpus: typed empty codes, empty codebooks
+    seeds = _seed_vectors(emb, k)
+    if not seeds:  # empty corpus: typed empty codes, empty codebooks
         empty = sv.select(
             "vec_id",
             "m",
@@ -2512,16 +2460,11 @@ def pq_codebooks(
             F.lit(0.0).alias("dist"),
         ).limit(0)
         return empty, [[] for _ in range(m)]
-    seed_rows = sorted(seed_rows, key=lambda r: r.vec_id)
-    books = [
-        [
-            [float(v) for v in r.embedding[mm * sub : (mm + 1) * sub]]
-            for r in seed_rows
-        ]
-        for mm in range(m)
-    ]
 
-    def assign(books_: list) -> DataFrame:
+    def books_of(cs: "dict[tuple, list[float]]") -> "list[list[list[float]]]":
+        return [[cs[(mm, c)] for c in range(len(seeds))] for mm in range(m)]
+
+    def assign(cs: "dict[tuple, list[float]]") -> DataFrame:
         # dists rounded to 1e-9 before ranking (ties then break to the
         # lowest c) so the DuckDB oracle's replay assigns identically —
         # the IVF/kmeans determinism discipline. r17: evaluates through
@@ -2532,35 +2475,13 @@ def pq_codebooks(
         # rank order).
         from deker_server_adapters_spark.functions.veccompute import pq_assign
 
-        return pq_assign(sv, books_)
+        return pq_assign(sv, books_of(cs))
 
-    for _ in range(iters):
-        assigned = assign(books)
-        rows = (
-            assigned.select("m", "code", F.posexplode(F.col("sv")).alias("d", "v"))
-            .groupBy("m", "code", "d")
-            .agg(
-                round_ties_safe(
-                    F.sum(F.col("v").cast("decimal(30,12)")).cast("double")
-                    / F.count("v"),
-                    9,
-                ).alias("cv")
-            )
-            .collect()
-        )
-        by_mc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by_mc.setdefault((r.m, r.code), {})[r.d] = r.cv
-        books = [
-            [
-                [by_mc[(mm, c)][d] for d in range(sub)]
-                if (mm, c) in by_mc
-                else books[mm][c]  # empty cell keeps its centroid
-                for c in range(k)
-            ]
-            for mm in range(m)
-        ]
-    return assign(books), books
+    seed_books = {
+        (mm, c): s[mm * sub : (mm + 1) * sub] for mm in range(m) for c, s in enumerate(seeds)
+    }
+    books = _lloyd(assign, seed_books, ["m", "code"], "sv", iters)
+    return assign(books), books_of(books)
 
 
 _PQ_RERANK = 50  # ADC shortlist size fed to the exact re-rank
@@ -2870,7 +2791,7 @@ def ann_ivfpq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deker_server_adapters_spark.functions.veccompute import cells_ranked
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroid_rows(emb)
+    cents = _ivf_centroids(emb)
     # inverted file: cell per vector (same discipline as ann_ivf_cosine).
     # r17: assignment + probe ranking evaluate through the Arrow kernel
     # — map-only stages in place of the crossJoin + per-vector window

@@ -308,7 +308,26 @@ class DekerDataSource(DataSource):
         return DekerStreamWriter(root, coll, schema, create_arrays=create)
 
 
-class DekerReader(DataSourceReader):
+class _ChunkScan:
+    """The state both ``deker`` readers plan and read from: the
+    collection's chunks dir, dim names and meta, chunk grid, the
+    columns to emit, and per-dim [lo, hi) bounds over the whole grid
+    (the batch reader tightens them by pushed filters; streams push
+    nothing). The columns are the full source schema: the Python DS
+    API has no projection pushdown (``DekerReader``, column-pruning
+    boundary)."""
+
+    def __init__(self, root: str, collection: str, schema: StructType):
+        meta = _load_collection_meta(root, collection)
+        self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
+        self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
+        self.dim_meta = _dim_meta(meta)
+        self.grid = ChunkGrid.for_schema(collection_schema(meta))
+        self.read_cols = [f.name for f in schema.fields]
+        self.bounds = [[0, s] for s in self.grid.shape]
+
+
+class DekerReader(_ChunkScan, DataSourceReader):
     """Batch reader over one collection's chunk store.
 
     Cells resolve last-write-wins, one row per written cell: each task
@@ -339,17 +358,8 @@ class DekerReader(DataSourceReader):
     from a pruned schema is the only change the emit path needs."""
 
     def __init__(self, root: str, collection: str, schema: StructType):
-        meta = _load_collection_meta(root, collection)
-        self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
-        self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
-        self.dim_meta = _dim_meta(meta)
-        self.grid = ChunkGrid.for_schema(collection_schema(meta))
-        # full source schema: the Python DS API has no projection
-        # pushdown (see class docstring, column-pruning boundary)
-        self.read_cols = [f.name for f in schema.fields]
+        super().__init__(root, collection, schema)
         self.array_ids: set[str] | None = None  # None = all arrays
-        # per-dim [lo, hi) bounds, tightened by pushed filters
-        self.bounds = [[0, s] for s in self.grid.shape]
 
     # -- pushdown ---------------------------------------------------------
 
@@ -407,7 +417,7 @@ class DekerReader(DataSourceReader):
         )
 
 
-class DekerStreamReader(DataSourceStreamReader):
+class DekerStreamReader(_ChunkScan, DataSourceStreamReader):
     """Chunk CHANGEFEED: each micro-batch emits the cells of chunk
     files that appeared since the last offset — a freshly created array
     streams once; a subset update streams just its delta run's cells;
@@ -427,15 +437,6 @@ class DekerStreamReader(DataSourceStreamReader):
     whose offsets are monotonic commit ids, keeping this exact offset
     contract with O(1) offsets."""
 
-    def __init__(self, root: str, collection: str, schema: StructType):
-        meta = _load_collection_meta(root, collection)
-        self.chunks_dir = os.path.join(root, "collections", collection, "chunks")
-        self.dim_names = [d["name"] for d in meta["schema"]["dimensions"]]
-        self.dim_meta = _dim_meta(meta)
-        self.grid = ChunkGrid.for_schema(collection_schema(meta))
-        self.read_cols = [f.name for f in schema.fields]
-        self.bounds = [[0, s] for s in self.grid.shape]  # streams: no pushdown
-
     def _current_files(self) -> list[str]:
         return sorted(
             os.path.relpath(p, self.chunks_dir)
@@ -450,7 +451,7 @@ class DekerStreamReader(DataSourceStreamReader):
         return {"files": self._current_files()}
 
     def partitions(self, start: dict, end: dict) -> list[DekerChunkPartition]:
-        seen = set(start.get("files", ()))  # list (current) or dict (legacy)
+        seen = set(start.get("files", ()))
         by_dir: dict[str, list[str]] = {}
         for p in end.get("files", ()):
             if p not in seen:

@@ -276,11 +276,11 @@ def streaming_semantic_dedup(embs: DataFrame, n_hint: int, ref_emb) -> DataFrame
     from deker_server_adapters_spark.operators.similarity import (
         _hy_probes_for_bits,
         _hy_tables_for_bits,
-        _local_centroids,
+        _ivf_centroids,
         _sem_k,
     )
 
-    cents = sorted(_local_centroids(ref_emb, _sem_k(n_hint)).collect(), key=lambda r: r.cell)
+    cents = _ivf_centroids(ref_emb, _sem_k(n_hint))
     nbits = _ladder_bits(n_hint, 0)
     tables = _hy_tables_for_bits(nbits)
     nprobes = _hy_probes_for_bits(nbits)

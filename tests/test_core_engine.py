@@ -459,6 +459,30 @@ class TestVArrays:
         assert len(vb.chunk_arrays()) == 6
         np.testing.assert_array_equal(vb.read_data(), np.full((12, 8), 2.0))
 
+    def test_chunk_arrays_scans_no_catalog(self, warehouse, monkeypatch):
+        """``chunk_arrays`` reads the views by the ids its vgrid names:
+        with ``read_catalog`` raising it returns the 6 views of the 3x2
+        vgrid in vgrid order, and skips a view whose meta is gone."""
+        import os
+
+        from deker_server_adapters_spark.core import array as array_mod
+
+        coll = warehouse.collections.create("v", VSCHEMA)
+        va = coll.varrays.create()
+
+        def scan(meta_dir):
+            raise AssertionError(f"catalog scan of {meta_dir}")
+
+        with monkeypatch.context() as m:
+            m.setattr(array_mod, "read_catalog", scan)
+            views = va.chunk_arrays()
+            assert [c.id for c in views] == [f"{va.id}:{i}" for i in range(6)]
+            assert [tuple(c.primary_attributes["v_position"]) for c in views] == [
+                (0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1)
+            ]
+            os.remove(coll.arrays._meta_path(f"{va.id}:3"))
+            assert [c.id for c in va.chunk_arrays()] == [f"{va.id}:{i}" for i in (0, 1, 2, 4, 5)]
+
     def test_chunk_views_read_and_write_real_data(self, warehouse):
         """Chunk-array views are live windows onto the varray's cells
         (reference chunk arrays hold the data; parity requires the

@@ -592,6 +592,141 @@ def test_kmeans_matches_numpy_reference(spark, sf_dir):
     assert not mism, f"{len(mism)} assignment mismatches, e.g. {list(mism.items())[:5]}"
 
 
+def _md5_h32(v: int) -> int:
+    """Python twin of ``functions/hashing.h32`` (seed 0)."""
+    import hashlib
+
+    return int(hashlib.md5(f"0:{v}".encode()).hexdigest()[:8], 16)
+
+
+def test_ivf_centroids_match_numpy_reference(spark, sf_dir):
+    """The IVF coarse quantizer is a NumPy reference run from the same
+    seeds: the md5-smallest vec_ids, argmax of the 1e-9-rounded cosine
+    (ties to the lowest cell), one Lloyd refinement to 1e-9-rounded
+    means, and no entry for a cell left without members."""
+    from deker_server_adapters_spark.operators.similarity import _IVF_CELLS, _ivf_centroids
+    from deker_server_adapters_spark.sources.tables import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = _ivf_centroids(emb)
+
+    rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r.vec_id)
+    ids = [r.vec_id for r in rows]
+    X = np.array([list(map(float, r.embedding)) for r in rows])
+    seed_ids = sorted(sorted(ids, key=lambda v: (_md5_h32(v), v))[:_IVF_CELLS])
+    S = X[[ids.index(v) for v in seed_ids]]
+
+    def rts(x, digits):  # the engines' tie-safe rounding device
+        return np.floor(x * 10.0**digits + 0.5) / 10.0**digits
+
+    norms = np.linalg.norm(X, axis=1)
+    sims = rts((X @ S.T) / (norms[:, None] * np.linalg.norm(S, axis=1)[None, :]), 9)
+    a = sims.argmax(axis=1)  # argmax takes the first (lowest) cell on ties
+    want = [(c, rts(X[a == c].mean(axis=0), 9)) for c in range(len(S)) if (a == c).any()]
+
+    assert [c for c, _ in got] == [c for c, _ in want]
+    np.testing.assert_allclose(
+        np.array([ce for _, ce in got]), np.array([ce for _, ce in want]), atol=1e-9
+    )
+
+
+@pytest.fixture()
+def dup_seed_corpus(tmp_path):
+    """64 random 64-dim vectors in which the seeds of cells 1 and 2 —
+    the 2nd and 3rd of the 8 md5-smallest vec_ids, by vec_id — carry
+    the same vector. Every vector ties between the two, ties go to the
+    lower cell, so cell 2 has no members after the first assignment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n, k = 64, 8
+    X = np.random.default_rng(7).standard_normal((n, 64)).astype(np.float32)
+    seeds = sorted(sorted(range(n), key=lambda v: (_md5_h32(v), v))[:k])
+    X[seeds[2]] = X[seeds[1]]
+    d = tmp_path / "sfdup"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(X.tolist(), pa.list_(pa.float32())),
+            }
+        ),
+        str(d / "embeddings.parquet"),
+    )
+    return str(d), X, seeds
+
+
+def test_kmeans_and_pq_keep_an_emptied_clusters_centroid(spark, dup_seed_corpus):
+    """The Lloyd loop behind ``kmeans_assignments`` and ``pq_codebooks``
+    keeps the old centroid of a cluster that lost every member, as the
+    oracles' ``COALESCE`` does; the k-means oracle agrees on the
+    corpus."""
+    from deker_server_adapters_spark.operators.similarity import (
+        _DIM,
+        _kmeans_sql,
+        embeddings_kmeans,
+        kmeans_assignments,
+        pq_codebooks,
+    )
+    from deker_server_adapters_spark.sources.tables import load_table
+    from tests.oracle_utils import compare, duckdb_con
+
+    sf, X, seeds = dup_seed_corpus
+    emb = load_table(spark, sf, "embeddings")
+    seed2 = X[seeds[2]].astype(np.float64).tolist()
+
+    _, cents = kmeans_assignments(emb, k=8, iters=1)
+    assert cents[2] == seed2
+    assert cents[1] != seed2  # cluster 1 took every tie and moved
+
+    m = 8
+    sub = _DIM // m
+    _, books = pq_codebooks(emb, m=m, k=8, iters=1)
+    for mm in range(m):
+        assert books[mm][2] == seed2[mm * sub : (mm + 1) * sub]
+        assert books[mm][1] != books[mm][2]
+
+    ok, msg = compare(embeddings_kmeans(spark, sf), duckdb_con(sf).execute(_kmeans_sql()).fetchdf())
+    assert ok, msg
+
+
+def test_ivf_and_sharded_trainers_drop_an_emptied_cell(spark, dup_seed_corpus):
+    """``_ivf_centroids`` and ``_sh_assignments`` drop a cell that lost
+    every member, leaving a gap in the cell ids, as the oracle's
+    ``cents`` does: the trained centroids equal the DuckDB replay's,
+    and the sharded trainer (one shard) assigns as the IVF one."""
+    from deker_server_adapters_spark.functions.veccompute import cells_ranked
+    from deker_server_adapters_spark.operators.similarity import (
+        _ivf_centroids,
+        _ivf_inv_cte,
+        _sh_assignments,
+    )
+    from deker_server_adapters_spark.sources.tables import load_table
+    from tests.oracle_utils import duckdb_con
+
+    sf, _, _ = dup_seed_corpus
+    emb = load_table(spark, sf, "embeddings")
+    cents = _ivf_centroids(emb)
+    assert [c for c, _ in cents] == [0, 1, 3, 4, 5, 6, 7]
+    oracle = (
+        duckdb_con(sf)
+        .execute(f"WITH {_ivf_inv_cte()} SELECT cell, ce FROM cents ORDER BY cell")
+        .fetchall()
+    )
+    assert [(int(c), list(ce)) for c, ce in oracle] == cents
+
+    emb2 = emb.withColumn("shard", F.lit(0))
+    meta = spark.createDataFrame([(0, 8)], "shard int, ksh int")
+    got = {r.vec_id: r.cell for r in _sh_assignments(emb2, meta).collect()}
+    want = {
+        r.vec_id: r.cell
+        for r in cells_ranked(emb.select("vec_id", "embedding"), cents, 1, ["vec_id"]).collect()
+    }
+    assert got == want
+    assert 2 not in got.values()
+
+
 def test_pca_matches_numpy_reference(spark, sf_dir):
     """The distributed moments pass must reproduce NumPy's exact
     covariance PCA: same eigenvalues and (up to sign) the same
@@ -2959,14 +3094,14 @@ def test_ivf_candidates_have_no_duplicates_and_match_old_form(spark):
         _IVF_PROBES,
         _N_QUERIES,
         _TOP_K,
-        _centroid_rows,
+        _ivf_centroids,
         ann_ivf_cosine,
     )
     from deker_server_adapters_spark.sources.tables import load_table
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
-    cents = _centroid_rows(emb)
+    cents = _ivf_centroids(emb)
     inv = cells_ranked(
         emb.select("vec_id", "embedding"), cents, 1, ["vec_id", "embedding"]
     ).select(
@@ -3022,7 +3157,7 @@ def test_veccompute_ann_kernels_match_expression_forms(spark):
         _DIM,
         _IVF_PROBES,
         _PQ_M,
-        _centroid_rows,
+        _ivf_centroids,
         kmeans_assignments,
         pq_codebooks,
     )
@@ -3032,7 +3167,7 @@ def test_veccompute_ann_kernels_match_expression_forms(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
 
     # --- cells_ranked: kernel vs crossJoin(broadcast) + window ---
-    cents = _centroid_rows(emb)
+    cents = _ivf_centroids(emb)
     cents_df = emb.sparkSession.createDataFrame(
         list(cents), "cell int, ce array<double>"
     )
