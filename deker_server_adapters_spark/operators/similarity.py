@@ -2374,13 +2374,12 @@ def kmeans_assignments(
     cluster-scale k-means: data stays put, centroids travel.
 
     Determinism (so the DuckDB oracle can replay every Lloyd round):
-    seeds are the md5-smallest vec_ids (same device as the IVF coarse
-    quantizer), squared distances round tie-safe to 1e-9 BEFORE the
-    argmin (ties break to the lowest cluster id), and the per-dim
-    means accumulate in DECIMAL(30,12) then round tie-safe to 1e-9 —
-    order-independent and engine-exact, the same device
-    ``_ivf_centroids`` uses — before compilation into the next
-    iteration's expression."""
+    seeds are ``_seed_vectors`` (the IVF coarse quantizer's), squared
+    distances round tie-safe to 1e-9 BEFORE the argmin (ties break to
+    the lowest cluster id), and the rounds run in ``_lloyd`` on
+    ``_exact_means`` — the device ``_ivf_centroids`` uses — so an
+    emptied cluster keeps its centroid, as the oracle's COALESCE
+    does."""
     seeds = _seed_vectors(emb, k)
     if not seeds:  # empty corpus: typed empty assignment, no centroids
         empty = emb.select(
@@ -2424,15 +2423,15 @@ def pq_codebooks(
     bytes instead of dim floats (here 64 floats -> 8 nibbles, a 32x
     compression of the candidate-scan payload).
 
-    Scale shape mirrors ``kmeans_assignments``: the corpus explodes
-    once into (vec_id, m, subvector) rows — map-only, no key shuffle —
-    and every iteration is one broadcast join against the m*k-row
-    codebook table, a (vec_id, m) argmin window over that bounded
-    fan-out, and a (m, c, dim) mean aggregate of m*k*sub rows. Data
-    never reshuffles on a key; codebooks travel. Determinism: seeds
-    are the subvectors of the k md5-smallest vec_ids, argmin ties
-    break to the lowest centroid id, means accumulate in DECIMAL and
-    round to 1e-9 (the kmeans discipline).
+    Scale shape mirrors ``kmeans_assignments``, through the same
+    ``_lloyd`` loop: the corpus explodes once into (vec_id, m,
+    subvector) rows — map-only, no key shuffle — and every iteration
+    is one map-only code assignment (``pq_assign``) and a (m, code,
+    dim) ``_exact_means`` aggregate of m*k*sub rows. Data never
+    reshuffles on a key; codebooks travel. Determinism: seeds are the
+    subvectors of ``_seed_vectors``, argmin ties break to the lowest
+    centroid id, means accumulate in DECIMAL and round to 1e-9 (the
+    kmeans discipline).
 
     Returns (codes_df: (vec_id, m, code), books[m][c] centroid lists).
     """
